@@ -31,7 +31,7 @@ object SparkEntry {
     // the driver invokes entry on a session it built itself — apply the
     // session-level settings Tables needs here, at the contract boundary
     // (everywhere else they're set at SparkSession build; Tables.load
-    // itself is side-effect-free)
+    // itself never sets session conf)
     Tables.sessionConf.foreach { case (k, v) => spark.conf.set(k, v) }
     queries("j1_join_inner")(spark, "/root/testdata/sf0.001")
   }

@@ -1,6 +1,10 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed table catalog over one scale-factor directory
   * (`/root/testdata/sf*`, see TESTDATA.md).
@@ -15,6 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale posture: `spark.read.parquet` plans one task per ~maxPartitionBytes
   * split; nothing here materializes on the driver.
+  *
+  * Like the reference's connect-once `Session`, the per-table fixed cost is
+  * paid once per session: [[load]] memoizes each table's inferred schema
+  * (only the schema) so later loads are pure planning and submit no job.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -83,7 +91,7 @@ object Tables {
           ArrayType(DoubleType), ArrayType(DoubleType, containsNull = false))))
   }
 
-  private def checkShape(name: String, schema: org.apache.spark.sql.types.StructType): Unit =
+  private def checkShape(name: String, schema: StructType): Unit =
     for {
       expected <- expectedShapes.get(name)
       (colName, accepted) <- expected
@@ -98,11 +106,69 @@ object Tables {
           "encoding; extend the adapter (NormalizeEventTs / expectedShapes) before trusting results")
     }
 
+  /** Load one table as a lazily-planned DataFrame.
+    *
+    * Only the inferred schema is reused. The first load of a table in a
+    * session runs `spark.read.parquet` — whose footer-reading schema
+    * inference is a Spark job — then [[checkShape]], then memoizes the
+    * resulting `StructType`. Later loads return
+    * `spark.read.schema(memoized).parquet(path)`: no job, and the scan
+    * still lists the table's files fresh. Results, file listings and
+    * plans are never reused.
+    *
+    * The memo is keyed by the session (held weakly) and its explicitly set
+    * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` confs, which
+    * change the inferred types (`nanosAsLong`, `inferTimestampNTZ.enabled`,
+    * ...). An entry answers only while the table's leaf files still match
+    * its fingerprint of (path, length, mtime): rewriting, adding or
+    * removing any file re-infers, re-runs the drift tripwire and replaces
+    * the entry. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(all.contains(name), s"unknown table '$name' (expected one of ${all.mkString(",")})")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    checkShape(name, df.schema)
-    df
+    val path = s"$sfDir/$name.parquet"
+    val key = (path, parquetConfs(spark))
+    // fingerprint BEFORE inferring: a rewrite racing this load then files
+    // the fresh schema under the stale fingerprint, which never matches again
+    val files = fingerprint(spark, path)
+    val memo = schemaMemo.synchronized {
+      schemaMemo.computeIfAbsent(spark, _ => new ConcurrentHashMap[SchemaKey, Memo]())
+    }
+    Option(memo.get(key)).collect { case (`files`, schema) => schema } match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        checkShape(name, df.schema)
+        memo.put(key, (files, df.schema)) // one entry per (table, confs)
+        df
+    }
+  }
+
+  private type Files = Seq[(String, Long, Long)]
+  private type SchemaKey = (String, Map[String, String])
+  private type Memo = (Files, StructType)
+
+  private val schemaMemo = new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[SchemaKey, Memo]]()
+
+  private def parquetConfs(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+
+  /** Leaf files under `path` as sorted (path, length, mtime). Plain
+    * `listStatus` recursion: `listFiles(path, recursive = true)` also
+    * fetches block locations and costs ~50× more. A missing path yields an
+    * empty fingerprint; the inferring read then fails with Spark's own
+    * error, so nothing is memoized for it. */
+  private def fingerprint(spark: SparkSession, path: String): Files = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def leaves(p: Path): Files =
+      fs.listStatus(p).toSeq.flatMap { st =>
+        if (st.isDirectory) leaves(st.getPath)
+        else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+      }
+    try leaves(root).sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   /** events.ts → TimestampType (µs precision), whatever the parquet

@@ -217,9 +217,15 @@ object MemStore {
       case In(a, xs) =>
         val av = v(a)
         if (av == null) None // SQL: NULL IN (...) is UNKNOWN
-        else if (xs.contains(av)) Some(true)
-        else if (xs.contains(null)) None // ... IN (x, NULL) misses as UNKNOWN
-        else Some(false)
+        else {
+          // one pass: a hit, else remember whether the list held a NULL
+          var sawNull = false
+          var i = 0
+          while (i < xs.length && xs(i) != av) { if (xs(i) == null) sawNull = true; i += 1 }
+          if (i < xs.length) Some(true)
+          else if (sawNull) None // ... IN (x, NULL) misses as UNKNOWN
+          else Some(false)
+        }
       case IsNull(a) => Some(v(a) == null)
       case IsNotNull(a) => Some(v(a) != null)
       case And(l, r) =>

@@ -697,6 +697,9 @@ object MemWireServer {
         fp
     }
 
+  /** Counts a reply's bytes. `flush` stops here: the connection's socket
+    * buffer is flushed only once, after the reply's counters are updated,
+    * so a client that has read a whole reply always finds it counted. */
   private final class CountingOutputStream(underlying: java.io.OutputStream)
       extends java.io.FilterOutputStream(underlying) {
     var count = 0L
@@ -704,6 +707,7 @@ object MemWireServer {
     override def write(b: Array[Byte], off: Int, len: Int): Unit = {
       count += len; underlying.write(b, off, len)
     }
+    override def flush(): Unit = ()
   }
 
   def start(): MemWireServer = {
@@ -726,7 +730,10 @@ object MemWireServer {
   private def handle(sock: Socket): Unit = {
     val in = new BufferedReader(new InputStreamReader(
       sock.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
-    val counting = new CountingOutputStream(sock.getOutputStream)
+    // a reply ends with a small write (terminator, end marker or error
+    // frame), so its last bytes stay here until the final flush
+    val socketOut = new java.io.BufferedOutputStream(sock.getOutputStream, 1 << 16)
+    val counting = new CountingOutputStream(socketOut)
     // the response writer is selected AFTER the request parses: a request
     // carrying "deflate":true gets its whole response deflated (the
     // MongoDB OP_COMPRESSED shape — zlib over the reply); the request
@@ -979,6 +986,7 @@ object MemWireServer {
       // one connection per cursor per poll would otherwise accumulate
       // off-heap memory until a GC happens to run the cleaners
       if (deflater != null) { try deflater.end() catch { case _: Throwable => () } }
+      try socketOut.flush() catch { case _: Throwable => () }
       try sock.close() catch { case _: Throwable => () }
     }
   }

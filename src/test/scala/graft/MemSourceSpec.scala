@@ -674,4 +674,18 @@ class MemSourceSpec extends AnyFunSuite {
     assert(MemStore.eval3(row, schema,
       LessThan("l", Double.box(41.5))) === Some(false))
   }
+
+  test("store eval of In is three-valued: NULL attr, hit, miss with NULL, plain miss") {
+    import org.apache.spark.sql.sources.In
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val schema = StructType(Seq(StructField("k", LongType)))
+    val row = org.apache.spark.sql.Row(Long.box(7L))
+    val nullRow = org.apache.spark.sql.Row(null)
+    val withNull = Array[Any](1L, null, 3L)
+    assert(MemStore.eval3(nullRow, schema, In("k", Array[Any](7L))) === None)
+    assert(MemStore.eval3(row, schema, In("k", Array[Any](null, 7L))) === Some(true))
+    assert(MemStore.eval3(row, schema, In("k", withNull)) === None)
+    assert(MemStore.eval3(row, schema, In("k", Array[Any](1L, 3L))) === Some(false))
+    assert(MemStore.eval3(row, schema, In("k", Array.empty[Any])) === Some(false))
+  }
 }

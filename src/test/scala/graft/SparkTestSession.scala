@@ -16,4 +16,29 @@ object SparkTestSession {
 
   def table(name: String): DataFrame =
     graft.sources.Tables.load(spark, sfDir, name)
+
+  /** Run `body` and count the Spark jobs it submits from this thread
+    * (tagged with a private job group, so jobs of other threads or suites
+    * never count). */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsDuring")
+    try {
+      val a = body
+      org.apache.spark.GraftTestBridge.waitForListeners(sc)
+      (a, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -82,17 +82,68 @@ class TablesSpec extends AnyFunSuite {
     // exercise checkShape via a table written with a drifted ts type
     val dir = java.nio.file.Files.createTempDirectory("graft-drift").toFile
     dir.deleteOnExit()
-    import spark.implicits._
-    Seq((1L, "x")).toDF("event_id", "props")
-      .withColumn("ts", lit("not-a-time"))
-      .withColumn("user_id", lit(1L)).withColumn("event_type", lit("click"))
-      .withColumn("value", lit(1.0))
-      .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/events.parquet")
+    writeEvents(dir, lit("not-a-time"))
     val err = intercept[IllegalArgumentException] {
       Tables.load(spark, dir.getAbsolutePath, "events")
     }
     assert(err.getMessage.contains("testdata drift"))
     assert(err.getMessage.contains("events.ts"))
+  }
+
+  private def writeEvents(dir: java.io.File, ts: org.apache.spark.sql.Column): Unit = {
+    import spark.implicits._
+    Seq((1L, "x")).toDF("event_id", "props")
+      .withColumn("ts", ts)
+      .withColumn("user_id", lit(1L)).withColumn("event_type", lit("click"))
+      .withColumn("value", lit(1.0))
+      .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/events.parquet")
+  }
+
+  test("load: the schema is inferred once per session; later loads submit no job") {
+    import SparkTestSession.{jobsDuring, sfDir}
+    val session = spark.newSession()
+    val (first, firstJobs) = jobsDuring(Tables.load(session, sfDir, "orders"))
+    val (second, secondJobs) = jobsDuring(Tables.load(session, sfDir, "orders"))
+    assert(firstJobs === 1, "the first load infers the schema with one job")
+    assert(secondJobs === 0, "a later load must reuse the schema without a job")
+    assert(second.schema === first.schema)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(second) === rows(first))
+  }
+
+  test("load: rewriting a loaded table re-infers, so the drift tripwire still fires") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-redrift").toFile
+    dir.deleteOnExit()
+    writeEvents(dir, current_timestamp().cast(TimestampNTZType))
+    assert(Tables.load(spark, dir.getAbsolutePath, "events").schema("ts").dataType
+      === TimestampNTZType)
+    writeEvents(dir, lit("not-a-time"))
+    val err = intercept[IllegalArgumentException] {
+      Tables.load(spark, dir.getAbsolutePath, "events")
+    }
+    assert(err.getMessage.contains("testdata drift"))
+    assert(err.getMessage.contains("events.ts"))
+  }
+
+  test("load: parquet confs key the schema memo") {
+    import SparkTestSession.{jobsDuring, sfDir}
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val session = spark.newSession()
+    session.conf.set(nanos, "true")
+    assert(jobsDuring(Tables.load(session, sfDir, "events"))._2 === 1)
+    assert(jobsDuring(Tables.load(session, sfDir, "events"))._2 === 0)
+    // another session with a different value infers its own schema
+    val other = spark.newSession()
+    other.conf.set(nanos, "false")
+    assert(jobsDuring(Tables.load(other, sfDir, "events"))._2 === 1)
+    // and so does the same session once the value changes
+    session.conf.set(nanos, "false")
+    assert(jobsDuring(Tables.load(session, sfDir, "events"))._2 === 1)
+    session.conf.set(nanos, "true")
+    assert(jobsDuring(Tables.load(session, sfDir, "events"))._2 === 0)
+    // a conf that changes the inferred type is never answered from the memo
+    session.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    assert(Tables.load(session, sfDir, "events").schema("ts").dataType === TimestampType)
   }
 
   test("load: real testdata passes the shape guard for every table") {

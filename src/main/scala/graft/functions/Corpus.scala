@@ -1238,9 +1238,13 @@ object Corpus {
     // re-filtered it again per ITS three consumers. Both are bound once
     // in their own projections (multi-consumer non-cheap expressions are
     // never collapsed back by CollapseProject). Values are bit-identical:
-    // same expressions, evaluated once instead of four times.
+    // same expressions, evaluated once instead of four times. The
+    // no-token filter tests `pos` BEFORE hashing (`z` keeps its length):
+    // a filter on `size(__z)` above the projections is pushed below them
+    // with `z` inlined, which hashed every token a second time.
     val hit = filter(col("__z"), s => s.getField("m"))
-    docs.select(col(idCol).as("doc_id"), z.as("__z"))
+    docs.where(size(pos) > 0)
+      .select(col(idCol).as("doc_id"), z.as("__z"))
       .select(col("doc_id"), col("__z"), hit.as("__hit"))
       .select(col("doc_id"),
         array_join(transform(col("__z"), s =>
@@ -1251,7 +1255,6 @@ object Corpus {
           .otherwise(lit(null)).as("targets"),
         size(col("__hit")).cast("long").as("n_masked"),
         size(col("__z")).cast("long").as("n_tokens"))
-        .where(col("n_tokens") > 0)
   }
 
   /** Per-partition word-type memo budget shared by every word-level

@@ -2213,9 +2213,10 @@ object CoreGates {
     }),
 
 
-    // the pushed cursor pipeline through BINARY row frames + deflate
-    // composed (rowfmt=bin — the BSON/CQL-native row shape): DuckDB
-    // checks the frame codec end-to-end across the full pipeline
+    // the pushed cursor pipeline through the binary row frames (the
+    // BSON/CQL-native row shape, the one wire row codec) composed with
+    // deflate: DuckDB checks frames under the inflater end-to-end across
+    // the full pipeline
     "s27_wire_binary" -> ((s, dir) => {
       val coll = "li_wire" + dir.replaceAll("[^A-Za-z0-9]", "_")
       val port = stageCache.getOrElseUpdate(s"wire#$dir", {
@@ -2228,7 +2229,7 @@ object CoreGates {
       s.read.format("graft.sources.mem.GraftMemSource")
         .option("collection", coll)
         .option("client", "wire").option("port", port.toString)
-        .option("rowfmt", "bin").option("deflate", "true")
+        .option("deflate", "true")
         .load()
         .where(col("l_quantity") >= 20 && col("l_quantity") <= 35)
         .orderBy(col("l_orderkey").asc, col("l_linenumber").asc)

@@ -46,7 +46,7 @@ private[graft] object GateSupport {
   def streamSession(s: SparkSession, partitions: Int = 8): SparkSession = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    if (sys.env.get("SPARK_GRAFT_STREAM_STATE").contains("rocksdb")) {
+    if (rocksdbState) {
       ss.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // changelog checkpointing: commit only the batch's delta instead of
@@ -65,6 +65,10 @@ private[graft] object GateSupport {
     }
     ss
   }
+
+  /** Whether [[streamSession]] selects the RocksDB state store; otherwise
+    * Spark's default (HDFS-backed, in-memory) provider runs. */
+  def rocksdbState: Boolean = sys.env.get("SPARK_GRAFT_STREAM_STATE").contains("rocksdb")
 
   /** Best-effort recursive delete of a gate's temp staging tree (used by
     * the [[exitManagedTempDir]] shutdown hook — `File.deleteOnExit` cannot

@@ -35,7 +35,7 @@ object Tables {
   /** Session settings every graft session needs. It belongs at session
     * construction — a loader mutating session conf is a global side effect
     * that surprises concurrent sessions — so every entrypoint
-    * (Bench/Verify/RunOne/PlanAudit/tests) applies it at build time via
+    * (Bench/Verify/RunOne/tools.PlanAudit/tests) applies it at build time via
     * this map.
     *
     * - `nanosAsLong`: if the testdata generator ships `events.ts` as

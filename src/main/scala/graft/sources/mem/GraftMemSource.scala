@@ -727,12 +727,9 @@ object StoreClient {
         val port = Option(get("port")).getOrElse(throw new IllegalArgumentException(
           "client=wire requires option 'port'")).toInt
         // deflate=true: responses zlib-compress on the wire (MongoDB's
-        // OP_COMPRESSED shape) — same rows, fewer bytes per cursor.
-        // rowfmt=bin: rows cross as binary frames (the BSON/CQL-native
-        // shape) — same rows, fewer cycles per row. The two compose.
+        // OP_COMPRESSED shape) — same rows, fewer bytes per cursor
         new SocketStoreClient(Option(get("host")).getOrElse("127.0.0.1"), port,
-          deflate = Option(get("deflate")).exists(_.toBoolean),
-          binaryRows = Option(get("rowfmt")).contains("bin"))
+          deflate = Option(get("deflate")).exists(_.toBoolean))
       case other => throw new IllegalArgumentException(
         s"unknown store client '$other' (supported: mem, parquet, wire)")
     }

@@ -2,6 +2,7 @@ package graft.sources.mem
 
 import java.io.{BufferedReader, BufferedWriter, InputStreamReader, OutputStreamWriter}
 import java.net.{InetAddress, ServerSocket, Socket}
+import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.concurrent.TrieMap
 
@@ -9,13 +10,12 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
-/** Minimal line-delimited wire protocol for the document store — the
-  * WIRE-LEVEL client the reference talks to its stores with
-  * (storage.scala:315-327, 644-658 open driver connections; the sandbox
-  * has no external database, so the server end is the embedded store on a
-  * loopback socket, and everything client-side is a REAL network client:
-  * TCP connect, request serialization, typed row deserialization, one
-  * connection per cursor).
+/** Minimal wire protocol for the document store — the WIRE-LEVEL client
+  * the reference talks to its stores with (storage.scala:315-327, 644-658
+  * open driver connections; the sandbox has no external database, so the
+  * server end is the embedded store on a loopback socket, and everything
+  * client-side is a REAL network client: TCP connect, request
+  * serialization, typed row deserialization, one connection per cursor).
   *
   * Request (one JSON line, parsed with [[WireJson]] — a real parser, not
   * a field regex, so collection names containing quotes/braces frame
@@ -25,15 +25,16 @@ import org.apache.spark.sql.types._
   *   {"op":"rows","collection":c,"start":i,"end":j}
   *   {"op":"query","collection":c,"start":i,"end":j, ...spec fields}
   *   {"op":"register","collection":c,"rows":n}
-  *                                     + schema-json line + row lines + blank
+  *                                     + schema-json line + row frames
   *                                     (n = declared row count; the server
-  *                                     refuses a mismatch, so a client that
-  *                                     dies mid-stream cannot leave a
-  *                                     truncated relation registered)
+  *                                     refuses a mismatch or a missing end
+  *                                     frame, so a client that dies
+  *                                     mid-stream cannot leave a truncated
+  *                                     relation registered)
   * Response:
   *   schema   -> one line: Spark StructType.json (public round-trip form)
   *   count    -> one line: decimal integer
-  *   rows     -> one JSON array line per row, then one blank line
+  *   rows     -> [[WireCodec]] row frames, then the end frame
   *   query    -> like rows, but the SERVER evaluates the pushed pipeline
   *               (filters/sample/sort/skip/limit/projection) and only
   *               matching projected rows cross the socket — the
@@ -41,7 +42,9 @@ import org.apache.spark.sql.types._
   *               the native query, storage.scala:597,650-652; sort/skip/
   *               limit on the cursor :320-324), r12 verdict #1
   *   register -> one line: "ok"
-  * Errors -> one line starting with "!" and the message; clients throw.
+  * Errors -> one line starting with "!" and the message, for every op: a
+  * metadata reader sees it as its reply line, the frame reader as the
+  * `!` tag (never a frame tag). Clients throw.
   *
   * Row-serving requests (rows/query/agg/keyslice) carry a `schema_fp`
   * field — the fingerprint of the schema the client will parse rows
@@ -58,129 +61,32 @@ import org.apache.spark.sql.types._
   * written are instrumented ([[MemWireServer.rowsShipped]]/
   * [[MemWireServer.bytesShipped]]).
   *
-  * Supported field types: boolean, byte/short/int/long, float/double,
-  * string, timestamp (wire form: epoch micros), date (wire form: epoch
-  * days). Anything else fails loudly server-side — a real driver would
-  * extend the codec, and silent coercion is how wrong answers hide.
-  */
-object WireCodec {
-  private[mem] def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  def writeValue(v: Any, sb: StringBuilder): Unit = v match {
-    case null => sb.append("null")
-    case b: Boolean => sb.append(if (b) "true" else "false")
-    case n: Byte => sb.append(n.toInt)
-    case n: Short => sb.append(n.toInt)
-    case n: Int => sb.append(n)
-    case n: Long => sb.append(n)
-    case n: Float =>
-      // widen through the float's exact decimal form so the reader's
-      // toFloat reproduces the identical bits
-      sb.append(n.toString)
-    case n: Double => sb.append(n)
-    case s: String => sb.append('"').append(esc(s)).append('"')
-    case t: java.sql.Timestamp =>
-      // floorDiv, not truncating /: getTime is negative pre-epoch while
-      // getNanos is always positive, so truncation encoded any pre-1970
-      // fractional-second timestamp one full second too late (ADVICE r12)
-      sb.append(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
-    case d: java.sql.Date => sb.append(d.toLocalDate.toEpochDay)
-    case other => throw new IllegalArgumentException(
-      s"wire codec: unsupported value type ${other.getClass.getName}")
-  }
-
-  def writeRow(r: Row): String = {
-    val sb = new StringBuilder("[")
-    var i = 0
-    while (i < r.length) {
-      if (i > 0) sb.append(',')
-      writeValue(r.get(i), sb)
-      i += 1
-    }
-    sb.append(']').toString
-  }
-
-  /** schema-directed typed parse of one row line. */
-  def readRow(line: String, schema: StructType): Row = {
-    var i = 1 // skip '['
-    val n = line.length
-    val out = new Array[Any](schema.length)
-    var f = 0
-    while (f < schema.length) {
-      if (line.charAt(i) == ',') i += 1
-      val token: Either[String, String] = // Left = raw token, Right = string
-        if (line.charAt(i) == '"') {
-          i += 1
-          val sb = new StringBuilder
-          while (line.charAt(i) != '"') {
-            val c = line.charAt(i)
-            if (c == '\\') {
-              line.charAt(i + 1) match {
-                case '"' => sb.append('"'); i += 2
-                case '\\' => sb.append('\\'); i += 2
-                case 'u' =>
-                  sb.append(Integer.parseInt(line.substring(i + 2, i + 6), 16).toChar)
-                  i += 6
-                case other => throw new IllegalArgumentException(
-                  s"wire codec: bad escape '\\$other'")
-              }
-            } else { sb.append(c); i += 1 }
-          }
-          i += 1 // closing quote
-          Right(sb.toString)
-        } else {
-          val st = i
-          while (i < n && line.charAt(i) != ',' && line.charAt(i) != ']') i += 1
-          Left(line.substring(st, i))
-        }
-      out(f) = (token, schema(f).dataType) match {
-        case (Left("null"), _) => null
-        case (Left(t), BooleanType) => t.toBoolean
-        case (Left(t), ByteType) => t.toByte
-        case (Left(t), ShortType) => t.toShort
-        case (Left(t), IntegerType) => t.toInt
-        case (Left(t), LongType) => t.toLong
-        case (Left(t), FloatType) => t.toFloat
-        case (Left(t), DoubleType) => t.toDouble
-        case (Left(t), TimestampType) =>
-          val micros = t.toLong
-          val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-          ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-          ts
-        case (Left(t), DateType) =>
-          java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(t.toLong))
-        case (Right(s), StringType) => s
-        case (tok, dt) => throw new IllegalArgumentException(
-          s"wire codec: cannot read $tok as $dt")
-      }
-      f += 1
-    }
-    Row.fromSeq(out.toIndexedSeq)
-  }
-}
-
-/** BINARY row frames — the compact row encoding a real driver speaks
-  * (MongoDB rows are BSON, Cassandra's native protocol is length-prefixed
-  * binary; JSON text rows spend most of their cursor CPU in char
-  * scanning). Opt-in per request via `"rowfmt":"bin"` on the row-serving
-  * ops; metadata ops (schema/count/keycounts/register) stay line-JSON.
-  * Composes under deflate (frames flow through the same deflated stream).
+  * Row frames are the one row encoding on the wire, the compact binary
+  * shape a real driver speaks (MongoDB rows are BSON, Cassandra's native
+  * protocol is length-prefixed binary). Every row-serving reply and every
+  * register upload is a frame stream; metadata replies
+  * (schema/count/keycounts/register "ok") stay line-JSON. Composes under
+  * deflate (frames flow through the same deflated stream).
   *
-  * Frame grammar, schema-directed like the text codec:
+  * Frame grammar, schema-directed:
   *   0x01 <row>   — per field: 1 null byte (0 = null), then the value at
   *                  its schema type (fixed-width primitives big-endian;
-  *                  strings as int length + UTF-8 bytes — full fidelity
-  *                  for NUL and surrogates, unlike writeUTF; timestamps
+  *                  strings as int length + standard UTF-8 bytes, so NUL
+  *                  survives, unlike writeUTF — a lone surrogate has no
+  *                  UTF-8 form and arrives as '?', the same replacement
+  *                  Spark's own UTF8String.fromString makes; timestamps
   *                  as long epoch micros, dates as int epoch days)
-  *   0x00         — end of rows (the blank-line terminator's analog)
-  *   0x02 <err>   — error: int length + UTF-8 message; the client throws
-  * EOF before a terminator frame throws (same truncation guard as text). */
-private[mem] object WireBinary {
+  *   0x00         — end of rows
+  *   '!' <line>   — error: the message as one UTF-8 line (newlines
+  *                  flattened), the same form metadata replies use; the
+  *                  client throws
+  * EOF before the end frame throws (truncation guard).
+  *
+  * Supported field types: boolean, byte/short/int/long, float/double,
+  * string, timestamp, date. Anything else fails loudly server-side — a
+  * real driver would extend the codec, and silent coercion is how wrong
+  * answers hide. */
+object WireCodec {
   import java.io.{DataInputStream, DataOutputStream, EOFException}
 
   def writeRow(r: Row, schema: StructType, out: DataOutputStream): Unit = {
@@ -200,10 +106,11 @@ private[mem] object WireBinary {
           case FloatType => out.writeFloat(v.asInstanceOf[Float])
           case DoubleType => out.writeDouble(v.asInstanceOf[Double])
           case StringType =>
-            val b = v.asInstanceOf[String]
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            val b = v.asInstanceOf[String].getBytes(UTF_8)
             out.writeInt(b.length); out.write(b)
           case TimestampType =>
+            // floorDiv, not truncating /: getTime is negative pre-epoch
+            // while getNanos is always positive (ADVICE r12)
             val t = v.asInstanceOf[java.sql.Timestamp]
             out.writeLong(
               Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
@@ -211,7 +118,7 @@ private[mem] object WireBinary {
             out.writeInt(
               v.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt)
           case dt => throw new IllegalArgumentException(
-            s"wire binary: unsupported type $dt")
+            s"wire codec: unsupported type $dt")
         }
       }
       i += 1
@@ -220,10 +127,18 @@ private[mem] object WireBinary {
 
   def writeEnd(out: DataOutputStream): Unit = out.writeByte(0x00)
 
-  def writeError(out: DataOutputStream, msg: String): Unit = {
-    out.writeByte(0x02)
-    val b = String.valueOf(msg).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    out.writeInt(b.length); out.write(b)
+  /** The error line; `out` must be the stream any preceding frames went
+    * through, so the line lands after them. */
+  def writeError(out: java.io.OutputStream, msg: String): Unit =
+    out.write(("!" + msg.replace('\n', ' ').replace('\r', ' ') + "\n").getBytes(UTF_8))
+
+  /** One '\n'-terminated UTF-8 line read byte by byte, so the stream
+    * stays positioned for the frames after it; null at EOF. */
+  private[mem] def readLine(in: java.io.InputStream): String = {
+    val line = new java.io.ByteArrayOutputStream(128)
+    var b = in.read()
+    while (b != -1 && b != '\n') { line.write(b); b = in.read() }
+    if (b == -1 && line.size == 0) null else line.toString(UTF_8)
   }
 
   private def readField(in: DataInputStream, dt: DataType): Any =
@@ -238,7 +153,7 @@ private[mem] object WireBinary {
       case DoubleType => Double.box(in.readDouble())
       case StringType =>
         val b = new Array[Byte](in.readInt()); in.readFully(b)
-        new String(b, java.nio.charset.StandardCharsets.UTF_8)
+        new String(b, UTF_8)
       case TimestampType =>
         val micros = in.readLong()
         val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
@@ -247,34 +162,31 @@ private[mem] object WireBinary {
       case DateType =>
         java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(in.readInt().toLong))
       case other => throw new IllegalArgumentException(
-        s"wire binary: unsupported type $other")
+        s"wire codec: unsupported type $other")
     }
 
-  /** Read frames until the end marker; throws on an error frame, and on
-    * EOF before the terminator (truncation guard, like the text reader). */
+  /** Read frames until the end frame; throws on an error line, and on
+    * EOF before the end frame — a server (or uploading client) that died
+    * mid-stream must never pass as a short result. */
   def readRows(in: DataInputStream, schema: StructType): Iterator[Row] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+    def truncated = new java.io.IOException(
+      s"wire: connection closed mid-stream after ${buf.length} rows")
     var done = false
     while (!done) {
-      val tag =
-        try in.readByte()
-        catch { case _: EOFException => throw new java.io.IOException(
-          s"wire: connection closed mid-stream after ${buf.length} rows") }
+      val tag = try in.readByte() catch { case _: EOFException => throw truncated }
       tag match {
         case 0x00 => done = true
         case 0x01 =>
           val out = new Array[Any](schema.length)
           var i = 0
-          while (i < schema.length) {
+          try while (i < schema.length) {
             out(i) = readField(in, schema(i).dataType); i += 1
-          }
+          } catch { case _: EOFException => throw truncated }
           buf += Row.fromSeq(out.toIndexedSeq)
-        case 0x02 =>
-          val b = new Array[Byte](in.readInt()); in.readFully(b)
-          throw new java.io.IOException(
-            "wire: " + new String(b, java.nio.charset.StandardCharsets.UTF_8))
+        case '!' => throw new java.io.IOException("wire: " + readLine(in))
         case other => throw new java.io.IOException(
-          s"wire binary: unknown frame tag $other")
+          s"wire codec: unknown frame tag $other")
       }
     }
     buf.iterator
@@ -288,7 +200,14 @@ private[mem] object WireBinary {
   * (r12 verdict #3 hardening). Integral numbers parse as Long, decimal
   * forms as Double; object values keep insertion independence (Map). */
 private[mem] object WireJson {
-  def q(s: String): String = "\"" + WireCodec.esc(s) + "\""
+  private def esc(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
+  def q(s: String): String = "\"" + esc(s) + "\""
 
   /** Schema fingerprint for the prepared-statement-style staleness guard:
     * row-serving requests carry the fingerprint of the schema the CLIENT
@@ -299,7 +218,7 @@ private[mem] object WireJson {
     * not change result type". */
   def schemaFp(s: StructType): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .digest(s.json.getBytes(UTF_8))
     d.take(8).map(b => f"$b%02x").mkString
   }
 
@@ -727,33 +646,42 @@ object MemWireServer {
     new MemWireServer(server, acceptor)
   }
 
+  private def message(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
+
   private def handle(sock: Socket): Unit = {
-    val in = new BufferedReader(new InputStreamReader(
-      sock.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
-    // a reply ends with a small write (terminator, end marker or error
-    // frame), so its last bytes stay here until the final flush
+    val in = new java.io.BufferedInputStream(sock.getInputStream, 8192)
+    // a reply ends with a small write (end frame, error line or the last
+    // metadata line), so its last bytes stay here until the final flush
     val socketOut = new java.io.BufferedOutputStream(sock.getOutputStream, 1 << 16)
     val counting = new CountingOutputStream(socketOut)
-    // the response writer is selected AFTER the request parses: a request
+    // the reply sink is selected AFTER the request line is read: a request
     // carrying "deflate":true gets its whole response deflated (the
     // MongoDB OP_COMPRESSED shape — zlib over the reply); the request
     // line itself is always plain so the server can read it first
     var deflater: java.util.zip.Deflater = null
     var deflateOut: java.util.zip.DeflaterOutputStream = null
-    var binaryMode = false
-    var out = new BufferedWriter(new OutputStreamWriter(
-      counting, java.nio.charset.StandardCharsets.UTF_8))
+    var sink: java.io.OutputStream = counting
+    def useDeflate(): Unit = if (deflateOut == null) {
+      deflater = new java.util.zip.Deflater()
+      deflateOut = new java.util.zip.DeflaterOutputStream(counting, deflater, 8192, true)
+      sink = deflateOut
+    }
     var byteKey: String = null
-    def reply(lines: Iterator[String]): Unit = {
-      lines.foreach { l => out.write(l); out.write('\n') }
-      out.flush()
+    def finish(): Unit = {
       if (deflateOut != null) deflateOut.finish()
       if (byteKey != null)
         bytesShipped.getOrElseUpdate(byteKey,
           new java.util.concurrent.atomic.AtomicLong(0L)).addAndGet(counting.count)
     }
+    def reply(lines: Iterator[String]): Unit = {
+      val out = new BufferedWriter(new OutputStreamWriter(sink, UTF_8))
+      lines.foreach { l => out.write(l); out.write('\n') }
+      out.flush()
+      finish()
+    }
     try {
-      val req = in.readLine()
+      val req = WireCodec.readLine(in)
       if (req == null) return
       // deflate detection BEFORE parsing, on the raw line: a parse-failure
       // error reply must already be in the encoding the client committed
@@ -762,21 +690,7 @@ object MemWireServer {
       // diagnostic). The substring is unambiguous: a quote inside any
       // rendered string literal is always escaped as \", so the exact
       // text "deflate":true cannot occur inside a collection name.
-      if (req.contains("\"deflate\":true")) {
-        deflater = new java.util.zip.Deflater()
-        deflateOut = new java.util.zip.DeflaterOutputStream(
-          counting, deflater, 8192, true)
-        out = new BufferedWriter(new OutputStreamWriter(
-          deflateOut, java.nio.charset.StandardCharsets.UTF_8))
-      }
-      // binary-mode detection gets the same pre-parse probe: if the
-      // request line itself fails to parse, the error reply must already
-      // be an 0x02 frame for a rowfmt=bin client — a text '!' line would
-      // surface as "unknown frame tag 33" and lose the diagnostic, the
-      // exact misframing the error frame exists to prevent. Same
-      // unambiguity argument as above: quotes inside rendered string
-      // literals are escaped, so the exact text cannot occur in a name.
-      if (req.contains("\"rowfmt\":\"bin\"")) binaryMode = true
+      if (req.contains("\"deflate\":true")) useDeflate()
       val fields = WireJson.parse(req) match {
         case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
         case other => throw new IllegalArgumentException(
@@ -790,62 +704,32 @@ object MemWireServer {
       // authoritative field check (covers a third-party client spelling
       // the field with whitespace the raw-substring probe missed) —
       // nothing has been written yet, so installing here is still safe
-      if (deflateOut == null && fields.get("deflate").contains(true)) {
-        deflater = new java.util.zip.Deflater()
-        deflateOut = new java.util.zip.DeflaterOutputStream(
-          counting, deflater, 8192, true)
-        out = new BufferedWriter(new OutputStreamWriter(
-          deflateOut, java.nio.charset.StandardCharsets.UTF_8))
-      }
-      // authoritative (covers whitespace spellings the probe missed);
-      // OR — the probe's positive can only be a genuine request field
-      binaryMode = binaryMode || fields.get("rowfmt").contains("bin")
-      // one sink for binary frames: through the deflater when installed
-      def binSink: java.io.OutputStream =
-        if (deflateOut != null) deflateOut else counting
-      // row-serving dispatch: text lines (blank terminator) or binary
-      // frames (end marker), same truncation-guarded grammar either way.
-      // A lazy evaluation error BETWEEN rows becomes an in-band error
-      // frame/line; row writes themselves are atomic in both forms (text
-      // rows render fully before writing; binary rows only write after
-      // the iterator produced the Row).
-      def serveRows(coll: String, schema: StructType, rows: Iterator[Row]): Unit =
-        if (!binaryMode) {
-          var n = 0L
-          reply(rows.map { r => n += 1; WireCodec.writeRow(r) } ++
-            Iterator.single({ shipped(coll, n); "" }))
-        } else {
-          val dos = new java.io.DataOutputStream(
-            new java.io.BufferedOutputStream(binSink, 8192))
-          var n = 0L
-          // each row renders FULLY into rowBuf before any byte reaches the
-          // stream: a mid-row codec failure (a stored value whose runtime
-          // class mismatches the declared schema type) must not leave a
-          // partial frame in front of the error frame, or the client reads
-          // the 0x02 frame's bytes as field data and the diagnostic is
-          // lost to misframing (text rows get this atomicity for free —
-          // they render to a String before write)
-          val rowBuf = new java.io.ByteArrayOutputStream(256)
-          val rowDos = new java.io.DataOutputStream(rowBuf)
-          try {
-            rows.foreach { r =>
-              rowBuf.reset()
-              WireBinary.writeRow(r, schema, rowDos)
-              rowBuf.writeTo(dos)
-              n += 1
-            }
-            WireBinary.writeEnd(dos)
-          } catch { case e: Throwable =>
-            WireBinary.writeError(dos, String.valueOf(e.getMessage))
+      if (fields.get("deflate").contains(true)) useDeflate()
+      // Row-serving replies are frame streams. Each row renders FULLY into
+      // rowBuf before any byte reaches the stream: a mid-row codec failure
+      // (a stored value whose runtime class mismatches the declared
+      // schema type) must not leave a partial frame in front of the error
+      // line, or the client reads the line's bytes as field data and the
+      // diagnostic is lost to misframing. A lazy evaluation error BETWEEN
+      // rows becomes the same in-band error line.
+      def serveRows(coll: String, schema: StructType, rows: Iterator[Row]): Unit = {
+        val dos = new java.io.DataOutputStream(new java.io.BufferedOutputStream(sink, 8192))
+        val rowBuf = new java.io.ByteArrayOutputStream(256)
+        val rowDos = new java.io.DataOutputStream(rowBuf)
+        var n = 0L
+        try {
+          rows.foreach { r =>
+            rowBuf.reset()
+            WireCodec.writeRow(r, schema, rowDos)
+            rowBuf.writeTo(dos)
+            n += 1
           }
-          dos.flush()
-          if (deflateOut != null) deflateOut.finish()
-          shipped(coll, n)
-          if (byteKey != null)
-            bytesShipped.getOrElseUpdate(byteKey,
-              new java.util.concurrent.atomic.AtomicLong(0L))
-              .addAndGet(counting.count)
-        }
+          WireCodec.writeEnd(dos)
+        } catch { case e: Throwable => WireCodec.writeError(dos, message(e)) }
+        dos.flush()
+        shipped(coll, n)
+        finish()
+      }
       def intField(k: String, dflt: => Int): Int = fields.get(k) match {
         case Some(n: Long) => n.toInt
         case _ => dflt
@@ -946,14 +830,11 @@ object MemWireServer {
             longField("start_rank"), longField("end_rank"),
             spec.filters, spec.projection, Some(coll)))
         case "register" =>
-          val schema = DataType.fromJson(in.readLine()).asInstanceOf[StructType]
-          val rows = Iterator.continually(in.readLine())
-            .takeWhile(l => l != null && l.nonEmpty)
-            .map(WireCodec.readRow(_, schema)).toArray
-          // the declared count guards against a client that died
-          // mid-stream: EOF reads like the blank terminator, and without
-          // the check the server would register the TRUNCATED relation
-          // under the name and serve silently-short results forever after
+          val schema = DataType.fromJson(WireCodec.readLine(in)).asInstanceOf[StructType]
+          // a client that died mid-stream never sent the end frame, so
+          // readRows throws and the TRUNCATED relation is never registered;
+          // the declared count is the second guard
+          val rows = WireCodec.readRows(new java.io.DataInputStream(in), schema).toArray
           val declared = fields.get("rows") match {
             case Some(n: Long) => n
             case _ => throw new IllegalArgumentException(
@@ -964,22 +845,15 @@ object MemWireServer {
               "(client stream truncated?) - collection NOT registered")
           MemStore.registerRaw(strField("collection"), schema, rows)
           reply(Iterator.single("ok"))
-        case other =>
-          reply(Iterator.single(s"!unknown op '$other'"))
+        case other => throw new IllegalArgumentException(s"unknown op '$other'")
       }
     } catch {
+      // nothing of the reply has been written yet (row-serving errors
+      // after the first frame are answered inside serveRows), so one error
+      // line serves metadata and frame readers alike
       case e: Throwable =>
-        // a binary-mode client reads frames, not lines — the error must
-        // arrive as an 0x02 frame or the diagnostic is lost to misframing
-        try {
-          if (binaryMode) {
-            val dos = new java.io.DataOutputStream(
-              if (deflateOut != null) deflateOut else counting)
-            WireBinary.writeError(dos, String.valueOf(e.getMessage))
-            dos.flush()
-            if (deflateOut != null) deflateOut.finish()
-          } else reply(Iterator.single(s"!${e.getMessage}"))
-        } catch { case _: Throwable => () }
+        try { WireCodec.writeError(sink, message(e)); finish() }
+        catch { case _: Throwable => () }
     } finally {
       // release zlib's NATIVE buffers deterministically — the explicitly
       // constructed Deflater is not ended by DeflaterOutputStream, and
@@ -996,8 +870,8 @@ object MemWireServer {
   * the row server — partition readers (which may run in executor tasks)
   * each dial their own connection, exactly like a database driver opens a
   * cursor per shard. Only `host`/`port` serialize into the task closure. */
-class SocketStoreClient(host: String, port: Int, deflate: Boolean = false,
-    binaryRows: Boolean = false) extends StoreClient {
+class SocketStoreClient(host: String, port: Int, deflate: Boolean = false)
+    extends StoreClient {
   private def callRaw[A](request: String)(read: java.io.InputStream => A): A = {
     val sock = new Socket(host, port)
     // default-constructed InflaterInputStream owns its Inflater, and
@@ -1006,8 +880,7 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false,
     // poll would otherwise accumulate off-heap memory on a quiet heap)
     var inflated: java.util.zip.InflaterInputStream = null
     try {
-      val out = new BufferedWriter(new OutputStreamWriter(
-        sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
+      val out = new BufferedWriter(new OutputStreamWriter(sock.getOutputStream, UTF_8))
       out.write(request); out.write('\n'); out.flush()
       // with "deflate":true in the request the server zlib-compresses the
       // WHOLE response (the MongoDB OP_COMPRESSED shape); the inflater
@@ -1027,25 +900,16 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false,
 
   private def call[A](request: String)(read: BufferedReader => A): A =
     callRaw(request) { raw =>
-      read(new BufferedReader(new InputStreamReader(
-        raw, java.nio.charset.StandardCharsets.UTF_8)))
+      read(new BufferedReader(new InputStreamReader(raw, UTF_8)))
     }
 
   /** Request-field suffix every op appends: the deflate ask (when this
     * client is configured for compressed responses). */
   private def optDeflate: String = if (deflate) ",\"deflate\":true" else ""
 
-  /** Binary-frame ask — ONLY on row-serving requests ([[WireBinary]]);
-    * metadata ops stay line-JSON so their one-line readers keep working. */
-  private def optBinary: String = if (binaryRows) ",\"rowfmt\":\"bin\"" else ""
-
-  /** Row-response reader at this client's configured encoding. */
   private def readRowsFrom(raw: java.io.InputStream, schema: StructType): Iterator[Row] =
-    if (binaryRows)
-      WireBinary.readRows(new java.io.DataInputStream(
-        new java.io.BufferedInputStream(raw, 8192)), schema)
-    else readRowsTo(new BufferedReader(new InputStreamReader(
-      raw, java.nio.charset.StandardCharsets.UTF_8)), schema)
+    WireCodec.readRows(new java.io.DataInputStream(
+      new java.io.BufferedInputStream(raw, 8192)), schema)
 
   private def callOneLine(request: String): String =
     call(request) { in =>
@@ -1054,22 +918,6 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false,
       if (l.startsWith("!")) throw new java.io.IOException(s"wire: ${l.drop(1)}")
       l
     }
-
-  private def readRowsTo(in: BufferedReader, schema: StructType): Iterator[Row] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    var l = in.readLine()
-    while (l != null && l.nonEmpty) {
-      if (l.startsWith("!")) throw new java.io.IOException(s"wire: ${l.drop(1)}")
-      buf += WireCodec.readRow(l, schema)
-      l = in.readLine()
-    }
-    // EOF before the blank terminator = the server died mid-stream; the
-    // partial buffer must throw, not pass as a short result (the read-path
-    // mirror of the register op's declared-count guard)
-    if (l == null) throw new java.io.IOException(
-      s"wire: connection closed mid-stream after ${buf.length} rows")
-    buf.iterator
-  }
 
   /** Prepared-statement-style staleness recovery: run `f` with the cached
     * schema; if the server refuses the request because the collection was
@@ -1105,7 +953,6 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false,
       sb.append(",\"schema_fp\":")
         .append(WireJson.q(fpOf(name, schema)))
       sb.append(optDeflate)
-      sb.append(optBinary)
     }
 
   def hasCollection(name: String): Boolean =
@@ -1127,7 +974,7 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false,
       // planning sized it)
       callRaw(s"""{"op":"rows","collection":${WireJson.q(name)},""" +
           s""""start":$start,"end":$end,""" +
-          s""""schema_fp":${WireJson.q(fpOf(name, schema))}$optDeflate$optBinary}""")(
+          s""""schema_fp":${WireJson.q(fpOf(name, schema))}$optDeflate}""")(
         readRowsFrom(_, schema))
     }
 
@@ -1221,27 +1068,19 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false,
     }
 
   def registerDerived(name: String, schema: StructType, rs: Array[Row]): Unit = {
-    // STREAM rows to the socket (r12 verdict #3 hardening) — the former
-    // single StringBuilder materialized the whole derived relation a
-    // second time as rendered text before the first byte was written;
-    // a large pushed-join result now flows row-by-row through the
-    // BufferedWriter
+    // STREAM rows to the socket (r12 verdict #3 hardening): a large
+    // pushed-join result flows frame by frame through the buffered
+    // stream, never materialized a second time before the first byte
     val sock = new Socket(host, port)
     try {
-      val out = new BufferedWriter(new OutputStreamWriter(
-        sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
-      val in = new BufferedReader(new InputStreamReader(
-        sock.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
-      out.write(s"""{"op":"register","collection":${WireJson.q(name)},""" +
-        s""""rows":${rs.length}}""")
-      out.write('\n')
-      out.write(schema.json); out.write('\n') // StructType.json is one line
-      var i = 0
-      while (i < rs.length) {
-        out.write(WireCodec.writeRow(rs(i))); out.write('\n')
-        i += 1
-      }
-      out.write('\n') // blank terminator
+      val out = new java.io.DataOutputStream(
+        new java.io.BufferedOutputStream(sock.getOutputStream, 8192))
+      val in = new BufferedReader(new InputStreamReader(sock.getInputStream, UTF_8))
+      out.write((s"""{"op":"register","collection":${WireJson.q(name)},""" +
+        s""""rows":${rs.length}}\n""" +
+        schema.json + "\n").getBytes(UTF_8)) // StructType.json is one line
+      rs.foreach(WireCodec.writeRow(_, schema, out))
+      WireCodec.writeEnd(out)
       out.flush()
       val l = in.readLine()
       if (l == null) throw new java.io.IOException("wire: connection closed")

@@ -17,8 +17,10 @@ class StateMemListener extends StreamingQueryListener {
     val p = e.progress
     if (p.stateOperators.nonEmpty) {
       val mem = p.stateOperators.map(_.memoryUsedBytes).sum
-      val rows = p.stateOperators.map(_.numRowsTotal).sum
-      StateMemListener.record(mem, rows)
+      // numRowsTotal is -1 when the store does not track rows (RocksDB
+      // with trackTotalNumberOfRows=false): no count, not a zero count
+      val rows = p.stateOperators.map(_.numRowsTotal)
+      StateMemListener.record(mem, if (rows.exists(_ < 0)) -1L else rows.sum)
     }
   }
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
@@ -26,19 +28,21 @@ class StateMemListener extends StreamingQueryListener {
 
 object StateMemListener {
   @volatile var peakMem: Long = 0L
-  @volatile var peakRows: Long = 0L
+  /** -1 until a micro-batch reports a tracked row count. */
+  @volatile var peakRows: Long = -1L
   def record(mem: Long, rows: Long): Unit = synchronized {
     if (mem > peakMem) peakMem = mem
     if (rows > peakRows) peakRows = rows
   }
-  def reset(): Unit = synchronized { peakMem = 0L; peakRows = 0L }
+  def reset(): Unit = synchronized { peakMem = 0L; peakRows = -1L }
 }
 
 /** usage: runMain graft.tools.StateProbe <sfDir> <q1,q2,...>
   *
   * Runs each named gate once and prints its wall time plus the peak
-  * state-store memory/rows any of its micro-batches reported. Flip the
-  * provider with SPARK_GRAFT_STREAM_STATE=hdfs for the A/B. */
+  * state-store memory/rows any of its micro-batches reported (rows print
+  * as n/a when the store does not track them). Flip the provider with
+  * SPARK_GRAFT_STREAM_STATE=rocksdb for the A/B. */
 object StateProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: StateProbe <sfDir> <q1,q2,...>")
@@ -53,7 +57,7 @@ object StateProbe {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val provider = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE", "rocksdb")
+    val provider = if (graft.gates.GateSupport.rocksdbState) "rocksdb" else "hdfs"
     gates.foreach { g =>
       val fn = graft.SparkEntry.queries.getOrElse(g,
         sys.error(s"unknown query '$g'"))
@@ -63,7 +67,8 @@ object StateProbe {
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[stateprobe] $g provider=$provider wall=${dt}%.2fs " +
         f"peak_state_mem=${StateMemListener.peakMem / 1048576.0}%.1fMB " +
-        s"peak_state_rows=${StateMemListener.peakRows}")
+        "peak_state_rows=" +
+        (if (StateMemListener.peakRows < 0) "n/a" else StateMemListener.peakRows))
       spark.catalog.clearCache()
     }
     spark.stop()

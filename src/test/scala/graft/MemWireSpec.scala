@@ -41,6 +41,22 @@ class MemWireSpec extends AnyFunSuite {
     .option("client", "wire").option("port", server.port.toString)
     .load()
 
+  /** The frame bytes of `rows` (rows, then the end frame). */
+  private def frames(schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row]): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    rows.foreach(WireCodec.writeRow(_, schema, out))
+    WireCodec.writeEnd(out)
+    out.flush()
+    bytes.toByteArray
+  }
+
+  private def roundTrip(schema: org.apache.spark.sql.types.StructType,
+      rows: org.apache.spark.sql.Row*): Seq[org.apache.spark.sql.Row] =
+    WireCodec.readRows(new java.io.DataInputStream(
+      new java.io.ByteArrayInputStream(frames(schema, rows))), schema).toSeq
+
   test("codec round-trips every supported type incl. escapes and micros") {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
@@ -54,10 +70,9 @@ class MemWireSpec extends AnyFunSuite {
       Boolean.box(true), Byte.box(7), Short.box(-3), Int.box(42),
       Long.box((1L << 53) + 3L), Float.box(1.5f), Double.box(math.Pi),
       "qu\"ote\\andctl", ts, java.sql.Date.valueOf("2024-02-29"))
-    assert(WireCodec.readRow(WireCodec.writeRow(row), schema) === row)
     val nulls = org.apache.spark.sql.Row(null, null, null, null, null,
       null, null, null, null, null)
-    assert(WireCodec.readRow(WireCodec.writeRow(nulls), schema) === nulls)
+    assert(roundTrip(schema, row, nulls) === Seq(row, nulls))
     // pre-epoch fractional second (ADVICE r12): getTime is negative while
     // getNanos is always positive, so truncating division encoded -1.5s
     // as -0.5s — the reader's floorDiv then "round-tripped" a corrupted
@@ -66,7 +81,7 @@ class MemWireSpec extends AnyFunSuite {
     assert(pre.getNanos === 500000000) // the shape under test
     val preRow = org.apache.spark.sql.Row(null, null, null, null, null,
       null, null, null, pre, java.sql.Date.valueOf("1969-07-20"))
-    assert(WireCodec.readRow(WireCodec.writeRow(preRow), schema) === preRow)
+    assert(roundTrip(schema, preRow) === Seq(preRow))
   }
 
   test("full scan over the wire equals the registered data; 4 cursor connections") {
@@ -178,8 +193,10 @@ class MemWireSpec extends AnyFunSuite {
     }
     val str = Gen.oneOf(
       Gen.asciiPrintableStr,
-      Gen.listOf(Gen.oneOf('"', '\\', '\n', '', 'é', '中', 'a'))
-        .map(_.mkString),
+      // NUL, and lone / paired surrogates: a lone surrogate has no UTF-8
+      // form, so the wire must agree with Spark's own conversion
+      Gen.listOf(Gen.oneOf('"', '\\', '\n', '\u0001', '\u0000', 'é', '中', 'a',
+        '\uD800', '\uDBFF', '\uDC00', '\uDFFF')).map(_.mkString),
       Gen.const(""))
     val dbl = Gen.oneOf(
       Gen.chooseNum(-1e300, 1e300),
@@ -195,8 +212,18 @@ class MemWireSpec extends AnyFunSuite {
     } yield org.apache.spark.sql.Row(
       s.orNull, l.map(Long.box).orNull, d.map(Double.box).orNull,
       i.map(Int.box).orNull, b.map(Boolean.box).orNull, ts.orNull)
+    def sparkString(s: String): String =
+      org.apache.spark.unsafe.types.UTF8String.fromString(s).toString
+    // the pinned corner: UTF-8 has no form for a lone surrogate, so both
+    // the wire and Spark carry "a\uD800b" as "a?b"
+    val lone = org.apache.spark.sql.Row("a\uD800b", null, null, null, null, null)
+    assert(roundTrip(schema, lone).map(_.getString(0)) ===
+      Seq(sparkString("a\uD800b")))
+    assert(sparkString("a\uD800b") === "a?b")
     val prop = Prop.forAll(rowGen) { row =>
-      WireCodec.readRow(WireCodec.writeRow(row), schema) == row
+      val want = org.apache.spark.sql.Row.fromSeq(row.toSeq.updated(0,
+        Option(row.getString(0)).map(sparkString).orNull))
+      roundTrip(schema, row) == Seq(want)
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
     assert(res.passed, s"wire codec property failed: ${res.status}")
@@ -322,16 +349,15 @@ class MemWireSpec extends AnyFunSuite {
     val name = "wire_trunc#join#u"
     client.registerDerived(name, schema,
       Array(org.apache.spark.sql.Row(Int.box(1)), org.apache.spark.sql.Row(Int.box(2))))
-    // raw socket simulating a client that declares 5 rows, streams 2,
-    // then dies (socket close = EOF, which reads like the terminator)
+    // raw socket simulating a client that declares 5 rows, streams 2
+    // frames, then dies (socket close = EOF before the end frame)
+    val rowFrames = frames(schema,
+      Seq(org.apache.spark.sql.Row(Int.box(97)), org.apache.spark.sql.Row(Int.box(98))))
     val sock = new java.net.Socket("127.0.0.1", server.port)
-    val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
-    out.write(s"""{"op":"register","collection":"$name","rows":5}""")
-    out.write('\n')
-    out.write(schema.json); out.write('\n')
-    out.write("[97]"); out.write('\n')
-    out.write("[98]"); out.write('\n')
+    val out = sock.getOutputStream
+    out.write((s"""{"op":"register","collection":"$name","rows":5}\n""" +
+      schema.json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    out.write(rowFrames, 0, rowFrames.length - 1) // no end frame
     out.flush()
     sock.close()
     // give the handler thread a moment to hit EOF and reject
@@ -341,14 +367,13 @@ class MemWireSpec extends AnyFunSuite {
     assert(client.rows(name, 0, 2).map(_.getInt(0)).toSeq === Seq(1, 2))
     // and a request with NO declared count is refused outright
     val sock2 = new java.net.Socket("127.0.0.1", server.port)
-    val out2 = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      sock2.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
+    val out2 = sock2.getOutputStream
     val in2 = new java.io.BufferedReader(new java.io.InputStreamReader(
       sock2.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
-    out2.write(s"""{"op":"register","collection":"$name"}"""); out2.write('\n')
-    out2.write(schema.json); out2.write('\n')
-    out2.write("[99]"); out2.write('\n')
-    out2.write('\n'); out2.flush()
+    out2.write((s"""{"op":"register","collection":"$name"}\n""" +
+      schema.json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    out2.write(frames(schema, Seq(org.apache.spark.sql.Row(Int.box(99)))))
+    out2.flush()
     assert(in2.readLine().startsWith("!"))
     sock2.close()
     assert(client.rows(name, 0, 2).map(_.getInt(0)).toSeq === Seq(1, 2))
@@ -408,37 +433,35 @@ class MemWireSpec extends AnyFunSuite {
         "cast(null as float) f, cast(null as double) d, " +
         "cast(null as string) s, cast(null as timestamp) t, cast(null as date) dt"))
     MemStore.register("wire_alltypes", withNulls)
-    val text = new SocketStoreClient("127.0.0.1", server.port)
-    val bin = new SocketStoreClient("127.0.0.1", server.port, binaryRows = true)
-    val binZ = new SocketStoreClient("127.0.0.1", server.port,
-      deflate = true, binaryRows = true)
-    val expect = text.rows("wire_alltypes", 0, 3).toSeq
-    assert(bin.rows("wire_alltypes", 0, 3).toSeq === expect)
-    assert(binZ.rows("wire_alltypes", 0, 3).toSeq === expect)
+    val plain = new SocketStoreClient("127.0.0.1", server.port)
+    val z = new SocketStoreClient("127.0.0.1", server.port, deflate = true)
+    val expect = MemStore.rowsOf("wire_alltypes").toSeq
     assert(expect.length === 3)
-    // the pushed pipeline through binary frames via the connector option
+    assert(plain.rows("wire_alltypes", 0, 3).toSeq === expect)
+    assert(z.rows("wire_alltypes", 0, 3).toSeq === expect)
+    // the pushed pipeline through the connector
     val got = spark.read.format(fmt)
       .option("collection", "wire_alltypes")
       .option("client", "wire").option("port", server.port.toString)
-      .option("rowfmt", "bin")
       .load().where(col("i") === 3).collect()
     assert(got.length === 1 && got(0).getAs[String]("s").contains("uni中code"))
-    // binary frames are smaller than JSON text for the same rows
+    // the frame size, pinned exactly: each row is a tag byte plus one null
+    // byte per field (11); the two full rows add 44 fixed-width bytes
+    // (1+1+2+4+8+4+8+4+8+4, the string's length int included) plus their
+    // UTF-8 strings (17 and 0 bytes); the all-null row adds nothing; one
+    // end byte closes the reply. 11+44+17 + 11+44 + 11 + 1 = 139.
     MemWireServer.bytesShipped.remove("wire_alltypes")
-    text.rows("wire_alltypes", 0, 3).toSeq
-    val textBytes = MemWireServer.bytesShipped("wire_alltypes").get()
-    MemWireServer.bytesShipped.remove("wire_alltypes")
-    bin.rows("wire_alltypes", 0, 3).toSeq
-    val binBytes = MemWireServer.bytesShipped("wire_alltypes").get()
-    assert(binBytes > 0 && binBytes < textBytes,
-      s"binary should out-pack text: $binBytes vs $textBytes")
-    // errors arrive as 0x02 frames, loudly, in both binary modes
-    val e1 = intercept[java.io.IOException] { bin.rows("wire_nope", 0, 1).toSeq }
+    plain.rows("wire_alltypes", 0, 3).toSeq
+    assert(MemWireServer.bytesShipped("wire_alltypes").get() === 139L)
+    // errors arrive as in-band error lines, loudly, plain and deflated
+    val e1 = intercept[java.io.IOException] { plain.rows("wire_nope", 0, 1).toSeq }
     assert(e1.getMessage.contains("wire_nope"))
-    val e2 = intercept[java.io.IOException] { binZ.rowCount("wire_nope") }
-    assert(e2.getMessage != null)
+    val e2 = intercept[java.io.IOException] { z.rows("wire_nope", 0, 1).toSeq }
+    assert(e2.getMessage.contains("wire_nope"))
+    val e3 = intercept[java.io.IOException] { z.rowCount("wire_nope") }
+    assert(e3.getMessage != null)
     // agg partials cross as binary frames too
-    val partials = bin.queryAgg("wire_alltypes", 0, 3,
+    val partials = plain.queryAgg("wire_alltypes", 0, 3,
       QuerySpec(Nil, None, Nil, 0, None, Seq("b", "i")),
       groups = Seq("b"), funcs = Seq(graft.sources.mem.MemAgg.CountAll,
         graft.sources.mem.MemAgg.SumCol("i"))).toSeq
@@ -449,18 +472,18 @@ class MemWireSpec extends AnyFunSuite {
   test("a mid-row codec failure arrives as a clean error frame, never misframed") {
     import org.apache.spark.sql.types._
     // a stored value whose runtime class mismatches the declared schema
-    // (registerRaw trusts its caller): binary encoding fails mid-row at
-    // field b of row 2 — the frame for that row must not reach the wire
-    // at all, or the client reads the 0x02 error frame's bytes as field
-    // data and the diagnostic is lost to misframing
+    // (registerRaw trusts its caller): encoding fails mid-row at field b
+    // of row 2 — the frame for that row must not reach the wire at all,
+    // or the client reads the error line's bytes as field data and the
+    // diagnostic is lost to misframing
     val schema = StructType(Seq(
       StructField("a", IntegerType), StructField("b", IntegerType)))
     MemStoreClient.registerDerived("wire_badrow", schema, Array(
       org.apache.spark.sql.Row(Int.box(1), Int.box(2)),
       org.apache.spark.sql.Row(Int.box(3), "not an int"),
       org.apache.spark.sql.Row(Int.box(5), Int.box(6))))
-    val bin = new SocketStoreClient("127.0.0.1", server.port, binaryRows = true)
-    val e = intercept[java.io.IOException] { bin.rows("wire_badrow", 0, 3).toSeq }
+    val client = new SocketStoreClient("127.0.0.1", server.port)
+    val e = intercept[java.io.IOException] { client.rows("wire_badrow", 0, 3).toSeq }
     // the failure surfaces as the server's in-band error, not a frame
     // desync ("unknown frame tag") or a truncation ("closed mid-stream")
     assert(e.getMessage.startsWith("wire: "), e.getMessage)
@@ -469,23 +492,25 @@ class MemWireSpec extends AnyFunSuite {
   }
 
   test("a malformed rowfmt=bin request line still gets an 0x02 error frame (ADVICE r13)") {
-    // the request itself fails WireJson.parse, so binaryMode cannot come
-    // from the parsed fields — the raw-substring probe must detect it, or
-    // the client reads a text '!' line as "unknown frame tag 33" and the
-    // server's diagnostic is lost to misframing
+    // the name predates the single codec: `rowfmt` is no longer an option
+    // and the 0x02 error frame became the '!' error line, which the frame
+    // reader recognises as a tag. The request still carries the old
+    // "rowfmt":"bin" field and itself fails WireJson.parse, so the server
+    // knows nothing about the op: its error line must still read cleanly
+    // through the frame reader, not as an unknown frame tag or a truncation
     val sock = new java.net.Socket("127.0.0.1", server.port)
     try {
-      val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-        sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
-      out.write("""{"op":"query","rowfmt":"bin","collection": BROKEN""")
-      out.write('\n'); out.flush()
+      val out = sock.getOutputStream
+      out.write("{\"op\":\"query\",\"rowfmt\":\"bin\",\"collection\": BROKEN\n"
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      out.flush()
       val in = new java.io.DataInputStream(sock.getInputStream)
-      assert(in.readByte() === 0x02.toByte)
-      val len = in.readInt()
-      val buf = new Array[Byte](len)
-      in.readFully(buf)
-      val msg = new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-      assert(msg.nonEmpty)
+      val e = intercept[java.io.IOException] {
+        WireCodec.readRows(in, org.apache.spark.sql.types.StructType(Nil))
+      }
+      assert(e.getMessage.startsWith("wire: "), e.getMessage)
+      assert(e.getMessage.contains("wire json: bad value") &&
+        e.getMessage.contains("BROKEN"), e.getMessage)
     } finally sock.close()
   }
 
@@ -503,17 +528,18 @@ class MemWireSpec extends AnyFunSuite {
     val schemaB = StructType(Seq(
       StructField("x", LongType), StructField("tag", StringType)))
     val sock = new java.net.Socket("127.0.0.1", server.port)
-    val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
+    val out = sock.getOutputStream
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
       sock.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
-    out.write(s"""{"op":"register","collection":"$name","rows":2}""")
-    out.write('\n')
-    out.write(schemaB.json); out.write('\n')
-    out.write("[100,\"a\"]\n[200,\"b\"]\n\n"); out.flush()
+    out.write((s"""{"op":"register","collection":"$name","rows":2}\n""" +
+      schemaB.json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    out.write(frames(schemaB, Seq(
+      org.apache.spark.sql.Row(Long.box(100L), "a"),
+      org.apache.spark.sql.Row(Long.box(200L), "b"))))
+    out.flush()
     assert(in.readLine() === "ok"); sock.close()
-    // without the fingerprint guard this would misparse [100,"a"] as an
-    // int-only row; with it, the server refuses, the client re-fetches
+    // without the fingerprint guard this would misparse the (long, string)
+    // frames as int-only rows; with it, the server refuses, the client re-fetches
     // the schema and the SAME calls return the new shape transparently
     val again = client.rows(name, 0, 2)
       .map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -525,24 +551,28 @@ class MemWireSpec extends AnyFunSuite {
   }
 
   test("a server dying mid-stream makes the client throw, never a short result") {
-    // fake server: valid schema, two rows, then socket close with NO blank
-    // terminator - EOF must read as an error, not as end-of-rows
+    // fake server: valid schema, two row frames, then socket close with
+    // NO end frame - EOF must read as an error, not as end-of-rows
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("x", IntegerType)))
+    val rowFrames = frames(schema,
+      Seq(org.apache.spark.sql.Row(Int.box(1)), org.apache.spark.sql.Row(Int.box(2))))
     val fake = new java.net.ServerSocket(0, 4,
       java.net.InetAddress.getLoopbackAddress)
     val t = new Thread(() => {
       try {
         while (!fake.isClosed) {
           val s = fake.accept()
-          val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-            s.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
+          val out = s.getOutputStream
           val in = new java.io.BufferedReader(new java.io.InputStreamReader(
             s.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
           val req = in.readLine()
           if (req != null) {
-            if (req.contains("\"schema\"")) out.write(schema.json + "\n")
-            else { out.write("[1]\n[2]\n") } // rows/query: truncated stream
+            if (req.contains("\"schema\""))
+              out.write((schema.json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            // rows: cut before the end frame; query: cut inside row 2
+            else out.write(rowFrames, 0,
+              rowFrames.length - (if (req.contains("\"op\":\"query\"")) 3 else 1))
             out.flush()
           }
           s.close()

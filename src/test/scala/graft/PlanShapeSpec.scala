@@ -119,6 +119,22 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("mlmMask hashes each token once (stacked-projection hoist guard)") {
+    // ADVICE r20 #3: Corpus.mlmMask binds `__z` — one md5 bucket PER
+    // TOKEN — in its own projection, and its four consumers read the
+    // column. That relies on CollapseProject never merging the stacked
+    // projections (it keeps a multi-consumer non-cheap expression apart).
+    // If an optimizer change inlines `__z`, every consumer re-hashes every
+    // token: identical output, ~4x the md5 work, no correctness signal —
+    // this guard makes the plan shape loud instead.
+    val opt = Corpus.mlmMask(docs, "doc_id", "text")
+      .queryExecution.optimizedPlan.toString
+    val n = "md5\\(".r.findAllIn(opt).length
+    assert(n == 1, s"mlmMask evaluates the per-token md5 array $n times, " +
+      s"not once (the __z projection was collapsed) — re-measure:\n" +
+      opt.take(1600))
+  }
+
   test("weightedSample plans as TakeOrderedAndProject, never a global sort") {
     val ws = Corpus.weightedSample(
       docs.select(col("doc_id"), col("n_chars")), "doc_id", col("n_chars"), k = 10)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   // All numeric output that lands in a JSON file or the stdout contract
@@ -11,7 +10,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_ONLY=q1,q2,... : time just the named queries (profiling
     // aid). A partial run never touches the baseline file — the full-map
     // overwrite would silently drop every unselected query's entry.
@@ -21,12 +19,9 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
       case None => SparkEntry.queries
     }
-    val spark = SparkEntry.sessionBuilder(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SparkEntry.localSession(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val cpus = spark.sparkContext.defaultParallelism
     // Warm-up: run EVERY query once at the smallest scale factor (falling
     // back to the benchmarked dir) so whole-stage codegen compilation and
     // JIT warm per QUERY SHAPE before anything is timed — measured runs
@@ -129,7 +124,7 @@ object Bench {
     val cal = (1 to 3).map { _ =>
       val t0 = System.nanoTime()
       // pmod keeps the ANSI sum far from long overflow (2e8 * 1e6 < 2^63)
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
+      spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("sum(pmod(xxhash64(id), 1000000)) s").collect()
       (System.nanoTime() - t0) / 1e9
     }.min
@@ -169,7 +164,7 @@ object Bench {
       // otherwise land on the probe and read as host contention
       Thread.sleep(300)
       val t0 = System.nanoTime()
-      spark.range(0L, 8000000L, 1L, cpus.toInt)
+      spark.range(0L, 8000000L, 1L, cpus)
         .selectExpr("sum(pmod(xxhash64(id), 1000000)) s").collect()
       probes += (System.nanoTime() - t0) / 1e9
     }

@@ -24,6 +24,18 @@ object SparkEntry {
   def sessionBuilder(b: SparkSession.Builder): SparkSession.Builder =
     Tables.sessionConf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
+  /** The local session every graft main builds: `local[$SPARK_GRAFT_CPUS]`
+    * (`defaultCpus` when unset), shuffle partitions = cores, no UI, plus
+    * [[sessionBuilder]]'s settings. Returned unbuilt so a caller can add a
+    * static conf before `getOrCreate()`. */
+  def localSession(defaultCpus: Int): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    sessionBuilder(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false"))
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The M2 end-to-end slice: DSL-filtered outer ⋈ fact with mapper
     * projection (reference J1, join/package.scala:52-63). */

@@ -34,9 +34,9 @@ private[graft] object GateSupport {
     * at sf0.1, s12 22.7 s vs 8.7 s at sf1 (17.5 s after
     * trackTotalNumberOfRows=false), ~2–3× sf10 walls — per-micro-batch
     * native store load/commit dominates bounded feeds, while the default
-    * provider's peak state is 41–89 MB on-heap at sf1 (StateProbe),
-    * nowhere near a heap ceiling at any SF the decade instrument
-    * reaches. So the DEFAULT stays Spark's in-memory provider, and
+    * provider's peak state is 41–89 MB on-heap at sf1
+    * (`graft.tools.Profile` reports it as `peak_state_mem`), nowhere near
+    * a heap ceiling at any SF the decade instrument reaches. So the DEFAULT stays Spark's in-memory provider, and
     * `SPARK_GRAFT_STREAM_STATE=rocksdb` flips every stateful gate to
     * RocksDB (with changelog checkpointing and row-tracking off) for
     * deployments where per-partition state actually exceeds heap —

@@ -34,9 +34,9 @@ object Tables {
 
   /** Session settings every graft session needs. It belongs at session
     * construction — a loader mutating session conf is a global side effect
-    * that surprises concurrent sessions — so every entrypoint
-    * (Bench/Verify/RunOne/tools.PlanAudit/tests) applies it at build time via
-    * this map.
+    * that surprises concurrent sessions — so every entrypoint applies it at
+    * build time via this map (the mains through `SparkEntry.localSession`,
+    * the tests and userbench through `SparkEntry.sessionBuilder`).
     *
     * - `nanosAsLong`: if the testdata generator ships `events.ts` as
     *   TIMESTAMP(NANOS) again (it did through round 8), the vectorized

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Similarity
@@ -35,12 +35,7 @@ object AnnCrossover {
   def main(args: Array[String]): Unit = {
     val nQ = if (args.length > 0) args(0).toInt else 50
     val k = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkEntry.sessionBuilder(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // (label, dir, stageFactor): factor 0 = expect the dir to exist.

@@ -101,12 +101,7 @@ object GenScale {
         else Set("documents", "embeddings", "star", "events")
       sel.contains
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkEntry.sessionBuilder(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     stage(spark, srcDir, outDir, factor, want)
     spark.stop()

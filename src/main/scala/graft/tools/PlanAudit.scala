@@ -1,6 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.debug._
 
 /** Plan-signature audit: the 100 TB plan review, mechanized and PINNED.
   *
@@ -12,7 +16,12 @@ import org.apache.spark.sql.SparkSession
   * so unlike the bench, a plan signature can be compared EXACTLY: any
   * drift is a real plan change, never noise.
   *
-  * usage: runMain graft.tools.PlanAudit <name>[,name...] [sfDir]  // explain
+  * usage: runMain graft.tools.PlanAudit <name>[,name...] [sfDir] [outDir]
+  *          // explain("formatted") per gate: to stdout, or to
+  *          // <outDir>/<name>.txt (the plans/r<N>/ evidence trail)
+  *        runMain graft.tools.PlanAudit codegen <name>[,name...] [sfDir] [outDir]
+  *          // generated Java per codegen subtree (AQE off), to stdout
+  *          // or <outDir>/<name>_codegen.txt
   *        runMain graft.tools.PlanAudit scan  [sfDir]  // stdout sweep
   *        runMain graft.tools.PlanAudit audit [sfDir]  // write PLAN_AUDIT.json,
   *                                                     // diff vs PLAN_BASELINE.json,
@@ -44,6 +53,10 @@ import org.apache.spark.sql.SparkSession
   * staged side effects) to produce the returned frame, so the audited
   * plan would be the trivial post-materialization read. Their batch twins
   * cover the same operator plans (COVERAGE.md maps each).
+  *
+  * The explain and codegen modes validate every name before building
+  * anything (an unknown name writes nothing and exits 1) and annotate a
+  * gate whose capture fails in its output instead of aborting the rest.
   *
   * The baseline records its sfDir: statistics (file sizes) feed join
   * strategy, so signatures are only comparable at the SAME scale factor.
@@ -144,19 +157,43 @@ object PlanAudit {
     (sf, m)
   }
 
+  /** Whole-stage generated Java per codegen subtree, built in a child
+    * session with AQE off: under AQE the codegen subtrees only exist after
+    * execution (whole-stage codegen itself is independent of AQE). */
+  private def generatedCode(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, sfDir: String): String = {
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.adaptive.enabled", "false")
+    fn(ss, sfDir).queryExecution.debug.codegenToSeq().zipWithIndex.map {
+      case ((subtree, code, _), i) =>
+        s"== subtree $i ==\n$subtree\n-- generated code --\n$code"
+    }.mkString("\n\n")
+  }
+
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty,
-      "usage: PlanAudit <name>[,name...]|scan|audit|pin [sfDir]")
+    val usage = "usage: PlanAudit scan|audit|pin [sfDir] | " +
+      "[codegen] <name>[,name...] [sfDir] [outDir]"
+    require(args.nonEmpty, usage)
     val mode = args(0)
-    val sfDir = if (args.length > 1) args(1)
+    val sweep = Set("scan", "audit", "pin")(mode)
+    val codegen = mode == "codegen"
+    // evidence modes: `rest` = <names> [sfDir] [outDir]
+    val rest = if (codegen) args.drop(1) else args
+    require(rest.nonEmpty, usage)
+    val sfDir = if (rest.length > 1) rest(1)
       else if (mode == "audit" || mode == "pin") "/root/testdata/sf0.01"
       else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.SparkEntry.sessionBuilder(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val names = if (sweep) Seq.empty[String]
+      else rest(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    // validate every name before anything is built or written (ADVICE r19
+    // #4): an unknown name must not leave a partial evidence directory
+    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[planaudit] unknown queries: ${unknown.mkString(", ")} - nothing written")
+      sys.exit(1)
+    }
+    val spark = graft.SparkEntry.localSession(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     mode match {
@@ -249,12 +286,30 @@ object PlanAudit {
           sys.exit(1)
         } else println("[planaudit] clean: no tripwires, no drift")
 
-      case names =>
-        names.split(",").foreach { name =>
-          val fn = graft.SparkEntry.queries.getOrElse(name,
-            sys.error(s"unknown query '$name'"))
-          println(s"===== $name =====")
-          fn(spark, sfDir).explain("formatted")
+      case _ =>
+        val outDir = rest.lift(2)
+        outDir.foreach(d => new java.io.File(d).mkdirs())
+        names.foreach { name =>
+          val fn = graft.SparkEntry.queries(name)
+          // a capture failure is annotated in the evidence, not fatal
+          val body =
+            try if (codegen) generatedCode(spark, fn, sfDir)
+              else fn(spark, sfDir).queryExecution
+                .explainString(ExplainMode.fromString("formatted"))
+            catch { case NonFatal(e) =>
+              s"PLAN CAPTURE FAILED: ${e.getClass.getName}: ${e.getMessage}" }
+          val kind = if (codegen) "codegen, AQE off" else "explain-formatted"
+          // stream/staging gates run their query while building the
+          // frame: what they return is a read of the materialized result
+          val note = if (skip(name)) ", post-materialization read" else ""
+          val text = s"== $name (sfDir=$sfDir, $kind$note) ==\n$body\n"
+          outDir match {
+            case Some(d) =>
+              val path = s"$d/$name${if (codegen) "_codegen" else ""}.txt"
+              java.nio.file.Files.writeString(java.nio.file.Paths.get(path), text)
+              println(s"[planaudit] wrote $path")
+            case None => print(text)
+          }
         }
     }
     spark.stop()

@@ -1,0 +1,60 @@
+package graft.tools
+
+/** Per-gate profile: for each named `SparkEntry.queries` gate and each run,
+  * one line with build time (`fn(spark, dir)`, which includes any eager
+  * action a constructor hides and, for stream gates, the stream itself),
+  * execute time (`.count()`), and the [[graft.profile.Record]] of the
+  * whole run: jobs, stages, tasks, executor run/CPU/GC time, shuffle and
+  * spill volume, codegen compiles, and for streams the micro-batch count,
+  * peak state memory/rows and summed state-commit and `addBatch` time.
+  * `provider` is the state store stateful gates use
+  * (`GateSupport.rocksdbState`); flip it with
+  * SPARK_GRAFT_STREAM_STATE=rocksdb for an A/B. A development tool:
+  * Bench and Verify do not use it.
+  *
+  * usage: runMain graft.tools.Profile <sfDir> <g1,g2,...> [runs=N] [warm=<dir>]
+  *
+  * `warm=<dir>` runs each gate once at another scale first (printed as
+  * `warm`), reproducing the codegen/JIT state Bench's warm-up leaves
+  * before its measured runs.
+  */
+object Profile {
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2,
+      "usage: Profile <sfDir> <g1,g2,...> [runs=N] [warm=<dir>]")
+    val sfDir = args(0)
+    val gates = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    def opt(key: String) = args.drop(2).collectFirst {
+      case a if a.startsWith(s"$key=") => a.stripPrefix(s"$key=") }
+    val runs = opt("runs").map(_.toInt).getOrElse(1)
+    val queries = graft.SparkEntry.queries
+    val unknown = gates.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+
+    val spark = graft.SparkEntry.localSession(4)
+      .config("spark.sql.streaming.streamingQueryListeners",
+        classOf[graft.profile.StreamRecorder].getName)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val rocksdb = graft.gates.GateSupport.rocksdbState
+    val provider = if (rocksdb) "rocksdb" else "hdfs"
+    val passes = opt("warm").map("warm" -> _).toSeq ++
+      (1 to runs).map(i => s"run $i" -> sfDir)
+    for (g <- gates; (label, dir) <- passes) {
+      val ((rows, buildNs, execNs), rec) = graft.profile.Profile.during(spark) {
+        val t0 = System.nanoTime()
+        val df = queries(g)(spark, dir)
+        val t1 = System.nanoTime()
+        val n = df.count()
+        (n, t1 - t0, System.nanoTime() - t1)
+      }
+      // streamSession turns RocksDB row tracking off, and Spark then
+      // reports 0 state rows, not -1: the count is unknown, not zero
+      val shown = if (rocksdb) rec.copy(peakStateRows = -1L) else rec
+      println(s"[profile] $g $label: rows=$rows build_ms=${buildNs / 1000000} " +
+        s"exec_ms=${execNs / 1000000} provider=$provider ${shown.render}")
+      spark.catalog.clearCache()
+    }
+    spark.stop()
+  }
+}

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Similarity
@@ -58,12 +58,7 @@ object RecallProbe {
     val nQ = if (args.length > 1) args(1).toInt else 50
     val k = if (args.length > 2) args(2).toInt else 10
     val refresh = sys.env.get("SPARK_GRAFT_REFRESH_RECALL").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkEntry.sessionBuilder(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").cache()

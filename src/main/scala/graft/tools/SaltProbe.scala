@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Joins
@@ -25,12 +24,7 @@ object SaltProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 4000000L
     val salts = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.SparkEntry.sessionBuilder(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the auto-salt regime: dim too big to broadcast, AQE defaults
     // (skew-join ON — the baseline the salted path must beat)
@@ -48,24 +42,12 @@ object SaltProbe {
       ts.min
     }
 
-    /** total shuffle records written across the stages `body` triggers
-      * (same listener harness as ScaleSpec.shuffleRecords) */
-    def shuffleRecords(body: => Unit): Long = {
-      val acc = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          acc.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        Thread.sleep(500) // let the listener bus drain (measurement tool)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      acc.get()
-    }
+    /** total shuffle records written across the stages `body` triggers */
+    def shuffleRecords(body: => Unit): Long =
+      graft.profile.Profile.during(spark)(body)._2.shuffleRecords
 
-    println(f"# SaltProbe rows=$n salts=$salts cpus=$cpus keySpace=$keySpace")
+    println(s"# SaltProbe rows=$n salts=$salts " +
+      s"cpus=${spark.sparkContext.defaultParallelism} keySpace=$keySpace")
     println("share plain_sec salted_sec speedup plain_shuf salted_shuf probe_share")
     Seq(0.0, 0.05, 0.1, 0.2, 0.3, 0.5, 0.7).foreach { share =>
       val hotThreshold = (share * 1000).toInt

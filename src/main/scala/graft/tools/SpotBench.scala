@@ -99,12 +99,7 @@ object SpotBench {
     val only = sys.env.get("SPARK_GRAFT_SPOT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val refresh = sys.env.get("SPARK_GRAFT_REFRESH_SPOT").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkEntry.sessionBuilder(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // self-staging (r18 verdict #6): the GenScale corpora live in tmpfs —

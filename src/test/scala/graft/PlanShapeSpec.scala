@@ -135,6 +135,36 @@ class PlanShapeSpec extends AnyFunSuite {
       opt.take(1600))
   }
 
+  /** `split(` calls in the optimized plan: how often each document is
+    * tokenized. */
+  private def splits(df: DataFrame): Int =
+    "split\\(".r.findAllIn(df.queryExecution.optimizedPlan.toString).length
+
+  test("bigramStream tokenizes each document once per read (hoist guard)") {
+    // ADVICE r20 #3: bigramStream binds `split(text)` as `__toks` in its
+    // own projection so the per-position lambda reads an attribute; the
+    // same CollapseProject precondition as mlmMask. kneserNeyCrossEntropy
+    // reads the stream five times (the type table c2 feeds itself, c1, np
+    // and nt; the scored join reads the stream again), one split each.
+    // Inlined, every read splits four times (two size() calls and two
+    // element_at() calls in the lambda).
+    val kn = TextAnalysis.kneserNeyCrossEntropy(docs, "doc_id", "text")
+    val n = splits(kn)
+    assert(n == 5, s"kneserNeyCrossEntropy tokenizes $n times, not once per " +
+      "bigram-stream read (the __toks projection was collapsed) — re-measure:\n" +
+      kn.queryExecution.optimizedPlan.toString.take(1600))
+  }
+
+  test("topNgramCoverage tokenizes each document once (hoist guard)") {
+    // same hoist as bigramStream: inlined, the gram lambda would split
+    // three times (two size() calls and slice())
+    val cov = TextAnalysis.topNgramCoverage(docs, "doc_id", "text", 3)
+    val n = splits(cov)
+    assert(n == 1, s"topNgramCoverage tokenizes $n times, not once " +
+      "(the __toks projection was collapsed) — re-measure:\n" +
+      cov.queryExecution.optimizedPlan.toString.take(1600))
+  }
+
   test("weightedSample plans as TakeOrderedAndProject, never a global sort") {
     val ws = Corpus.weightedSample(
       docs.select(col("doc_id"), col("n_chars")), "doc_id", col("n_chars"), k = 10)

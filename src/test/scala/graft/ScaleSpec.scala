@@ -103,22 +103,9 @@ class ScaleSpec extends AnyFunSuite {
     assert(above.count() === plain.count())
   }
 
-  /** Total shuffle records written across every stage triggered by `body`
-    * (listener-bus-drained before reading, so the count is complete). */
-  private def shuffleRecords(body: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        acc.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    acc.get()
-  }
+  /** Total shuffle records written across every stage triggered by `body`. */
+  private def shuffleRecords(body: => Unit): Long =
+    graft.profile.Profile.during(spark)(body)._2.shuffleRecords
 
   /** Round-10 verdict #5: the bigram type-first scoring and term-table
     * bounding are justified by Zipf arguments the uniform synthetic

@@ -34,7 +34,7 @@ object SparkTestSession {
     sc.setJobGroup(group, "jobsDuring")
     try {
       val a = body
-      org.apache.spark.GraftTestBridge.waitForListeners(sc)
+      org.apache.spark.GraftListenerBridge.waitForListeners(sc)
       (a, jobs.get)
     } finally {
       sc.clearJobGroup()

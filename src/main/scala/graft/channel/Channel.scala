@@ -75,15 +75,23 @@ final class MutableBuilder private[channel] () {
 
 object Channel {
 
-  /** Build and run the channel; throws on invalid MQL or missing collection
-    * (reference build() validation, channel/package.scala:250-260). */
-  def create(spark: SparkSession, sfDir: String)(f: MutableBuilder => Unit): DataFrame = {
+  /** Run the user's builder and apply the checks every channel shares
+    * (reference build() validation, channel/package.scala:250-260): a
+    * remembered MQL parse error, an invalid read preference, no query. */
+  private def validated(f: MutableBuilder => Unit): MutableBuilder = {
     val b = new MutableBuilder
     f(b)
     b.parseError.foreach(e => throw new MqlParseException(e))
     b.readPrefError.foreach(e => throw new IllegalArgumentException(e))
     if (b.pred.isEmpty)
       throw new IllegalArgumentException("Query is not set")
+    b
+  }
+
+  /** Build and run the channel; throws on invalid MQL or missing collection
+    * (reference build() validation, channel/package.scala:250-260). */
+  def create(spark: SparkSession, sfDir: String)(f: MutableBuilder => Unit): DataFrame = {
+    val b = validated(f)
     val q = Q(pred = b.pred, sortKeys = b.sortKeys, skipN = b.skipN, limitN = b.limitN)
     val source = b.memCollectionName match {
       case Some(mem) =>
@@ -118,12 +126,7 @@ object Channel {
   def stream(spark: SparkSession, startOffset: Long = 0L,
       keyBy: Option[String] = None)
       (f: MutableBuilder => Unit): DataFrame = {
-    val b = new MutableBuilder
-    f(b)
-    b.parseError.foreach(e => throw new MqlParseException(e))
-    b.readPrefError.foreach(e => throw new IllegalArgumentException(e))
-    if (b.pred.isEmpty)
-      throw new IllegalArgumentException("Query is not set")
+    val b = validated(f)
     val mem = b.memCollectionName.getOrElse(
       throw new IllegalArgumentException(
         "Streaming channels read the connector: memCollection is not set"))

@@ -547,6 +547,24 @@ object CoreGates {
     }
   }
 
+  /** The lineitem slice the wire gates (s23, s25-s27) read: registered
+    * in the store and served by a loopback row server once per (JVM, dir)
+    * — the port rides the stage cache value. Returns the wire reader over
+    * it. */
+  private def wireLineitem(s: SparkSession, dir: String) = {
+    val coll = "li_wire" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val port = stageCache.getOrElseUpdate(s"wire#$dir", {
+      graft.sources.mem.MemStore.register(coll,
+        t(s, dir, "lineitem")
+          .where(pmod(col("l_orderkey"), lit(20)) === 1)
+          .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"))
+      graft.sources.mem.MemWireServer.start().port.toString
+    })
+    s.read.format("graft.sources.mem.GraftMemSource")
+      .option("collection", coll)
+      .option("client", "wire").option("port", port)
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // The fuzz sweep extended to the ANALYTIC grammar: 12 seeded window
@@ -2192,20 +2210,8 @@ object CoreGates {
     // by the loopback TCP row server through SocketStoreClient — one
     // connection per partition reader, rows crossing a REAL typed
     // serialization boundary. A codec or framing bug breaks the hash.
-    // Server + staged collection cached per (JVM, dir); port rides the
-    // cache value.
     "s23_wire_cursor" -> ((s, dir) => {
-      val coll = "li_wire" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val port = stageCache.getOrElseUpdate(s"wire#$dir", {
-        graft.sources.mem.MemStore.register(coll,
-          t(s, dir, "lineitem")
-            .where(pmod(col("l_orderkey"), lit(20)) === 1)
-            .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"))
-        graft.sources.mem.MemWireServer.start().port.toString
-      }).toInt
-      s.read.format("graft.sources.mem.GraftMemSource")
-        .option("collection", coll)
-        .option("client", "wire").option("port", port.toString)
+      wireLineitem(s, dir)
         .load()
         .where(col("l_quantity") >= 25)
         .orderBy(col("l_orderkey").asc, col("l_linenumber").asc)
@@ -2218,17 +2224,7 @@ object CoreGates {
     // deflate: DuckDB checks frames under the inflater end-to-end across
     // the full pipeline
     "s27_wire_binary" -> ((s, dir) => {
-      val coll = "li_wire" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val port = stageCache.getOrElseUpdate(s"wire#$dir", {
-        graft.sources.mem.MemStore.register(coll,
-          t(s, dir, "lineitem")
-            .where(pmod(col("l_orderkey"), lit(20)) === 1)
-            .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"))
-        graft.sources.mem.MemWireServer.start().port.toString
-      }).toInt
-      s.read.format("graft.sources.mem.GraftMemSource")
-        .option("collection", coll)
-        .option("client", "wire").option("port", port.toString)
+      wireLineitem(s, dir)
         .option("deflate", "true")
         .load()
         .where(col("l_quantity") >= 20 && col("l_quantity") <= 35)
@@ -2243,17 +2239,7 @@ object CoreGates {
     // driver's DuckDB hash check covers the inflater path end-to-end,
     // not just the spec's in-process assertions
     "s26_wire_deflate" -> ((s, dir) => {
-      val coll = "li_wire" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val port = stageCache.getOrElseUpdate(s"wire#$dir", {
-        graft.sources.mem.MemStore.register(coll,
-          t(s, dir, "lineitem")
-            .where(pmod(col("l_orderkey"), lit(20)) === 1)
-            .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"))
-        graft.sources.mem.MemWireServer.start().port.toString
-      }).toInt
-      s.read.format("graft.sources.mem.GraftMemSource")
-        .option("collection", coll)
-        .option("client", "wire").option("port", port.toString)
+      wireLineitem(s, dir)
         .option("deflate", "true")
         .load()
         .where(col("l_returnflag") =!= "N" && col("l_quantity") < 20)
@@ -2300,24 +2286,14 @@ object CoreGates {
 
     // r13 wire AGGREGATION, data-checked: the connector pushes the
     // grouped aggregate to the store (SupportsPushDownAggregates,
-    // partial-only) and the wire client's `agg` op makes the SERVER
-    // group/aggregate its slice — one partial row per group per cursor
+    // partial-only) and the wire `query` op carries it, so the SERVER
+    // groups/aggregates its slice — one partial row per group per cursor
     // crosses the socket (MemWireSpec proves the volume; this gate
     // proves the VALUES through the DuckDB oracle in the driver sweep).
     // Integer sum + count + min/max only — exact under any partial
     // merge order, so the hash is deterministic.
     "s25_wire_agg" -> ((s, dir) => {
-      val coll = "li_wire" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val port = stageCache.getOrElseUpdate(s"wire#$dir", {
-        graft.sources.mem.MemStore.register(coll,
-          t(s, dir, "lineitem")
-            .where(pmod(col("l_orderkey"), lit(20)) === 1)
-            .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"))
-        graft.sources.mem.MemWireServer.start().port.toString
-      }).toInt
-      s.read.format("graft.sources.mem.GraftMemSource")
-        .option("collection", coll)
-        .option("client", "wire").option("port", port.toString)
+      wireLineitem(s, dir)
         .load()
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),

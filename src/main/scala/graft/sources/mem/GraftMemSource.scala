@@ -503,16 +503,21 @@ object MemRel {
   * connector shape of the reference's compiled native query (filters
   * compile into `find`/CQL so predicates never run client-side,
   * storage.scala:597,650-652; sort/skip/limit applied on the cursor
-  * :320-324). Evaluation order is FIXED — slice → sample → filter →
-  * sort → skip → limit → project — and every client funnels through
-  * [[QueryEval]] (the wire server runs the same function on its end), so
-  * an in-process call and a TCP round-trip are bit-identical.
+  * :320-324). Evaluation order is FIXED — slice → key ranks → sample →
+  * filter → sort → skip → limit → project → partial aggregate — and
+  * every client funnels through [[QueryEval]] (the wire server runs the
+  * same function on its end), so an in-process call and a TCP
+  * round-trip are bit-identical.
   *
   * `countServed`: whether rows this query serves count into
-  * [[MemStore.served]] — true on the row-serving path (the
-  * instrumentation's contract: rows the store served to the scan), false
-  * for internal fetches whose OUTPUT is counted elsewhere (the partial-
-  * aggregate reader counts the partials it ships, not its inputs). */
+  * [[MemStore.served]] — true for a scan's cursors (the
+  * instrumentation's contract: rows, or partials, the store served to
+  * the scan), false for internal fetches (pushed-join leaves, raw pages).
+  *
+  * `agg`: partial aggregation (group columns, functions) over the
+  * projected rows — the Mongo aggregation-pipeline shape; `projection`
+  * then lists exactly the columns the groups and functions read.
+  * `keyRange`: one key's rank slice of a keyed stream cursor. */
 final case class QuerySpec(
     filters: Seq[Filter],
     sample: Option[(Double, Double, Long)],
@@ -520,15 +525,40 @@ final case class QuerySpec(
     offset: Int,
     limit: Option[Int],
     projection: Seq[String],
-    countServed: Boolean = true) extends Serializable
+    countServed: Boolean = true,
+    agg: Option[(Seq[String], Seq[MemAgg])] = None,
+    keyRange: Option[KeyRange] = None) extends Serializable {
+
+  /** Schema of the rows this spec serves from a collection of schema
+    * `full`: the projected columns, or for a partial aggregate the group
+    * columns (`group_<col>`, stored types) then one `agg_<i>` column per
+    * function in its Spark result type, matched positionally by the
+    * engine's rewritten final aggregate. */
+  def replySchema(full: StructType): StructType = agg match {
+    case None => StructType(projection.map(c => full(full.fieldIndex(c))))
+    case Some((groups, funcs)) =>
+      StructType(
+        groups.map(g => full(g).copy(name = s"group_$g")) ++
+          funcs.zipWithIndex.map { case (f, i) =>
+            org.apache.spark.sql.types.StructField(
+              s"agg_$i", f.resultType(full), nullable = true)
+          })
+  }
+}
+
+/** One key's [startRank, endRank) slice of a keyed cursor: ranks count
+  * the key's rows in cursor order BEFORE pushed filters (a resume offset
+  * addresses the log, not a filtered view) — the reference's
+  * `(persistence_id, sequence_nr)` resume, one cursor per key. */
+final case class KeyRange(column: String, key: String, startRank: Long, endRank: Long)
 
 /** Store-side PARTIAL aggregation over one filtered slice — one partial
   * row per group, or EXACTLY one row for a global aggregate even on an
   * empty slice (the engine's final merge is a SUM over partial counts;
-  * an all-empty store must still yield count = 0, not NULL). Shared by
-  * the in-process agg reader and the wire server's `agg` op, so a wire
-  * round-trip ships partials, not filtered input rows. `schema` is the
-  * PROJECTED slice schema (group keys + aggregated columns). */
+  * an all-empty store must still yield count = 0, not NULL). The last
+  * stage of [[QueryEval]], so a wire round-trip ships partials, not
+  * filtered input rows. `schema` is the PROJECTED slice schema (group
+  * keys + aggregated columns). */
 object AggEval {
   private def cmp(a: Any, b: Any): Int = (a, b) match {
     case (a: Number, b: Number) => MemStore.numCmp(a, b) // exact for big longs
@@ -567,13 +597,10 @@ object AggEval {
   }
 }
 
-/** Shared store-side evaluation for the KEYED streaming cursor (reference
-  * S3/S4: `(persistence_id, sequence_nr)` resume): per-key high-watermark
-  * counts and one key's rank slice. Ranks count the key's rows in cursor
-  * order BEFORE pushed filters (the resume offset is a position in the
-  * log, not in a filtered view), exactly like [[MemKeyedReaderFactory]]
-  * always evaluated — hoisted here so the wire server runs it on its end
-  * and only the key's slice crosses the socket. */
+/** Per-key high-watermark counts for the KEYED streaming cursor (reference
+  * S3/S4: `(persistence_id, sequence_nr)` resume) — a real keyed log
+  * serves these from per-partition metadata; the wire server runs this on
+  * its end so only (key, count) pairs cross the socket. */
 object KeyedEval {
   def counts(rows: Iterator[Row], keyIdx: Int): Map[String, Long] = {
     val m = scala.collection.mutable.HashMap.empty[String, Long]
@@ -583,48 +610,39 @@ object KeyedEval {
     }
     m.toMap
   }
-
-  def slice(
-      rows: Iterator[Row],
-      schema: StructType,
-      keyIdx: Int,
-      key: String,
-      startRank: Long,
-      endRank: Long,
-      filters: Seq[Filter],
-      projection: Seq[String],
-      servedKey: Option[String]): Iterator[Row] = {
-    val idx = projection.map(schema.fieldIndex).toIndexedSeq
-    var rank = -1L
-    rows
-      .filter(r => String.valueOf(r.get(keyIdx)) == key)
-      .filter { _ => rank += 1; rank >= startRank && rank < endRank }
-      .filter(r => filters.forall(MemStore.eval(r, schema, _)))
-      .map { r =>
-        servedKey.foreach(k => MemStore.served.get(k).foreach(_.incrementAndGet()))
-        Row.fromSeq(idx.map(r.get))
-      }
-  }
 }
 
 object QueryEval {
   /** Evaluate `spec` over the [start, end) slice of a collection's stable
     * cursor order. `sliceStart` seeds the pushed TABLESAMPLE (per-cursor
     * Bernoulli, deterministic per (seed, slice) — a server-side $sample).
-    * Lazy past the sample/sort stages: a limit stops pulling early. */
+    * Lazy up to the sort and aggregate stages: a limit stops pulling
+    * early. Served rows count on the OUTPUT — for an aggregate, the
+    * partials. */
   def run(
-      slice: Array[Row],
+      slice: Iterator[Row],
       schema: StructType,
       sliceStart: Int,
       spec: QuerySpec,
       servedKey: Option[String]): Iterator[Row] = {
+    // a keyed cursor's rank slice: ranks count the key's rows before any
+    // filter (a resume offset is a position in the log)
+    val ranked = spec.keyRange match {
+      case Some(KeyRange(column, key, startRank, endRank)) =>
+        val keyIdx = schema.fieldIndex(column)
+        var rank = -1L
+        slice
+          .filter(r => String.valueOf(r.get(keyIdx)) == key)
+          .filter { _ => rank += 1; rank >= startRank && rank < endRank }
+      case None => slice
+    }
     val sampled = spec.sample match {
       case Some((lo, hi, seed)) =>
         val rng = new java.util.Random(seed + sliceStart)
-        slice.filter { _ => val u = rng.nextDouble(); u >= lo && u < hi }
-      case None => slice
+        ranked.filter { _ => val u = rng.nextDouble(); u >= lo && u < hi }
+      case None => ranked
     }
-    val filtered = sampled.iterator
+    val filtered = sampled
       .filter(r => spec.filters.forall(MemStore.eval(r, schema, _)))
     // cursor-side sort/limit (reference storage.scala:320-324): this
     // shard's cursor orders by the pushed keys and serves at most `limit`
@@ -637,10 +655,15 @@ object QueryEval {
     val skipped = if (spec.offset > 0) ordered.drop(spec.offset) else ordered
     val bounded = spec.limit.fold(skipped)(n => skipped.take(n))
     val idx = spec.projection.map(schema.fieldIndex).toIndexedSeq
-    bounded.map { r =>
-      servedKey.foreach(k => MemStore.served.get(k).foreach(_.incrementAndGet()))
-      Row.fromSeq(idx.map(r.get)) // store-side projection
+    val projected = bounded.map(r => Row.fromSeq(idx.map(r.get))) // store-side projection
+    val out = spec.agg match {
+      case Some((groups, funcs)) =>
+        AggEval.run(projected.toSeq, StructType(idx.map(schema(_))), groups, funcs)
+      case None => projected
     }
+    servedKey.fold(out)(k => out.map { r =>
+      MemStore.served.get(k).foreach(_.incrementAndGet()); r
+    })
   }
 }
 
@@ -661,46 +684,24 @@ trait StoreClient extends Serializable {
   def rowCount(name: String): Int
   /** Serve the [start, end) slice of the collection's stable cursor order. */
   def rows(name: String, start: Int, end: Int): Iterator[Row]
-  /** Serve the [start, end) slice with the pushed pipeline evaluated
-    * STORE-SIDE ([[QuerySpec]]: filters/sample/sort/skip/limit/projection).
-    * Default: fetch the slice and run the shared [[QueryEval]] in-process —
-    * for the embedded/parquet stores that IS store-side (same JVM as the
-    * data). [[SocketStoreClient]] overrides it to ship the spec to the
-    * server, so only matching projected rows cross the socket (r12 verdict
-    * #1 — the reference's core pushdown premise). */
+  /** Serve the [start, end) slice with the whole pushed pipeline evaluated
+    * STORE-SIDE ([[QuerySpec]]: key ranks/sample/filters/sort/skip/limit/
+    * projection/partial aggregate); rows arrive in
+    * `spec.replySchema(schemaOf(name))`. Default: fetch the slice and run
+    * the shared [[QueryEval]] in-process — for the embedded/parquet stores
+    * that IS store-side (same JVM as the data). [[SocketStoreClient]]
+    * overrides it to ship the spec to the server, so only matching
+    * projected rows (or partials) cross the socket (r12 verdict #1 — the
+    * reference's core pushdown premise). */
   def query(name: String, start: Int, end: Int, spec: QuerySpec): Iterator[Row] =
-    QueryEval.run(rows(name, start, end).toArray, schemaOf(name), start, spec,
+    QueryEval.run(rows(name, start, end), schemaOf(name), start, spec,
       if (spec.countServed) Some(name) else None)
-  /** The [start, end) slice filtered/sampled/projected AND partially
-    * AGGREGATED store-side — one partial row per group crosses the seam
-    * (the Mongo aggregation-pipeline shape; Spark's retained final
-    * aggregate merges partials, exact under any sharding). Default runs
-    * the shared [[AggEval]] over [[query]]'s output; the wire client
-    * overrides it so only partials cross the socket. `spec.projection`
-    * must list exactly the columns `groups`/`funcs` read. */
-  def queryAgg(name: String, start: Int, end: Int, spec: QuerySpec,
-      groups: Seq[String], funcs: Seq[MemAgg]): Iterator[Row] = {
-    val full = schemaOf(name)
-    val projSchema = StructType(spec.projection.map(c => full(full.fieldIndex(c))))
-    AggEval.run(query(name, start, end, spec).toSeq, projSchema, groups, funcs)
-  }
   /** Per-key row counts over `keyColumn` — the keyed stream's
     * high-watermarks (a real keyed log serves these from per-partition
     * metadata). Wire client overrides: only (key, count) pairs cross. */
   def keyCounts(name: String, keyColumn: String): Map[String, Long] =
     KeyedEval.counts(rows(name, 0, rowCount(name)),
       schemaOf(name).fieldIndex(keyColumn))
-  /** One key's [startRank, endRank) rank slice (ranks in cursor order
-    * before filters — a resume offset addresses the log, not a filtered
-    * view), filtered + projected store-side. */
-  def keySlice(name: String, keyColumn: String, key: String,
-      startRank: Long, endRank: Long, filters: Seq[Filter],
-      projection: Seq[String]): Iterator[Row] = {
-    val schema = schemaOf(name)
-    KeyedEval.slice(rows(name, 0, rowCount(name)), schema,
-      schema.fieldIndex(keyColumn), key, startRank, endRank, filters,
-      projection, Some(name))
-  }
   /** Register a store-computed derived relation (pushed-join result). */
   def registerDerived(name: String, schema: StructType, rows: Array[Row]): Unit
   /** Identity of the backing STORE — join pushdown is accepted only
@@ -1100,17 +1101,18 @@ class MemScan(
       name
   }
 
-  /** Output schema of a pushed aggregation: group columns (their stored
-    * types) then one column per aggregate in its Spark result type —
-    * matched positionally by the engine's rewritten final aggregate. */
-  private lazy val aggSchema: Option[StructType] = agg.map { case (groups, funcs) =>
-    StructType(
-      groups.map(g => fullSchema(g).copy(name = s"group_$g")) ++
-        funcs.zipWithIndex.map { case (f, i) =>
-          org.apache.spark.sql.types.StructField(
-            s"agg_$i", f.resultType(fullSchema), nullable = true)
-        })
-  }
+  /** The cursor's whole pushed pipeline. An aggregate reads only the
+    * columns its groups and functions read (pushAggregation declines
+    * once a limit, offset or top-n is pushed, and they decline after it). */
+  private val spec = QuerySpec(pushed.toSeq, sample, topNKeys, offset, limit,
+    agg.fold(required.fieldNames.toSeq) { case (groups, funcs) =>
+      (groups ++ funcs.collect {
+        case MemAgg.CountCol(c) => c
+        case MemAgg.MinCol(c) => c
+        case MemAgg.MaxCol(c) => c
+        case MemAgg.SumCol(c) => c
+      }).distinct
+    }, agg = agg)
 
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection}
 
@@ -1162,7 +1164,8 @@ class MemScan(
       java.util.OptionalLong.of(n * math.max(1, required.defaultSize).toLong)
   }
 
-  override def readSchema(): StructType = aggSchema.getOrElse(required)
+  override def readSchema(): StructType =
+    if (agg.isEmpty) required else spec.replySchema(fullSchema)
   override def description(): String =
     s"graft-mem:$collection PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.simpleString}" +
@@ -1207,30 +1210,28 @@ class MemScan(
       MemStore.lastTopN(collection) = (topNKeys, limit.getOrElse(Int.MaxValue))
     MemStore.served(collection) = new java.util.concurrent.atomic.AtomicLong(0L)
     sample.foreach(MemStore.lastSample(collection) = _)
-    agg match {
-      case Some((groups, funcs)) =>
-        MemStore.lastAgg(collection) = (groups, funcs.map(MemAgg.render))
-        new MemAggReaderFactory(fullSchema, aggSchema.get, pushed, groups, funcs,
-          sample, client)
-      case None =>
-        new MemReaderFactory(fullSchema, required, pushed, maxTimeMs, limit,
-          topNKeys, offset, Some(scanId), sample, client)
+    agg.foreach { case (groups, funcs) =>
+      MemStore.lastAgg(collection) = (groups, funcs.map(MemAgg.render))
     }
+    // runtime (DPP) filters apply on the batch ROW path only: a pushed
+    // aggregate's partials would not be the rows a runtime filter names
+    new MemReaderFactory(readSchema(), spec, maxTimeMs,
+      if (agg.isEmpty) Some(scanId) else None, client)
   }
 
   // the pushed OFFSET never reaches the stream path (streaming plans have
   // no Offset operator); the stream's own resume position is startOffset.
-  // A pushed JOIN never reaches it either (join pushdown is a batch rule)
+  // A pushed JOIN, aggregate or sample never reaches it either (those
+  // pushdowns are batch rules), so the stream's cursors run this spec as is
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     keyColumn match {
       case Some(kc) =>
-        new MemKeyedMicroBatchStream(collection, fullSchema, required, pushed,
+        new MemKeyedMicroBatchStream(collection, required, spec, maxTimeMs,
           kc, startOffset, maxRowsPerTrigger, client)
       case None =>
-        new MemMicroBatchStream(collection, fullSchema, required, pushed,
-          maxTimeMs, limit, topNKeys, startOffset, maxRowsPerTrigger,
-          client = client)
+        new MemMicroBatchStream(collection, required, spec, maxTimeMs,
+          startOffset, maxRowsPerTrigger, client)
     }
 }
 
@@ -1256,15 +1257,12 @@ object MemScan {
   * the checkpointed offset — exactly-once delivery of appended rows. */
 class MemMicroBatchStream(
     collection: String,
-    fullSchema: StructType,
     required: StructType,
-    pushed: Array[Filter],
+    spec: QuerySpec,
     maxTimeMs: Option[Long],
-    limit: Option[Int],
-    topNKeys: Seq[(String, Boolean)],
     startOffset: Long,
-    maxRowsPerTrigger: Option[Long] = None,
-    client: StoreClient = MemStoreClient)
+    maxRowsPerTrigger: Option[Long],
+    client: StoreClient)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
@@ -1308,9 +1306,8 @@ class MemMicroBatchStream(
       end.asInstanceOf[MemOffset].index.toInt)
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    MemStore.lastPushed(collection) = pushed.toSeq
-    new MemReaderFactory(fullSchema, required, pushed, maxTimeMs, limit,
-      topNKeys, client = client)
+    MemStore.lastPushed(collection) = spec.filters
+    new MemReaderFactory(required, spec, maxTimeMs, client = client)
   }
 }
 
@@ -1375,25 +1372,20 @@ object MemKeyedOffset {
   }
 }
 
-/** One key's [startRank, endRank) slice: ranks count that key's rows in
-  * registration order — the per-shard cursor of a keyed log. */
-case class MemKeyedInputPartition(
-    collection: String, key: String, startRank: Long, endRank: Long)
-    extends InputPartition
-
 /** Keyed-offset MicroBatchStream: parallelism = #keys (each key is an
   * independent cursor, the Kafka topic-partition shape), restart resumes
   * EVERY key at its own checkpointed rank, and a reader-option
   * `startOffset` applies PER KEY (skip each key's replayed prefix — the
-  * reference's sequence_nr floor). Projection and pushed filters ride the
-  * same store-side machinery as the batch reader; admission control
-  * (`maxRowsPerTrigger`) allocates the row budget across keys in sorted
-  * key order, so bounded batches drain deterministically. */
+  * reference's sequence_nr floor). Each key's partition is one [[KeyRange]]
+  * cursor through the same reader and store-side pipeline as the batch
+  * scan; admission control (`maxRowsPerTrigger`) allocates the row budget
+  * across keys in sorted key order, so bounded batches drain
+  * deterministically. */
 class MemKeyedMicroBatchStream(
     collection: String,
-    fullSchema: StructType,
     required: StructType,
-    pushed: Array[Filter],
+    spec: QuerySpec,
+    maxTimeMs: Option[Long],
     keyColumn: String,
     startOffsetPerKey: Long,
     maxRowsPerTrigger: Option[Long],
@@ -1451,111 +1443,39 @@ class MemKeyedMicroBatchStream(
       // a key first seen mid-stream (appended while running) starts at its
       // per-key startOffset floor, like initialOffset does for known keys
       val s = st.getOrElse(k, math.min(startOffsetPerKey, e))
-      if (e > s) Some(MemKeyedInputPartition(collection, k, s, e): InputPartition)
+      // the whole collection is the key's cursor: the store ranks the
+      // key's rows itself, so no per-key count round trip is needed
+      if (e > s) Some(MemInputPartition(collection, 0, Int.MaxValue,
+        Some(KeyRange(keyColumn, k, s, e))): InputPartition)
       else None
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    MemStore.lastPushed(collection) = pushed.toSeq
-    new MemKeyedReaderFactory(fullSchema, required, pushed, keyColumn, client)
+    MemStore.lastPushed(collection) = spec.filters
+    new MemReaderFactory(required, spec, maxTimeMs, client = client)
   }
 }
 
-/** Serves one key's rank slice through the client's keySlice seam: the
-  * store scans its cursor order, counts ranks for the partition's key
-  * only, and ships [startRank, endRank) rows through the same pushed-
-  * filter + projection path as the positional reader — for the wire
-  * client only that key's filtered projected slice crosses the socket
-  * (a real keyed store would seek by clustering key instead of scanning
-  * — the contract is identical). */
-class MemKeyedReaderFactory(
-    fullSchema: StructType,
-    required: StructType,
-    pushed: Array[Filter],
-    keyColumn: String,
-    client: StoreClient) extends PartitionReaderFactory {
+/** One store cursor: the [start, end) slice of the collection's cursor
+  * order (an end past the last row means "to the end"), narrowed to one
+  * key's rank range on a keyed stream. */
+case class MemInputPartition(collection: String, start: Int, end: Int,
+    keyRange: Option[KeyRange] = None) extends InputPartition
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[MemKeyedInputPartition]
-    val toInternal = ExpressionEncoder(RowEncoder.encoderFor(required))
-      .createSerializer()
-    val it = client.keySlice(p.collection, keyColumn, p.key,
-      p.startRank, p.endRank, pushed.toSeq, required.fields.map(_.name).toSeq)
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = toInternal(it.next()).copy(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
-}
-
-/** Partial-aggregate cursor: each store slice groups its FILTERED rows and
-  * ships one partial row per group (count/min/max/sum partials) — the
-  * map-side-combine contract; Spark's retained final aggregate merges
-  * partials across cursors, so results are exact under any sharding. A
-  * GLOBAL aggregation (no group columns) emits exactly one partial row
-  * even for an empty slice: the engine's final merge is a SUM over
-  * partial counts, and an all-empty store must still yield count = 0,
-  * not NULL. */
-class MemAggReaderFactory(
-    fullSchema: StructType,
-    aggSchema: StructType,
-    pushed: Array[Filter],
-    groups: Seq[String],
-    funcs: Seq[MemAgg],
-    sample: Option[(Double, Double, Long)] = None,
-    client: StoreClient = MemStoreClient) extends PartitionReaderFactory {
-
-  // only the columns the aggregation READS cross the client seam: group
-  // keys + aggregated columns — the store projects before aggregating
-  private val needed: Seq[String] = (groups ++ funcs.collect {
-    case MemAgg.CountCol(c) => c
-    case MemAgg.MinCol(c) => c
-    case MemAgg.MaxCol(c) => c
-    case MemAgg.SumCol(c) => c
-  }).distinct
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[MemInputPartition]
-    // the whole slice aggregates STORE-SIDE through the client seam
-    // (AggEval shared with the wire server's `agg` op): one partial row
-    // per group crosses, never the filtered input rows. countServed =
-    // false: this reader's contract counts the PARTIALS it ships (in
-    // next() below), not the rows the store read.
-    val partials: Iterator[Row] = client.queryAgg(p.collection, p.start, p.end,
-      QuerySpec(pushed.toSeq, sample, Nil, 0, None, needed,
-        countServed = false), groups, funcs)
-    val toInternal = ExpressionEncoder(RowEncoder.encoderFor(aggSchema))
-      .createSerializer()
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (partials.hasNext) {
-          MemStore.served.get(p.collection).foreach(_.incrementAndGet())
-          current = toInternal(partials.next()).copy(); true
-        } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
-}
-
-case class MemInputPartition(collection: String, start: Int, end: Int)
-    extends InputPartition
-
+/** The one reader every cursor uses — batch rows, partial aggregates,
+  * positional and keyed stream slices: the partition's slice and the
+  * scan's [[QuerySpec]] go through the client as ONE query (r12 verdict
+  * #1), so for the wire client the server evaluates the pipeline and only
+  * matching projected rows (or partials) cross the socket; embedded/
+  * parquet clients run the identical QueryEval in-process. Every cursor
+  * honours maxTimeMS and the injected failure modes. `scanId` names the
+  * batch row scan whose runtime (DPP) filters apply. */
 class MemReaderFactory(
-    fullSchema: StructType,
-    required: StructType,
-    pushed: Array[Filter],
+    readSchema: StructType,
+    spec: QuerySpec,
     maxTimeMs: Option[Long],
-    limit: Option[Int] = None,
-    topNKeys: Seq[(String, Boolean)] = Nil,
-    offset: Int = 0,
     scanId: Option[String] = None,
-    sample: Option[(Double, Double, Long)] = None,
     client: StoreClient = MemStoreClient) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -1565,8 +1485,8 @@ class MemReaderFactory(
     val runtime = scanId
       .flatMap(id => MemStore.runtimeFilters.get((p.collection, id)))
       .getOrElse(Nil)
-    val allPushed = pushed ++ runtime
-    if (runtime.nonEmpty) MemStore.lastPushed(p.collection) = allPushed.toSeq
+    val filters = spec.filters ++ runtime
+    if (runtime.nonEmpty) MemStore.lastPushed(p.collection) = filters
     val mode = MemStore.failureModes.get(p.collection)
     if (mode.contains(MemStore.CursorError))
       throw new java.io.IOException(
@@ -1578,15 +1498,10 @@ class MemReaderFactory(
       // Mongo cursor timeout).
       private val deadlineNanos =
         maxTimeMs.map(ms => System.nanoTime() + ms * 1000000L)
-      private val toInternal = ExpressionEncoder(RowEncoder.encoderFor(required))
+      private val toInternal = ExpressionEncoder(RowEncoder.encoderFor(readSchema))
         .createSerializer()
-      // the whole pushed pipeline goes through the client as ONE QuerySpec
-      // (r12 verdict #1): for the wire client the server evaluates it and
-      // only matching projected rows cross the socket; embedded/parquet
-      // clients run the identical QueryEval in-process
       private val it = client.query(p.collection, p.start, p.end,
-        QuerySpec(allPushed.toSeq, sample, topNKeys, offset, limit,
-          required.fields.map(_.name).toSeq))
+        spec.copy(filters = filters, keyRange = p.keyRange))
       private var current: InternalRow = _
       override def next(): Boolean = {
         mode match {

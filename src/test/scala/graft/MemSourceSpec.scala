@@ -135,6 +135,29 @@ class MemSourceSpec extends AnyFunSuite {
     } finally MemStore.failureModes.remove("programmers")
   }
 
+  test("O4/T4 a pushed aggregate honours maxTimeMS and the injected failure modes") {
+    // count() pushes a partial count(*) to the store: its cursors go
+    // through the same reader as the row path, deadline and faults included
+    def cause(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    MemStore.failureModes("programmers") = MemStore.SlowFetch(50)
+    try {
+      val e = intercept[org.apache.spark.SparkException] {
+        spark.read.format(fmt).option("collection", "programmers")
+          .option("maxTimeMS", "5").load().count()
+      }
+      assert(cause(e).contains("maxTimeMS"), cause(e))
+    } finally MemStore.failureModes.remove("programmers")
+    MemStore.failureModes("programmers") = MemStore.CursorError
+    try {
+      val e = intercept[org.apache.spark.SparkException] { load("programmers").count() }
+      assert(cause(e).contains("injected"), cause(e))
+    } finally MemStore.failureModes.remove("programmers")
+    MemStore.lastAgg.remove("programmers")
+    assert(load("programmers").count() === 100)
+    assert(MemStore.lastAgg.contains("programmers"), "count() must push the aggregate")
+  }
+
   test("T7 readPreference: recorded store-side like a driver would route it") {
     MemStore.lastOptions.remove("langs")
     assert(spark.read.format(fmt).option("collection", "langs")

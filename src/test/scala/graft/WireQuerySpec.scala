@@ -7,7 +7,8 @@ import org.apache.spark.sql.sources._
 /** Property coverage for the wire REQUEST codec ([[WireQuery]] over
   * [[WireJson]]): arbitrary pushed filter trees (nested And/Or/Not over
   * every supported literal type, attribute and collection names with
-  * quotes/braces/unicode), sample/topN/offset/limit/projection — the
+  * quotes/braces/unicode), sample/topN/offset/limit/projection, partial
+  * aggregates and keyed rank ranges — the
   * render→parse→render fixpoint catches framing bugs (an unclosed
   * array, a mis-escaped name) that example-based tests only catch on
   * the shapes they happen to use. Literal value preservation is pinned
@@ -69,6 +70,13 @@ class WireQuerySpec extends AnyFunSuite {
       1 -> (for { l <- filterGen(depth - 1); r <- filterGen(depth - 1) } yield Or(l, r)),
       1 -> filterGen(depth - 1).map(Not))
 
+  private val aggGen: Gen[MemAgg] = Gen.oneOf(
+    Gen.const(MemAgg.CountAll),
+    weirdName.map(MemAgg.CountCol),
+    weirdName.map(MemAgg.MinCol),
+    weirdName.map(MemAgg.MaxCol),
+    weirdName.map(MemAgg.SumCol))
+
   private val specGen: Gen[QuerySpec] = for {
     filters <- Gen.listOfN(2, filterGen(2)).flatMap(fs =>
       Gen.chooseNum(0, 2).map(fs.take))
@@ -82,7 +90,17 @@ class WireQuerySpec extends AnyFunSuite {
     limit <- Gen.option(Gen.chooseNum(0, 1000))
     proj <- Gen.nonEmptyListOf(weirdName).map(_.take(4))
     served <- Gen.oneOf(true, false)
-  } yield QuerySpec(filters, sample, topN, offset, limit, proj, served)
+    // empty groups (a global aggregate) and empty functions (a
+    // distinct-only aggregate) must still parse back as an aggregate
+    agg <- Gen.option(for {
+      groups <- Gen.listOfN(2, weirdName).flatMap(gs => Gen.chooseNum(0, 2).map(gs.take))
+      funcs <- Gen.listOfN(4, aggGen).flatMap(fs => Gen.chooseNum(0, 4).map(fs.take))
+    } yield (groups, funcs))
+    keyRange <- Gen.option(for {
+      c <- weirdName; k <- weirdName
+      lo <- Gen.chooseNum(0L, Long.MaxValue / 2); n <- Gen.chooseNum(1L, 1000L)
+    } yield KeyRange(c, k, lo, lo + n))
+  } yield QuerySpec(filters, sample, topN, offset, limit, proj, served, agg, keyRange)
 
   test("property: query request render -> parse -> render is a fixpoint") {
     val prop = Prop.forAll(weirdName, specGen) { (coll, spec) =>
@@ -96,28 +114,23 @@ class WireQuerySpec extends AnyFunSuite {
         spec2.offset == spec.offset && spec2.limit == spec.limit &&
         spec2.projection == spec.projection &&
         spec2.sample == spec.sample && spec2.topN == spec.topN &&
-        spec2.countServed == spec.countServed
+        spec2.countServed == spec.countServed &&
+        spec2.agg == spec.agg && spec2.keyRange == spec.keyRange
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
     assert(res.passed, s"wire query property failed: ${res.status}")
   }
 
   test("property: agg request round-trips groups and functions") {
-    val aggGen: Gen[MemAgg] = Gen.oneOf(
-      Gen.const(MemAgg.CountAll),
-      weirdName.map(MemAgg.CountCol),
-      weirdName.map(MemAgg.MinCol),
-      weirdName.map(MemAgg.MaxCol),
-      weirdName.map(MemAgg.SumCol))
     val prop = Prop.forAll(weirdName, specGen,
       Gen.listOfN(2, weirdName), Gen.nonEmptyListOf(aggGen).map(_.take(4))) {
-      (coll, spec, groups, funcs) =>
-        val r1 = WireQuery.renderAgg(coll, 0, 50, spec, groups, funcs)
-        val fields = WireJson.parse(r1).asInstanceOf[Map[String, Any]]
-        WireQuery.parseGroups(fields) == groups &&
-          WireQuery.parseFuncs(fields) == funcs &&
-          WireQuery.render(coll, 0, 50, WireQuery.parseSpec(fields)) ==
-            WireQuery.render(coll, 0, 50, spec)
+      (coll, base, groups, funcs) =>
+        val spec = base.copy(agg = Some((groups, funcs)))
+        val r1 = WireQuery.render(coll, 0, 50, spec)
+        val spec2 = WireQuery.parseSpec(
+          WireJson.parse(r1).asInstanceOf[Map[String, Any]])
+        spec2.agg == Some((groups, funcs)) &&
+          WireQuery.render(coll, 0, 50, spec2) == r1
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
     assert(res.passed, s"wire agg property failed: ${res.status}")

@@ -5,19 +5,25 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, IntegerLiteral, Literal}
 
-import graft.expressions.{DotProduct, MinHashSignature, NfcNormalize, TextSignals, WordShingles, XxHash64ModArray}
+import graft.expressions.{
+  BindFilterConstants, DotProduct, MinHashSignature, NfcNormalize, TextSignals, WordShingles,
+  XxHash64ModArray}
 
 /** The library's SQL function surface, registrable two ways:
   *
   *  - production: `--conf spark.sql.extensions=graft.GraftExtensions`
+  *    (or `SparkEntry.sessionBuilder`, which every graft session uses)
   *    injects the functions at session build (the
   *    `SparkSessionExtensions` hook from SURVEY.md §7.3's extension
-  *    ladder — used here for function injection; no custom
-  *    `Rule`/`SparkStrategy` is registered because every graft operator is
-  *    expressible through built-in logical plans + these expressions,
-  *    which is the ladder's preferred rung);
+  *    ladder). Every graft operator is expressible through built-in
+  *    logical plans + these expressions, so no logical `Rule` or
+  *    `SparkStrategy` is registered; the one physical rule is
+  *    [[graft.expressions.BindFilterConstants]], which binds filter
+  *    constants at run time so queries differing only in their literals
+  *    reuse one compiled class;
   *  - ad hoc: `GraftFunctions.registerAll(spark)` adds the same builders
-  *    to an existing session's FunctionRegistry.
+  *    to an existing session's FunctionRegistry (functions only; the
+  *    physical rule needs the extension hook).
   *
   * All functions are the custom codegen'd Catalyst expressions — no UDFs.
   */
@@ -88,10 +94,13 @@ object GraftFunctions {
     }
 }
 
-/** `spark.sql.extensions` entry point. */
+/** `spark.sql.extensions` entry point: the functions plus the
+  * filter-constant binding rule. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (ident, inf, builder) =>
       ext.injectFunction((ident, inf, builder))
     }
+    ext.injectColumnar(_ => BindFilterConstants.columnarRule)
+  }
 }

@@ -18,11 +18,14 @@ import graft.sources.Tables
   */
 object SparkEntry {
 
-  /** Fold [[Tables.sessionConf]] into a builder — the one place session-level
-    * settings the catalog needs (legacy nanos parquet reads + UTC session
-    * zone for the event-time adapter) are applied. */
+  /** Fold [[Tables.sessionConf]] and [[GraftExtensions]] into a builder —
+    * the one place session-level settings the catalog needs (legacy nanos
+    * parquet reads + UTC session zone for the event-time adapter) and the
+    * graft functions and physical rule are applied. */
   def sessionBuilder(b: SparkSession.Builder): SparkSession.Builder =
-    Tables.sessionConf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+    Tables.sessionConf.foldLeft(b.withExtensions(new GraftExtensions)) {
+      case (bb, (k, v)) => bb.config(k, v)
+    }
 
   /** The local session every graft main builds: `local[$SPARK_GRAFT_CPUS]`
     * (`defaultCpus` when unset), shuffle partitions = cores, no UI, plus

@@ -195,41 +195,55 @@ object MemStore {
     * semantics exactly — with two-valued eval, Not(EqualTo(a, x)) on a
     * NULL attribute served rows `a =!= x` / NOT IN would have filtered
     * (ADVICE r11). A row is served only when the filter is Some(true). */
-  def eval3(row: Row, schema: StructType, f: Filter): Option[Boolean] = {
-    def v(attr: String): Any = row.get(schema.fieldIndex(attr))
-    def cmp(attr: String, x: Any)(keep: Int => Boolean): Option[Boolean] = {
-      val a = v(attr)
-      if (a == null || x == null) None
-      else Some(keep((a, x) match {
-        case (a: Number, x: Number) => numCmp(a, x)
-        case (a: String, x: String) => a.compareTo(x)
-        case (a: Comparable[Any] @unchecked, x) => a.compareTo(x)
-      }))
+  def eval3(row: Row, schema: StructType, f: Filter): Option[Boolean] =
+    bind(schema, f)(row)
+
+  /** [[eval3]] compiled once for a cursor: every column index resolved
+    * up front, and an `In` list hashed into a set whose `==`/`##` are
+    * Scala's cooperative numeric equality (a boxed 7L finds 7), as the
+    * list scan it replaces compared. */
+  def bind(schema: StructType, f: Filter): Row => Option[Boolean] = {
+    def cmp(attr: String, x: Any)(keep: Int => Boolean): Row => Option[Boolean] = {
+      val i = schema.fieldIndex(attr)
+      row => {
+        val a = row.get(i)
+        if (a == null || x == null) None
+        else Some(keep((a, x) match {
+          case (a: Number, x: Number) => numCmp(a, x)
+          case (a: String, x: String) => a.compareTo(x)
+          case (a: Comparable[Any] @unchecked, x) => a.compareTo(x)
+        }))
+      }
     }
     f match {
       case EqualTo(a, x) =>
-        val av = v(a)
-        if (av == null || x == null) None else Some(av == x)
+        val i = schema.fieldIndex(a)
+        row => {
+          val av = row.get(i)
+          if (av == null || x == null) None else Some(av == x)
+        }
       case GreaterThan(a, x) => cmp(a, x)(_ > 0)
       case GreaterThanOrEqual(a, x) => cmp(a, x)(_ >= 0)
       case LessThan(a, x) => cmp(a, x)(_ < 0)
       case LessThanOrEqual(a, x) => cmp(a, x)(_ <= 0)
       case In(a, xs) =>
-        val av = v(a)
-        if (av == null) None // SQL: NULL IN (...) is UNKNOWN
-        else {
-          // one pass: a hit, else remember whether the list held a NULL
-          var sawNull = false
-          var i = 0
-          while (i < xs.length && xs(i) != av) { if (xs(i) == null) sawNull = true; i += 1 }
-          if (i < xs.length) Some(true)
-          else if (sawNull) None // ... IN (x, NULL) misses as UNKNOWN
+        val i = schema.fieldIndex(a)
+        val set = xs.iterator.filter(_ != null).toSet[Any]
+        val listHasNull = xs.contains(null)
+        row => {
+          val av = row.get(i)
+          if (av == null) None // SQL: NULL IN (...) is UNKNOWN
+          else if (set.contains(av)) Some(true)
+          else if (listHasNull) None // ... IN (x, NULL) misses as UNKNOWN
           else Some(false)
         }
-      case IsNull(a) => Some(v(a) == null)
-      case IsNotNull(a) => Some(v(a) != null)
+      case IsNull(a) =>
+        val i = schema.fieldIndex(a); row => Some(row.get(i) == null)
+      case IsNotNull(a) =>
+        val i = schema.fieldIndex(a); row => Some(row.get(i) != null)
       case And(l, r) =>
-        (eval3(row, schema, l), eval3(row, schema, r)) match {
+        val (bl, br) = (bind(schema, l), bind(schema, r))
+        row => (bl(row), br(row)) match {
           case (Some(false), _) | (_, Some(false)) => Some(false)
           case (Some(true), Some(true)) => Some(true)
           case _ => None // Kleene AND: true ∧ unknown = unknown
@@ -237,19 +251,28 @@ object MemStore {
       // $or / $not evaluate store-side like the reference's Mongo query
       // compiler (mongo/package.scala:109-115 builds the $or document)
       case Or(l, r) =>
-        (eval3(row, schema, l), eval3(row, schema, r)) match {
+        val (bl, br) = (bind(schema, l), bind(schema, r))
+        row => (bl(row), br(row)) match {
           case (Some(true), _) | (_, Some(true)) => Some(true)
           case (Some(false), Some(false)) => Some(false)
           case _ => None // Kleene OR: false ∨ unknown = unknown
         }
-      case Not(c) => eval3(row, schema, c).map(!_) // NOT unknown = unknown
-      case _ => Some(true) // unsupported filters are never pushed (see pushFilters)
+      case Not(c) =>
+        val bc = bind(schema, c); row => bc(row).map(!_) // NOT unknown = unknown
+      case _ => _ => Some(true) // unsupported filters are never pushed (see pushFilters)
     }
   }
 
   /** Two-valued view of [[eval3]]: serve the row only on definite TRUE. */
   def eval(row: Row, schema: StructType, f: Filter): Boolean =
     eval3(row, schema, f).contains(true)
+
+  /** The conjunction of `filters`, bound once: serve a row only when every
+    * filter is definitely TRUE. */
+  def matcher(schema: StructType, filters: Seq[Filter]): Row => Boolean = {
+    val bound = filters.map(bind(schema, _)).toArray
+    row => bound.forall(_(row).contains(true))
+  }
 
   def supported(f: Filter): Boolean = f match {
     case _: EqualTo | _: GreaterThan | _: GreaterThanOrEqual | _: LessThan |
@@ -406,8 +429,9 @@ object MemRel {
     case d @ Derived(child, pre, proj) =>
       val cs = child.schema
       val idx = proj.map { case (c, _) => cs.fieldIndex(c) }
+      val keep = MemStore.matcher(cs, pre.toSeq)
       eval(child)
-        .filter(r => pre.forall(MemStore.eval(r, cs, _)))
+        .filter(keep)
         .map(r => Row.fromSeq(idx.map(r.get).toIndexedSeq))
     case j @ Join(l, r, cond) =>
       val lr = eval(l)
@@ -642,8 +666,7 @@ object QueryEval {
         ranked.filter { _ => val u = rng.nextDouble(); u >= lo && u < hi }
       case None => ranked
     }
-    val filtered = sampled
-      .filter(r => spec.filters.forall(MemStore.eval(r, schema, _)))
+    val filtered = sampled.filter(MemStore.matcher(schema, spec.filters))
     // cursor-side sort/limit (reference storage.scala:320-324): this
     // shard's cursor orders by the pushed keys and serves at most `limit`
     // rows; Spark's retained global TopN/limit makes the result exact

@@ -165,6 +165,23 @@ class PlanShapeSpec extends AnyFunSuite {
       cov.queryExecution.optimizedPlan.toString.take(1600))
   }
 
+  test("dsirLogWeights tokenizes each document once per gram-table read (hoist guard)") {
+    // same hoist as bigramStream: dsirLogWeights binds `split(text)` as
+    // `__toks` before the per-position bigram lambda. The persisted gram
+    // table's plan prints three times in the optimized plan (the scored
+    // join reads it, and the bucket-count cache read on each side of the
+    // totals cross join shows its gram scan), one split each. Inlined,
+    // every read would split five times (concat, two size() calls and
+    // two element_at() calls in the lambda).
+    val w = Corpus.dsirLogWeights(docs, "doc_id", "text", col("source") === "src0")
+    val n = splits(w)
+    val opt = w.queryExecution.optimizedPlan.toString
+    spark.catalog.clearCache()
+    assert(n == 3, s"dsirLogWeights tokenizes $n times, not once per " +
+      "gram-table read (the __toks projection was collapsed) — re-measure:\n" +
+      opt.take(1600))
+  }
+
   test("weightedSample plans as TakeOrderedAndProject, never a global sort") {
     val ws = Corpus.weightedSample(
       docs.select(col("doc_id"), col("n_chars")), "doc_id", col("n_chars"), k = 10)

@@ -1,9 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Encoders
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, timestamp_micros}
 
 import graft.profile.{Profile, Record}
 
@@ -38,6 +40,38 @@ class ProfileSpec extends AnyFunSuite {
     assert(rows.length === 7)
     assert(rec.compiles === 0L, s"a warm re-run must hit the codegen cache: ${rec.render}")
     assert(rec.jobs >= 1L)
+  }
+
+  test("parquet queries differing only in filter constants share one compiled class") {
+    // a long equality, a double range, a timestamp window and an 8-value
+    // long IN: every constant type the whole-stage source used to inline
+    val n = 4000L
+    val dir = java.nio.file.Files.createTempDirectory("profile_spec_params").toString
+    spark.range(0L, n, 1L, 2)
+      .select(col("id").as("k"), (col("id") * 0.37).as("p"),
+        timestamp_micros(col("id") * 60000000L).as("ts"))
+      .write.mode("overwrite").parquet(dir)
+    val minute = 60000L // ms per row of ts
+    def query(key: Long, lo: Double, hi: Double, from: Long, until: Long,
+        in: Seq[Long]): (DataFrame, Seq[Long]) = {
+      val df = spark.read.parquet(dir)
+        .where(col("k") === key || (col("p") >= lo && col("p") < hi) ||
+          (col("ts") >= new Timestamp(from * minute) && col("ts") < new Timestamp(until * minute)) ||
+          col("k").isin(in: _*))
+        .select("k")
+      val expected = (0L until n).filter(k => k == key || (k * 0.37 >= lo && k * 0.37 < hi) ||
+        (k >= from && k < until) || in.contains(k))
+      (df, expected)
+    }
+    val (first, firstRows) = query(7L, 100.0, 101.5, 2000L, 2005L,
+      Seq(11L, 13L, 17L, 19L, 23L, 29L, 31L, 37L))
+    val (second, secondRows) = query(3001L, 900.0, 900.9, 3500L, 3502L,
+      Seq(41L, 43L, 47L, 53L, 59L, 61L, 67L, 71L))
+    assert(first.collect().map(_.getLong(0)).sorted.toSeq === firstRows)
+    val (rows, rec) = Profile.during(spark)(second.collect())
+    assert(rows.map(_.getLong(0)).sorted.toSeq === secondRows)
+    assert(rec.compiles === 0L,
+      s"new filter constants must bind at run time, not recompile: ${rec.render}")
   }
 
   test("a stateful memory stream reports its state-row peak and batches") {

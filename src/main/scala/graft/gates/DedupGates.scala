@@ -131,19 +131,8 @@ object DedupGates {
     // deterministically (8-word paragraphs, '\n'-joined) — the tiny word
     // vocabulary makes cross-document paragraph collisions real, so the
     // dedup BINDS; the oracle replays the same framing and keep rule.
-    "dedup_paragraphs" -> ((s, dir) => {
-      // token array hoisted out of the per-paragraph lambda (r19 — the
-      // GateSupport.c4StagedDocs fix: interpreted lambdas re-split per
-      // element; values identical)
-      val toks = col("__toks")
-      val nPara = ceil(size(toks) / lit(8.0)).cast("int")
-      val paraed = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("__toks"))
-        .select(col("doc_id"),
-          array_join(transform(sequence(lit(0), nPara - 1),
-            i => array_join(slice(toks, i * 8 + 1, lit(8)), " ")), "\n").as("text"))
-      Dedup.dedupParagraphs(paraed, "doc_id", "text", "\n")
-    }),
+    "dedup_paragraphs" -> ((s, dir) =>
+      Dedup.dedupParagraphs(paraStagedDocs(t(s, dir, "documents")), "doc_id", "text", "\n")),
 
 
     // Normalization-then-dedup — the composition normalization exists

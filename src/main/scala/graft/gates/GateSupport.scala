@@ -467,6 +467,21 @@ private[graft] object GateSupport {
         .as("text"))
   }
 
+  /** Deterministic paragraph staging for `dedup_paragraphs`: the corpus
+    * is flat single-line text, so tokens are cut into 8-word paragraphs
+    * joined by '\n' (the tiny word vocabulary makes cross-document
+    * paragraph collisions real). */
+  def paraStagedDocs(docs: DataFrame): DataFrame = {
+    // token array hoisted out of the per-paragraph lambda (r19 — see
+    // [[c4StagedDocs]]; interpreted lambdas re-split per element)
+    val toks = col("__toks")
+    val nPara = ceil(size(toks) / lit(8.0)).cast("int")
+    docs.select(col("doc_id"), split(col("text"), " ").as("__toks"))
+      .select(col("doc_id"),
+        array_join(transform(sequence(lit(0), nPara - 1),
+          i => array_join(slice(toks, i * 8 + 1, lit(8)), " ")), "\n").as("text"))
+  }
+
   /** 3-gram shingle CTEs shared by every jaccard-family oracle
     * (DedupGates) and by corpus_split_safe's near-dup edges
     * (CorpusGates) — lives here so neither gate object references the

@@ -711,4 +711,31 @@ class MemSourceSpec extends AnyFunSuite {
     assert(MemStore.eval3(row, schema, In("k", Array[Any](1L, 3L))) === Some(false))
     assert(MemStore.eval3(row, schema, In("k", Array.empty[Any])) === Some(false))
   }
+
+  test("mem scan rows feed a shuffle and a sort-merge join intact") {
+    // the reader hands Spark plain converted rows, not UnsafeRows: Spark
+    // must project them before any exchange or sort buffers them
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
+      val joined = load("programmers").as("p").join(load("langs").as("l"), col("lang") === col("index"))
+        .select(col("p.name"), col("l.name"), col("popularity_factor"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.contains("SortMergeJoin") && plan.contains("Exchange"), plan)
+      val got = joined.collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
+      val langs = MemStore.rowsOf("langs").map(r => r.getInt(0) -> (r.getString(1), r.getInt(2))).toMap
+      val want = MemStore.rowsOf("programmers").map { r =>
+        val (name, pop) = langs(r.getInt(1)); (r.getString(0), name, pop)
+      }.toSet
+      assert(got.size === 100 && got === want)
+    }
+  }
+
+  private def withSQLConf[A](kvs: (String, String)*)(body: => A): A = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

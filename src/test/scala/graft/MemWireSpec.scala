@@ -616,4 +616,14 @@ class MemWireSpec extends AnyFunSuite {
     } finally holder.close()
     assert(dead.hasCollection("wire_langs")) // live server still serves
   }
+
+  test("a wire scan asks the store for its row count once") {
+    // statistics and partition planning share one count: each count is a
+    // connection and a server thread
+    def counts = MemWireServer.requests.get("count").map(_.get).getOrElse(0L)
+    val before = counts
+    val n = load("wire_programmers").where(col("lang") === 3).collect().length
+    assert(n === MemStore.rowsOf("wire_programmers").count(_.getInt(1) == 3))
+    assert(counts - before === 1L)
+  }
 }

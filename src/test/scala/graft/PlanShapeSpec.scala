@@ -182,6 +182,49 @@ class PlanShapeSpec extends AnyFunSuite {
       opt.take(1600))
   }
 
+  /** `split(` calls over `docs`' own text column in the optimized plan:
+    * how often a staging pass tokenizes each raw document. */
+  private def textSplits(df: DataFrame): Int = {
+    val text = docs.queryExecution.analyzed.output.find(_.name == "text").get
+    s"split\\(text#${text.exprId.id},".r
+      .findAllIn(df.queryExecution.optimizedPlan.toString).length
+  }
+
+  /** A staging's hoisted `split(text)` must appear `expected` times:
+    * inlined into the per-line (per-paragraph) lambda, it re-tokenizes the
+    * document per element, interpreted and without subexpression
+    * elimination, and every inlined copy adds to the count. */
+  private def assertTokenizations(name: String, df: DataFrame, expected: Int): Unit = {
+    val n = textSplits(df)
+    assert(n == expected, s"$name tokenizes each document $n times, not " +
+      s"$expected (the __toks projection was collapsed, or the plan changed) — " +
+      "re-measure:\n" + df.queryExecution.optimizedPlan.toString.take(1600))
+  }
+
+  test("c4Clean's line staging keeps its hoisted token array (hoist guard)") {
+    // One split is the staging's own `__toks` projection. The other six
+    // are c4Clean's document filter: Catalyst pushes it beneath both
+    // staging projections and inlines the staged text into it (twice in
+    // the lorem/brace test, once in the kept-lines count), each copy with
+    // a split in its line count and one in the per-line lambda. Inlining
+    // the hoist adds a split per reference on the projection side as well.
+    assertTokenizations("c4Clean over c4StagedDocs", TextAnalysis.c4Clean(
+      graft.gates.GateSupport.c4StagedDocs(docs), "doc_id", "text"), 7)
+  }
+
+  test("the repetition staging tokenizes each document once (hoist guard)") {
+    val staged = graft.gates.GateSupport.repStagedDocs(docs)
+    assertTokenizations("duplicateLineSignals over repStagedDocs",
+      TextAnalysis.duplicateLineSignals(staged, "doc_id", "text"), 1)
+    assertTokenizations("repetitionSignals over repStagedDocs",
+      TextAnalysis.repetitionSignals(staged, "doc_id", "text"), 1)
+  }
+
+  test("the paragraph staging tokenizes each document once (hoist guard)") {
+    assertTokenizations("dedupParagraphs over paraStagedDocs", graft.functions.Dedup
+      .dedupParagraphs(graft.gates.GateSupport.paraStagedDocs(docs), "doc_id", "text", "\n"), 1)
+  }
+
   test("weightedSample plans as TakeOrderedAndProject, never a global sort") {
     val ws = Corpus.weightedSample(
       docs.select(col("doc_id"), col("n_chars")), "doc_id", col("n_chars"), k = 10)

@@ -21,9 +21,14 @@ object SparkEntry {
   /** Fold [[Tables.sessionConf]] and [[GraftExtensions]] into a builder —
     * the one place session-level settings the catalog needs (legacy nanos
     * parquet reads + UTC session zone for the event-time adapter) and the
-    * graft functions and physical rule are applied. */
+    * graft functions and physical rule are applied. It also sizes the
+    * generated-class cache, a static setting: iterative gates generate
+    * more distinct classes per run than the default 100 entries hold
+    * (dedup_cluster_cc ~110), so at the default every warm run recompiles
+    * them (PLANS.md "Catalyst values in the store" has the readings). */
   def sessionBuilder(b: SparkSession.Builder): SparkSession.Builder =
-    Tables.sessionConf.foldLeft(b.withExtensions(new GraftExtensions)) {
+    Tables.sessionConf.foldLeft(
+      b.withExtensions(new GraftExtensions).config("spark.sql.codegen.cache.maxEntries", "1000")) {
       case (bb, (k, v)) => bb.config(k, v)
     }
 

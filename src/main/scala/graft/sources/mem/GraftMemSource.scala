@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -31,13 +32,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * production store would swap `MemStore` for a client, nothing else
   * changes.
   *
-  * Storage is columnar, like the typed, encoded values those stores hold:
-  * each registration is one [[MemCollection]] — primitive arrays plus a
-  * validity bitmap for numbers and booleans, epoch micros/days for
-  * timestamps and dates, one shared `String` per distinct value, and the
-  * collected values themselves for every other type. No row array is
-  * kept: [[rowsOf]]/[[snapshot]] build the rows `df.collect()` returned,
-  * and a cursor ([[QueryEval]]) builds only the rows it serves.
+  * Storage is columnar, like the typed, encoded values those stores hold,
+  * and in Spark's own value form: each registration is one
+  * [[MemCollection]] of the DataFrame's Catalyst values — primitive arrays
+  * plus a validity bitmap for numbers, booleans, timestamps (micros) and
+  * dates (days), one shared `UTF8String` per distinct string, and copied
+  * Catalyst values for every other type. A cursor ([[QueryEval]])
+  * compares with Spark's orderings, so a pushed predicate gives exactly
+  * the engine's answer, and builds only the `InternalRow`s it serves,
+  * which the reader hands to Spark as they are. No row array is kept:
+  * [[rowsOf]]/[[snapshot]] build the external rows `df.collect()` returned.
   *
   * Usage: `MemStore.register("langs", df)` then
   * `spark.read.format("graft.sources.mem.GraftMemSource").option("collection", "langs").load()`.
@@ -121,12 +125,12 @@ object MemStore {
   }
 
   def register(name: String, df: DataFrame): Unit =
-    collections(name) = MemCollection.fromRows(df.schema, df.collect())
+    collections(name) = MemCollection.of(df)
 
   /** Internal registration of store-computed derived relations (the
     * store-side join result materialized at scan time) — bounded FIFO,
     * see [[recordRuntimeFilters]]. */
-  private[mem] def registerRaw(name: String, schema: StructType, rows: Array[Row]): Unit = {
+  private[mem] def registerRaw(name: String, schema: StructType, rows: Array[InternalRow]): Unit = {
     val coll = MemCollection.fromRows(schema, rows)
     // on re-registration update in place (ADVICE r12: putIfAbsent with no
     // else silently kept stale rows while the wire server acked "ok") —
@@ -148,7 +152,7 @@ object MemStore {
     val coll = collectionOf(name)
     require(df.schema == coll.schema,
       s"append schema mismatch for '$name': ${df.schema.simpleString} vs ${coll.schema.simpleString}")
-    collections(name) = coll.append(MemCollection.fromRows(coll.schema, df.collect()))
+    collections(name) = coll.append(MemCollection.of(df))
   }
 
   /** ONE registration, schema and columns together. A fingerprint check
@@ -164,138 +168,17 @@ object MemStore {
   def schemaOf(name: String): StructType = collectionOf(name).schema
 
   /** The collection's rows, as `df.collect()` returned them. */
-  def rowsOf(name: String): Array[Row] = collections(name).toRows
+  def rowsOf(name: String): Array[Row] = collections(name).toExternalRows
 
   /** Atomic (schema, rows) view of ONE registration. */
   def snapshot(name: String): (StructType, Array[Row]) = {
     val coll = collectionOf(name)
-    (coll.schema, coll.toRows)
+    (coll.schema, coll.toExternalRows)
   }
 
-  /** Exact cross-type numeric comparison. Widening everything to double
-    * (the former comparator) collapses distinct longs above 2^53 — under a
-    * partially-pushed TopN each cursor prunes to `limit` rows, so a row in
-    * the global top-N could be dropped before Spark's retained global sort
-    * (ADVICE r11). Integral/integral compares as long; float/double as
-    * double; the mixed case goes through BigDecimal (exact for any
-    * long-vs-finite-double pair). */
-  private[mem] def numCmp(a: Number, b: Number): Int = {
-    def integral(n: Number): Boolean = n match {
-      case _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
-          _: java.lang.Long => true
-      case _ => false
-    }
-    def fractional(n: Number): Boolean = n match {
-      case _: java.lang.Float | _: java.lang.Double => true
-      case _ => false
-    }
-    // NaN AND infinities skip the BigDecimal path (ADVICE r12: `new
-    // BigDecimal("Infinity")` throws — a pushed long-vs-infinite-double
-    // comparison crashed the reader); Double.compare is exact for them
-    def nonFinite(n: Number): Boolean = fractional(n) && {
-      val d = n.doubleValue(); d.isNaN || d.isInfinite
-    }
-    if (integral(a) && integral(b))
-      java.lang.Long.compare(a.longValue(), b.longValue())
-    else if ((fractional(a) && fractional(b)) || nonFinite(a) || nonFinite(b))
-      java.lang.Double.compare(a.doubleValue(), b.doubleValue())
-    else new java.math.BigDecimal(a.toString)
-      .compareTo(new java.math.BigDecimal(b.toString))
-  }
-
-  /** Store-side filter evaluation — the "native query" of the fake store.
-    * THREE-VALUED (SQL) logic: `None` = UNKNOWN. A pushed filter is fully
-    * removed from Spark's residual, so the store must reproduce SQL
-    * semantics exactly — with two-valued eval, Not(EqualTo(a, x)) on a
-    * NULL attribute served rows `a =!= x` / NOT IN would have filtered
-    * (ADVICE r11). A row is served only when the filter is Some(true). */
-  def eval3(row: Row, schema: StructType, f: Filter): Option[Boolean] =
-    bind(schema, f)(row)
-
-  /** [[eval3]] compiled once for a cursor: every column index resolved
-    * up front, and an `In` list hashed into a set whose `==`/`##` are
-    * Scala's cooperative numeric equality (a boxed 7L finds 7), as the
-    * list scan it replaces compared. */
-  def bind(schema: StructType, f: Filter): Row => Option[Boolean] =
-    f match {
-      case EqualTo(a, _) => onValue(schema, a, f)
-      case GreaterThan(a, _) => onValue(schema, a, f)
-      case GreaterThanOrEqual(a, _) => onValue(schema, a, f)
-      case LessThan(a, _) => onValue(schema, a, f)
-      case LessThanOrEqual(a, _) => onValue(schema, a, f)
-      case In(a, _) => onValue(schema, a, f)
-      case IsNull(a) => onValue(schema, a, f)
-      case IsNotNull(a) => onValue(schema, a, f)
-      case And(l, r) =>
-        val (bl, br) = (bind(schema, l), bind(schema, r))
-        row => (bl(row), br(row)) match {
-          case (Some(false), _) | (_, Some(false)) => Some(false)
-          case (Some(true), Some(true)) => Some(true)
-          case _ => None // Kleene AND: true ∧ unknown = unknown
-        }
-      // $or / $not evaluate store-side like the reference's Mongo query
-      // compiler (mongo/package.scala:109-115 builds the $or document)
-      case Or(l, r) =>
-        val (bl, br) = (bind(schema, l), bind(schema, r))
-        row => (bl(row), br(row)) match {
-          case (Some(true), _) | (_, Some(true)) => Some(true)
-          case (Some(false), Some(false)) => Some(false)
-          case _ => None // Kleene OR: false ∨ unknown = unknown
-        }
-      case Not(c) =>
-        val bc = bind(schema, c); row => bc(row).map(!_) // NOT unknown = unknown
-      case _ => _ => Some(true) // unsupported filters are never pushed (see pushFilters)
-    }
-
-  private def onValue(schema: StructType, attr: String, f: Filter): Row => Option[Boolean] = {
-    val i = schema.fieldIndex(attr)
-    val p = leaf(f)
-    row => p(row.get(i))
-  }
-
-  /** A single-column filter as a predicate on that column's value — the
-    * per-value code both the row evaluator and a columnar cursor's
-    * fallback run ([[ColumnFilter]]). */
-  private[mem] def leaf(f: Filter): Any => Option[Boolean] = {
-    def cmp(x: Any)(keep: Int => Boolean): Any => Option[Boolean] =
-      a =>
-        if (a == null || x == null) None
-        else Some(keep((a, x) match {
-          case (a: Number, x: Number) => numCmp(a, x)
-          case (a: String, x: String) => a.compareTo(x)
-          case (a: Comparable[Any] @unchecked, x) => a.compareTo(x)
-        }))
-    f match {
-      case EqualTo(_, x) => av => if (av == null || x == null) None else Some(av == x)
-      case GreaterThan(_, x) => cmp(x)(_ > 0)
-      case GreaterThanOrEqual(_, x) => cmp(x)(_ >= 0)
-      case LessThan(_, x) => cmp(x)(_ < 0)
-      case LessThanOrEqual(_, x) => cmp(x)(_ <= 0)
-      case In(_, xs) =>
-        val set = xs.iterator.filter(_ != null).toSet[Any]
-        val listHasNull = xs.contains(null)
-        av =>
-          if (av == null) None // SQL: NULL IN (...) is UNKNOWN
-          else if (set.contains(av)) Some(true)
-          else if (listHasNull) None // ... IN (x, NULL) misses as UNKNOWN
-          else Some(false)
-      case IsNull(_) => av => Some(av == null)
-      case IsNotNull(_) => av => Some(av != null)
-      case other => throw new IllegalArgumentException(s"not a single-column filter: $other")
-    }
-  }
-
-  /** Two-valued view of [[eval3]]: serve the row only on definite TRUE. */
-  def eval(row: Row, schema: StructType, f: Filter): Boolean =
-    eval3(row, schema, f).contains(true)
-
-  /** The conjunction of `filters`, bound once: serve a row only when every
-    * filter is definitely TRUE. */
-  def matcher(schema: StructType, filters: Seq[Filter]): Row => Boolean = {
-    val bound = filters.map(bind(schema, _)).toArray
-    row => bound.forall(_(row).contains(true))
-  }
-
+  /** The filters a store cursor evaluates ([[ColumnFilter]]), in SQL
+    * three-valued logic: a pushed filter leaves Spark's residual, so the
+    * store must give exactly Spark's answer (ADVICE r11). */
   def supported(f: Filter): Boolean = f match {
     case _: EqualTo | _: GreaterThan | _: GreaterThanOrEqual | _: LessThan |
         _: LessThanOrEqual | _: In | _: IsNull | _: IsNotNull => true
@@ -303,34 +186,6 @@ object MemStore {
     case Or(l, r) => supported(l) && supported(r)
     case Not(c) => supported(c)
     case _ => false
-  }
-
-  /** Store-side row ordering for a pushed top-n: (field, descending)
-    * pairs, nulls first on ASC / last on DESC (Spark's default null
-    * ordering, the only shape [[MemScanBuilder.pushTopN]] accepts). */
-  def ordering(schema: StructType, keys: Seq[(String, Boolean)]): Ordering[Row] =
-    (x: Row, y: Row) => {
-      var result = 0
-      val it = keys.iterator
-      while (result == 0 && it.hasNext) {
-        val (f, desc) = it.next()
-        val i = schema.fieldIndex(f)
-        val (a, b) = (x.get(i), y.get(i))
-        val c = (a, b) match {
-          case (null, null) => 0
-          case (null, _) => -1 // nulls first in ASC terms...
-          case (_, null) => 1
-          case _ => compareValues(a, b)
-        }
-        result = if (desc) -c else c // ...so DESC flips them last
-      }
-      result
-    }
-
-  /** Order of two non-null values of one column. */
-  private[mem] def compareValues(a: Any, b: Any): Int = (a, b) match {
-    case (a: Number, b: Number) => numCmp(a, b) // exact for big longs
-    case (a: Comparable[Any] @unchecked, b) => a.compareTo(b)
   }
 }
 
@@ -401,13 +256,6 @@ object MemJoinCond {
           .filter(MemStore.supported(_)).map(f => Seq(V1(f)))
     }
   }
-
-  def eval(row: Row, schema: StructType, c: MemJoinCond): Boolean = c match {
-    case ColEqCol(a, b) =>
-      val (x, y) = (row.get(schema.fieldIndex(a)), row.get(schema.fieldIndex(b)))
-      x != null && y != null && x == y // inner-join equality: nulls never match
-    case V1(f) => MemStore.eval(row, schema, f)
-  }
 }
 
 /** A pushed relational TREE the store executes natively at scan time —
@@ -444,8 +292,10 @@ object MemRel {
   }
 
   /** Materialize the tree (the test double's "native execution" — a real
-    * store hands the pipeline to its query engine). */
-  def eval(rel: MemRel): Array[Row] = rel match {
+    * store hands the pipeline to its query engine). Rows are Catalyst
+    * rows; filters run as store cursors ([[QueryEval]]) and join keys
+    * match where Spark's ordering of their type compares 0. */
+  def eval(rel: MemRel): Array[InternalRow] = rel match {
     case Base(coll, client, pre, proj) =>
       // leaf cursor filters + projection evaluate through the client's
       // query seam — for the wire client only matching projected columns
@@ -454,24 +304,24 @@ object MemRel {
       client.query(coll, 0, Int.MaxValue,
         QuerySpec(pre.toSeq, None, Nil, 0, None, proj.map(_._1),
           countServed = false)).toArray
-    case d @ Derived(child, pre, proj) =>
+    case Derived(child, pre, proj) =>
       val cs = child.schema
       val idx = proj.map { case (c, _) => cs.fieldIndex(c) }
-      val keep = MemStore.matcher(cs, pre.toSeq)
-      eval(child)
-        .filter(keep)
-        .map(r => Row.fromSeq(idx.map(r.get).toIndexedSeq))
+      passing(cs, eval(child), pre.toSeq).map(r =>
+        new GenericInternalRow(idx.map(i => r.get(i, cs(i).dataType)).toArray): InternalRow)
     case j @ Join(l, r, cond) =>
       val lr = eval(l)
       val rr = eval(r)
       val ls = l.schema
       val rs = r.schema
       val schema = j.schema
-      // HASH execution on the cross-side equi conjuncts (how a real store
-      // runs it — the first nested-loop cut went quadratic the moment a
-      // gate-sized join pushed): build on the right, probe from the left,
-      // verify any residual conjuncts on the combined row. A name present
-      // on BOTH sides is ambiguous cross-side and stays residual.
+      def joined(a: InternalRow, b: InternalRow): InternalRow =
+        new GenericInternalRow((a.toSeq(ls) ++ b.toSeq(rs)).toArray)
+      // INDEXED execution on the cross-side equi conjuncts (how a real
+      // store runs it — the first nested-loop cut went quadratic the moment
+      // a gate-sized join pushed): index the right side by key, probe from
+      // the left, verify any residual conjuncts on the combined row. A name
+      // present on BOTH sides is ambiguous cross-side and stays residual.
       val (equiKeys, residual) = {
         val parts = cond.map {
           case MemJoinCond.ColEqCol(a, b) =>
@@ -487,41 +337,52 @@ object MemRel {
         (parts.collect { case Left(k) => k },
           parts.collect { case Right(c) => c })
       }
-      if (equiKeys.isEmpty) {
-        // no hashable key (cartesian/filter-only condition): nested loop
-        for {
-          a <- lr
-          b <- rr
-          row = Row.fromSeq(a.toSeq ++ b.toSeq)
-          if cond.forall(MemJoinCond.eval(row, schema, _))
-        } yield row
-      } else {
-        val index = new java.util.HashMap[Seq[Any], scala.collection.mutable.ArrayBuffer[Row]]()
-        rr.foreach { b =>
-          val k = equiKeys.map { case (_, ri) => b.get(ri) }
-          if (!k.contains(null)) { // inner-join equality: nulls never match
-            var bucket = index.get(k)
-            if (bucket == null) {
-              bucket = scala.collection.mutable.ArrayBuffer.empty[Row]
-              index.put(k, bucket)
-            }
-            bucket += b
+      val pairs: Array[InternalRow] =
+        if (equiKeys.isEmpty) {
+          // no hashable key (cartesian/filter-only condition): nested loop
+          for (a <- lr; b <- rr) yield joined(a, b)
+        } else {
+          // keys as rows of their types, in a tree ordered by Spark's
+          // ordering of that row type; inner-join equality: nulls never match
+          val keyType = StructType(equiKeys.map { case (li, _) => ls(li) })
+          def key(row: InternalRow, idx: Seq[Int]): InternalRow =
+            if (idx.exists(row.isNullAt)) null
+            else new GenericInternalRow(idx.zip(keyType).map { case (i, f) => row.get(i, f.dataType) }.toArray)
+          val index = new java.util.TreeMap[InternalRow, scala.collection.mutable.ArrayBuffer[InternalRow]](
+            PhysicalDataType.ordering(keyType).asInstanceOf[Ordering[InternalRow]])
+          val rIdx = equiKeys.map(_._2)
+          val lIdx = equiKeys.map(_._1)
+          rr.foreach { b =>
+            val k = key(b, rIdx)
+            if (k != null) index.computeIfAbsent(k, _ => scala.collection.mutable.ArrayBuffer.empty) += b
+          }
+          lr.flatMap { a =>
+            val k = key(a, lIdx)
+            val bucket = if (k == null) null else index.get(k)
+            if (bucket == null) Nil else bucket.map(joined(a, _))
           }
         }
-        val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-        lr.foreach { a =>
-          val k = equiKeys.map { case (li, _) => a.get(li) }
-          if (!k.contains(null)) {
-            val bucket = index.get(k)
-            if (bucket != null) bucket.foreach { b =>
-              val row = Row.fromSeq(a.toSeq ++ b.toSeq)
-              if (residual.forall(MemJoinCond.eval(row, schema, _))) out += row
-            }
-          }
-        }
-        out.toArray
+      val colEq = residual.collect { case MemJoinCond.ColEqCol(a, b) =>
+        val (x, y) = (schema.fieldIndex(a), schema.fieldIndex(b))
+        val dt = schema(x).dataType
+        (x, y, dt, PhysicalDataType.ordering(dt))
       }
+      val kept = pairs.filter(row => colEq.forall { case (x, y, dt, ord) =>
+        !row.isNullAt(x) && !row.isNullAt(y) && ord.compare(row.get(x, dt), row.get(y, dt)) == 0
+      })
+      passing(schema, kept, residual.collect { case MemJoinCond.V1(f) => f })
   }
+
+  /** The rows of `rows` (of `schema`) that every filter marks TRUE, bound
+    * as a store cursor binds them. */
+  private def passing(schema: StructType, rows: Array[InternalRow],
+      filters: Seq[Filter]): Array[InternalRow] =
+    if (filters.isEmpty) rows
+    else {
+      val coll = MemCollection.fromRows(schema, rows)
+      val preds = filters.map(ColumnFilter.bind(coll, _))
+      rows.indices.filter(i => preds.forall(_(i) == ColumnFilter.True)).map(rows).toArray
+    }
 
   /** leftmost-leaf row count — the planning-time statistics estimate
     * (never materializes the join at planning). */
@@ -620,23 +481,23 @@ trait StoreClient extends Serializable {
   def schemaOf(name: String): StructType
   def rowCount(name: String): Int
   /** Serve the [start, end) slice of the collection's stable cursor order. */
-  def rows(name: String, start: Int, end: Int): Iterator[Row]
+  def rows(name: String, start: Int, end: Int): Iterator[InternalRow]
   /** Serve the [start, end) slice with the whole pushed pipeline evaluated
     * STORE-SIDE ([[QuerySpec]]: key ranks/sample/filters/sort/skip/limit/
     * projection/partial aggregate); rows arrive in
-    * `spec.replySchema(schemaOf(name))`. The embedded/parquet stores run
+    * `spec.replySchema(schemaOf(name))`, as Catalyst rows. The embedded/parquet stores run
     * the shared [[QueryEval]] on their columns in-process — that IS
     * store-side (same JVM as the data); [[SocketStoreClient]] ships the
     * spec to the server, so only matching projected rows (or partials)
     * cross the socket (r12 verdict #1 — the reference's core pushdown
     * premise). */
-  def query(name: String, start: Int, end: Int, spec: QuerySpec): Iterator[Row]
+  def query(name: String, start: Int, end: Int, spec: QuerySpec): Iterator[InternalRow]
   /** Per-key row counts over `keyColumn` — the keyed stream's
     * high-watermarks (a real keyed log serves these from per-partition
     * metadata); over the wire only (key, count) pairs cross. */
   def keyCounts(name: String, keyColumn: String): Map[String, Long]
   /** Register a store-computed derived relation (pushed-join result). */
-  def registerDerived(name: String, schema: StructType, rows: Array[Row]): Unit
+  def registerDerived(name: String, schema: StructType, rows: Array[InternalRow]): Unit
   /** Identity of the backing STORE — join pushdown is accepted only
     * between scans of the same store (a server executes joins over its
     * own collections; a cross-store "pushed" join would silently run
@@ -675,9 +536,9 @@ trait LocalStoreClient extends StoreClient {
   def collectionOf(name: String): MemCollection
   def schemaOf(name: String): StructType = collectionOf(name).schema
   def rowCount(name: String): Int = collectionOf(name).size
-  def rows(name: String, start: Int, end: Int): Iterator[Row] =
+  def rows(name: String, start: Int, end: Int): Iterator[InternalRow] =
     collectionOf(name).rows(start, end)
-  def query(name: String, start: Int, end: Int, spec: QuerySpec): Iterator[Row] =
+  def query(name: String, start: Int, end: Int, spec: QuerySpec): Iterator[InternalRow] =
     QueryEval.run(collectionOf(name), start, end, spec,
       if (spec.countServed) Some(name) else None)
   def keyCounts(name: String, keyColumn: String): Map[String, Long] = {
@@ -692,7 +553,7 @@ trait LocalStoreClient extends StoreClient {
 object MemStoreClient extends LocalStoreClient {
   def hasCollection(name: String): Boolean = MemStore.hasCollection(name)
   def collectionOf(name: String): MemCollection = MemStore.collectionOf(name)
-  def registerDerived(name: String, schema: StructType, rows: Array[Row]): Unit =
+  def registerDerived(name: String, schema: StructType, rows: Array[InternalRow]): Unit =
     MemStore.registerRaw(name, schema, rows)
   def clientKey: String = "mem"
 }
@@ -711,13 +572,12 @@ class ParquetStoreClient(path: String) extends LocalStoreClient {
     if (isDerived(name)) MemStore.collectionOf(name)
     else ParquetStoreClient.cache.getOrElseUpdate((path, name), {
       val spark = org.apache.spark.sql.SparkSession.active
-      val df = spark.read.parquet(s"$path/$name.parquet")
-      MemCollection.fromRows(df.schema, df.collect())
+      MemCollection.of(spark.read.parquet(s"$path/$name.parquet"))
     })
   def hasCollection(name: String): Boolean =
     if (isDerived(name)) MemStore.hasCollection(name)
     else new java.io.File(s"$path/$name.parquet").exists()
-  def registerDerived(name: String, schema: StructType, rows: Array[Row]): Unit =
+  def registerDerived(name: String, schema: StructType, rows: Array[InternalRow]): Unit =
     MemStore.registerRaw(name, schema, rows)
   def clientKey: String = s"parquet:$path"
 }
@@ -794,32 +654,10 @@ class MemScanBuilder(
     keyColumn: Option[String] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit with SupportsPushDownTopN with SupportsPushDownOffset
-    with SupportsPushDownAggregates with SupportsPushDownV2Filters
+    with SupportsPushDownAggregates
     with SupportsPushDownTableSample with SupportsPushDownJoin {
 
   private var pushed: Array[Filter] = Array.empty
-  private var pushedV2: Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    Array.empty
-
-  /** V2 predicate pushdown — when a ScanBuilder implements this, Spark
-    * prefers it over the V1 `pushFilters` path. The store's evaluator
-    * speaks V1 Filters, so each predicate converts through Spark's own
-    * `PredicateUtils.toV1`; anything that doesn't convert to a supported
-    * V1 form stays Spark-side as a residual — identical accept set to the
-    * V1 path, one evaluator. */
-  override def pushPredicates(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] = {
-    import org.apache.spark.sql.GraftPredicateBridge
-    val (sup, unsup) = predicates.partition { p =>
-      GraftPredicateBridge.toV1(p).exists(MemStore.supported(_))
-    }
-    pushedV2 = sup
-    pushed = sup.flatMap(p => GraftPredicateBridge.toV1(p))
-    unsup
-  }
-  override def pushedPredicates(): Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    pushedV2
   private var required: StructType = fullSchema
   private var limit: Option[Int] = None
   private var topNKeys: Seq[(String, Boolean)] = Nil
@@ -885,7 +723,6 @@ class MemScanBuilder(
         curSchema = joinedSchema
         required = joinedSchema
         pushed = Array.empty // post-join filters start fresh
-        pushedV2 = Array.empty
         true
       case _ => false
     }
@@ -945,7 +782,9 @@ class MemScanBuilder(
   }
 
   /** Accept what the store can evaluate; hand the rest back to Spark
-    * (Catalyst keeps a residual Filter node for those). */
+    * (Catalyst keeps a residual Filter node for those). The builder's one
+    * filter path: Spark's `PushDownUtils.pushFilters` offers V1 filters
+    * to a builder that takes them before it looks for the V2 form. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (sup, unsup) = filters.partition(MemStore.supported)
     pushed = sup
@@ -1161,7 +1000,7 @@ class MemScan(
     }
     // runtime (DPP) filters apply on the batch ROW path only: a pushed
     // aggregate's partials would not be the rows a runtime filter names
-    new MemReaderFactory(readSchema(), spec, maxTimeMs,
+    new MemReaderFactory(spec, maxTimeMs,
       if (agg.isEmpty) Some(scanId) else None, client)
   }
 
@@ -1173,10 +1012,10 @@ class MemScan(
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     keyColumn match {
       case Some(kc) =>
-        new MemKeyedMicroBatchStream(collection, required, spec, maxTimeMs,
+        new MemKeyedMicroBatchStream(collection, spec, maxTimeMs,
           kc, startOffset, maxRowsPerTrigger, client)
       case None =>
-        new MemMicroBatchStream(collection, required, spec, maxTimeMs,
+        new MemMicroBatchStream(collection, spec, maxTimeMs,
           startOffset, maxRowsPerTrigger, client)
     }
 }
@@ -1203,7 +1042,6 @@ object MemScan {
   * the checkpointed offset — exactly-once delivery of appended rows. */
 class MemMicroBatchStream(
     collection: String,
-    required: StructType,
     spec: QuerySpec,
     maxTimeMs: Option[Long],
     startOffset: Long,
@@ -1253,7 +1091,7 @@ class MemMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory = {
     MemStore.lastPushed(collection) = spec.filters
-    new MemReaderFactory(required, spec, maxTimeMs, client = client)
+    new MemReaderFactory(spec, maxTimeMs, client = client)
   }
 }
 
@@ -1329,7 +1167,6 @@ object MemKeyedOffset {
   * deterministically. */
 class MemKeyedMicroBatchStream(
     collection: String,
-    required: StructType,
     spec: QuerySpec,
     maxTimeMs: Option[Long],
     keyColumn: String,
@@ -1399,7 +1236,7 @@ class MemKeyedMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory = {
     MemStore.lastPushed(collection) = spec.filters
-    new MemReaderFactory(required, spec, maxTimeMs, client = client)
+    new MemReaderFactory(spec, maxTimeMs, client = client)
   }
 }
 
@@ -1418,7 +1255,6 @@ case class MemInputPartition(collection: String, start: Int, end: Int,
   * honours maxTimeMS and the injected failure modes. `scanId` names the
   * batch row scan whose runtime (DPP) filters apply. */
 class MemReaderFactory(
-    readSchema: StructType,
     spec: QuerySpec,
     maxTimeMs: Option[Long],
     scanId: Option[String] = None,
@@ -1444,9 +1280,9 @@ class MemReaderFactory(
       // Mongo cursor timeout).
       private val deadlineNanos =
         maxTimeMs.map(ms => System.nanoTime() + ms * 1000000L)
-      // each conversion builds a new row, so nothing is copied; Spark
-      // projects these non-Unsafe rows before anything buffers them
-      private val toInternal = CatalystTypeConverters.createToCatalystConverter(readSchema)
+      // the store serves Catalyst rows, a new one per row, so they go to
+      // Spark as they are; Spark projects these non-Unsafe rows before
+      // anything buffers them
       private val it = client.query(p.collection, p.start, p.end,
         spec.copy(filters = filters, keyRange = p.keyRange))
       private var current: InternalRow = _
@@ -1467,7 +1303,7 @@ class MemReaderFactory(
           case _ => ()
         }
         if (it.hasNext) {
-          current = toInternal(it.next()).asInstanceOf[InternalRow]
+          current = it.next()
           served += 1
           true
         } else false

@@ -1,18 +1,18 @@
 package graft.sources.mem
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types._
 
 /** Pushed filters and top-n keys bound once per cursor to a collection's
-  * columns — [[MemStore.bind]]/[[MemStore.ordering]] with the per-row work
-  * reduced to primitive loads. Each (column type, literal class) pair with
-  * a typed kernel below reproduces the row code's answer exactly:
-  * three-valued logic, Scala's cooperative `==` for `EqualTo`/`In`,
-  * [[MemStore.numCmp]]'s mixed-type comparison and `String.compareTo`.
-  * Every other pair runs the row code's own per-value predicate on the one
-  * materialized value. */
+  * columns: SQL three-valued logic over each column's Spark ordering
+  * ([[MemColumn]]) — `EqualTo` and `In` hold where it compares 0 — so a
+  * pushed filter selects exactly the rows Spark's own filter keeps. Each
+  * literal is converted once, as Spark converts a literal of the
+  * column's type; a literal of another class is refused, never coerced
+  * (Spark gives both sides of a comparison one type before it pushes). */
 private[mem] object ColumnFilter {
   final val False = 0
   final val True = 1
@@ -23,43 +23,34 @@ private[mem] object ColumnFilter {
 
   private def truth(b: Boolean): Int = if (b) True else False
 
-  /** Scala's numeric width rank (`BoxesRunTime.typeCode`, byte and short
-    * kept apart): 0 for a value that is not a primitive box. */
-  private def numCode(x: Any): Int = x match {
-    case _: java.lang.Byte => 1
-    case _: java.lang.Short => 2
-    case _: java.lang.Integer => 3
-    case _: java.lang.Long => 4
-    case _: java.lang.Float => 5
-    case _: java.lang.Double => 6
-    case _ => 0
+  /** Whether `x` is of the external class Spark gives values of `dt`
+    * (with `spark.sql.datetime.java8API.enabled` either way). */
+  private def external(dt: DataType, x: Any): Boolean = (dt, x) match {
+    case (BooleanType, _: java.lang.Boolean) | (ByteType, _: java.lang.Byte) |
+        (ShortType, _: java.lang.Short) | (IntegerType, _: java.lang.Integer) |
+        (LongType, _: java.lang.Long) | (FloatType, _: java.lang.Float) |
+        (DoubleType, _: java.lang.Double) | (_: StringType, _: String) |
+        (_: DecimalType, _: java.math.BigDecimal) | (BinaryType, _: Array[Byte]) |
+        (TimestampType, _: java.sql.Timestamp | _: java.time.Instant) |
+        (TimestampNTZType, _: java.time.LocalDateTime) |
+        (DateType, _: java.sql.Date | _: java.time.LocalDate) |
+        (_: YearMonthIntervalType, _: java.time.Period) |
+        (_: DayTimeIntervalType, _: java.time.Duration) |
+        (_: ArrayType, _: scala.collection.Seq[_]) | (_: MapType, _: scala.collection.Map[_, _]) |
+        (_: StructType, _: Row) => true
+    case _ => false
   }
 
-  private val TwoTo63 = Math.scalb(1.0, 63)
-
-  /** Whether the integral `x` is exactly a value of the fractional column. */
-  private def representable(c: NumericColumn, x: Long): Boolean =
-    if (c.code == 6) { val d = x.toDouble; d >= -TwoTo63 && d < TwoTo63 && d.toLong == x }
-    else { val f = x.toFloat; f >= -TwoTo63 && f < TwoTo63 && f.toLong == x }
-
-  /** `numCmp(a, r)` for every long `a` against a fixed decimal `r`. */
-  private def against(r: java.math.BigDecimal): Long => Int = {
-    val floor = r.setScale(0, java.math.RoundingMode.FLOOR)
-    val whole = floor.compareTo(r) == 0
-    if (floor.compareTo(java.math.BigDecimal.valueOf(Long.MaxValue)) > 0) _ => -1
-    else if (floor.compareTo(java.math.BigDecimal.valueOf(Long.MinValue)) < 0) _ => 1
-    else {
-      val f = floor.longValueExact
-      a => if (a < f) -1 else if (a > f) 1 else if (whole) 0 else -1
-    }
-  }
-
-  private def perValue(col: MemColumn, f: Filter): Pred = {
-    val p = MemStore.leaf(f)
-    i => p(col.get(i)) match {
-      case Some(true) => True
-      case Some(false) => False
-      case None => Unknown
+  /** A non-null literal of a filter on column `col` to the column's
+    * Catalyst value. */
+  private def literal(schema: StructType, col: String): Any => Any = {
+    val dt = schema(col).dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    x => {
+      if (!external(dt, x)) throw new IllegalArgumentException(
+        s"store filter on column '$col' of type ${dt.simpleString} refuses a literal of " +
+          s"class ${x.getClass.getName}: a literal must be of the column's type")
+      toCatalyst(x)
     }
   }
 
@@ -83,144 +74,31 @@ private[mem] object ColumnFilter {
       i => { val a = bc(i); if (a == Unknown) Unknown else True - a }
     case IsNull(a) => val col = coll.column(a); i => truth(col.isNull(i))
     case IsNotNull(a) => val col = coll.column(a); i => truth(!col.isNull(i))
-    case EqualTo(a, x) =>
-      val col = coll.column(a)
-      equalTo(col, x).getOrElse(perValue(col, f))
-    case GreaterThan(a, x) => compare(coll.column(a), f, x, _ > 0)
-    case GreaterThanOrEqual(a, x) => compare(coll.column(a), f, x, _ >= 0)
-    case LessThan(a, x) => compare(coll.column(a), f, x, _ < 0)
-    case LessThanOrEqual(a, x) => compare(coll.column(a), f, x, _ <= 0)
+    case EqualTo(a, x) => compare(coll, a, x, _ == 0)
+    case GreaterThan(a, x) => compare(coll, a, x, _ > 0)
+    case GreaterThanOrEqual(a, x) => compare(coll, a, x, _ >= 0)
+    case LessThan(a, x) => compare(coll, a, x, _ < 0)
+    case LessThanOrEqual(a, x) => compare(coll, a, x, _ <= 0)
     case In(a, xs) =>
       val col = coll.column(a)
+      val hit = col.in(xs.filter(_ != null).map(literal(coll.schema, a)))
       val miss = if (xs.contains(null)) Unknown else False
-      in(col, xs.filter(_ != null)) match {
-        case Some(hit) => i => if (col.isNull(i)) Unknown else if (hit(i)) True else miss
-        case None => perValue(col, f)
-      }
+      i => if (col.isNull(i)) Unknown else if (hit(i)) True else miss
     case _ => _ => True // unsupported filters are never pushed (see pushFilters)
   }
 
-  private def equalTo(col: MemColumn, x: Any): Option[Pred] = (col, x) match {
-    case (c: IntegralColumn, n: Number) if numCode(n) >= 1 && numCode(n) <= 4 =>
-      val xl = n.longValue
-      Some(i => if (c.isNull(i)) Unknown else truth(c.long(i) == xl))
-    case (c: NumericColumn, n: Number) if numCode(n) > 0 =>
-      math.max(c.code, numCode(n)) match {
-        case 5 =>
-          val xf = n.floatValue
-          Some(i => if (c.isNull(i)) Unknown else truth(c.float(i) == xf))
-        case _ =>
-          val xd = n.doubleValue
-          Some(i => if (c.isNull(i)) Unknown else truth(c.double(i) == xd))
-      }
-    case (c: StringColumn, s: String) =>
-      Some(i => { val v = c.values(i); if (v == null) Unknown else truth(v.equals(s)) })
-    case (c: MicrosColumn, t) => micros(c, t).map(us =>
-      (i => if (c.isNull(i)) Unknown else truth(c.micros(i) == us)): Pred)
-    case (c: DateColumn, d) => Times.days(d).map(day =>
-      (i => if (c.isNull(i)) Unknown else truth(c.days(i) == day)): Pred)
-    case _ => None
-  }
-
-  /** The literal as the micros column's stored form, when it has one. */
-  private def micros(c: MicrosColumn, t: Any): Option[Long] =
-    try c match {
-      case _: TimestampColumn if Times.exactMicros(t) =>
-        Some(Times.micros(t.asInstanceOf[java.sql.Timestamp]))
-      case _: TimestampNtzColumn if Times.exactMicrosNtz(t) =>
-        Some(Times.micros(t.asInstanceOf[java.time.LocalDateTime]))
-      case _ => None
-    } catch { case _: ArithmeticException => None }
-
-  private def compare(col: MemColumn, f: Filter, x: Any, keep: Int => Boolean): Pred = {
-    def kernel(cmp: Int => Int): Pred =
+  private def compare(coll: MemCollection, a: String, x: Any, keep: Int => Boolean): Pred = {
+    val col = coll.column(a)
+    if (x == null) _ => Unknown
+    else {
+      val cmp = col.against(literal(coll.schema, a)(x))
       i => if (col.isNull(i)) Unknown else truth(keep(cmp(i)))
-    val typed: Option[Pred] = (col, x) match {
-      case (c: IntegralColumn, n: Number) if numCode(n) > 0 =>
-        if (numCode(n) <= 4) {
-          val xl = n.longValue
-          Some(kernel(i => java.lang.Long.compare(c.long(i), xl)))
-        } else {
-          val xd = n.doubleValue
-          if (xd.isNaN || xd.isInfinite)
-            Some(kernel(i => java.lang.Double.compare(c.long(i).toDouble, xd)))
-          else {
-            val vs = against(new java.math.BigDecimal(n.toString))
-            Some(kernel(i => vs(c.long(i))))
-          }
-        }
-      case (c: NumericColumn, n: Number) if numCode(n) > 0 => // fractional column
-        if (numCode(n) >= 5) {
-          val xd = n.doubleValue
-          Some(kernel(i => java.lang.Double.compare(c.double(i), xd)))
-        } else if (representable(c, n.longValue)) {
-          // a value other than x shortest-prints on x's side of it, so only
-          // a tie needs numCmp's decimal comparison
-          val xd = n.longValue.toDouble
-          Some(kernel { i =>
-            val a = c.double(i)
-            if (a < xd) -1 else if (a > xd) 1
-            else if (a == xd) MemStore.numCmp(c.get(i).asInstanceOf[Number], n)
-            else java.lang.Double.compare(a, xd) // NaN
-          })
-        } else None
-      case (c: StringColumn, s: String) =>
-        Some(i => { val v = c.values(i); if (v == null) Unknown else truth(keep(v.compareTo(s))) })
-      case (c: MicrosColumn, t) =>
-        micros(c, t).map(us => kernel(i => java.lang.Long.compare(c.micros(i), us)))
-      case (c: DateColumn, d) =>
-        Times.days(d).map(day => kernel(i => Integer.compare(c.days(i), day)))
-      case _ => None
-    }
-    typed.getOrElse(perValue(col, f))
-  }
-
-  /** Membership in the non-null `lits` (a set compared with `==` and
-    * cooperative hashing), for literal classes whose members can only
-    * equal values of the column's class exactly. */
-  private def in(col: MemColumn, lits: Array[Any]): Option[Int => Boolean] = {
-    def all(p: Any => Boolean) = lits.forall(p)
-    def sortedDoubles(vs: Array[Double]): Array[Double] = {
-      val s = vs.filterNot(_.isNaN).map(_ + 0.0) // NaN never equal; -0.0 == 0.0
-      java.util.Arrays.sort(s)
-      s
-    }
-    def sortedLongs(vs: Array[Long]): Array[Long] = { val s = vs.clone(); java.util.Arrays.sort(s); s }
-    (col, lits) match {
-      case (_, ls) if ls.isEmpty => Some(_ => false)
-      case (c: IntegralColumn, ls) if all(x => numCode(x) >= 1 && numCode(x) <= 4) =>
-        val s = sortedLongs(ls.map(_.asInstanceOf[Number].longValue))
-        Some(i => java.util.Arrays.binarySearch(s, c.long(i)) >= 0)
-      case (c: DoubleColumn, ls) if all(_.isInstanceOf[java.lang.Double]) =>
-        val s = sortedDoubles(ls.map(_.asInstanceOf[Double]))
-        Some(i => { val a = c.values(i); !a.isNaN && java.util.Arrays.binarySearch(s, a + 0.0) >= 0 })
-      case (c: FloatColumn, ls) if all(_.isInstanceOf[java.lang.Float]) =>
-        val s = sortedDoubles(ls.map(_.asInstanceOf[Float].toDouble))
-        Some(i => { val a = c.double(i); !a.isNaN && java.util.Arrays.binarySearch(s, a + 0.0) >= 0 })
-      case (c: StringColumn, ls) if all(_.isInstanceOf[String]) =>
-        val s = new java.util.HashSet[String]()
-        ls.foreach(x => s.add(x.asInstanceOf[String]))
-        Some(i => s.contains(c.values(i)))
-      case (c: MicrosColumn, ls) =>
-        val us = ls.map(micros(c, _))
-        if (!us.forall(_.isDefined)) None
-        else {
-          val s = sortedLongs(us.map(_.get))
-          Some(i => java.util.Arrays.binarySearch(s, c.micros(i)) >= 0)
-        }
-      case (c: DateColumn, ls) =>
-        val ds = ls.map(Times.days)
-        if (!ds.forall(_.isDefined)) None
-        else {
-          val s = sortedLongs(ds.map(_.get.toLong))
-          Some(i => java.util.Arrays.binarySearch(s, c.days(i).toLong) >= 0)
-        }
-      case _ => None
     }
   }
 
-  /** [[MemStore.ordering]] over row indices of `coll`, ties broken by
-    * index — the order a stable sort of the rows gives. */
+  /** Row indices of `coll` ordered by the top-n keys, ties broken by
+    * index — the order a stable sort of the rows gives. NULLs sort first
+    * ASC and last DESC, Spark's default. */
   def order(coll: MemCollection, keys: Seq[(String, Boolean)]): java.util.Comparator[Integer] = {
     val cols = keys.map { case (f, _) => coll.column(f) }.toArray
     val desc = keys.map(_._2).toArray
@@ -252,28 +130,25 @@ private[mem] object ColumnFilter {
   * an all-empty store must still yield count = 0, not NULL). The last
   * stage of [[QueryEval]], so a wire round-trip ships partials, not
   * filtered input rows. `rows` are the selected row indices; partials are
-  * rows of schema `out`. */
+  * Catalyst rows of the spec's reply schema. */
 object AggEval {
   def run(
       coll: MemCollection,
       rows: IndexedSeq[Int],
       groups: Seq[String],
-      funcs: Seq[MemAgg],
-      out: StructType): Iterator[Row] = {
+      funcs: Seq[MemAgg]): Iterator[InternalRow] = {
+    // partial min/max: the row the column's Spark ordering ranks first
+    def extreme(col: MemColumn, rs: Seq[Int], better: Int => Boolean): Any = {
+      var best = -1
+      rs.foreach(i => if (!col.isNull(i) && (best < 0 || better(col.compareRows(i, best)))) best = i)
+      if (best < 0) null else col.get(best)
+    }
     def aggVals(rs: Seq[Int]): Seq[Any] = funcs.map {
       case MemAgg.CountAll => rs.length.toLong
       case MemAgg.CountCol(c) =>
         val col = coll.column(c); rs.count(!col.isNull(_)).toLong
-      case MemAgg.MinCol(c) =>
-        val col = coll.column(c)
-        val vs = rs.filter(!col.isNull(_)).map(col.get)
-        if (vs.isEmpty) null
-        else vs.reduce((x, y) => if (MemStore.compareValues(x, y) <= 0) x else y)
-      case MemAgg.MaxCol(c) =>
-        val col = coll.column(c)
-        val vs = rs.filter(!col.isNull(_)).map(col.get)
-        if (vs.isEmpty) null
-        else vs.reduce((x, y) => if (MemStore.compareValues(x, y) >= 0) x else y)
+      case MemAgg.MinCol(c) => extreme(coll.column(c), rs, _ < 0)
+      case MemAgg.MaxCol(c) => extreme(coll.column(c), rs, _ > 0)
       case s @ MemAgg.SumCol(c) =>
         val col = coll.column(c)
         val vs = rs.filter(!col.isNull(_)).map(col.get(_).asInstanceOf[Number])
@@ -281,7 +156,7 @@ object AggEval {
         else if (s.resultType(coll.schema) == LongType) Long.box(vs.map(_.longValue()).sum)
         else Double.box(vs.map(_.doubleValue()).sum)
     }
-    def partial(vs: Seq[Any]): Row = new GenericRowWithSchema(vs.toArray, out)
+    def partial(vs: Seq[Any]): InternalRow = new GenericInternalRow(vs.toArray)
     val gCols = groups.map(coll.column)
     if (groups.isEmpty) Iterator(partial(aggVals(rows)))
     else rows.groupBy(i => gCols.map(_.get(i))).iterator
@@ -289,21 +164,23 @@ object AggEval {
   }
 }
 
-/** Per-key high-watermark counts for the KEYED streaming cursor (reference
+/** Per-key high-watermarks for the KEYED streaming cursor (reference
   * S3/S4: `(persistence_id, sequence_nr)` resume) — a real keyed log
   * serves these from per-partition metadata; the wire server runs this on
-  * its end so only (key, count) pairs cross the socket. */
+  * its end so only (key, count) pairs cross the socket. A key is its
+  * value's external form as a string, so checkpointed offsets name keys
+  * as `df.collect()` prints them. */
 object KeyedEval {
+  def render(dt: DataType): Any => String = {
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    v => String.valueOf(toScala(v))
+  }
+
   def counts(coll: MemCollection, keyIdx: Int): Map[String, Long] = {
     val col = coll.columns(keyIdx)
-    val m = scala.collection.mutable.HashMap.empty[String, Long]
-    var i = 0
-    while (i < coll.size) {
-      val k = String.valueOf(col.get(i))
-      m(k) = m.getOrElse(k, 0L) + 1L
-      i += 1
-    }
-    m.toMap
+    val key = render(coll.schema(keyIdx).dataType)
+    (0 until coll.size).groupMapReduce(col.get)(_ => 1L)(_ + _)
+      .toSeq.groupMapReduce { case (v, _) => key(v) }(_._2)(_ + _)
   }
 }
 
@@ -312,27 +189,16 @@ object QueryEval {
     * cursor order. `start` seeds the pushed TABLESAMPLE (per-cursor
     * Bernoulli, deterministic per (seed, slice) — a server-side $sample).
     * Lazy up to the sort and aggregate stages: a limit stops scanning
-    * early. A row is built only when served; served rows count on the
-    * OUTPUT — for an aggregate, the partials. */
+    * early. A row is built only when served, in Catalyst form; served
+    * rows count on the OUTPUT — for an aggregate, the partials. */
   def run(
       coll: MemCollection,
       start: Int,
       end: Int,
       spec: QuerySpec,
-      servedKey: Option[String]): Iterator[Row] =
-    run(coll, start, end, start, spec, servedKey)
-
-  /** As above, the sample seeded by `sliceStart` instead — a page fetched
-    * from the store at `sliceStart` and evaluated where it landed. */
-  private[mem] def run(
-      coll: MemCollection,
-      start: Int,
-      end: Int,
-      sliceStart: Int,
-      spec: QuerySpec,
-      servedKey: Option[String]): Iterator[Row] = {
+      servedKey: Option[String]): Iterator[InternalRow] = {
     val selected: Iterator[Int] =
-      new Cursor(coll, math.max(0, start), math.min(end, coll.size), sliceStart, spec)
+      new Cursor(coll, math.max(0, start), math.min(end, coll.size), spec)
     // cursor-side sort/limit (reference storage.scala:320-324): this
     // shard's cursor orders by the pushed keys and serves at most `limit`
     // rows; Spark's retained global TopN/limit makes the result exact
@@ -347,12 +213,11 @@ object QueryEval {
     // whenever an offset was accepted, so the drop is global
     val skipped = if (spec.offset > 0) ordered.drop(spec.offset) else ordered
     val bounded = spec.limit.fold(skipped)(n => skipped.take(n))
-    val schema = spec.replySchema(coll.schema)
     val out = spec.agg match {
-      case Some((groups, funcs)) => AggEval.run(coll, bounded.toIndexedSeq, groups, funcs, schema)
+      case Some((groups, funcs)) => AggEval.run(coll, bounded.toIndexedSeq, groups, funcs)
       case None =>
         val idx = spec.projection.map(coll.schema.fieldIndex).toArray
-        bounded.map(coll.project(_, idx, schema)) // store-side projection
+        bounded.map(coll.project(_, idx)) // store-side projection
     }
     servedKey.fold(out)(k => out.map { r =>
       MemStore.served.get(k).foreach(_.incrementAndGet()); r
@@ -363,16 +228,17 @@ object QueryEval {
     * (ranks count the key's rows before any filter — a resume offset is a
     * position in the log), then the sample, then every filter. */
   private final class Cursor(
-      coll: MemCollection, from: Int, until: Int, sliceStart: Int, spec: QuerySpec)
+      coll: MemCollection, from: Int, until: Int, spec: QuerySpec)
       extends Iterator[Int] {
     private val preds = spec.filters.map(ColumnFilter.bind(coll, _)).toArray
     // the key's rows: those whose key column prints as the key
     private val key: Int => Boolean = spec.keyRange.map { k =>
       val col = coll.column(k.column)
-      (i: Int) => String.valueOf(col.get(i)) == k.key
+      val render = KeyedEval.render(coll.schema(k.column).dataType)
+      (i: Int) => render(col.get(i)) == k.key
     }.orNull
     private val (startRank, endRank) = spec.keyRange.fold((0L, 0L))(k => (k.startRank, k.endRank))
-    private val rng = spec.sample.map(s => new java.util.Random(s._3 + sliceStart)).orNull
+    private val rng = spec.sample.map(s => new java.util.Random(s._3 + from)).orNull
     private val (lo, hi) = spec.sample.fold((0.0, 0.0))(s => (s._1, s._2))
     private var rank = -1L
     private var i = from

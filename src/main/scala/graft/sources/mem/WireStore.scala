@@ -6,9 +6,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Minimal wire protocol for the document store — the WIRE-LEVEL client
   * the reference talks to its stores with (storage.scala:315-327, 644-658
@@ -77,14 +79,14 @@ import org.apache.spark.sql.types._
   * (schema/count/keycounts/register "ok") stay line-JSON. Composes under
   * deflate (frames flow through the same deflated stream).
   *
-  * Frame grammar, schema-directed:
+  * Frame grammar, schema-directed, over Catalyst's physical values (a
+  * frame is written from an `InternalRow` and read back into one, with no
+  * conversion either way):
   *   0x01 <row>   — per field: 1 null byte (0 = null), then the value at
   *                  its schema type (fixed-width primitives big-endian;
-  *                  strings as int length + standard UTF-8 bytes, so NUL
-  *                  survives, unlike writeUTF — a lone surrogate has no
-  *                  UTF-8 form and arrives as '?', the same replacement
-  *                  Spark's own UTF8String.fromString makes; timestamps
-  *                  as long epoch micros, dates as int epoch days)
+  *                  strings as int length + the UTF-8 bytes of the
+  *                  `UTF8String`, so NUL survives; timestamps as their
+  *                  long epoch micros, dates as their int epoch days)
   *   0x00         — end of rows
   *   '!' <line>   — error: the message as one UTF-8 line (newlines
   *                  flattened), the same form metadata replies use; the
@@ -98,34 +100,24 @@ import org.apache.spark.sql.types._
 object WireCodec {
   import java.io.{DataInputStream, DataOutputStream, EOFException}
 
-  def writeRow(r: Row, schema: StructType, out: DataOutputStream): Unit = {
+  def writeRow(r: InternalRow, schema: StructType, out: DataOutputStream): Unit = {
     out.writeByte(0x01)
     var i = 0
     while (i < schema.length) {
-      val v = r.get(i)
-      if (v == null) out.writeByte(0)
+      if (r.isNullAt(i)) out.writeByte(0)
       else {
         out.writeByte(1)
         schema(i).dataType match {
-          case BooleanType => out.writeBoolean(v.asInstanceOf[Boolean])
-          case ByteType => out.writeByte(v.asInstanceOf[Byte].toInt)
-          case ShortType => out.writeShort(v.asInstanceOf[Short].toInt)
-          case IntegerType => out.writeInt(v.asInstanceOf[Int])
-          case LongType => out.writeLong(v.asInstanceOf[Long])
-          case FloatType => out.writeFloat(v.asInstanceOf[Float])
-          case DoubleType => out.writeDouble(v.asInstanceOf[Double])
+          case BooleanType => out.writeBoolean(r.getBoolean(i))
+          case ByteType => out.writeByte(r.getByte(i).toInt)
+          case ShortType => out.writeShort(r.getShort(i).toInt)
+          case IntegerType | DateType => out.writeInt(r.getInt(i))
+          case LongType | TimestampType => out.writeLong(r.getLong(i))
+          case FloatType => out.writeFloat(r.getFloat(i))
+          case DoubleType => out.writeDouble(r.getDouble(i))
           case StringType =>
-            val b = v.asInstanceOf[String].getBytes(UTF_8)
-            out.writeInt(b.length); out.write(b)
-          case TimestampType =>
-            // floorDiv, not truncating /: getTime is negative pre-epoch
-            // while getNanos is always positive (ADVICE r12)
-            val t = v.asInstanceOf[java.sql.Timestamp]
-            out.writeLong(
-              Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
-          case DateType =>
-            out.writeInt(
-              v.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt)
+            val s = r.getUTF8String(i)
+            out.writeInt(s.numBytes); s.writeTo(out)
           case dt => throw new IllegalArgumentException(
             s"wire codec: unsupported type $dt")
         }
@@ -156,20 +148,13 @@ object WireCodec {
       case BooleanType => Boolean.box(in.readBoolean())
       case ByteType => Byte.box(in.readByte())
       case ShortType => Short.box(in.readShort())
-      case IntegerType => Int.box(in.readInt())
-      case LongType => Long.box(in.readLong())
+      case IntegerType | DateType => Int.box(in.readInt())
+      case LongType | TimestampType => Long.box(in.readLong())
       case FloatType => Float.box(in.readFloat())
       case DoubleType => Double.box(in.readDouble())
       case StringType =>
         val b = new Array[Byte](in.readInt()); in.readFully(b)
-        new String(b, UTF_8)
-      case TimestampType =>
-        val micros = in.readLong()
-        val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-        ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-        ts
-      case DateType =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(in.readInt().toLong))
+        UTF8String.fromBytes(b)
       case other => throw new IllegalArgumentException(
         s"wire codec: unsupported type $other")
     }
@@ -177,8 +162,8 @@ object WireCodec {
   /** Read frames until the end frame; throws on an error line, and on
     * EOF before the end frame — a server (or uploading client) that died
     * mid-stream must never pass as a short result. */
-  def readRows(in: DataInputStream, schema: StructType): Iterator[Row] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+  def readRows(in: DataInputStream, schema: StructType): Iterator[InternalRow] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
     def truncated = new java.io.IOException(
       s"wire: connection closed mid-stream after ${buf.length} rows")
     var done = false
@@ -192,7 +177,7 @@ object WireCodec {
           try while (i < schema.length) {
             out(i) = readField(in, schema(i).dataType); i += 1
           } catch { case _: EOFException => throw truncated }
-          buf += Row.fromSeq(out.toIndexedSeq)
+          buf += new GenericInternalRow(out)
         case '!' => throw new java.io.IOException("wire: " + readLine(in))
         case other => throw new java.io.IOException(
           s"wire codec: unknown frame tag $other")
@@ -320,11 +305,14 @@ private[mem] object WireJson {
 
 /** Wire form of the pushed-pipeline spec ([[QuerySpec]]): filters render
   * as tagged trees, literals as `[tag, string]` pairs so every supported
-  * runtime type (incl. non-finite doubles, pre-epoch timestamps, 2^53+
-  * longs) round-trips exactly. An un-encodable literal type throws
-  * IllegalArgumentException — the socket client catches it and
-  * falls back to client-side evaluation (correct, just not wire-optimal),
-  * the same posture as declining a pushdown. */
+  * literal class (incl. non-finite doubles, pre-epoch timestamps, 2^53+
+  * longs) round-trips exactly — a timestamp as its epoch millis and
+  * nanos, a date as its epoch millis, rebuilt as the same object. The
+  * vocabulary is the external class of every type the row codec carries,
+  * so every literal a store cursor accepts on such a column encodes
+  * (`java.time` literals, which `spark.sql.datetime.java8API.enabled`
+  * produces, do not). Any other literal throws IllegalArgumentException
+  * and the query fails without a request. */
 private[mem] object WireQuery {
   private def lit(v: Any, sb: StringBuilder): Unit = v match {
     case null => sb.append("null")
@@ -337,11 +325,8 @@ private[mem] object WireQuery {
     case n: Double => sb.append("[\"d\",\"").append(n).append("\"]")
     case s: String => sb.append("[\"s\",").append(WireJson.q(s)).append(']')
     case t: java.sql.Timestamp =>
-      sb.append("[\"t\",\"")
-        .append(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
-        .append("\"]")
-    case d: java.sql.Date =>
-      sb.append("[\"a\",\"").append(d.toLocalDate.toEpochDay).append("\"]")
+      sb.append("[\"t\",\"").append(t.getTime).append(' ').append(t.getNanos).append("\"]")
+    case d: java.sql.Date => sb.append("[\"a\",\"").append(d.getTime).append("\"]")
     case other => throw new IllegalArgumentException(
       s"wire query: unsupported literal type ${other.getClass.getName}")
   }
@@ -358,11 +343,11 @@ private[mem] object WireQuery {
       case "d" => raw.toDouble
       case "s" => raw
       case "t" =>
-        val micros = raw.toLong
-        val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-        ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
+        val Array(ms, nanos) = raw.split(' ')
+        val ts = new java.sql.Timestamp(ms.toLong)
+        ts.setNanos(nanos.toInt)
         ts
-      case "a" => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(raw.toLong))
+      case "a" => new java.sql.Date(raw.toLong)
       case other => throw new IllegalArgumentException(s"wire query: bad literal tag '$other'")
     }
     case other => throw new IllegalArgumentException(s"wire query: bad literal $other")
@@ -419,7 +404,7 @@ private[mem] object WireQuery {
 
   /** The one-line query request: the whole [[QuerySpec]], agg and key
     * range included. Throws IllegalArgumentException on any literal/filter
-    * shape outside the wire vocabulary (caller falls back). `extra`
+    * shape outside the wire vocabulary. `extra`
     * appends connection fields (schema fingerprint, deflate) before the
     * closing brace. */
   def render(collection: String, start: Int, end: Int, spec: QuerySpec,
@@ -681,12 +666,12 @@ object MemWireServer {
       if (fields.get("deflate").contains(true)) useDeflate()
       // Row-serving replies are frame streams. Each row renders FULLY into
       // rowBuf before any byte reaches the stream: a mid-row codec failure
-      // (a stored value whose runtime class mismatches the declared
-      // schema type) must not leave a partial frame in front of the error
+      // (a value of a type the codec does not carry) must not leave a
+      // partial frame in front of the error
       // line, or the client reads the line's bytes as field data and the
       // diagnostic is lost to misframing. A lazy evaluation error BETWEEN
       // rows becomes the same in-band error line.
-      def serveRows(coll: String, schema: StructType, rows: Iterator[Row]): Unit = {
+      def serveRows(coll: String, schema: StructType, rows: Iterator[InternalRow]): Unit = {
         val dos = new java.io.DataOutputStream(new java.io.BufferedOutputStream(sink, 8192))
         val rowBuf = new java.io.ByteArrayOutputStream(256)
         val rowDos = new java.io.DataOutputStream(rowBuf)
@@ -830,7 +815,7 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false)
     * client is configured for compressed responses). */
   private def optDeflate: String = if (deflate) ",\"deflate\":true" else ""
 
-  private def readRowsFrom(raw: java.io.InputStream, schema: StructType): Iterator[Row] =
+  private def readRowsFrom(raw: java.io.InputStream, schema: StructType): Iterator[InternalRow] =
     WireCodec.readRows(new java.io.DataInputStream(
       new java.io.BufferedInputStream(raw, 8192)), schema)
 
@@ -892,7 +877,7 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false)
 
   /** A raw page: the `query` op with the identity spec (every column, no
     * pipeline), not counted as served. */
-  def rows(name: String, start: Int, end: Int): Iterator[Row] =
+  def rows(name: String, start: Int, end: Int): Iterator[InternalRow] =
     serve(name, start, end)(full =>
       QuerySpec(Nil, None, Nil, 0, None, full.fieldNames.toSeq, countServed = false))
 
@@ -901,30 +886,20 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false)
     * matching projected rows, or one partial per group for a pushed
     * aggregate, cross the socket: the reference's
     * compile-the-query-into-the-store premise. */
-  override def query(name: String, start: Int, end: Int, spec: QuerySpec): Iterator[Row] =
+  override def query(name: String, start: Int, end: Int, spec: QuerySpec): Iterator[InternalRow] =
     serve(name, start, end)(_ => spec)
 
   /** One `query` round trip, the spec built from the (re-)prepared schema
     * so a raw page re-derives its columns after a schema change. A spec
-    * outside the wire vocabulary (exotic literal type) falls back to the
-    * default client-side evaluation over a raw page — correct, just not
-    * wire-optimal, the same posture as declining a pushdown. Rows are
-    * materialized inside the connection scope (cursor semantics: the
+    * outside the wire vocabulary throws before any request is sent. Rows
+    * are materialized inside the connection scope (cursor semantics: the
     * slice is bounded by construction — partition planning sized it). */
   private def serve(name: String, start: Int, end: Int)(
-      specFor: StructType => QuerySpec): Iterator[Row] =
+      specFor: StructType => QuerySpec): Iterator[InternalRow] =
     withFreshSchema(name) { full =>
       val spec = specFor(full)
-      val request =
-        try Some(WireQuery.render(name, start, end, spec, extra = fpField(name, full)))
-        catch { case _: IllegalArgumentException => None }
-      request match {
-        case None =>
-          val page = MemCollection.fromRows(full, rows(name, start, end).toArray)
-          QueryEval.run(page, 0, page.size, start, spec,
-            if (spec.countServed) Some(name) else None)
-        case Some(req) => callRaw(req)(readRowsFrom(_, spec.replySchema(full)))
-      }
+      val request = WireQuery.render(name, start, end, spec, extra = fpField(name, full))
+      callRaw(request)(readRowsFrom(_, spec.replySchema(full)))
     }
 
   /** Keyed-stream high-watermarks over the wire: only (key, count) pairs
@@ -948,7 +923,7 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false)
       m.result()
     }
 
-  def registerDerived(name: String, schema: StructType, rs: Array[Row]): Unit = {
+  def registerDerived(name: String, schema: StructType, rs: Array[InternalRow]): Unit = {
     // STREAM rows to the socket (r12 verdict #3 hardening): a large
     // pushed-join result flows frame by frame through the buffered
     // stream, never materialized a second time before the first byte

@@ -680,36 +680,92 @@ class MemSourceSpec extends AnyFunSuite {
   }
 
   test("store eval compares a long column against non-finite doubles (ADVICE r12)") {
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.sources.{GreaterThan, LessThan}
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    // the mixed integral/fractional branch used BigDecimal(a.toString),
-    // which throws for "Infinity" — a pushed long-vs-∞ comparison crashed
-    // the reader; non-finite doubles now fall back to Double.compare
-    val schema = StructType(Seq(StructField("l", LongType)))
-    val row = org.apache.spark.sql.Row(Long.box(42L))
-    assert(MemStore.eval3(row, schema,
-      LessThan("l", Double.box(Double.PositiveInfinity))) === Some(true))
-    assert(MemStore.eval3(row, schema,
-      GreaterThan("l", Double.box(Double.NegativeInfinity))) === Some(true))
-    assert(MemStore.eval3(row, schema,
-      GreaterThan("l", Double.box(Double.PositiveInfinity))) === Some(false))
-    // and the finite mixed path stays exact above 2^53
-    assert(MemStore.eval3(row, schema,
-      LessThan("l", Double.box(41.5))) === Some(false))
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    import graft.sources.mem.{MemStoreClient, QuerySpec}
+    // Spark never pushes a long column against a Double literal (it gives
+    // both sides one type first), so the store refuses the pair with a
+    // clear error, never a reader crash
+    val schema = StructType(Seq(StructField("rid", LongType), StructField("l", LongType),
+      StructField("d", DoubleType)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(Row(0L, 42L, 42.0),
+      Row(1L, null, Double.PositiveInfinity), Row(2L, -7L, Double.NegativeInfinity),
+      Row(3L, Long.MaxValue, Double.NaN)), schema)
+    MemStore.register("nonfinite", df)
+    def query(f: org.apache.spark.sql.sources.Filter) = MemStoreClient.query("nonfinite", 0, 4,
+      QuerySpec(Seq(f), None, Nil, 0, None, Seq("rid"), countServed = false)).toSeq
+    Seq(LessThan("l", Double.box(Double.PositiveInfinity)),
+        GreaterThan("l", Double.box(Double.NegativeInfinity)),
+        LessThan("l", Double.box(41.5))).foreach { f =>
+      val e = intercept[IllegalArgumentException](query(f))
+      assert(e.getMessage.contains("'l'") && e.getMessage.contains("bigint") &&
+        e.getMessage.contains("java.lang.Double"), e.getMessage)
+    }
+    // and ±Infinity against a double column follows Spark, through the reader
+    def rids(d: org.apache.spark.sql.DataFrame) = d.select("rid").collect().map(_.getLong(0)).sorted.toSeq
+    Seq(col("d") < Double.PositiveInfinity, col("d") > Double.NegativeInfinity,
+        col("d") >= Double.PositiveInfinity, col("d") === Double.NegativeInfinity).foreach { c =>
+      assert(rids(load("nonfinite").where(c)) === rids(df.where(c)), s"$c")
+    }
   }
 
   test("store eval of In is three-valued: NULL attr, hit, miss with NULL, plain miss") {
-    import org.apache.spark.sql.sources.In
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.sources.{Filter, In, Not}
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(StructField("k", LongType)))
-    val row = org.apache.spark.sql.Row(Long.box(7L))
-    val nullRow = org.apache.spark.sql.Row(null)
+    import graft.sources.mem.{MemStoreClient, QuerySpec}
+    val schema = StructType(Seq(StructField("rid", LongType), StructField("k", LongType)))
+    MemStore.register("in3", spark.createDataFrame(
+      java.util.Arrays.asList(Row(0L, 7L), Row(1L, null)), schema))
+    // a store cursor serves the rows a filter marks TRUE: TRUE is served
+    // by f, FALSE by NOT f, UNKNOWN by neither
+    def truth(rid: Long, f: Filter): Option[Boolean] = {
+      def served(g: Filter) = MemStoreClient.query("in3", 0, 2,
+        QuerySpec(Seq(g), None, Nil, 0, None, Seq("rid"), countServed = false))
+        .map(_.getLong(0)).contains(rid)
+      if (served(f)) Some(true) else if (served(Not(f))) Some(false) else None
+    }
     val withNull = Array[Any](1L, null, 3L)
-    assert(MemStore.eval3(nullRow, schema, In("k", Array[Any](7L))) === None)
-    assert(MemStore.eval3(row, schema, In("k", Array[Any](null, 7L))) === Some(true))
-    assert(MemStore.eval3(row, schema, In("k", withNull)) === None)
-    assert(MemStore.eval3(row, schema, In("k", Array[Any](1L, 3L))) === Some(false))
-    assert(MemStore.eval3(row, schema, In("k", Array.empty[Any])) === Some(false))
+    assert(truth(1L, In("k", Array[Any](7L))) === None)
+    assert(truth(0L, In("k", Array[Any](null, 7L))) === Some(true))
+    assert(truth(0L, In("k", withNull)) === None)
+    assert(truth(0L, In("k", Array[Any](1L, 3L))) === Some(false))
+    assert(truth(0L, In("k", Array.empty[Any])) === Some(false))
+  }
+
+  /** Runs a store probe on the mem scan and on the parquet client's scan
+    * of the same frame (written as one file, so its cursor order holds). */
+  private def probe(coll: String, frame: org.apache.spark.sql.DataFrame)(
+      check: (org.apache.spark.sql.DataFrame, String, org.apache.spark.sql.DataFrame) => Unit): Unit = {
+    MemStore.register(coll, frame)
+    check(load(coll), coll, frame)
+    val dir = java.nio.file.Files.createTempDirectory("store-probe")
+    try {
+      frame.coalesce(1).write.parquet(s"$dir/$coll.parquet")
+      check(spark.read.format(fmt).option("collection", coll)
+        .option("client", "parquet").option("path", dir.toString).load(), coll, frame)
+    } finally graft.gates.GateSupport.deleteRecursively(dir)
+  }
+
+  test("store probe: a pushed >= over -0.0 keeps the -0.0 rows, as Spark does") {
+    probe("probe_zero", StoreProbes.doubles(spark))(StoreProbes.negativeZero)
+  }
+
+  test("store probe: pushed = NaN and IN (0.0, NaN) match the NaN rows, as Spark does") {
+    probe("probe_nan", StoreProbes.doubles(spark))(StoreProbes.nan)
+  }
+
+  test("store probe: pushed > and < on strings order by UTF-8 bytes around U+E000 and U+FFFF") {
+    probe("probe_utf8", StoreProbes.strings(spark))(StoreProbes.utf8Order)
+  }
+
+  test("store probe: a pushed top-1 DESC on strings serves Spark's greatest string") {
+    probe("probe_top", StoreProbes.strings(spark))(StoreProbes.topDesc)
+  }
+
+  test("store probe: a pushed max on strings merges to Spark's greatest string") {
+    probe("probe_max", StoreProbes.strings(spark))(StoreProbes.maxString)
   }
 
   test("mem scan rows feed a shuffle and a sort-merge join intact") {

@@ -3,6 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.types.StructType
+
 import graft.sources.mem.{MemStore, MemStoreClient, MemWireServer, SocketStoreClient, WireCodec}
 import graft.sources.mem.{KeyRange, MemAgg, QuerySpec}
 
@@ -41,9 +45,20 @@ class MemWireSpec extends AnyFunSuite {
     .option("client", "wire").option("port", server.port.toString)
     .load()
 
+  /** External rows in Catalyst form, as frames carry them. */
+  private def internal(schema: StructType, rows: Row*): Seq[InternalRow] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    rows.map(toCatalyst(_).asInstanceOf[InternalRow])
+  }
+
+  /** Catalyst rows as external rows, to compare with `df.collect()`. */
+  private def external(schema: StructType, rows: Iterator[InternalRow]): Seq[Row] = {
+    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+    rows.map(toScala(_).asInstanceOf[Row]).toSeq
+  }
+
   /** The frame bytes of `rows` (rows, then the end frame). */
-  private def frames(schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.Row]): Array[Byte] = {
+  private def frames(schema: StructType, rows: Seq[InternalRow]): Array[Byte] = {
     val bytes = new java.io.ByteArrayOutputStream()
     val out = new java.io.DataOutputStream(bytes)
     rows.foreach(WireCodec.writeRow(_, schema, out))
@@ -52,8 +67,8 @@ class MemWireSpec extends AnyFunSuite {
     bytes.toByteArray
   }
 
-  private def roundTrip(schema: org.apache.spark.sql.types.StructType,
-      rows: org.apache.spark.sql.Row*): Seq[org.apache.spark.sql.Row] =
+  /** `rows` through the codec: written as frames, read back as Catalyst rows. */
+  private def roundTrip(schema: StructType, rows: InternalRow*): Seq[InternalRow] =
     WireCodec.readRows(new java.io.DataInputStream(
       new java.io.ByteArrayInputStream(frames(schema, rows))), schema).toSeq
 
@@ -72,7 +87,8 @@ class MemWireSpec extends AnyFunSuite {
       "qu\"ote\\andctl", ts, java.sql.Date.valueOf("2024-02-29"))
     val nulls = org.apache.spark.sql.Row(null, null, null, null, null,
       null, null, null, null, null)
-    assert(roundTrip(schema, row, nulls) === Seq(row, nulls))
+    val rows = internal(schema, row, nulls)
+    assert(roundTrip(schema, rows: _*) === rows)
     // pre-epoch fractional second (ADVICE r12): getTime is negative while
     // getNanos is always positive, so truncating division encoded -1.5s
     // as -0.5s — the reader's floorDiv then "round-tripped" a corrupted
@@ -81,7 +97,7 @@ class MemWireSpec extends AnyFunSuite {
     assert(pre.getNanos === 500000000) // the shape under test
     val preRow = org.apache.spark.sql.Row(null, null, null, null, null,
       null, null, null, pre, java.sql.Date.valueOf("1969-07-20"))
-    assert(roundTrip(schema, preRow) === Seq(preRow))
+    assert(roundTrip(schema, internal(schema, preRow): _*) === internal(schema, preRow))
   }
 
   test("full scan over the wire equals the registered data; 4 cursor connections") {
@@ -218,13 +234,13 @@ class MemWireSpec extends AnyFunSuite {
     // the pinned corner: UTF-8 has no form for a lone surrogate, so both
     // the wire and Spark carry "a\uD800b" as "a?b"
     val lone = org.apache.spark.sql.Row("a\uD800b", null, null, null, null, null)
-    assert(roundTrip(schema, lone).map(_.getString(0)) ===
+    assert(roundTrip(schema, internal(schema, lone): _*).map(_.getUTF8String(0).toString) ===
       Seq(sparkString("a\uD800b")))
     assert(sparkString("a\uD800b") === "a?b")
     val prop = Prop.forAll(rowGen) { row =>
       val want = org.apache.spark.sql.Row.fromSeq(row.toSeq.updated(0,
         Option(row.getString(0)).map(sparkString).orNull))
-      roundTrip(schema, row) == Seq(want)
+      external(schema, roundTrip(schema, internal(schema, row): _*).iterator) == Seq(want)
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
     assert(res.passed, s"wire codec property failed: ${res.status}")
@@ -273,7 +289,7 @@ class MemWireSpec extends AnyFunSuite {
     val client = new SocketStoreClient("127.0.0.1", server.port)
     val rows = client.query("wire_programmers", 0, 100,
       QuerySpec(Nil, None, Nil, 0, None, Seq("lang"))).toSeq
-    assert(rows.length === 100 && rows.head.length === 1)
+    assert(rows.length === 100 && rows.head.numFields === 1)
     // and a filtered projected query ships only matches
     MemWireServer.rowsShipped.remove("wire_programmers")
     val f = org.apache.spark.sql.sources.EqualTo("lang", 3)
@@ -319,8 +335,8 @@ class MemWireSpec extends AnyFunSuite {
     val client = new SocketStoreClient("127.0.0.1", server.port)
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("v", StringType)))
-    val big = Array.tabulate(20000)(i =>
-      org.apache.spark.sql.Row(Long.box(i.toLong), s"payload_$i"))
+    val big = internal(schema, Seq.tabulate(20000)(i =>
+      org.apache.spark.sql.Row(Long.box(i.toLong), s"payload_$i")): _*).toArray
     client.registerDerived("wire_big#join#s", schema, big)
     assert(client.rowCount("wire_big#join#s") === 20000)
     // spot-read through the cursor path
@@ -336,9 +352,8 @@ class MemWireSpec extends AnyFunSuite {
     val client = new SocketStoreClient("127.0.0.1", server.port)
     val schema = StructType(Seq(StructField("x", IntegerType)))
     val name = "wire_rereg#join#t"
-    client.registerDerived(name, schema, Array(org.apache.spark.sql.Row(Int.box(1))))
-    client.registerDerived(name, schema,
-      Array(org.apache.spark.sql.Row(Int.box(2)), org.apache.spark.sql.Row(Int.box(3))))
+    client.registerDerived(name, schema, Array(InternalRow(1)))
+    client.registerDerived(name, schema, Array(InternalRow(2), InternalRow(3)))
     assert(client.rowCount(name) === 2)
     assert(client.rows(name, 0, 2).map(_.getInt(0)).toSeq === Seq(2, 3))
   }
@@ -348,12 +363,10 @@ class MemWireSpec extends AnyFunSuite {
     val client = new SocketStoreClient("127.0.0.1", server.port)
     val schema = StructType(Seq(StructField("x", IntegerType)))
     val name = "wire_trunc#join#u"
-    client.registerDerived(name, schema,
-      Array(org.apache.spark.sql.Row(Int.box(1)), org.apache.spark.sql.Row(Int.box(2))))
+    client.registerDerived(name, schema, Array(InternalRow(1), InternalRow(2)))
     // raw socket simulating a client that declares 5 rows, streams 2
     // frames, then dies (socket close = EOF before the end frame)
-    val rowFrames = frames(schema,
-      Seq(org.apache.spark.sql.Row(Int.box(97)), org.apache.spark.sql.Row(Int.box(98))))
+    val rowFrames = frames(schema, Seq(InternalRow(97), InternalRow(98)))
     val sock = new java.net.Socket("127.0.0.1", server.port)
     val out = sock.getOutputStream
     out.write((s"""{"op":"register","collection":"$name","rows":5}\n""" +
@@ -373,7 +386,7 @@ class MemWireSpec extends AnyFunSuite {
       sock2.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
     out2.write((s"""{"op":"register","collection":"$name"}\n""" +
       schema.json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out2.write(frames(schema, Seq(org.apache.spark.sql.Row(Int.box(99)))))
+    out2.write(frames(schema, Seq(InternalRow(99))))
     out2.flush()
     assert(in2.readLine().startsWith("!"))
     sock2.close()
@@ -438,8 +451,8 @@ class MemWireSpec extends AnyFunSuite {
     val z = new SocketStoreClient("127.0.0.1", server.port, deflate = true)
     val expect = MemStore.rowsOf("wire_alltypes").toSeq
     assert(expect.length === 3)
-    assert(plain.rows("wire_alltypes", 0, 3).toSeq === expect)
-    assert(z.rows("wire_alltypes", 0, 3).toSeq === expect)
+    assert(external(withNulls.schema, plain.rows("wire_alltypes", 0, 3)) === expect)
+    assert(external(withNulls.schema, z.rows("wire_alltypes", 0, 3)) === expect)
     // the pushed pipeline through the connector
     val got = spark.read.format(fmt)
       .option("collection", "wire_alltypes")
@@ -465,23 +478,23 @@ class MemWireSpec extends AnyFunSuite {
     val partials = plain.query("wire_alltypes", 0, 3,
       QuerySpec(Nil, None, Nil, 0, None, Seq("b", "i"),
         agg = Some((Seq("b"), Seq(MemAgg.CountAll, MemAgg.SumCol("i")))))).toSeq
-    assert(partials.map(r => (r.get(0), r.getLong(1))).toSet ===
+    assert(partials.map(r => (if (r.isNullAt(0)) null else r.getBoolean(0), r.getLong(1))).toSet ===
       Set((true, 1L), (false, 1L), (null, 1L)))
   }
 
   test("a mid-row codec failure arrives as a clean error frame, never misframed") {
     import org.apache.spark.sql.types._
-    // a stored value whose runtime class mismatches the declared schema
-    // (registerRaw trusts its caller): encoding fails mid-row at field b
-    // of row 2 — the frame for that row must not reach the wire at all,
-    // or the client reads the error line's bytes as field data and the
+    // a value of a type the codec does not carry (a decimal, NULL in row
+    // 1 and set in row 2): encoding fails mid-row at field b of row 2 —
+    // the frame for that row must not reach the wire at all, or the
+    // client reads the error line's bytes as field data and the
     // diagnostic is lost to misframing
     val schema = StructType(Seq(
-      StructField("a", IntegerType), StructField("b", IntegerType)))
-    MemStoreClient.registerDerived("wire_badrow", schema, Array(
-      org.apache.spark.sql.Row(Int.box(1), Int.box(2)),
-      org.apache.spark.sql.Row(Int.box(3), "not an int"),
-      org.apache.spark.sql.Row(Int.box(5), Int.box(6))))
+      StructField("a", IntegerType), StructField("b", DecimalType(10, 2))))
+    MemStoreClient.registerDerived("wire_badrow", schema, internal(schema,
+      org.apache.spark.sql.Row(Int.box(1), null),
+      org.apache.spark.sql.Row(Int.box(3), new java.math.BigDecimal("4.50")),
+      org.apache.spark.sql.Row(Int.box(5), null)).toArray)
     val client = new SocketStoreClient("127.0.0.1", server.port)
     val e = intercept[java.io.IOException] { client.rows("wire_badrow", 0, 3).toSeq }
     // the failure surfaces as the server's in-band error, not a frame
@@ -519,8 +532,7 @@ class MemWireSpec extends AnyFunSuite {
     val client = new SocketStoreClient("127.0.0.1", server.port)
     val name = "wire_reshape#join#v"
     val schemaA = StructType(Seq(StructField("x", IntegerType)))
-    client.registerDerived(name, schemaA,
-      Array(org.apache.spark.sql.Row(Int.box(7))))
+    client.registerDerived(name, schemaA, Array(InternalRow(7)))
     assert(client.rows(name, 0, 1).map(_.getInt(0)).toSeq === Seq(7))
     // re-register with a DIFFERENT schema through a raw socket, so the
     // client's cached schema (shared via the in-JVM cache) goes stale -
@@ -533,7 +545,7 @@ class MemWireSpec extends AnyFunSuite {
       sock.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
     out.write((s"""{"op":"register","collection":"$name","rows":2}\n""" +
       schemaB.json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.write(frames(schemaB, Seq(
+    out.write(frames(schemaB, internal(schemaB,
       org.apache.spark.sql.Row(Long.box(100L), "a"),
       org.apache.spark.sql.Row(Long.box(200L), "b"))))
     out.flush()
@@ -542,11 +554,11 @@ class MemWireSpec extends AnyFunSuite {
     // frames as int-only rows; with it, the server refuses, the client re-fetches
     // the schema and the SAME calls return the new shape transparently
     val again = client.rows(name, 0, 2)
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
+      .map(r => (r.getLong(0), r.getUTF8String(1).toString)).toSeq
     assert(again === Seq((100L, "a"), (200L, "b")))
     val viaQuery = client.query(name, 0, 2,
         QuerySpec(Nil, None, Nil, 0, None, Seq("tag")))
-      .map(_.getString(0)).toSeq
+      .map(_.getUTF8String(0).toString).toSeq
     assert(viaQuery === Seq("a", "b"))
   }
 
@@ -555,8 +567,7 @@ class MemWireSpec extends AnyFunSuite {
     // NO end frame - EOF must read as an error, not as end-of-rows
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("x", IntegerType)))
-    val rowFrames = frames(schema,
-      Seq(org.apache.spark.sql.Row(Int.box(1)), org.apache.spark.sql.Row(Int.box(2))))
+    val rowFrames = frames(schema, Seq(InternalRow(1), InternalRow(2)))
     val fake = new java.net.ServerSocket(0, 4,
       java.net.InetAddress.getLoopbackAddress)
     val t = new Thread(() => {
@@ -625,5 +636,62 @@ class MemWireSpec extends AnyFunSuite {
     val n = load("wire_programmers").where(col("lang") === 3).collect().length
     assert(n === MemStore.rowsOf("wire_programmers").count(_.getInt(1) == 3))
     assert(counts - before === 1L)
+  }
+
+  test("a literal outside the wire vocabulary fails the query, with no rows") {
+    // no client-side evaluation: the query fails before any request is sent
+    import org.apache.spark.sql.sources.EqualTo
+    def queries = MemWireServer.requests.get("query").map(_.get).getOrElse(0L)
+    val before = queries
+    val client = new SocketStoreClient("127.0.0.1", server.port)
+    var served = 0
+    val e = intercept[IllegalArgumentException] {
+      client.query("wire_programmers", 0, 100, QuerySpec(
+        Seq(EqualTo("lang", new java.math.BigDecimal("3"))), None, Nil, 0, None, Seq("name")))
+        .foreach(_ => served += 1)
+    }
+    assert(e.getMessage.contains("java.math.BigDecimal"), e.getMessage)
+    assert(served === 0 && queries === before)
+  }
+
+  test("a literal of another class than its column is refused over the wire, with no rows") {
+    import org.apache.spark.sql.sources.{EqualTo, In}
+    val client = new SocketStoreClient("127.0.0.1", server.port)
+    Seq(EqualTo("lang", 3L), In("lang", Array[Any](3, 4.0))).foreach { f =>
+      MemWireServer.rowsShipped.remove("wire_programmers")
+      var served = 0
+      val e = intercept[java.io.IOException] {
+        client.query("wire_programmers", 0, 100,
+          QuerySpec(Seq(f), None, Nil, 0, None, Seq("name"))).foreach(_ => served += 1)
+      }
+      assert(e.getMessage.contains("'lang'") && e.getMessage.contains("of type int"), e.getMessage)
+      assert(served === 0 && !MemWireServer.rowsShipped.contains("wire_programmers"))
+    }
+  }
+
+  private def wireProbe(coll: String, frame: org.apache.spark.sql.DataFrame)(
+      check: (org.apache.spark.sql.DataFrame, String, org.apache.spark.sql.DataFrame) => Unit): Unit = {
+    MemStore.register(coll, frame)
+    check(load(coll), coll, frame)
+  }
+
+  test("store probe over the wire: a pushed >= over -0.0 keeps the -0.0 rows") {
+    wireProbe("wire_probe_zero", StoreProbes.doubles(spark))(StoreProbes.negativeZero)
+  }
+
+  test("store probe over the wire: pushed = NaN and IN (0.0, NaN) match the NaN rows") {
+    wireProbe("wire_probe_nan", StoreProbes.doubles(spark))(StoreProbes.nan)
+  }
+
+  test("store probe over the wire: pushed > and < on strings order by UTF-8 bytes") {
+    wireProbe("wire_probe_utf8", StoreProbes.strings(spark))(StoreProbes.utf8Order)
+  }
+
+  test("store probe over the wire: a pushed top-1 DESC on strings serves Spark's greatest") {
+    wireProbe("wire_probe_top", StoreProbes.strings(spark))(StoreProbes.topDesc)
+  }
+
+  test("store probe over the wire: a pushed max on strings merges to Spark's greatest") {
+    wireProbe("wire_probe_max", StoreProbes.strings(spark))(StoreProbes.maxString)
   }
 }

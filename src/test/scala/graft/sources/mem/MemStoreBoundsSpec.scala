@@ -2,7 +2,7 @@ package graft.sources.mem
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.{EqualTo, Filter}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -17,7 +17,7 @@ class MemStoreBoundsSpec extends AnyFunSuite {
 
   test("derived join collections are FIFO-bounded, newest survive") {
     val names = (0 until 200).map(i => s"bounds#join#scan$i")
-    names.foreach(n => MemStore.registerRaw(n, schema, Array(Row(1L))))
+    names.foreach(n => MemStore.registerRaw(n, schema, Array(InternalRow(1L))))
     val live = names.filter(MemStore.hasCollection)
     assert(live.size <= 64, s"derived collections must be capped: ${live.size}")
     // eviction is FIFO: the most recent registrations are still readable

@@ -293,71 +293,29 @@ object Bench {
     val basketEntries = basket.map { case (n, t) => (s"_basket_$n", t) }
     val full = (("_cal", cal) +: (basketEntries ++ healthy))
       .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    // A CONTAMINATED run (probe spread > 2×: the machine was demonstrably
-    // not idle) must not clobber the committed min-of-3 baseline — r8's
-    // contended driver run (noise 9.36×) overwrote it and the judge had to
-    // restore by hand. Contaminated timings land in a side file instead,
-    // and the regression flags are skipped (ratios against a clean
-    // baseline from a dirty run are all noise).
-    val contaminated = noise > 2.0
+    val contaminated = contended(noise)
     val partial = only.isDefined
-    // BASELINE-REFRESH POLICY (r11 verdict #2 on process): the committed
-    // BENCH_LOCAL_<sf>.json is PINNED at round start. A full clean run no
-    // longer overwrites it (each refresh would forgive all accumulated
-    // drift and make the 2× contract self-referential) — full timings land
-    // in BENCH_FULL_<sf>.json, and only (a) NEW queries absent from the
-    // baseline and (b) the documented clean-partial merge below may touch
-    // entries mid-round. A full refresh requires SPARK_GRAFT_REFRESH_
-    // BASELINE=1 plus a same-machine A/B showing per-query raw parity
-    // (compare BENCH_FULL against the baseline first).
     val refreshRequested = sys.env.get("SPARK_GRAFT_REFRESH_BASELINE").contains("1")
     val bootstrap = prev.isEmpty
-    val outFile =
-      if (contaminated) new java.io.File(s"BENCH_CONTENDED_$sfTag.json")
-      else if (partial) new java.io.File(s"BENCH_PARTIAL_$sfTag.json")
-      else if (bootstrap || refreshRequested) prevFile
-      else new java.io.File(s"BENCH_FULL_$sfTag.json")
+    val outFile = new java.io.File(
+      outFileName(sfTag, noise, partial, bootstrap, refreshRequested))
     if (contaminated)
       System.err.println(f"[bench] NOISE ${noise}%.2fx > 2x: baseline " +
         s"$prevFile left untouched; this run's timings -> $outFile; " +
         "regression flags skipped")
     java.nio.file.Files.write(outFile.toPath,
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // Mid-round merges into the pinned baseline — entries are SCALED to
-    // the baseline machine's speed (store v / speedRatio) so the file
-    // stays internally consistent:
-    //  * clean run (full OR partial): merge only queries the baseline has
-    //    never seen (new gates this round, and the basket entries
-    //    themselves the first time) — existing entries stay pinned.
-    //    Partial runs used to overwrite their selected entries ("refresh
-    //    entries whose cost legitimately changed"), but that let a
-    //    workload-class contention window silently re-pin a family ~1.7×
-    //    slower (measured r13: float-CPU gates 1.8× slow while the basket
-    //    read 1.05 — the scaled merge wrote the inflated values and would
-    //    have masked every later regression in the family);
-    //  * re-pinning EXISTING entries now always requires the explicit
-    //    SPARK_GRAFT_REFRESH_BASELINE=1 A/B protocol — with a PARTIAL
-    //    selection that merges exactly the selected entries (the targeted
-    //    re-pin for deliberate plan changes), with a full run it
-    //    overwrites the whole baseline (handled via outFile above).
-    if (!contaminated && !bootstrap && speedRatio > 0 &&
-        !(refreshRequested && !partial)) {
-      val candidates =
-        if (partial && refreshRequested)
-          basketEntries.filterNot(e => prev.contains(e._1)) ++ healthy
-        else (basketEntries ++ healthy).filterNot(e => prev.contains(e._1))
-      if (candidates.nonEmpty) {
-        val merged = prev ++ candidates.map { case (k, v) => k -> v / speedRatio }
-        val mergedJson = merged.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-        java.nio.file.Files.write(prevFile.toPath,
-          mergedJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        System.err.println(f"[bench] clean ${if (partial) "partial" else "full"} " +
-          f"run (noise ${noise}%.2fx): merged ${candidates.size} " +
-          s"${if (partial && refreshRequested) "selected (REFRESH)" else "NEW"} " +
-          s"entries into $prevFile " +
-          f"scaled by 1/speed = ${1.0 / speedRatio}%.3f")
-      }
+    val candidates = mergeCandidates(prev, basketEntries, healthy, noise,
+      partial, refreshRequested, speedRatio)
+    if (candidates.nonEmpty) {
+      java.nio.file.Files.write(prevFile.toPath,
+        mergedJson(prev, candidates, speedRatio)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      System.err.println(f"[bench] clean ${if (partial) "partial" else "full"} " +
+        f"run (noise ${noise}%.2fx): merged ${candidates.size} " +
+        s"${if (partial && refreshRequested) "selected (REFRESH)" else "NEW"} " +
+        s"entries into $prevFile " +
+        f"scaled by 1/speed = ${1.0 / speedRatio}%.3f")
     }
     if (prev.nonEmpty && !contaminated && !partial) {
       // per-class speed: the class representative's own now/baseline
@@ -407,67 +365,9 @@ object Bench {
         System.err.println(f"[bench] REGRESSION $k: $v%.3fs vs $p%.3fs (${r}%.2fx)") }
     }
 
-    // ONE compact JSON line (3-decimal times): ~70 queries must fit —
-    // together with sbt's trailing "[success]" line — inside the driver's
-    // 2000-char tail capture or it records "parsed": null for the round.
-    // centisecond precision: 1 char/query of headroom against the 2000-char
-    // tail capture (full precision lives in BENCH_LOCAL.json).
-    // Only HEALTHY timings enter the headline total — a failed query's
-    // elapsed (e.g. a 30 s OOM) is garbage and would inflate the number
-    // the driver records; failures are counted separately on the line.
-    val total = healthy.map(_._2).sum
-    val nFailed = results.count(!_._3)
-    // sf as the dir basename (sf0.1), not the full path — 15 chars of
-    // headroom against the tail capture
-    def render(decimals: Int, keep: Int): String = {
-      // when the full map cannot fit, keep the SLOWEST `keep` HEALTHY
-      // queries (failed queries' elapsed times are garbage — ranking on
-      // them would let a 30 s OOM claim a slot a real timing deserves)
-      // and say how many entries were dropped — full precision for every
-      // healthy query is always in the committed BENCH_LOCAL_<sf>.json
-      val kept = healthy.sortBy(-_._2).take(keep).sortBy(_._1)
-      val qs = kept.map { case (k, v) =>
-        s""""$k":${num(v, decimals)}""" }.mkString("{", ",", "}")
-      val omitted = if (kept.size >= healthy.size) ""
-        else s""","omitted":${healthy.size - kept.size}"""
-      // stable ran-count (r19 verdict #7): the slowest-N truncation above
-      // makes a query VANISH from the line when it merely got faster, and
-      // the driver's round-over-round diff mislabeled 13 such queries as
-      // "dropped_from_bench". n_ran is the total number of queries this
-      // run executed (healthy + failed), so truncation is distinguishable
-      // from an actually-removed query without growing the per-query map.
-      val ran = s""","n_ran":${results.size}"""
-      val failed = if (nFailed == 0) "" else s""","failed":$nFailed"""
-      // noise rides the contract line only when it matters (>1.2×) — it is
-      // the reader's signal that the machine was contended during this run
-      val noiseF = if (noise <= 1.2) "" else s""","noise":${num(noise, 2)}"""
-      // machine-independent headline: total scaled to the committed
-      // baseline machine's speed via the BASKET ratio (median of the
-      // pinned representative queries; falls back to the median per-query
-      // raw ratio while the baseline has no basket) — lets the driver-
-      // recorded number track CODE across machines of different speed.
-      // cal_sec stays as a raw-CPU diagnostic only.
-      val normF = if (prev.isEmpty || speedRatio <= 0) ""
-        else s""","value_norm":${num(total / speedRatio, 3)}"""
-      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","cal_sec":${num(cal, 3)}$normF,"queries":$qs$omitted$ran$failed$noiseF,"sf":"$sfTag"}"""
-    }
-    // self-bounding against the driver's 2000-char stdout tail capture: a
-    // line longer than the capture window gets truncated MID-LINE and the
-    // round records parsed:null. Degrade precision first (2 → 1 decimals),
-    // then shed the fastest queries until the line fits — the query count
-    // grows every round, so a fixed precision knob alone stops working.
-    val line = {
-      val full2 = render(2, results.size)
-      if (full2.length <= 1900) full2
-      else {
-        val full1 = render(1, results.size)
-        if (full1.length <= 1900) full1
-        else Iterator.range(results.size - 1, 9, -1).map(render(1, _))
-          .find(_.length <= 1900)
-          .getOrElse(render(1, 10))
-      }
-    }
-    if (line.length > 1900)
+    val line = contractLine(Summary(healthy, results.size, results.count(!_._3),
+      cal, noise, speedRatio, prev.nonEmpty, sfTag))
+    if (line.length > MaxLine)
       System.err.println(s"[bench] WARNING: JSON line ${line.length} chars even at " +
         "10 queries — the driver tail-captures 2000; shorten query names")
     // Stop Spark BEFORE printing the contract line: shutdown logging (and,
@@ -476,5 +376,131 @@ object Bench {
     spark.stop()
     println(line)
     System.out.flush()
+  }
+
+  /** A CONTAMINATED run (probe spread > 2×: the machine was demonstrably
+    * not idle) must not clobber the committed min-of-3 baseline — r8's
+    * contended run (noise 9.36×) overwrote it and it had to be restored
+    * by hand. Contaminated timings land in a side file instead,
+    * and the regression flags are skipped (ratios against a clean
+    * baseline from a dirty run are all noise). */
+  private[graft] def contended(noise: Double): Boolean = noise > 2.0
+
+  /** The file a run's timings land in. BASELINE-REFRESH POLICY (r11
+    * verdict #2 on process): the committed BENCH_LOCAL_<sf>.json is PINNED
+    * at round start. A full clean run no longer overwrites it (each
+    * refresh would forgive all accumulated drift and make the 2× contract
+    * self-referential) — full timings land in BENCH_FULL_<sf>.json, and
+    * only [[mergeCandidates]] may touch entries mid-round. A bootstrap (no
+    * baseline yet) writes the baseline itself, and so does a full refresh,
+    * which requires SPARK_GRAFT_REFRESH_BASELINE=1 plus a same-machine A/B
+    * showing per-query raw parity (compare BENCH_FULL against the baseline
+    * first). Contended runs go to BENCH_CONTENDED, partial selections to
+    * BENCH_PARTIAL. */
+  private[graft] def outFileName(sfTag: String, noise: Double, partial: Boolean,
+      bootstrap: Boolean, refresh: Boolean): String =
+    if (contended(noise)) s"BENCH_CONTENDED_$sfTag.json"
+    else if (partial) s"BENCH_PARTIAL_$sfTag.json"
+    else if (bootstrap || refresh) s"BENCH_LOCAL_$sfTag.json"
+    else s"BENCH_FULL_$sfTag.json"
+
+  /** The entries (unscaled) a run merges into the pinned baseline `prev`:
+    *  * clean run (full OR partial): only queries the baseline has never
+    *    seen (new gates this round, and the basket entries themselves the
+    *    first time) — existing entries stay pinned. Partial runs used to
+    *    overwrite their selected entries ("refresh entries whose cost
+    *    legitimately changed"), but that let a workload-class contention
+    *    window silently re-pin a family ~1.7× slower (measured r13:
+    *    float-CPU gates 1.8× slow while the basket read 1.05 — the scaled
+    *    merge wrote the inflated values and would have masked every later
+    *    regression in the family);
+    *  * re-pinning EXISTING entries requires the explicit
+    *    SPARK_GRAFT_REFRESH_BASELINE=1 A/B protocol — with a PARTIAL
+    *    selection exactly the selected entries (the targeted re-pin for
+    *    deliberate plan changes); a full refresh merges nothing because it
+    *    overwrites the whole baseline ([[outFileName]]).
+    * A contended run, a bootstrap and a run without a machine speed merge
+    * nothing. */
+  private[graft] def mergeCandidates(prev: Map[String, Double],
+      basket: Seq[(String, Double)], healthy: Seq[(String, Double)],
+      noise: Double, partial: Boolean, refresh: Boolean,
+      speedRatio: Double): Seq[(String, Double)] =
+    if (contended(noise) || prev.isEmpty || speedRatio <= 0 || (refresh && !partial)) Nil
+    else if (partial && refresh) basket.filterNot(e => prev.contains(e._1)) ++ healthy
+    else (basket ++ healthy).filterNot(e => prev.contains(e._1))
+
+  /** The baseline file's JSON after merging `candidates`, each SCALED to
+    * the baseline machine's speed (v / speedRatio) so the file stays
+    * internally consistent; keys sorted. */
+  private[graft] def mergedJson(prev: Map[String, Double],
+      candidates: Seq[(String, Double)], speedRatio: Double): String =
+    (prev ++ candidates.map { case (k, v) => k -> v / speedRatio }).toSeq.sortBy(_._1)
+      .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+
+  /** What the stdout contract line reports of a run: its healthy timings,
+    * how many queries ran and failed, the calibration, probe noise and
+    * machine speed, and whether a baseline exists to normalize against. */
+  private[graft] final case class Summary(
+      healthy: Seq[(String, Double)], ran: Int, failed: Int, cal: Double,
+      noise: Double, speedRatio: Double, hasBaseline: Boolean, sfTag: String)
+
+  /** The contract line's length bound: its reader tail-captures 2000
+    * characters of stdout, and a line cut mid-way records parsed:null. */
+  private[graft] val MaxLine = 1900
+
+  /** ONE compact JSON line, times at `decimals` places, keeping the
+    * slowest `keep` healthy queries. Only HEALTHY timings enter the
+    * headline total — a failed query's elapsed (e.g. a 30 s OOM) is
+    * garbage and would inflate the recorded number; failures
+    * are counted separately on the line. */
+  private[graft] def renderLine(s: Summary, decimals: Int, keep: Int): String = {
+    val total = s.healthy.map(_._2).sum
+    // when the full map cannot fit, keep the SLOWEST `keep` HEALTHY
+    // queries (failed queries' elapsed times are garbage — ranking on
+    // them would let a 30 s OOM claim a slot a real timing deserves)
+    // and say how many entries were dropped — full precision for every
+    // healthy query is always in the committed BENCH_LOCAL_<sf>.json
+    val kept = s.healthy.sortBy(-_._2).take(keep).sortBy(_._1)
+    val qs = kept.map { case (k, v) =>
+      s""""$k":${num(v, decimals)}""" }.mkString("{", ",", "}")
+    val omitted = if (kept.size >= s.healthy.size) ""
+      else s""","omitted":${s.healthy.size - kept.size}"""
+    // stable ran-count (r19 verdict #7): the slowest-N truncation above
+    // makes a query VANISH from the line when it merely got faster, and
+    // the round-over-round diff mislabeled 13 such queries as
+    // "dropped_from_bench". n_ran is the total number of queries this
+    // run executed (healthy + failed), so truncation is distinguishable
+    // from an actually-removed query without growing the per-query map.
+    val ran = s""","n_ran":${s.ran}"""
+    val failed = if (s.failed == 0) "" else s""","failed":${s.failed}"""
+    // noise rides the contract line only when it matters (>1.2×) — it is
+    // the reader's signal that the machine was contended during this run
+    val noiseF = if (s.noise <= 1.2) "" else s""","noise":${num(s.noise, 2)}"""
+    // machine-independent headline: total scaled to the committed
+    // baseline machine's speed via the BASKET ratio (median of the
+    // pinned representative queries; falls back to the median per-query
+    // raw ratio while the baseline has no basket) — lets the
+    // recorded number track CODE across machines of different speed.
+    // cal_sec stays as a raw-CPU diagnostic only.
+    val normF = if (!s.hasBaseline || s.speedRatio <= 0) ""
+      else s""","value_norm":${num(total / s.speedRatio, 3)}"""
+    s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","cal_sec":${num(s.cal, 3)}$normF,"queries":$qs$omitted$ran$failed$noiseF,"sf":"${s.sfTag}"}"""
+  }
+
+  /** The contract line, self-bounded to [[MaxLine]]: a line longer than
+    * the capture window gets truncated MID-LINE. Degrade precision first
+    * (2 → 1 decimals), then shed the fastest queries until the line fits
+    * (no fewer than 10 kept) — the query count grows every round, so a
+    * fixed precision knob alone stops working. */
+  private[graft] def contractLine(s: Summary): String = {
+    val full2 = renderLine(s, 2, s.ran)
+    if (full2.length <= MaxLine) full2
+    else {
+      val full1 = renderLine(s, 1, s.ran)
+      if (full1.length <= MaxLine) full1
+      else Iterator.range(s.ran - 1, 9, -1).map(renderLine(s, 1, _))
+        .find(_.length <= MaxLine)
+        .getOrElse(renderLine(s, 1, 10))
+    }
   }
 }

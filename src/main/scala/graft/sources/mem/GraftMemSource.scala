@@ -95,55 +95,8 @@ object MemStore {
   /** Table-sample pushed store-side: (lowerBound, upperBound, seed). */
   val lastSample = TrieMap[String, (Double, Double, Long)]()
 
-  /** Runtime (DPP) filters per (collection, scanId): `Scan.filter` runs
-    * AFTER `createReaderFactory` in BatchScanExec's lazy evaluation
-    * order, so the factory cannot capture them by value — readers consult
-    * this channel at `createReader` time (executed after the dynamic
-    * subquery resolves). Keyed by scan identity so a stale entry from a
-    * previous query can never leak into a new scan. In-process only, like
-    * the rest of the store. */
-  val runtimeFilters = TrieMap[(String, String), Seq[Filter]]()
-
-  // Scan-scoped state (derived join results, runtime-filter entries) has no
-  // completion callback in the DSv2 Batch contract, so it cannot be evicted
-  // "on scan close" — instead both stores are BOUNDED FIFO (ADVICE r11 #4:
-  // every pushed-join/DPP query used to leak a materialized join result and
-  // filter entries for the JVM lifetime of a bench/test session). A scan
-  // only reads its own entry right after writing it, so evicting the oldest
-  // beyond the cap never touches a live scan.
-  private val MaxScanScoped = 64
-  private val derivedOrder = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private val runtimeOrder = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-
-  private[mem] def recordRuntimeFilters(key: (String, String), fs: Seq[Filter]): Unit = {
-    if (runtimeFilters.putIfAbsent(key, fs).isEmpty) runtimeOrder.add(key)
-    else runtimeFilters(key) = fs
-    while (runtimeOrder.size > MaxScanScoped) {
-      val old = runtimeOrder.poll()
-      if (old != null) runtimeFilters.remove(old)
-    }
-  }
-
   def register(name: String, df: DataFrame): Unit =
     collections(name) = MemCollection.of(df)
-
-  /** Internal registration of store-computed derived relations (the
-    * store-side join result materialized at scan time) — bounded FIFO,
-    * see [[recordRuntimeFilters]]. */
-  private[mem] def registerRaw(name: String, schema: StructType, rows: Array[InternalRow]): Unit = {
-    val coll = MemCollection.fromRows(schema, rows)
-    // on re-registration update in place (ADVICE r12: putIfAbsent with no
-    // else silently kept stale rows while the wire server acked "ok") —
-    // mirror recordRuntimeFilters: only a NEW name grows derivedOrder
-    if (collections.putIfAbsent(name, coll).isEmpty) derivedOrder.add(name)
-    else collections(name) = coll
-    while (derivedOrder.size > MaxScanScoped) {
-      val old = derivedOrder.poll()
-      if (old != null) collections.remove(old)
-    }
-  }
-
-  private[mem] def hasCollection(name: String): Boolean = collections.contains(name)
 
   /** Append rows to an existing collection — the "data keeps arriving"
     * half of the streaming offset-resume contract (reference S3/S4:
@@ -158,7 +111,7 @@ object MemStore {
   /** ONE registration, schema and columns together. A fingerprint check
     * and the rows it guards must come from the same registration —
     * separate schemaOf/rowsOf reads can straddle a concurrent
-    * re-registration (registerRaw swaps the collection atomically),
+    * re-registration (register and append swap the collection atomically),
     * validating the fp against the old schema and then serving the new
     * rows. */
   def collectionOf(name: String): MemCollection =
@@ -392,13 +345,6 @@ object MemRel {
     case Join(l, _, _) => baseCount(l)
   }
 
-  /** leftmost-leaf collection name (derived-relation naming). */
-  def baseName(rel: MemRel): String = rel match {
-    case Base(c, _, _, _) => c
-    case Derived(ch, _, _) => baseName(ch)
-    case Join(l, _, _) => baseName(l)
-  }
-
   // rendered with ⋈, deliberately not the word "Join": plan-shape asserts
   // prove the pushed join by the ABSENCE of any Join node in the executed
   // plan string, and the scan's own description must not trip them
@@ -474,14 +420,12 @@ final case class KeyRange(column: String, key: String, startRank: Long, endRank:
   * unchanged on top. The store-side EVALUATION of pushed operators lives in
   * the shared readers (a real connector would instead compile them into the
   * native query — the seam point is the same either way). Instrumentation
-  * (MemStore.lastPushed/served/failureModes/runtimeFilters) stays global
-  * test-harness state, not part of the client contract. */
+  * (MemStore.lastPushed/served/failureModes) stays global test-harness
+  * state, not part of the client contract. A scan's own state — its
+  * runtime filters, a pushed join's result — stays in the scan. */
 trait StoreClient extends Serializable {
-  def hasCollection(name: String): Boolean
   def schemaOf(name: String): StructType
   def rowCount(name: String): Int
-  /** Serve the [start, end) slice of the collection's stable cursor order. */
-  def rows(name: String, start: Int, end: Int): Iterator[InternalRow]
   /** Serve the [start, end) slice with the whole pushed pipeline evaluated
     * STORE-SIDE ([[QuerySpec]]: key ranks/sample/filters/sort/skip/limit/
     * projection/partial aggregate); rows arrive in
@@ -496,8 +440,6 @@ trait StoreClient extends Serializable {
     * high-watermarks (a real keyed log serves these from per-partition
     * metadata); over the wire only (key, count) pairs cross. */
   def keyCounts(name: String, keyColumn: String): Map[String, Long]
-  /** Register a store-computed derived relation (pushed-join result). */
-  def registerDerived(name: String, schema: StructType, rows: Array[InternalRow]): Unit
   /** Identity of the backing STORE — join pushdown is accepted only
     * between scans of the same store (a server executes joins over its
     * own collections; a cross-store "pushed" join would silently run
@@ -536,8 +478,6 @@ trait LocalStoreClient extends StoreClient {
   def collectionOf(name: String): MemCollection
   def schemaOf(name: String): StructType = collectionOf(name).schema
   def rowCount(name: String): Int = collectionOf(name).size
-  def rows(name: String, start: Int, end: Int): Iterator[InternalRow] =
-    collectionOf(name).rows(start, end)
   def query(name: String, start: Int, end: Int, spec: QuerySpec): Iterator[InternalRow] =
     QueryEval.run(collectionOf(name), start, end, spec,
       if (spec.countServed) Some(name) else None)
@@ -551,11 +491,16 @@ trait LocalStoreClient extends StoreClient {
   * reference's embedded test databases (mongo-java-server/cassandra-unit,
   * SURVEY.md §5). */
 object MemStoreClient extends LocalStoreClient {
-  def hasCollection(name: String): Boolean = MemStore.hasCollection(name)
   def collectionOf(name: String): MemCollection = MemStore.collectionOf(name)
-  def registerDerived(name: String, schema: StructType, rows: Array[InternalRow]): Unit =
-    MemStore.registerRaw(name, schema, rows)
   def clientKey: String = "mem"
+}
+
+/** A pushed join's result, held by value: it travels to the readers with
+  * the scan's reader factory, which query it under the scan's collection
+  * name like any stored collection. */
+final class ResultClient(result: MemCollection) extends LocalStoreClient {
+  def collectionOf(name: String): MemCollection = result
+  def clientKey: String = "result"
 }
 
 /** Read-only parquet-backed [[StoreClient]]: each collection is
@@ -563,22 +508,13 @@ object MemStoreClient extends LocalStoreClient {
   * cursor. In a real deployment each partition reader would open its own
   * connection/cursor instead of a JVM cache — the cache stands in for the
   * server exactly like MemStore does, and everything above the seam is the
-  * code a wire client would reuse. Derived (pushed-join) relations
-  * delegate to the bounded MemStore derived cache ('#join#' names cannot
-  * collide with file-backed collections). */
+  * code a wire client would reuse. */
 class ParquetStoreClient(path: String) extends LocalStoreClient {
-  private def isDerived(name: String) = name.contains("#join#")
   def collectionOf(name: String): MemCollection =
-    if (isDerived(name)) MemStore.collectionOf(name)
-    else ParquetStoreClient.cache.getOrElseUpdate((path, name), {
+    ParquetStoreClient.cache.getOrElseUpdate((path, name), {
       val spark = org.apache.spark.sql.SparkSession.active
       MemCollection.of(spark.read.parquet(s"$path/$name.parquet"))
     })
-  def hasCollection(name: String): Boolean =
-    if (isDerived(name)) MemStore.hasCollection(name)
-    else new java.io.File(s"$path/$name.parquet").exists()
-  def registerDerived(name: String, schema: StructType, rows: Array[InternalRow]): Unit =
-    MemStore.registerRaw(name, schema, rows)
   def clientKey: String = s"parquet:$path"
 }
 
@@ -867,18 +803,12 @@ class MemScan(
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportOrdering with SupportsRuntimeFiltering {
 
-  /** The collection the readers serve: the base one, or the store-side
-    * join TREE materialized ONCE per scan under a derived name (the
-    * test-double stand-in for a store's native join execution; derived
-    * relations are in-process only, like the store itself). */
-  private lazy val sourceCollection: String = joinRel match {
-    case None => collection
-    case Some(rel) =>
-      val name = s"${MemRel.baseName(rel)}#join#$scanId"
-      if (!client.hasCollection(name))
-        client.registerDerived(name, fullSchema, MemRel.eval(rel))
-      name
-  }
+  /** A pushed join's result: the store-side join TREE evaluated ONCE per
+    * scan (the test double's stand-in for a store's native join
+    * execution). The readers serve it under the scan's collection name,
+    * so its rows count as served by that collection. */
+  private lazy val joinResult: Option[MemCollection] =
+    joinRel.map(rel => MemCollection.fromRows(fullSchema, MemRel.eval(rel)))
 
   /** The cursor's whole pushed pipeline. An aggregate reads only the
     * columns its groups and functions read (pushAggregation declines
@@ -919,12 +849,16 @@ class MemScan(
   override def filterAttributes(): Array[NamedReference] =
     required.fieldNames.map(Expressions.column)
 
-  override def filter(filters: Array[Filter]): Unit = {
-    val accepted = filters.filter(MemStore.supported)
-    MemStore.recordRuntimeFilters((collection, scanId), accepted.toSeq)
-  }
+  private var runtime: Seq[Filter] = Nil
 
-  private val scanId = java.util.UUID.randomUUID().toString
+  override def filter(filters: Array[Filter]): Unit =
+    runtime = filters.filter(MemStore.supported).toSeq
+
+  /** No columnar reads: with `UNSUPPORTED`, BatchScanExec asks for the
+    * reader factory only when it executes, after [[filter]] — the default
+    * mode builds it at planning, before the runtime filters exist. */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.UNSUPPORTED
 
   /** Store-reported statistics — without these Spark assumes
     * `defaultSizeInBytes` (effectively infinite) for a DSv2 relation and
@@ -969,15 +903,18 @@ class MemScan(
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val n = if (joinRel.isEmpty) baseCount else client.rowCount(sourceCollection)
+    val n = joinResult.fold(baseCount)(_.size)
     // a pushed offset must be applied exactly (no partial-push contract),
     // which requires ONE global cursor — the reference's skip shape anyway
-    if (offset > 0) Array(MemInputPartition(sourceCollection, 0, n))
-    else MemScan.slicePartitions(sourceCollection, 0, n)
+    if (offset > 0) Array(MemInputPartition(collection, 0, n))
+    else MemScan.slicePartitions(collection, 0, n)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    MemStore.lastPushed(collection) = pushed.toSeq
+    // runtime (DPP) filters apply on the batch ROW path only: a pushed
+    // aggregate's partials would not be the rows a runtime filter names
+    val filters = if (agg.isEmpty) spec.filters ++ runtime else spec.filters
+    MemStore.lastPushed(collection) = filters
     // routing metadata a real multi-replica connector would route by:
     // the canonical string plus the decomposed mode / preferred / tag sets
     val rp = graft.channel.ReadPreference.parse(readPreference)
@@ -998,10 +935,8 @@ class MemScan(
     agg.foreach { case (groups, funcs) =>
       MemStore.lastAgg(collection) = (groups, funcs.map(MemAgg.render))
     }
-    // runtime (DPP) filters apply on the batch ROW path only: a pushed
-    // aggregate's partials would not be the rows a runtime filter names
-    new MemReaderFactory(spec, maxTimeMs,
-      if (agg.isEmpty) Some(scanId) else None, client)
+    new MemReaderFactory(spec.copy(filters = filters), maxTimeMs,
+      joinResult.fold(client)(new ResultClient(_)))
   }
 
   // the pushed OFFSET never reaches the stream path (streaming plans have
@@ -1091,7 +1026,7 @@ class MemMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory = {
     MemStore.lastPushed(collection) = spec.filters
-    new MemReaderFactory(spec, maxTimeMs, client = client)
+    new MemReaderFactory(spec, maxTimeMs, client)
   }
 }
 
@@ -1236,7 +1171,7 @@ class MemKeyedMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory = {
     MemStore.lastPushed(collection) = spec.filters
-    new MemReaderFactory(spec, maxTimeMs, client = client)
+    new MemReaderFactory(spec, maxTimeMs, client)
   }
 }
 
@@ -1252,23 +1187,14 @@ case class MemInputPartition(collection: String, start: Int, end: Int,
   * #1), so for the wire client the server evaluates the pipeline and only
   * matching projected rows (or partials) cross the socket; embedded/
   * parquet clients run the identical QueryEval in-process. Every cursor
-  * honours maxTimeMS and the injected failure modes. `scanId` names the
-  * batch row scan whose runtime (DPP) filters apply. */
+  * honours maxTimeMS and the injected failure modes. */
 class MemReaderFactory(
     spec: QuerySpec,
     maxTimeMs: Option[Long],
-    scanId: Option[String] = None,
-    client: StoreClient = MemStoreClient) extends PartitionReaderFactory {
+    client: StoreClient) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[MemInputPartition]
-    // runtime (DPP) filters land after factory construction — pick them
-    // up here (createReader runs once the dynamic subquery has resolved)
-    val runtime = scanId
-      .flatMap(id => MemStore.runtimeFilters.get((p.collection, id)))
-      .getOrElse(Nil)
-    val filters = spec.filters ++ runtime
-    if (runtime.nonEmpty) MemStore.lastPushed(p.collection) = filters
     val mode = MemStore.failureModes.get(p.collection)
     if (mode.contains(MemStore.CursorError))
       throw new java.io.IOException(
@@ -1284,7 +1210,7 @@ class MemReaderFactory(
       // Spark as they are; Spark projects these non-Unsafe rows before
       // anything buffers them
       private val it = client.query(p.collection, p.start, p.end,
-        spec.copy(filters = filters, keyRange = p.keyRange))
+        spec.copy(keyRange = p.keyRange))
       private var current: InternalRow = _
       override def next(): Boolean = {
         mode match {

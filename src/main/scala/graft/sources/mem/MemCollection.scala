@@ -12,8 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** One column of a [[MemCollection]]: Catalyst's physical values, stored
   * by Spark's physical type and compared with Spark's own ordering for
   * it — the store's stand-ins for the typed, encoded values a real store
-  * keeps (MongoDB's BSON documents, Cassandra's serialized cells). */
-sealed abstract class MemColumn {
+  * keeps (MongoDB's BSON documents, Cassandra's serialized cells).
+  * Serializable, so a pushed join's result can travel with its scan. */
+sealed abstract class MemColumn extends Serializable {
   def length: Int
   def isNull(i: Int): Boolean
   /** The Catalyst value of row `i`, null for NULL. */
@@ -140,7 +141,7 @@ final class StringColumn(val values: Array[UTF8String]) extends MemColumn {
   * `PhysicalDataType.ordering` (built on first use: some types have none,
   * and no filter or sort on them is ever pushed). */
 final class ObjectColumn(dataType: DataType, val values: Array[Any]) extends MemColumn {
-  private lazy val ordering = PhysicalDataType.ordering(dataType)
+  @transient private lazy val ordering = PhysicalDataType.ordering(dataType)
   def length: Int = values.length
   def isNull(i: Int): Boolean = values(i) == null
   def get(i: Int): Any = values(i)
@@ -211,7 +212,8 @@ object MemColumn {
 /** One registration of the store: its schema and one [[MemColumn]] per
   * field, in the stable cursor order rows were registered in. Rows are
   * built only when served ([[project]]). */
-final class MemCollection(val schema: StructType, val columns: Array[MemColumn], val size: Int) {
+final class MemCollection(val schema: StructType, val columns: Array[MemColumn], val size: Int)
+    extends Serializable {
   def column(name: String): MemColumn = columns(schema.fieldIndex(name))
 
   /** Row `i` narrowed to the columns `idx`. */
@@ -222,22 +224,20 @@ final class MemCollection(val schema: StructType, val columns: Array[MemColumn],
     new GenericInternalRow(vs)
   }
 
-  private def allColumns: Array[Int] = columns.indices.toArray
-
-  def rows(start: Int, end: Int): Iterator[InternalRow] = {
-    val idx = allColumns
-    (math.max(0, start) until math.min(end, size)).iterator.map(project(_, idx))
+  private def rows: Iterator[InternalRow] = {
+    val idx = columns.indices.toArray
+    (0 until size).iterator.map(project(_, idx))
   }
 
   /** The rows as `df.collect()` returned them: through the deserializer
     * `collect` uses, so every value has the class it had there. */
   def toExternalRows: Array[Row] = {
     val toRow = ExpressionEncoder(schema).resolveAndBind().createDeserializer()
-    rows(0, size).map(toRow).toArray
+    rows.map(toRow).toArray
   }
 
   def append(more: MemCollection): MemCollection =
-    MemCollection.fromRows(schema, (rows(0, size) ++ more.rows(0, more.size)).toArray)
+    MemCollection.fromRows(schema, (rows ++ more.rows).toArray)
 }
 
 object MemCollection {

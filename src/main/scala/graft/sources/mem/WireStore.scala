@@ -29,13 +29,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *                                     an end past the last row reads to
   *                                     the end)
   *   {"op":"keycounts","collection":c,"key_col":k}
-  *   {"op":"register","collection":c,"rows":n}
-  *                                     + schema-json line + row frames
-  *                                     (n = declared row count; the server
-  *                                     refuses a mismatch or a missing end
-  *                                     frame, so a client that dies
-  *                                     mid-stream cannot leave a truncated
-  *                                     relation registered)
   * Response:
   *   schema    -> one line: Spark StructType.json (public round-trip form)
   *   count     -> one line: decimal integer (the collection's size, O(1))
@@ -48,11 +41,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *                socket, in the spec's reply schema. The reference's core pushdown premise
   *                (filters compile INTO the native query,
   *                storage.scala:597,650-652; sort/skip/limit on the cursor
-  *                :320-324), r12 verdict #1. A raw page is a query with
-  *                the identity spec.
+  *                :320-324), r12 verdict #1.
   *   keycounts -> one `[key,count]` line per key, then an empty line
-  *   register  -> one line: "ok" (the uploaded rows are stored as
-  *                columns, like any registration)
   * Errors -> one line starting with "!" and the message, for every op: a
   * metadata reader sees it as its reply line, the frame reader as the
   * `!` tag (never a frame tag). Clients throw.
@@ -67,17 +57,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * Any request may carry `"deflate":true`: the server zlib-compresses
   * the WHOLE response stream (MongoDB's OP_COMPRESSED shape) — same
   * protocol above the inflater, fewer bytes on the wire. The request
-  * line itself is always plain (the server must read it first);
-  * register uploads stay plain too. Per-collection rows AND bytes
-  * written are instrumented ([[MemWireServer.rowsShipped]]/
-  * [[MemWireServer.bytesShipped]]).
+  * line itself is always plain (the server must read it first).
+  * Per-collection rows AND bytes written are instrumented
+  * ([[MemWireServer.rowsShipped]]/[[MemWireServer.bytesShipped]]).
   *
   * Row frames are the one row encoding on the wire, the compact binary
   * shape a real driver speaks (MongoDB rows are BSON, Cassandra's native
-  * protocol is length-prefixed binary). Every row-serving reply and every
-  * register upload is a frame stream; metadata replies
-  * (schema/count/keycounts/register "ok") stay line-JSON. Composes under
-  * deflate (frames flow through the same deflated stream).
+  * protocol is length-prefixed binary). Every row-serving reply is a
+  * frame stream; metadata replies (schema/count/keycounts) stay
+  * line-JSON. Composes under deflate (frames flow through the same
+  * deflated stream).
   *
   * Frame grammar, schema-directed, over Catalyst's physical values (a
   * frame is written from an `InternalRow` and read back into one, with no
@@ -160,8 +149,8 @@ object WireCodec {
     }
 
   /** Read frames until the end frame; throws on an error line, and on
-    * EOF before the end frame — a server (or uploading client) that died
-    * mid-stream must never pass as a short result. */
+    * EOF before the end frame — a server that died mid-stream must never
+    * pass as a short result. */
   def readRows(in: DataInputStream, schema: StructType): Iterator[InternalRow] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
     def truncated = new java.io.IOException(
@@ -564,7 +553,7 @@ object MemWireServer {
   // inside the collection tuple): the fp is a schema serialization + hash
   // and runs on every row-serving request — recomputing it per cursor per
   // poll is pure waste, while the eq check stays correct across
-  // re-registration because registerRaw installs a new StructType instance
+  // re-registration because every registration installs a new StructType
   private val fpCache = TrieMap[String, (StructType, String)]()
   private def cachedFp(coll: String, schema: StructType): String =
     fpCache.get(coll) match {
@@ -737,22 +726,6 @@ object MemWireServer {
             .toSeq.sortBy(_._1).iterator
             .map { case (k, n) => s"[${WireJson.q(k)},$n]" } ++
             Iterator.single(""))
-        case "register" =>
-          val schema = DataType.fromJson(WireCodec.readLine(in)).asInstanceOf[StructType]
-          // a client that died mid-stream never sent the end frame, so
-          // readRows throws and the TRUNCATED relation is never registered;
-          // the declared count is the second guard
-          val rows = WireCodec.readRows(new java.io.DataInputStream(in), schema).toArray
-          val declared = fields.get("rows") match {
-            case Some(n: Long) => n
-            case _ => throw new IllegalArgumentException(
-              "wire: register request missing declared row count")
-          }
-          require(rows.length.toLong == declared,
-            s"wire: register received ${rows.length} rows, expected $declared " +
-              "(client stream truncated?) - collection NOT registered")
-          MemStore.registerRaw(strField("collection"), schema, rows)
-          reply(Iterator.single("ok"))
         case other => throw new IllegalArgumentException(s"unknown op '$other'")
       }
     } catch {
@@ -863,9 +836,6 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false)
       sb.append(optDeflate)
     }
 
-  def hasCollection(name: String): Boolean =
-    try { schemaOf(name); true } catch { case _: Throwable => false }
-
   def schemaOf(name: String): StructType =
     SocketStoreClient.schemaCache.getOrElseUpdate((host, port, name),
       DataType.fromJson(
@@ -875,29 +845,17 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false)
   def rowCount(name: String): Int =
     callOneLine(s"""{"op":"count","collection":${WireJson.q(name)}$optDeflate}""").toInt
 
-  /** A raw page: the `query` op with the identity spec (every column, no
-    * pipeline), not counted as served. */
-  def rows(name: String, start: Int, end: Int): Iterator[InternalRow] =
-    serve(name, start, end)(full =>
-      QuerySpec(Nil, None, Nil, 0, None, full.fieldNames.toSeq, countServed = false))
-
   /** The wire pushdown (r12 verdict #1): the spec ships to the server,
     * which evaluates the whole pipeline against its own rows — only
     * matching projected rows, or one partial per group for a pushed
     * aggregate, cross the socket: the reference's
-    * compile-the-query-into-the-store premise. */
-  override def query(name: String, start: Int, end: Int, spec: QuerySpec): Iterator[InternalRow] =
-    serve(name, start, end)(_ => spec)
-
-  /** One `query` round trip, the spec built from the (re-)prepared schema
-    * so a raw page re-derives its columns after a schema change. A spec
+    * compile-the-query-into-the-store premise. One round trip, retried
+    * once with the re-prepared schema after a schema change. A spec
     * outside the wire vocabulary throws before any request is sent. Rows
     * are materialized inside the connection scope (cursor semantics: the
     * slice is bounded by construction — partition planning sized it). */
-  private def serve(name: String, start: Int, end: Int)(
-      specFor: StructType => QuerySpec): Iterator[InternalRow] =
+  override def query(name: String, start: Int, end: Int, spec: QuerySpec): Iterator[InternalRow] =
     withFreshSchema(name) { full =>
-      val spec = specFor(full)
       val request = WireQuery.render(name, start, end, spec, extra = fpField(name, full))
       callRaw(request)(readRowsFrom(_, spec.replySchema(full)))
     }
@@ -923,29 +881,6 @@ class SocketStoreClient(host: String, port: Int, deflate: Boolean = false)
       m.result()
     }
 
-  def registerDerived(name: String, schema: StructType, rs: Array[InternalRow]): Unit = {
-    // STREAM rows to the socket (r12 verdict #3 hardening): a large
-    // pushed-join result flows frame by frame through the buffered
-    // stream, never materialized a second time before the first byte
-    val sock = new Socket(host, port)
-    try {
-      val out = new java.io.DataOutputStream(
-        new java.io.BufferedOutputStream(sock.getOutputStream, 8192))
-      val in = new BufferedReader(new InputStreamReader(sock.getInputStream, UTF_8))
-      out.write((s"""{"op":"register","collection":${WireJson.q(name)},""" +
-        s""""rows":${rs.length}}\n""" +
-        schema.json + "\n").getBytes(UTF_8)) // StructType.json is one line
-      rs.foreach(WireCodec.writeRow(_, schema, out))
-      WireCodec.writeEnd(out)
-      out.flush()
-      val l = in.readLine()
-      if (l == null) throw new java.io.IOException("wire: connection closed")
-      if (l.startsWith("!")) throw new java.io.IOException(s"wire: ${l.drop(1)}")
-      require(l == "ok", s"wire: unexpected register reply '$l'")
-      SocketStoreClient.schemaCache((host, port, name)) = schema
-    } finally sock.close()
-  }
-
   // clientKey is the identity of the backing STORE (join-pushdown
   // compatibility checks compare it) — the deflate flag is a property of
   // the CONNECTION, not the store, so it must not leak into the key:
@@ -958,6 +893,6 @@ object SocketStoreClient {
   private val schemaCache = TrieMap[(String, Int, String), StructType]()
   // fingerprint memo (same identity discipline as the server's):
   // (schema instance, fp) — the eq check self-invalidates when the cached
-  // schema instance is replaced by a re-prepare or a registerDerived
+  // schema instance is replaced by a re-prepare
   private val fpCache = TrieMap[(String, Int, String), (StructType, String)]()
 }

@@ -296,7 +296,7 @@ class MemColumnarSpec extends AnyFunSuite {
       Seq(s"a$k", null), Map(s"k$k" -> k), Array[Byte](k.toByte, 0), Row(k))
   }
 
-  test("register, append and registerRaw read back as df.collect(), class for class") {
+  test("register, append, fromRows and serialization read back alike") {
     val df1 = spark.createDataFrame(allTypesRows(0, 12).asJava, allTypes)
     val df2 = spark.createDataFrame(allTypesRows(12, 9).asJava, allTypes)
     val want1 = df1.collect()
@@ -314,20 +314,33 @@ class MemColumnarSpec extends AnyFunSuite {
     assert(MemStoreClient.rowCount("columnar_roundtrip") === 21)
     // a cursor serves Catalyst rows: the same rows in Spark's value form
     val toRow = ExpressionEncoder(allTypes).resolveAndBind().createDeserializer()
-    assertSameRows(MemStoreClient.rows("columnar_roundtrip", 10, 14).map(toRow).toArray,
-      (want1 ++ want2).slice(10, 14))
+    val page = MemStoreClient.query("columnar_roundtrip", 10, 14,
+      QuerySpec(Nil, None, Nil, 0, None, allTypes.fieldNames.toSeq, countServed = false))
+    assertSameRows(page.map(toRow).toArray, (want1 ++ want2).slice(10, 14))
     // the typed layout is what holds them, not a row array: Spark's
     // physical types, so timestamps are longs and dates ints
     val cols = MemStore.collectionOf("columnar_roundtrip").columns
     assert(cols.take(11).map(_.getClass.getSimpleName).toSeq === Seq("LongColumn",
       "IntColumn", "ShortColumn", "ByteColumn", "DoubleColumn", "FloatColumn",
       "BooleanColumn", "StringColumn", "LongColumn", "LongColumn", "IntColumn"))
-    // a raw registration (a derived relation's Catalyst rows) reads back alike
+    // a collection of Catalyst rows (a pushed join's result) reads back
+    // alike, and so does its serialized copy, the form in which it travels
+    // with its scan — orderings included (decimals sort by a rebuilt one)
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(allTypes)
     val raw = allTypesRows(0, 6).map(toCatalyst(_).asInstanceOf[InternalRow]).toArray
-    MemStore.registerRaw("columnar_raw#join#t", allTypes, raw)
-    assertSameRows(MemStore.rowsOf("columnar_raw#join#t"), want1.take(6))
-    assert(MemStore.rowsOf("columnar_raw#join#t")(2).getAs[Int]("i") === 2)
+    val result = MemCollection.fromRows(allTypes, raw)
+    assertSameRows(result.toExternalRows, want1.take(6))
+    assert(result.toExternalRows(2).getAs[Int]("i") === 2)
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(result)
+    out.close()
+    val copy = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+      .readObject().asInstanceOf[MemCollection]
+    assertSameRows(copy.toExternalRows, want1.take(6))
+    val byDec = new ResultClient(copy).query("result", 0, 6,
+      QuerySpec(Seq(IsNotNull("dec")), None, Seq(("dec", true)), 0, None, Seq("i")))
+    assert(byDec.map(_.getInt(0)).toSeq === Seq(5, 4, 2, 1, 0))
   }
 
   test("string columns share one instance per distinct value across appends") {

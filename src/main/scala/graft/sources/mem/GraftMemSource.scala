@@ -43,22 +43,24 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * which the reader hands to Spark as they are. No row array is kept:
   * [[rowsOf]]/[[snapshot]] build the external rows `df.collect()` returned.
   *
+  * What a query pushed (filters, projection, limit, top-n, offset,
+  * aggregate, sample, cursor options) is held by the scan Spark plans and
+  * runs, [[MemScan]]; the store itself keeps only the served-row counters
+  * and the injected failure modes below.
+  *
   * Usage: `MemStore.register("langs", df)` then
   * `spark.read.format("graft.sources.mem.GraftMemSource").option("collection", "langs").load()`.
   */
 object MemStore {
   private val collections = TrieMap[String, MemCollection]()
 
-  /** Last filters each collection scan actually applied store-side —
-    * instrumentation so tests can prove pushdown happened. */
+  /** The filters the latest batch scan of each collection served
+    * store-side, written only by [[MemScan.createReaderFactory]]. What a
+    * query pushed is recorded on the [[MemScan]] Spark executed (its
+    * `spec`); this map is kept only for userbench's wire_join probe
+    * (userbench Workloads.scala) and goes with the next change to
+    * userbench. */
   val lastPushed = TrieMap[String, Seq[Filter]]()
-
-  /** Last query options each collection scan observed store-side
-    * (maxTimeMS / readPreference — the reference's cursor options,
-    * channel/package.scala:241 `maxTimeMS` and :276 `readPreference`):
-    * instrumentation proving the options reach the store, like
-    * `lastPushed` proves pushdown. */
-  val lastOptions = TrieMap[String, Map[String, String]]()
 
   /** Error-injection modes, mirroring the reference's failing-producer
     * modules (`MongoObsCursorError`/`MongoObsFetchError`,
@@ -76,24 +78,10 @@ object MemStore {
   final case class SlowFetch(delayMs: Long) extends FailureMode
   val failureModes = TrieMap[String, FailureMode]()
 
-  /** Last limit / top-n / skip each collection scan applied store-side —
-    * instrumentation proving the reference's cursor-side `sort/skip/limit`
-    * (storage.scala:320-324) reached the store, like `lastPushed`. */
-  val lastLimit = TrieMap[String, Int]()
-  val lastTopN = TrieMap[String, (Seq[(String, Boolean)], Int)]()
-  val lastOffset = TrieMap[String, Int]()
-
   /** Rows actually served by the store across the most recent scan of the
     * collection (reset per scan) — lets specs assert the store really
     * pruned under a pushed limit instead of serving everything. */
   val served = TrieMap[String, java.util.concurrent.atomic.AtomicLong]()
-
-  /** Aggregate specs a scan pushed store-side (instrumentation, like
-    * `lastPushed`): (group columns, rendered agg functions). */
-  val lastAgg = TrieMap[String, (Seq[String], Seq[String])]()
-
-  /** Table-sample pushed store-side: (lowerBound, upperBound, seed). */
-  val lastSample = TrieMap[String, (Double, Double, Long)]()
 
   def register(name: String, df: DataFrame): Unit =
     collections(name) = MemCollection.of(df)
@@ -369,9 +357,9 @@ object MemRel {
   * round-trip are bit-identical.
   *
   * `countServed`: whether rows this query serves count into
-  * [[MemStore.served]] — true for a scan's cursors (the
-  * instrumentation's contract: rows, or partials, the store served to
-  * the scan), false for internal fetches (pushed-join leaves, raw pages).
+  * [[MemStore.served]], the store's one per-scan counter — true for a
+  * scan's cursors (rows, or partials, the store served to the scan),
+  * false for internal fetches (pushed-join leaves, raw pages).
   *
   * `agg`: partial aggregation (group columns, functions) over the
   * projected rows — the Mongo aggregation-pipeline shape; `projection`
@@ -419,10 +407,11 @@ final case class KeyRange(column: String, key: String, startRank: Long, endRank:
   * sample, partial aggregates, pushed joins, DPP, streaming offsets) works
   * unchanged on top. The store-side EVALUATION of pushed operators lives in
   * the shared readers (a real connector would instead compile them into the
-  * native query — the seam point is the same either way). Instrumentation
-  * (MemStore.lastPushed/served/failureModes) stays global test-harness
-  * state, not part of the client contract. A scan's own state — its
-  * runtime filters, a pushed join's result — stays in the scan. */
+  * native query — the seam point is the same either way). What a query
+  * pushed, its runtime filters and a pushed join's result stay in the
+  * scan ([[MemScan]]); the served-row counters and injected failure modes
+  * ([[MemStore.served]]/[[MemStore.failureModes]]) are global test-harness
+  * state, not part of the client contract. */
 trait StoreClient extends Serializable {
   def schemaOf(name: String): StructType
   def rowCount(name: String): Int
@@ -544,8 +533,8 @@ class MemTable(collection: String, schema: StructType,
     // O4/T7 — query-scoped cursor options, mirroring the reference's
     // builder surface (channel/package.scala:241 maxTimeMS, :276
     // readPreference): maxTimeMS bounds reader wall time store-side;
-    // readPreference is recorded (an embedded store has one replica — a
-    // real connector would route by it, as Mongo drivers do).
+    // readPreference is held by the scan (an embedded store has one
+    // replica — a real connector would route by it, as Mongo drivers do).
     // maxTimeMS=0 means "no time limit", matching MongoDB cursor.maxTimeMS
     // semantics (the reference forwards the raw option to the driver, so 0
     // disables the deadline there too)
@@ -556,7 +545,7 @@ class MemTable(collection: String, schema: StructType,
     // render — an unknown mode or an invalid combination (plain primary
     // with tags) fails here, before any job is planned
     val readPreference = graft.channel.ReadPreference
-      .parse(options.getOrDefault("readPreference", "primary")).render
+      .parse(options.getOrDefault("readPreference", "primary"))
     val startOffset = options.getOrDefault("startOffset", "0").toLong
     val maxRowsPerTrigger =
       Option(options.get("maxRowsPerTrigger")).map(_.toLong).filter(_ > 0)
@@ -582,7 +571,7 @@ class MemScanBuilder(
     private val collection: String,
     fullSchema: StructType,
     maxTimeMs: Option[Long],
-    readPreference: String,
+    readPreference: graft.channel.ReadPreference,
     startOffset: Long,
     maxRowsPerTrigger: Option[Long],
     orderedBy: Seq[(String, Boolean)] = Nil,
@@ -594,7 +583,8 @@ class MemScanBuilder(
     with SupportsPushDownTableSample with SupportsPushDownJoin {
 
   private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = fullSchema
+  // top-level column names: the store serves each column whole
+  private var required: Seq[String] = fullSchema.fieldNames.toSeq
   private var limit: Option[Int] = None
   private var topNKeys: Seq[(String, Boolean)] = Nil
   private var offset: Int = 0
@@ -657,7 +647,7 @@ class MemScanBuilder(
         if (cond.isEmpty) return false
         joinRel = Some(MemRel.Join(lRel, rRel, cond.get))
         curSchema = joinedSchema
-        required = joinedSchema
+        required = joinedSchema.fieldNames.toSeq
         pushed = Array.empty // post-join filters start fresh
         true
       case _ => false
@@ -727,8 +717,12 @@ class MemScanBuilder(
     unsup
   }
   override def pushedFilters(): Array[Filter] = pushed
+  /** Only the top-level names count: Spark may hand over a nested-pruned
+    * struct (`s: struct<a>` for `select("s.a")`), but the store serves each
+    * column whole, so the scan declares every column at its stored type
+    * and Spark's own projection picks the nested field by that type. */
   override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+    required = requiredSchema.fieldNames.toSeq
 
   /** The reference pushes `sort/skip/limit` into the store cursor
     * (storage.scala:320-324); DSv2's contract for that is
@@ -776,27 +770,39 @@ class MemScanBuilder(
   override def pushOffset(n: Int): Boolean =
     if (aggPushed.isDefined) false else { offset = n; true }
 
-  override def build(): Scan =
-    new MemScan(collection, curSchema, required, pushed, maxTimeMs,
-      readPreference, limit, topNKeys, offset, startOffset, maxRowsPerTrigger,
-      orderedBy, aggPushed, sample, joinRel, client, keyColumn)
+  /** The scan carries the whole pushed pipeline as ONE [[QuerySpec]]. An
+    * aggregate reads only the columns its groups and functions read
+    * (pushAggregation declines once a limit, offset or top-n is pushed,
+    * and they decline after it). */
+  override def build(): Scan = {
+    val projection = aggPushed.fold(required) { case (groups, funcs) =>
+      (groups ++ funcs.collect {
+        case MemAgg.CountCol(c) => c
+        case MemAgg.MinCol(c) => c
+        case MemAgg.MaxCol(c) => c
+        case MemAgg.SumCol(c) => c
+      }).distinct
+    }
+    new MemScan(collection, curSchema,
+      QuerySpec(pushed.toSeq, sample, topNKeys, offset, limit, projection, agg = aggPushed),
+      maxTimeMs, readPreference, startOffset, maxRowsPerTrigger, orderedBy,
+      joinRel, client, keyColumn)
+  }
 }
 
+/** One planned scan: the collection, its pushed pipeline ([[spec]]) and
+  * cursor options. It is the record of what the query pushed — the
+  * object Spark executes (under `BatchScanExec`), so an executed plan
+  * shows exactly what reached the store. */
 class MemScan(
-    collection: String,
+    val collection: String,
     fullSchema: StructType,
-    required: StructType,
-    pushed: Array[Filter],
-    maxTimeMs: Option[Long],
-    readPreference: String,
-    limit: Option[Int],
-    topNKeys: Seq[(String, Boolean)],
-    offset: Int,
+    val spec: QuerySpec,
+    val maxTimeMs: Option[Long],
+    val readPreference: graft.channel.ReadPreference,
     startOffset: Long,
     maxRowsPerTrigger: Option[Long] = None,
     orderedBy: Seq[(String, Boolean)] = Nil,
-    agg: Option[(Seq[String], Seq[MemAgg])] = None,
-    sample: Option[(Double, Double, Long)] = None,
     joinRel: Option[MemRel] = None,
     client: StoreClient = MemStoreClient,
     keyColumn: Option[String] = None)
@@ -809,19 +815,6 @@ class MemScan(
     * so its rows count as served by that collection. */
   private lazy val joinResult: Option[MemCollection] =
     joinRel.map(rel => MemCollection.fromRows(fullSchema, MemRel.eval(rel)))
-
-  /** The cursor's whole pushed pipeline. An aggregate reads only the
-    * columns its groups and functions read (pushAggregation declines
-    * once a limit, offset or top-n is pushed, and they decline after it). */
-  private val spec = QuerySpec(pushed.toSeq, sample, topNKeys, offset, limit,
-    agg.fold(required.fieldNames.toSeq) { case (groups, funcs) =>
-      (groups ++ funcs.collect {
-        case MemAgg.CountCol(c) => c
-        case MemAgg.MinCol(c) => c
-        case MemAgg.MaxCol(c) => c
-        case MemAgg.SumCol(c) => c
-      }).distinct
-    }, agg = agg)
 
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection}
 
@@ -842,17 +835,22 @@ class MemScan(
     * dimension); the store evaluates them cursor-side like any pushed
     * filter — the connector analog of dynamic partition pruning, and the
     * 100 TB lever that keeps a fact-scan from reading rows a selective
-    * join will drop anyway. */
-  // only columns surviving projection pruning: Spark resolves these
-  // against the scan OUTPUT, so a pruned-away column here is an
-  // AnalysisException at planning
+    * join will drop anyway. Row path only: a pushed aggregate's partials
+    * are not the rows a runtime filter names, so it offers no columns. */
+  // only the scan's OUTPUT columns: Spark resolves these against it, so a
+  // column outside it is an AnalysisException at planning
   override def filterAttributes(): Array[NamedReference] =
-    required.fieldNames.map(Expressions.column)
+    if (spec.agg.isDefined) Array.empty
+    else spec.projection.map(Expressions.column).toArray
 
   private var runtime: Seq[Filter] = Nil
 
   override def filter(filters: Array[Filter]): Unit =
     runtime = filters.filter(MemStore.supported).toSeq
+
+  /** The pipeline this scan's cursors run: the pushed [[spec]] plus the
+    * runtime filters it accepted. */
+  def cursorSpec: QuerySpec = spec.copy(filters = spec.filters ++ runtime)
 
   /** No columnar reads: with `UNSUPPORTED`, BatchScanExec asks for the
     * reader factory only when it executes, after [[filter]] — the default
@@ -860,45 +858,43 @@ class MemScan(
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
     Scan.ColumnarSupportMode.UNSUPPORTED
 
+  /** The base collection's row count, asked of the store ONCE per scan
+    * and shared by statistics and partition planning (Spark asks for
+    * statistics several times per query; each ask was a store round trip). */
+  private lazy val baseCount: Int = client.rowCount(collection)
+
   /** Store-reported statistics — without these Spark assumes
     * `defaultSizeInBytes` (effectively infinite) for a DSv2 relation and
     * will never broadcast a connector-backed dimension table; with them,
     * join planning (and AQE) treat the store like any sized relation. A
     * real connector serves these from collection metadata
-    * (collStats/system tables); row width is estimated from the pruned
-    * read schema. */
-  /** The base collection's row count, asked of the store ONCE per scan
-    * and shared by statistics and partition planning (Spark asks for
-    * statistics several times per query; each ask was a store round trip). */
-  private lazy val baseCount: Int = client.rowCount(collection)
-  // for a pushed join, estimate from the leftmost leaf WITHOUT
-  // materializing the join at planning time (statistics are estimates)
-  private lazy val estimatedRows: Long =
-    joinRel.map(MemRel.baseCount).getOrElse(baseCount.toLong)
-
+    * (collStats/system tables); row width is estimated from the read
+    * schema. For a pushed join the row count is the leftmost leaf's, so
+    * planning never materializes the join. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val n = estimatedRows
+    private val n = joinRel.map(MemRel.baseCount).getOrElse(baseCount.toLong)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(n)
     override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(n * math.max(1, required.defaultSize).toLong)
+      java.util.OptionalLong.of(n * math.max(1, readSchema().defaultSize).toLong)
   }
 
-  override def readSchema(): StructType =
-    if (agg.isEmpty) required else spec.replySchema(fullSchema)
+  override def readSchema(): StructType = spec.replySchema(fullSchema)
   override def description(): String =
-    s"graft-mem:$collection PushedFilters: [${pushed.mkString(", ")}], " +
-      s"ReadSchema: ${required.simpleString}" +
+    s"graft-mem:$collection PushedFilters: [${spec.filters.mkString(", ")}], " +
+      s"ReadSchema: ${readSchema().simpleString}" +
       maxTimeMs.map(ms => s", maxTimeMS: $ms").getOrElse("") +
-      s", readPreference: $readPreference" +
-      limit.map(n => s", PushedLimit: $n").getOrElse("") +
-      (if (offset == 0) "" else s", PushedOffset: $offset") +
-      (if (topNKeys.isEmpty) ""
-       else s", PushedTopN: ${topNKeys.map { case (f, d) =>
+      s", readPreference: ${readPreference.render}" +
+      spec.limit.map(n => s", PushedLimit: $n").getOrElse("") +
+      (if (spec.offset == 0) "" else s", PushedOffset: ${spec.offset}") +
+      (if (spec.topN.isEmpty) ""
+       else s", PushedTopN: ${spec.topN.map { case (f, d) =>
          s"$f ${if (d) "DESC" else "ASC"}" }.mkString(", ")}") +
-      agg.map { case (g, fs) =>
+      spec.agg.map { case (g, fs) =>
         s", PushedAggregates: [${fs.map(MemAgg.render).mkString(", ")}]" +
           (if (g.isEmpty) "" else s", PushedGroupBy: [${g.mkString(", ")}]")
       }.getOrElse("") +
+      spec.sample.map { case (lo, hi, seed) =>
+        s", PushedSample: [$lo, $hi) seed $seed" }.getOrElse("") +
       joinRel.map(r => s", StorePlan: ${MemRel.describe(r)}").getOrElse("")
   override def toBatch: Batch = this
 
@@ -906,37 +902,15 @@ class MemScan(
     val n = joinResult.fold(baseCount)(_.size)
     // a pushed offset must be applied exactly (no partial-push contract),
     // which requires ONE global cursor — the reference's skip shape anyway
-    if (offset > 0) Array(MemInputPartition(collection, 0, n))
+    if (spec.offset > 0) Array(MemInputPartition(collection, 0, n))
     else MemScan.slicePartitions(collection, 0, n)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // runtime (DPP) filters apply on the batch ROW path only: a pushed
-    // aggregate's partials would not be the rows a runtime filter names
-    val filters = if (agg.isEmpty) spec.filters ++ runtime else spec.filters
-    MemStore.lastPushed(collection) = filters
-    // routing metadata a real multi-replica connector would route by:
-    // the canonical string plus the decomposed mode / preferred / tag sets
-    val rp = graft.channel.ReadPreference.parse(readPreference)
-    MemStore.lastOptions(collection) =
-      maxTimeMs.map(ms => "maxTimeMS" -> ms.toString).toMap +
-        ("readPreference" -> readPreference) +
-        ("readPreferenceMode" -> rp.mode.toString.toLowerCase) +
-        ("readPreferencePreferred" -> rp.preferred.toString) ++
-        (if (rp.tagSets.isEmpty) Map.empty[String, String]
-         else Map("readPreferenceTags" ->
-           rp.tagSets.map(_.render).mkString(";")))
-    limit.foreach(MemStore.lastLimit(collection) = _)
-    if (offset > 0) MemStore.lastOffset(collection) = offset
-    if (topNKeys.nonEmpty)
-      MemStore.lastTopN(collection) = (topNKeys, limit.getOrElse(Int.MaxValue))
+    val served = cursorSpec
+    MemStore.lastPushed(collection) = served.filters
     MemStore.served(collection) = new java.util.concurrent.atomic.AtomicLong(0L)
-    sample.foreach(MemStore.lastSample(collection) = _)
-    agg.foreach { case (groups, funcs) =>
-      MemStore.lastAgg(collection) = (groups, funcs.map(MemAgg.render))
-    }
-    new MemReaderFactory(spec.copy(filters = filters), maxTimeMs,
-      joinResult.fold(client)(new ResultClient(_)))
+    new MemReaderFactory(served, maxTimeMs, joinResult.fold(client)(new ResultClient(_)))
   }
 
   // the pushed OFFSET never reaches the stream path (streaming plans have
@@ -1024,10 +998,8 @@ class MemMicroBatchStream(
       start.asInstanceOf[MemOffset].index.toInt,
       end.asInstanceOf[MemOffset].index.toInt)
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    MemStore.lastPushed(collection) = spec.filters
+  override def createReaderFactory(): PartitionReaderFactory =
     new MemReaderFactory(spec, maxTimeMs, client)
-  }
 }
 
 case class MemOffset(index: Long)
@@ -1039,55 +1011,23 @@ case class MemOffset(index: Long)
   * cursor per key value — the reference's `(persistence_id, sequence_nr)`
   * resume (log/package.scala:56-62) and the Kafka topic-partition offset
   * shape. Serialized as a sorted JSON object so the checkpointed form is
-  * deterministic; keys are escaped (they are data). */
+  * deterministic; keys are escaped (they are data) and read back by the
+  * wire protocol's JSON reader ([[WireJson]]). */
 case class MemKeyedOffset(offsets: Map[String, Long])
     extends org.apache.spark.sql.connector.read.streaming.Offset {
   override def json(): String =
-    offsets.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + MemKeyedOffset.esc(k) + "\":" + v
-    }.mkString("{", ",", "}")
+    offsets.toSeq.sortBy(_._1).map { case (k, v) => WireJson.q(k) + ":" + v }
+      .mkString("{", ",", "}")
 }
 
 object MemKeyedOffset {
-  private[mem] def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** Parser for exactly the shape [[MemKeyedOffset.json]] emits. */
-  def parse(json: String): MemKeyedOffset = {
-    val m = Map.newBuilder[String, Long]
-    var i = 1 // skip '{'
-    val n = json.length
-    while (i < n && json.charAt(i) != '}') {
-      if (json.charAt(i) == ',') i += 1
-      require(json.charAt(i) == '"', s"bad keyed offset json at $i: $json")
-      i += 1
-      val sb = new StringBuilder
-      while (json.charAt(i) != '"') {
-        val c = json.charAt(i)
-        if (c == '\\') {
-          json.charAt(i + 1) match {
-            case '"' => sb.append('"'); i += 2
-            case '\\' => sb.append('\\'); i += 2
-            case 'u' =>
-              sb.append(Integer.parseInt(json.substring(i + 2, i + 6), 16).toChar)
-              i += 6
-            case other => throw new IllegalArgumentException(
-              s"bad escape '\\$other' in keyed offset json: $json")
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      i += 1 // closing quote
-      require(json.charAt(i) == ':', s"bad keyed offset json at $i: $json")
-      i += 1
-      val st = i
-      while (i < n && json.charAt(i).isDigit) i += 1
-      m += sb.toString -> json.substring(st, i).toLong
-    }
-    MemKeyedOffset(m.result())
+  def parse(json: String): MemKeyedOffset = WireJson.parse(json) match {
+    case m: Map[_, _] => MemKeyedOffset(m.map {
+      case (k: String, v: Long) => k -> v
+      case (k, v) => throw new IllegalArgumentException(
+        s"bad keyed offset entry $k -> $v in: $json")
+    })
+    case _ => throw new IllegalArgumentException(s"keyed offset json is not an object: $json")
   }
 }
 
@@ -1169,10 +1109,8 @@ class MemKeyedMicroBatchStream(
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    MemStore.lastPushed(collection) = spec.filters
+  override def createReaderFactory(): PartitionReaderFactory =
     new MemReaderFactory(spec, maxTimeMs, client)
-  }
 }
 
 /** One store cursor: the [start, end) slice of the collection's cursor

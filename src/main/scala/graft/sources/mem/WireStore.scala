@@ -75,7 +75,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *                  its schema type (fixed-width primitives big-endian;
   *                  strings as int length + the UTF-8 bytes of the
   *                  `UTF8String`, so NUL survives; timestamps as their
-  *                  long epoch micros, dates as their int epoch days)
+  *                  long epoch micros, dates as their int epoch days; a
+  *                  struct as its fields, the same way)
   *   0x00         — end of rows
   *   '!' <line>   — error: the message as one UTF-8 line (newlines
   *                  flattened), the same form metadata replies use; the
@@ -83,7 +84,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * EOF before the end frame throws (truncation guard).
   *
   * Supported field types: boolean, byte/short/int/long, float/double,
-  * string, timestamp, date. Anything else fails loudly server-side — a
+  * string, timestamp, date, and structs of them. Anything else fails loudly server-side — a
   * real driver would extend the codec, and silent coercion is how wrong
   * answers hide. */
 object WireCodec {
@@ -91,6 +92,10 @@ object WireCodec {
 
   def writeRow(r: InternalRow, schema: StructType, out: DataOutputStream): Unit = {
     out.writeByte(0x01)
+    writeFields(r, schema, out)
+  }
+
+  private def writeFields(r: InternalRow, schema: StructType, out: DataOutputStream): Unit = {
     var i = 0
     while (i < schema.length) {
       if (r.isNullAt(i)) out.writeByte(0)
@@ -107,6 +112,7 @@ object WireCodec {
           case StringType =>
             val s = r.getUTF8String(i)
             out.writeInt(s.numBytes); s.writeTo(out)
+          case st: StructType => writeFields(r.getStruct(i, st.length), st, out)
           case dt => throw new IllegalArgumentException(
             s"wire codec: unsupported type $dt")
         }
@@ -144,6 +150,7 @@ object WireCodec {
       case StringType =>
         val b = new Array[Byte](in.readInt()); in.readFully(b)
         UTF8String.fromBytes(b)
+      case st: StructType => new GenericInternalRow(st.fields.map(f => readField(in, f.dataType)))
       case other => throw new IllegalArgumentException(
         s"wire codec: unsupported type $other")
     }
@@ -213,24 +220,34 @@ private[mem] object WireJson {
     v
   }
 
+  /** A cursor over one line. Every read of a character goes through
+    * [[peek]], so input cut short anywhere — a truncated request line, a
+    * corrupt checkpointed offset — is refused as "unexpected end". */
   private final class P(s: String) {
     private var i = 0
     def pos: Int = i
     def eof: Boolean = i >= s.length
     def ws(): Unit = while (i < s.length && s.charAt(i) == ' ') i += 1
+    private def end(at: Int): Unit =
+      if (at > s.length) throw new IllegalArgumentException(s"wire json: unexpected end of: $s")
+    private def peek(at: Int = i): Char = { end(at + 1); s.charAt(at) }
     private def expect(c: Char): Unit = {
-      require(i < s.length && s.charAt(i) == c,
-        s"wire json: expected '$c' at $i in: $s")
+      require(peek() == c, s"wire json: expected '$c' at $i in: $s")
       i += 1
+    }
+    private def word(w: String, v: Any): Any = {
+      end(i + w.length)
+      require(s.startsWith(w, i), s"wire json: bad value at $i in: $s")
+      i += w.length
+      v
     }
     def value(): Any = {
       ws()
-      require(i < s.length, s"wire json: unexpected end of: $s")
-      s.charAt(i) match {
+      peek() match {
         case '{' =>
           expect('{'); ws()
           val m = Map.newBuilder[String, Any]
-          if (s.charAt(i) != '}') {
+          if (peek() != '}') {
             var more = true
             while (more) {
               ws()
@@ -238,7 +255,7 @@ private[mem] object WireJson {
               ws(); expect(':')
               m += k -> value()
               ws()
-              if (s.charAt(i) == ',') { i += 1 } else more = false
+              if (peek() == ',') { i += 1 } else more = false
             }
           }
           expect('}')
@@ -246,39 +263,47 @@ private[mem] object WireJson {
         case '[' =>
           expect('['); ws()
           val b = Vector.newBuilder[Any]
-          if (s.charAt(i) != ']') {
+          if (peek() != ']') {
             var more = true
             while (more) {
               b += value()
               ws()
-              if (s.charAt(i) == ',') { i += 1 } else more = false
+              if (peek() == ',') { i += 1 } else more = false
             }
           }
           expect(']')
           b.result()
         case '"' => str()
-        case 't' => require(s.startsWith("true", i)); i += 4; true
-        case 'f' => require(s.startsWith("false", i)); i += 5; false
-        case 'n' => require(s.startsWith("null", i)); i += 4; null
+        case 't' => word("true", true)
+        case 'f' => word("false", false)
+        case 'n' => word("null", null)
         case _ =>
           val st = i
           while (i < s.length && "+-0123456789.eE".indexOf(s.charAt(i)) >= 0) i += 1
           val tok = s.substring(st, i)
           require(tok.nonEmpty, s"wire json: bad value at $st in: $s")
-          if (tok.exists(c => c == '.' || c == 'e' || c == 'E')) tok.toDouble
-          else tok.toLong
+          // a number cut short at the end ("1.5E") is truncation too
+          try {
+            if (tok.exists(c => c == '.' || c == 'e' || c == 'E')) tok.toDouble
+            else tok.toLong
+          } catch {
+            case _: NumberFormatException =>
+              end(i + 1)
+              throw new IllegalArgumentException(s"wire json: bad number at $st in: $s")
+          }
       }
     }
     private def str(): String = {
       expect('"')
       val sb = new StringBuilder
-      while (s.charAt(i) != '"') {
-        val c = s.charAt(i)
+      while (peek() != '"') {
+        val c = peek()
         if (c == '\\') {
-          s.charAt(i + 1) match {
+          peek(i + 1) match {
             case '"' => sb.append('"'); i += 2
             case '\\' => sb.append('\\'); i += 2
             case 'u' =>
+              end(i + 6)
               sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
               i += 6
             case other => throw new IllegalArgumentException(

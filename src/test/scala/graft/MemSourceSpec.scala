@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.dsl.Dsl._
 import graft.operators.Joins
-import graft.sources.mem.MemStore
+import graft.channel.ReadMode
+import graft.sources.mem.{MemAgg, MemScan, MemStore}
 
 /** DSv2 connector spec — replicates the reference's embedded-store test
   * setup (mongo-java-server fixtures, SURVEY.md §5): langs (5 dims) ×
@@ -13,7 +14,7 @@ import graft.sources.mem.MemStore
   * JoinMongoSpec.scala:75, plus proof that filters and projection reach the
   * store (the reference's pushdown contract). */
 class MemSourceSpec extends AnyFunSuite {
-  import SparkTestSession.spark
+  import SparkTestSession.{scansDuring, spark}
 
   val fmt = "graft.sources.mem.GraftMemSource"
 
@@ -34,6 +35,44 @@ class MemSourceSpec extends AnyFunSuite {
 
   def load(c: String) = spark.read.format(fmt).option("collection", c).load()
 
+  /** The filters the scans' cursors ran, rendered. */
+  def pushed(scans: Seq[MemScan]): Seq[String] =
+    scans.flatMap(_.cursorSpec.filters).map(_.toString)
+
+  test("two scans of one collection in one query each carry their own pushed filter") {
+    // a union of two differently filtered reads of the same collection:
+    // each executed scan holds its own filter, side by side
+    val (n, scans) = scansDuring("programmers") {
+      load("programmers").where(col("lang") === 1)
+        .union(load("programmers").where(col("lang") === 3)).count()
+    }
+    assert(n === MemStore.rowsOf("programmers").count(r => r.getInt(1) == 1 || r.getInt(1) == 3))
+    val filters = scans.map(s => pushed(Seq(s)).filter(_.startsWith("EqualTo(")).toSet)
+    assert(filters.toSet === Set(Set("EqualTo(lang,1)"), Set("EqualTo(lang,3)")), filters)
+  }
+
+  test("a nested field read over a struct column returns that field, over the mem and wire clients") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val inner = StructType(Seq(StructField("x", StringType), StructField("a", StringType)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, Row("x1", "a1")), Row(2L, Row("x2", "a2"))),
+      StructType(Seq(StructField("id", org.apache.spark.sql.types.LongType), StructField("s", inner))))
+    MemStore.register("nested_s", df)
+    val server = graft.sources.mem.MemWireServer.start()
+    try {
+      val wire = spark.read.format(fmt).option("collection", "nested_s")
+        .option("client", "wire").option("port", server.port.toString).load()
+      for (scan <- Seq(load("nested_s"), wire)) {
+        def read(q: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+          q(scan).collect().map(_.getString(0)).sorted.toSeq
+        assert(read(_.select("s.a")) === Seq("a1", "a2"))
+        assert(read(_.select("s.x")) === Seq("x1", "x2"))
+        assert(read(_.where(col("id") === 2L).select(col("s.a"))) === Seq("a2"))
+      }
+    } finally server.close()
+  }
+
   test("scan reads all documents") {
     assert(load("langs").count() === 5)
     assert(load("programmers").count() === 100)
@@ -50,13 +89,14 @@ class MemSourceSpec extends AnyFunSuite {
   }
 
   test("filters are pushed to the store (reference pushdown contract)") {
-    MemStore.lastPushed.remove("langs")
-    val got = load("langs").where(("index" $gte 2 $lte 3).column)
-      .select("name").collect().map(_.getString(0)).toSet
+    val (got, scans) = scansDuring("langs") {
+      load("langs").where(("index" $gte 2 $lte 3).column)
+        .select("name").collect().map(_.getString(0)).toSet
+    }
     assert(got === Set("ObjectiveC", "Scala"))
-    val pushed = MemStore.lastPushed.getOrElse("langs", Nil).map(_.toString).mkString(" ")
-    assert(pushed.contains("GreaterThanOrEqual") && pushed.contains("LessThanOrEqual"),
-      s"expected range filters pushed, got: $pushed")
+    val filters = pushed(scans).mkString(" ")
+    assert(filters.contains("GreaterThanOrEqual") && filters.contains("LessThanOrEqual"),
+      s"expected range filters pushed, got: $filters")
   }
 
   test("projection is pruned at the store (column pruning)") {
@@ -70,12 +110,13 @@ class MemSourceSpec extends AnyFunSuite {
   }
 
   test("unsupported filters stay Spark-side (residual Filter node)") {
-    MemStore.lastPushed.remove("programmers")
     // string EndsWith is not in the store's supported set
-    val n = load("programmers").where(col("name").endsWith("_7")).count()
+    val (n, scans) = scansDuring("programmers") {
+      load("programmers").where(col("name").endsWith("_7")).count()
+    }
     assert(n === 1)
-    val pushed = MemStore.lastPushed.getOrElse("programmers", Nil).map(_.toString)
-    assert(!pushed.exists(_.contains("EndsWith")), s"EndsWith must not be pushed: $pushed")
+    assert(!pushed(scans).exists(_.contains("EndsWith")),
+      s"EndsWith must not be pushed: ${pushed(scans)}")
   }
 
   test("T4 error injection: cursor-creation failure surfaces as query failure (reference MongoObsCursorError)") {
@@ -105,22 +146,24 @@ class MemSourceSpec extends AnyFunSuite {
   }
 
   test("O4 maxTimeMS: observed store-side; exceeded deadline fails the query, never truncates") {
-    MemStore.lastOptions.remove("programmers")
     // generous deadline: completes, option reaches the store
-    assert(spark.read.format(fmt).option("collection", "programmers")
-      .option("maxTimeMS", "60000").load().count() === 100)
-    assert(MemStore.lastOptions.getOrElse("programmers", Map.empty)
-      .get("maxTimeMS").contains("60000"))
+    val (n, scans) = scansDuring("programmers") {
+      spark.read.format(fmt).option("collection", "programmers")
+        .option("maxTimeMS", "60000").load().count()
+    }
+    assert(n === 100)
+    assert(scans.forall(_.maxTimeMs.contains(60000L)), scans.map(_.maxTimeMs))
     // maxTimeMS=0 means UNBOUNDED (MongoDB cursor semantics) — must
     // complete, and the option still reaches the store
-    MemStore.lastOptions.remove("programmers")
-    assert(spark.read.format(fmt).option("collection", "programmers")
-      .option("maxTimeMS", "0").load().count() === 100)
-    // the scan DID record options store-side, and 0 was interpreted as
-    // "no deadline" — no maxTimeMS entry, rather than a 0ms one
-    val opts0 = MemStore.lastOptions.getOrElse("programmers", Map.empty)
-    assert(opts0.get("readPreference").contains("primary"))
-    assert(!opts0.contains("maxTimeMS"))
+    val (n0, scans0) = scansDuring("programmers") {
+      spark.read.format(fmt).option("collection", "programmers")
+        .option("maxTimeMS", "0").load().count()
+    }
+    assert(n0 === 100)
+    // the scan DID carry its options, and 0 was interpreted as "no
+    // deadline" — no maxTimeMS, rather than a 0ms one
+    assert(scans0.forall(_.readPreference.render == "primary"))
+    assert(scans0.forall(_.maxTimeMs.isEmpty), scans0.map(_.maxTimeMs))
     // tiny positive deadline + injected per-fetch latency: the first
     // fetch alone exceeds it deterministically → query error, not a
     // truncated result
@@ -153,33 +196,36 @@ class MemSourceSpec extends AnyFunSuite {
       val e = intercept[org.apache.spark.SparkException] { load("programmers").count() }
       assert(cause(e).contains("injected"), cause(e))
     } finally MemStore.failureModes.remove("programmers")
-    MemStore.lastAgg.remove("programmers")
-    assert(load("programmers").count() === 100)
-    assert(MemStore.lastAgg.contains("programmers"), "count() must push the aggregate")
+    val (n, scans) = scansDuring("programmers")(load("programmers").count())
+    assert(n === 100)
+    assert(scans.forall(_.spec.agg.isDefined), "count() must push the aggregate")
   }
 
   test("T7 readPreference: recorded store-side like a driver would route it") {
-    MemStore.lastOptions.remove("langs")
-    assert(spark.read.format(fmt).option("collection", "langs")
-      .option("readPreference", "secondaryPreferred").load().count() === 5)
-    assert(MemStore.lastOptions.getOrElse("langs", Map.empty)
-      .get("readPreference").contains("secondaryPreferred"))
+    val (n, scans) = scansDuring("langs") {
+      spark.read.format(fmt).option("collection", "langs")
+        .option("readPreference", "secondaryPreferred").load().count()
+    }
+    assert(n === 5)
+    assert(scans.forall(_.readPreference.render == "secondaryPreferred"))
     // default when unspecified: primary
-    assert(load("langs").count() === 5)
-    assert(MemStore.lastOptions.getOrElse("langs", Map.empty)
-      .get("readPreference").contains("primary"))
+    val (nd, scansd) = scansDuring("langs")(load("langs").count())
+    assert(nd === 5)
+    assert(scansd.forall(_.readPreference.render == "primary"))
     // full reference surface (mongo/package.scala:24-54): tagged preference
-    // is validated, normalized, and decomposed into routing metadata
-    MemStore.lastOptions.remove("langs")
-    assert(spark.read.format(fmt).option("collection", "langs")
-      .option("readPreference", "secondaryPreferred[dc=east,rack=r1;dc=west]")
-      .load().count() === 5)
-    val tagged = MemStore.lastOptions.getOrElse("langs", Map.empty)
-    assert(tagged.get("readPreference")
-      .contains("secondaryPreferred[dc=east,rack=r1;dc=west]"))
-    assert(tagged.get("readPreferenceMode").contains("secondary"))
-    assert(tagged.get("readPreferencePreferred").contains("true"))
-    assert(tagged.get("readPreferenceTags").contains("dc=east,rack=r1;dc=west"))
+    // is validated, normalized, and parsed into routing metadata
+    val (nt, tagged) = scansDuring("langs") {
+      spark.read.format(fmt).option("collection", "langs")
+        .option("readPreference", "secondaryPreferred[dc=east,rack=r1;dc=west]")
+        .load().count()
+    }
+    assert(nt === 5)
+    tagged.map(_.readPreference).foreach { rp =>
+      assert(rp.render === "secondaryPreferred[dc=east,rack=r1;dc=west]")
+      assert(rp.mode === ReadMode.Secondary)
+      assert(rp.preferred)
+      assert(rp.tagSets.map(_.render).mkString(";") === "dc=east,rack=r1;dc=west")
+    }
     // invalid mode / the reference's rejected combination fail before any
     // job runs (IllegalArgumentException at scan build)
     assertThrows[IllegalArgumentException] {
@@ -199,69 +245,67 @@ class MemSourceSpec extends AnyFunSuite {
   }
 
   test("$or / $not evaluate store-side (reference mongo/package.scala:109-115)") {
-    MemStore.lastPushed.remove("programmers")
-    val n = load("programmers")
-      .where(col("lang") === 1 || col("lang") === 3).count()
-    val pushed = MemStore.lastPushed.getOrElse("programmers", Nil).map(_.toString)
-    assert(pushed.exists(_.startsWith("Or(")), s"expected Or pushed, got: $pushed")
+    val (n, scans) = scansDuring("programmers") {
+      load("programmers").where(col("lang") === 1 || col("lang") === 3).count()
+    }
+    assert(pushed(scans).exists(_.startsWith("Or(")), s"expected Or pushed, got: ${pushed(scans)}")
     // correctness vs the registered data itself
     val expected = MemStore.rowsOf("programmers")
       .count(r => r.getInt(1) == 1 || r.getInt(1) == 3)
     assert(n === expected)
     // Not: a store-side negation, not a client-side residual
-    MemStore.lastPushed.remove("programmers")
-    val m = load("programmers").where(!(col("lang") === 2)).count()
-    val pushed2 = MemStore.lastPushed.getOrElse("programmers", Nil).map(_.toString)
-    assert(pushed2.exists(p => p.contains("Not(") || p.contains("!=")),
-      s"expected a negation pushed, got: $pushed2")
+    val (m, scans2) = scansDuring("programmers") {
+      load("programmers").where(!(col("lang") === 2)).count()
+    }
+    assert(pushed(scans2).exists(p => p.contains("Not(") || p.contains("!=")),
+      s"expected a negation pushed, got: ${pushed(scans2)}")
     assert(m === MemStore.rowsOf("programmers").count(_.getInt(1) != 2))
   }
 
   test("limit pushdown: the store serves at most limit rows per cursor (reference storage.scala:320-324)") {
-    MemStore.lastLimit.remove("programmers")
-    val got = load("programmers").limit(7).collect()
+    val (got, scans) = scansDuring("programmers")(load("programmers").limit(7).collect())
     assert(got.length === 7)
-    assert(MemStore.lastLimit.get("programmers").contains(7),
-      s"limit not pushed: ${MemStore.lastLimit.get("programmers")}")
+    assert(scans.forall(_.spec.limit.contains(7)), s"limit not pushed: ${scans.map(_.spec.limit)}")
     // 4 store partitions × ≤7 rows each — far below the 100-row collection
     val served = MemStore.served.get("programmers").map(_.get()).getOrElse(-1L)
     assert(served > 0 && served <= 28, s"store served $served rows under limit 7")
   }
 
   test("top-n pushdown: cursor-side sort + limit, exact global result") {
-    MemStore.lastTopN.remove("programmers")
-    val got = load("programmers").orderBy(col("name").desc).limit(5)
-      .collect().map(_.getString(0)).toSeq
+    val (got, scans) = scansDuring("programmers") {
+      load("programmers").orderBy(col("name").desc).limit(5)
+        .collect().map(_.getString(0)).toSeq
+    }
     val expected = MemStore.rowsOf("programmers").map(_.getString(0))
       .sorted(Ordering[String].reverse).take(5).toSeq
     assert(got === expected)
-    val (keys, n) = MemStore.lastTopN.getOrElse("programmers", (Nil, 0))
-    assert(keys === Seq(("name", true)) && n === 5,
-      s"topN not pushed: keys=$keys n=$n")
+    scans.map(_.spec).foreach { spec =>
+      assert(spec.topN === Seq(("name", true)) && spec.limit.contains(5),
+        s"topN not pushed: keys=${spec.topN} n=${spec.limit}")
+    }
     val served = MemStore.served.get("programmers").map(_.get()).getOrElse(-1L)
     assert(served > 0 && served <= 20, s"store served $served rows under topN 5")
   }
 
   test("top-n pushdown declines computed sort keys; result stays exact") {
-    MemStore.lastTopN.remove("programmers")
-    val got = load("programmers").orderBy((col("lang") + 1).desc, col("name"))
-      .limit(3).collect().map(_.getString(0)).toSeq
+    val (got, scans) = scansDuring("programmers") {
+      load("programmers").orderBy((col("lang") + 1).desc, col("name"))
+        .limit(3).collect().map(_.getString(0)).toSeq
+    }
     val expected = MemStore.rowsOf("programmers")
       .map(r => (r.getInt(1), r.getString(0)))
       .sortBy { case (l, nm) => (-l, nm) }.take(3).map(_._2).toSeq
     assert(got === expected)
-    assert(!MemStore.lastTopN.contains("programmers"),
-      "computed sort key must not be pushed")
+    assert(scans.forall(_.spec.topN.isEmpty), "computed sort key must not be pushed")
   }
 
   test("offset (skip) pushdown: one global cursor, exact paging with sort+limit") {
     // plain skip: the store applies it exactly (no partial-push contract
     // for offset), so the scan collapses to one cursor partition
-    MemStore.lastOffset.remove("programmers")
     val skipped = load("programmers").offset(90)
-    assert(skipped.count() === 10)
-    assert(MemStore.lastOffset.get("programmers").contains(90),
-      s"offset not pushed: ${MemStore.lastOffset.get("programmers")}")
+    val (n, scans) = scansDuring("programmers")(skipped.count())
+    assert(n === 10)
+    assert(scans.forall(_.spec.offset == 90), s"offset not pushed: ${scans.map(_.spec.offset)}")
     assert(skipped.rdd.getNumPartitions === 1,
       "a pushed offset requires the single-cursor plan")
     // the reference's full cursor triple sort+skip+limit as one page:
@@ -270,15 +314,16 @@ class MemSourceSpec extends AnyFunSuite {
     // FULLY-pushed sort (no partial-push contract for offset), and our
     // topN is partially pushed so each shard cursor can prune in
     // parallel. Result is exact either way.
-    MemStore.lastOffset.remove("programmers")
-    MemStore.lastTopN.remove("programmers")
-    val page = load("programmers").orderBy(col("name")).offset(3).limit(5)
-      .collect().map(_.getString(0)).toSeq
+    val (page, pageScans) = scansDuring("programmers") {
+      load("programmers").orderBy(col("name")).offset(3).limit(5)
+        .collect().map(_.getString(0)).toSeq
+    }
     val expected = MemStore.rowsOf("programmers").map(_.getString(0))
       .sorted.slice(3, 8).toSeq
     assert(page === expected)
-    val (keys, _) = MemStore.lastTopN.getOrElse("programmers", (Nil, 0))
-    assert(keys === Seq(("name", false)), s"paging sort must reach the cursor: $keys")
+    pageScans.map(_.spec.topN).foreach { keys =>
+      assert(keys === Seq(("name", false)), s"paging sort must reach the cursor: $keys")
+    }
   }
 
   test("store-reported statistics let Spark broadcast a connector dimension") {
@@ -317,35 +362,38 @@ class MemSourceSpec extends AnyFunSuite {
       (0 until 1000).map(i => (i % 50, s"p$i")).toDF("k", "payload"))
     MemStore.register("rt_dim",
       (0 until 50).map(i => (i, s"b${i % 10}")).toDF("dk", "bucket"))
-    MemStore.lastPushed.remove("rt_fact")
     // selective dim filter + equi-join: Spark injects the dim's keys into
     // the fact scan at execution (SupportsRuntimeFiltering). The dim
     // predicate must NOT be store-pushable (endsWith is outside
     // MemStore.supported): a fully absorbed filter leaves no Filter node
     // for the DPP rule's selectivity check — same reason file-source DPP
     // keys off post-scan dim filters.
-    val n = load("rt_fact")
-      .join(load("rt_dim").where(col("bucket").endsWith("3")),
-        col("k") === col("dk"))
-      .count()
+    val (n, scans) = scansDuring("rt_fact") {
+      load("rt_fact")
+        .join(load("rt_dim").where(col("bucket").endsWith("3")),
+          col("k") === col("dk"))
+        .count()
+    }
     assert(n === 100, s"5 dim keys x 20 fact rows each, got $n")
-    val pushed = MemStore.lastPushed.getOrElse("rt_fact", Nil).map(_.toString)
-    assert(pushed.exists(f => f.startsWith("In(") || f.contains("k")),
-      s"expected a runtime key filter store-side, got: $pushed")
+    assert(pushed(scans).exists(f => f.startsWith("In(") || f.contains("k")),
+      s"expected a runtime key filter store-side, got: ${pushed(scans)}")
   }
 
   test("aggregate pushdown: partial group-by served cursor-side, exact merge") {
-    MemStore.lastAgg.remove("programmers")
     val raw = MemStore.rowsOf("programmers").map(r => (r.getInt(1), r.getString(0)))
     val expected = raw.groupBy(_._1).map { case (k, vs) =>
       k -> (vs.length.toLong, vs.map(_._2).max) }
-    val gotTriples = load("programmers").groupBy("lang")
-      .agg(count(lit(1)).as("n"), max(col("name")).as("mx"))
-      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getString(2)))).toMap
+    val (gotTriples, scans) = scansDuring("programmers") {
+      load("programmers").groupBy("lang")
+        .agg(count(lit(1)).as("n"), max(col("name")).as("mx"))
+        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getString(2)))).toMap
+    }
     assert(gotTriples === expected)
-    val (g, fs) = MemStore.lastAgg.getOrElse("programmers", (Nil, Nil))
-    assert(g === Seq("lang") && fs.exists(_.startsWith("count")) &&
-      fs.exists(_.startsWith("max")), s"agg not pushed: groups=$g funcs=$fs")
+    scans.map(_.spec.agg.fold((Seq.empty[String], Seq.empty[String])) {
+      case (g, fs) => (g, fs.map(MemAgg.render)) }).foreach { case (g, fs) =>
+      assert(g === Seq("lang") && fs.exists(_.startsWith("count")) &&
+        fs.exists(_.startsWith("max")), s"agg not pushed: groups=$g funcs=$fs")
+    }
     // the store shipped partials (≤ 4 slices × 5 langs), not 100 rows
     val served = MemStore.served.get("programmers").map(_.get()).getOrElse(-1L)
     assert(served > 0 && served <= 20, s"store served $served partial rows")
@@ -353,15 +401,16 @@ class MemSourceSpec extends AnyFunSuite {
 
   test("aggregate pushdown: global aggregates, empty-store count is 0 not NULL") {
     import spark.implicits._
-    MemStore.lastAgg.remove("programmers")
-    val row = load("programmers")
-      .agg(count(lit(1)).as("n"), sum(col("lang")).as("s"), min(col("name")).as("mn"))
-      .head()
+    val (row, scans) = scansDuring("programmers") {
+      load("programmers")
+        .agg(count(lit(1)).as("n"), sum(col("lang")).as("s"), min(col("name")).as("mn"))
+        .head()
+    }
     val raw = MemStore.rowsOf("programmers")
     assert(row.getLong(0) === raw.length.toLong)
     assert(row.getLong(1) === raw.map(_.getInt(1).toLong).sum)
     assert(row.getString(2) === raw.map(_.getString(0)).min)
-    assert(MemStore.lastAgg.contains("programmers"))
+    assert(scans.forall(_.spec.agg.isDefined))
     // empty store: a pushed global count must still be 0 (each cursor
     // ships one partial row even when its slice is empty)
     MemStore.register("agg_empty", Seq.empty[(Int, String)].toDF("id", "v"))
@@ -369,25 +418,30 @@ class MemSourceSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), min(col("id")).as("mn")).head()
     assert(e.getLong(0) === 0L && e.isNullAt(1))
     // DISTINCT declines pushdown but stays exact via the row path
-    MemStore.lastAgg.remove("programmers")
-    val d = load("programmers").agg(countDistinct(col("lang"))).head().getLong(0)
+    val (d, distinctScans) = scansDuring("programmers") {
+      load("programmers").agg(countDistinct(col("lang"))).head().getLong(0)
+    }
     assert(d === 5L)
-    assert(!MemStore.lastAgg.contains("programmers"),
-      "distinct aggregates must not push")
+    assert(distinctScans.forall(_.spec.agg.isEmpty), "distinct aggregates must not push")
   }
 
   test("table-sample pushdown: the cursor ships only the sampled fraction") {
     import spark.implicits._
     MemStore.register("sample_big",
       (0 until 2000).map(i => (i, s"row$i")).toDF("id", "v"))
-    MemStore.lastSample.remove("sample_big")
-    val rows = spark.read.format(fmt).option("collection", "sample_big").load()
-      .sample(withReplacement = false, 0.2, seed = 7L).collect()
+    val (rows, scans) = scansDuring("sample_big") {
+      spark.read.format(fmt).option("collection", "sample_big").load()
+        .sample(withReplacement = false, 0.2, seed = 7L).collect()
+    }
     val n = rows.length.toLong
     // Bernoulli(0.2) over 2000 rows: well inside ±5 sigma
     assert(n > 280 && n < 520, s"sampled count $n far from 400")
-    val (lo, hi, _) = MemStore.lastSample.getOrElse("sample_big", (-1.0, -1.0, 0L))
-    assert(lo === 0.0 && hi === 0.2, s"sample not pushed: ($lo, $hi)")
+    scans.foreach { scan =>
+      val (lo, hi, _) = scan.spec.sample.getOrElse((-1.0, -1.0, 0L))
+      assert(lo === 0.0 && hi === 0.2, s"sample not pushed: ($lo, $hi)")
+      // and explain shows it on the scan
+      assert(scan.description().contains("PushedSample: [0.0, 0.2) seed 7"), scan.description())
+    }
     // the STORE served only the sampled rows, not 2000
     val served = MemStore.served.get("sample_big").map(_.get()).getOrElse(-1L)
     assert(served === n, s"store served $served, emitted $n")
@@ -403,10 +457,11 @@ class MemSourceSpec extends AnyFunSuite {
     val servedAgg = MemStore.served.get("sample_big").map(_.get()).getOrElse(-1L)
     assert(servedAgg <= 4, s"sampled count should ship partials, served $servedAgg")
     // with-replacement has no cursor analog: declines, result still valid
-    MemStore.lastSample.remove("sample_big")
-    spark.read.format(fmt).option("collection", "sample_big").load()
-      .sample(withReplacement = true, 0.2, seed = 7L).count()
-    assert(!MemStore.lastSample.contains("sample_big"))
+    val (_, replaced) = scansDuring("sample_big") {
+      spark.read.format(fmt).option("collection", "sample_big").load()
+        .sample(withReplacement = true, 0.2, seed = 7L).count()
+    }
+    assert(replaced.forall(_.spec.sample.isEmpty))
   }
 
   test("join pushdown: two collections join INSIDE the store, no Spark join node") {
@@ -591,6 +646,8 @@ class MemSourceSpec extends AnyFunSuite {
       "back\\slash" -> 7L, "ctlkey" -> 11L))
     val parsed = MemKeyedOffset.parse(o.json())
     assert(parsed === o)
+    // the checkpointed form, byte for byte: sorted keys, escaped
+    assert(o.json() === "{\"back\\\\slash\":7,\"ctl\\u0001key\":11,\"plain\":3,\"qu\\\"ote\":5}")
     assert(MemKeyedOffset.parse(MemKeyedOffset(Map.empty).json()) ===
       MemKeyedOffset(Map.empty))
   }
@@ -614,21 +671,21 @@ class MemSourceSpec extends AnyFunSuite {
     MemStore.register("nullable_ratings", df)
     df.createOrReplaceTempView("nullable_ratings_oracle")
 
-    def viaStore(cond: org.apache.spark.sql.Column): Set[String] = {
-      MemStore.lastPushed.remove("nullable_ratings")
-      load("nullable_ratings").where(cond)
-        .select("name").collect().map(_.getString(0)).toSet
-    }
+    def viaStore(cond: org.apache.spark.sql.Column): (Set[String], Seq[MemScan]) =
+      scansDuring("nullable_ratings") {
+        load("nullable_ratings").where(cond)
+          .select("name").collect().map(_.getString(0)).toSet
+      }
     // col =!= v compiles to Not(EqualTo): NULL rows must NOT be served
-    assert(viaStore(col("rating") =!= 2) === Set("a", "d"))
-    val pushed = MemStore.lastPushed.getOrElse("nullable_ratings", Nil).map(_.toString)
-    assert(pushed.exists(p => p.contains("Not(") || p.contains("!=")),
-      s"negation should be fully pushed, got: $pushed")
+    val (notEq, scans) = viaStore(col("rating") =!= 2)
+    assert(notEq === Set("a", "d"))
+    assert(pushed(scans).exists(p => p.contains("Not(") || p.contains("!=")),
+      s"negation should be fully pushed, got: ${pushed(scans)}")
     // NOT IN: UNKNOWN for NULL attribute — only definite non-members pass
-    assert(viaStore(!col("rating").isin(1, 3)) === Set("b"))
+    assert(viaStore(!col("rating").isin(1, 3))._1 === Set("b"))
     // and the positive forms still see exactly the non-null matches
-    assert(viaStore(col("rating").isin(1, 3)) === Set("a", "d"))
-    assert(viaStore(not(col("rating") < 3)) === Set("d"))
+    assert(viaStore(col("rating").isin(1, 3))._1 === Set("a", "d"))
+    assert(viaStore(not(col("rating") < 3))._1 === Set("d"))
   }
 
   test("StoreClient seam: parquet-backed client runs the same pushdown pipeline") {
@@ -641,21 +698,22 @@ class MemSourceSpec extends AnyFunSuite {
     val direct = spark.read.parquet(s"$dir/nation.parquet")
     assert(viaClient.count() === direct.count())
     // filters still push (instrumentation is client-independent)
-    MemStore.lastPushed.remove("nation")
-    val got = viaClient.where(col("n_regionkey") === 0)
-      .select("n_name").collect().map(_.getString(0)).toSet
+    val (got, scans) = scansDuring("nation") {
+      viaClient.where(col("n_regionkey") === 0)
+        .select("n_name").collect().map(_.getString(0)).toSet
+    }
     val want = direct.where(col("n_regionkey") === 0)
       .select("n_name").collect().map(_.getString(0)).toSet
     assert(got === want && got.nonEmpty)
-    val pushed = MemStore.lastPushed.getOrElse("nation", Nil).map(_.toString)
-    assert(pushed.exists(_.contains("n_regionkey")),
-      s"filter must reach the store through the parquet client: $pushed")
+    assert(pushed(scans).exists(_.contains("n_regionkey")),
+      s"filter must reach the store through the parquet client: ${pushed(scans)}")
     // cursor TopN prunes through the client too
-    MemStore.lastTopN.remove("nation")
-    val top = viaClient.orderBy(col("n_name")).limit(3)
-      .collect().map(_.getString(1)).toSeq
+    val (top, topScans) = scansDuring("nation") {
+      viaClient.orderBy(col("n_name")).limit(3)
+        .collect().map(_.getString(1)).toSeq
+    }
     assert(top === direct.collect().map(_.getString(1)).sorted.take(3).toSeq)
-    assert(MemStore.lastTopN.contains("nation"), "TopN should push via the client")
+    assert(topScans.forall(_.spec.topN.nonEmpty), "TopN should push via the client")
     // unknown client name fails fast
     val e = intercept[Exception] {
       spark.read.format(fmt).option("collection", "nation")
@@ -671,12 +729,14 @@ class MemSourceSpec extends AnyFunSuite {
     val ids = Seq(base + 1L, base, base + 3L, base - 7L, base + 2L)
     MemStore.register("big_ids",
       ids.zipWithIndex.map { case (v, i) => (v, s"r$i") }.toDF("id", "tag"))
-    val got = load("big_ids").orderBy(col("id").desc).limit(3)
-      .collect().map(_.getLong(0)).toSeq
+    val (got, scans) = scansDuring("big_ids") {
+      load("big_ids").orderBy(col("id").desc).limit(3)
+        .collect().map(_.getLong(0)).toSeq
+    }
     assert(got === ids.sorted(Ordering[Long].reverse).take(3),
       s"store-side TopN must compare longs exactly, got $got")
-    val (keys, n) = MemStore.lastTopN.getOrElse("big_ids", (Nil, 0))
-    assert(keys === Seq(("id", true)) && n === 3, "TopN should be pushed")
+    assert(scans.forall(s => s.spec.topN == Seq(("id", true)) && s.spec.limit.contains(3)),
+      "TopN should be pushed")
   }
 
   test("store eval compares a long column against non-finite doubles (ADVICE r12)") {

@@ -19,7 +19,7 @@ import graft.sources.mem.{KeyRange, MemAgg, QuerySpec}
   * must behave identically to the in-process client; PushedJoinSpec runs
   * the pushed join itself over every client. */
 class MemWireSpec extends AnyFunSuite {
-  import SparkTestSession.spark
+  import SparkTestSession.{scansDuring, spark}
 
   private val fmt = "graft.sources.mem.GraftMemSource"
 
@@ -123,18 +123,20 @@ class MemWireSpec extends AnyFunSuite {
   }
 
   test("filters and cursor TopN push through the wire client") {
-    MemStore.lastPushed.remove("wire_programmers")
-    val n = load("wire_programmers").where(col("lang") === 3).count()
+    val (n, scans) = scansDuring("wire_programmers") {
+      load("wire_programmers").where(col("lang") === 3).count()
+    }
     assert(n === MemStore.rowsOf("wire_programmers").count(_.getInt(1) == 3))
-    val pushed = MemStore.lastPushed.getOrElse("wire_programmers", Nil).map(_.toString)
+    val pushed = scans.flatMap(_.cursorSpec.filters).map(_.toString)
     assert(pushed.exists(_.contains("lang")), s"filter must push: $pushed")
-    MemStore.lastTopN.remove("wire_programmers")
-    val top = load("wire_programmers").orderBy(col("name").desc).limit(5)
-      .collect().map(_.getString(0)).toSeq
+    val (top, topScans) = scansDuring("wire_programmers") {
+      load("wire_programmers").orderBy(col("name").desc).limit(5)
+        .collect().map(_.getString(0)).toSeq
+    }
     val expect = MemStore.rowsOf("wire_programmers").map(_.getString(0))
       .sorted(Ordering[String].reverse).take(5).toSeq
     assert(top === expect)
-    assert(MemStore.lastTopN.contains("wire_programmers"))
+    assert(topScans.forall(_.spec.topN.nonEmpty))
   }
 
   test("keyed streaming resume works over the wire client") {
@@ -566,17 +568,18 @@ class MemWireSpec extends AnyFunSuite {
       (0 until 1000).map(i => (i % 50, s"p$i")).toDF("k", "payload"))
     MemStore.register("wire_rt_dim",
       (0 until 50).map(i => (i, s"b${i % 10}")).toDF("dk", "bucket"))
-    MemStore.lastPushed.remove("wire_rt_fact")
     MemWireServer.rowsShipped.remove("wire_rt_fact")
     // the dim predicate stays Spark-side (endsWith is not store-pushable),
     // so the pruning rule sees a selective dim and hands the dim's keys to
     // the fact scan at execution, as an IN list
-    val n = load("wire_rt_fact")
-      .join(load("wire_rt_dim").where(col("bucket").endsWith("3")),
-        col("k") === col("dk"))
-      .count()
+    val (n, scans) = scansDuring("wire_rt_fact") {
+      load("wire_rt_fact")
+        .join(load("wire_rt_dim").where(col("bucket").endsWith("3")),
+          col("k") === col("dk"))
+        .count()
+    }
     assert(n === 100, s"5 dim keys x 20 fact rows each, got $n")
-    val pushed = MemStore.lastPushed.getOrElse("wire_rt_fact", Nil)
+    val pushed = scans.flatMap(_.cursorSpec.filters)
     assert(pushed.exists(_.isInstanceOf[org.apache.spark.sql.sources.In]),
       s"expected the runtime IN list store-side, got: $pushed")
     // the server evaluated it: only the matching fact rows crossed

@@ -7,7 +7,7 @@ import graft.channel.Channel
 import graft.mql.{MqlParseException, MqlParser}
 
 class MqlChannelSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, table, sfDir}
+  import SparkTestSession.{scansDuring, spark, table, sfDir}
 
   lazy val li = table("lineitem")
 
@@ -41,18 +41,18 @@ class MqlChannelSpec extends AnyFunSuite {
     MemStore.register("channel_langs", Seq(
       (0, "Java", 30), (1, "C++", 20), (2, "Scala", 90))
       .toDF("index", "name", "popularity_factor"))
-    MemStore.lastOptions.remove("channel_langs")
-    val got = Channel.create(spark, sfDir) { b =>
-      b.q("""{ "index": { "$gte": 1 } }""")
-      b.memCollection("channel_langs")
-      b.sort("index" -> graft.dsl.Order.Ascending)
-      b.maxTimeMS(60000L)
-      b.readPreference("secondaryPreferred")
+    val (got, scans) = scansDuring("channel_langs") {
+      Channel.create(spark, sfDir) { b =>
+        b.q("""{ "index": { "$gte": 1 } }""")
+        b.memCollection("channel_langs")
+        b.sort("index" -> graft.dsl.Order.Ascending)
+        b.maxTimeMS(60000L)
+        b.readPreference("secondaryPreferred")
+      }.select("name").collect().map(_.getString(0)).toSeq
     }
-    assert(got.select("name").collect().map(_.getString(0)).toSeq === Seq("C++", "Scala"))
-    val opts = MemStore.lastOptions.getOrElse("channel_langs", Map.empty)
-    assert(opts.get("maxTimeMS").contains("60000"))
-    assert(opts.get("readPreference").contains("secondaryPreferred"))
+    assert(got === Seq("C++", "Scala"))
+    assert(scans.forall(_.maxTimeMs.contains(60000L)))
+    assert(scans.forall(_.readPreference.render == "secondaryPreferred"))
     // expired deadline propagates as query failure through the channel:
     // tiny positive deadline + injected per-fetch latency (maxTimeMS=0
     // means unbounded under MongoDB cursor semantics, so it cannot force
@@ -68,19 +68,20 @@ class MqlChannelSpec extends AnyFunSuite {
   }
 
   test("T7 typed read preference: tag sets recorded; invalid modes fail at build") {
-    import graft.channel.{ReadPreference, ReplicaTagSet}
-    import graft.sources.mem.MemStore
-    MemStore.lastOptions.remove("channel_langs")
-    Channel.create(spark, sfDir) { b =>
-      b.q("""{ "index": { "$gte": 0 } }""")
-      b.memCollection("channel_langs")
-      b.readPreference(ReadPreference.Nearest.tags(
-        List(ReplicaTagSet(List("dc" -> "east")))))
-    }.collect()
-    val opts = MemStore.lastOptions.getOrElse("channel_langs", Map.empty)
-    assert(opts.get("readPreference").contains("nearest[dc=east]"))
-    assert(opts.get("readPreferenceMode").contains("nearest"))
-    assert(opts.get("readPreferenceTags").contains("dc=east"))
+    import graft.channel.{ReadMode, ReadPreference, ReplicaTagSet}
+    val (_, scans) = scansDuring("channel_langs") {
+      Channel.create(spark, sfDir) { b =>
+        b.q("""{ "index": { "$gte": 0 } }""")
+        b.memCollection("channel_langs")
+        b.readPreference(ReadPreference.Nearest.tags(
+          List(ReplicaTagSet(List("dc" -> "east")))))
+      }.collect()
+    }
+    scans.map(_.readPreference).foreach { rp =>
+      assert(rp.render === "nearest[dc=east]")
+      assert(rp.mode === ReadMode.Nearest)
+      assert(rp.tagSets.map(_.render).mkString(";") === "dc=east")
+    }
     // string path: an unknown mode is remembered and thrown at build —
     // the same deferred fail-fast as a bad MQL query — without planning
     val e = intercept[IllegalArgumentException] {
@@ -169,14 +170,15 @@ class MqlChannelSpec extends AnyFunSuite {
       (0, "Java", 30), (1, "C++", 20), (2, "ObjectiveC", 10),
       (3, "Scala", 90), (4, "Groovy", 50))
       .toDF("index", "name", "popularity_factor"))
-    MemStore.lastPushed.remove("or_langs")
-    val got = Channel.create(spark, sfDir) { b =>
-      b.q("""{ "$or": [ { "index": { "$lte": 1 } },
-                         { "popularity_factor": { "$gt": 80 } } ] }""")
-      b.memCollection("or_langs")
-    }.select("name").collect().map(_.getString(0)).toSet
+    val (got, scans) = scansDuring("or_langs") {
+      Channel.create(spark, sfDir) { b =>
+        b.q("""{ "$or": [ { "index": { "$lte": 1 } },
+                           { "popularity_factor": { "$gt": 80 } } ] }""")
+        b.memCollection("or_langs")
+      }.select("name").collect().map(_.getString(0)).toSet
+    }
     assert(got === Set("Java", "C++", "Scala"))
-    val pushed = MemStore.lastPushed.getOrElse("or_langs", Nil).map(_.toString)
+    val pushed = scans.flatMap(_.cursorSpec.filters).map(_.toString)
     assert(pushed.exists(_.startsWith("Or(")),
       s"$$or must evaluate store-side, got: $pushed")
   }
@@ -188,20 +190,22 @@ class MqlChannelSpec extends AnyFunSuite {
       (0, "Java", 30), (1, "C++", 20), (2, "ObjectiveC", 10),
       (3, "Scala", 90), (4, "Groovy", 50))
       .toDF("index", "name", "popularity_factor"))
-    MemStore.lastTopN.remove("cursor_langs")
-    val got = Channel.create(spark, sfDir) { b =>
-      b.q("""{ "popularity_factor": { "$gte": 20 } }""")
-      b.memCollection("cursor_langs")
-      b.sort("popularity_factor" -> graft.dsl.Order.Descending)
-      b.limit(2)
-    }.select("name").collect().map(_.getString(0)).toSeq
+    val (got, scans) = scansDuring("cursor_langs") {
+      Channel.create(spark, sfDir) { b =>
+        b.q("""{ "popularity_factor": { "$gte": 20 } }""")
+        b.memCollection("cursor_langs")
+        b.sort("popularity_factor" -> graft.dsl.Order.Descending)
+        b.limit(2)
+      }.select("name").collect().map(_.getString(0)).toSeq
+    }
     assert(got === Seq("Scala", "Groovy"))
     // the full reference cursor shape arrived store-side: the sort AND
     // the limit ride the cursor (TopN pushdown), not the client
-    val (keys, n) = MemStore.lastTopN.getOrElse("cursor_langs", (Nil, 0))
-    assert(keys === Seq(("popularity_factor", true)) && n === 2,
-      s"channel sort/limit must reach the cursor: keys=$keys n=$n")
-    val pushed = MemStore.lastPushed.getOrElse("cursor_langs", Nil).map(_.toString)
+    scans.map(_.spec).foreach { spec =>
+      assert(spec.topN === Seq(("popularity_factor", true)) && spec.limit.contains(2),
+        s"channel sort/limit must reach the cursor: keys=${spec.topN} n=${spec.limit}")
+    }
+    val pushed = scans.flatMap(_.cursorSpec.filters).map(_.toString)
     assert(pushed.exists(_.contains("GreaterThanOrEqual")),
       s"the MQL filter must also ride the cursor: $pushed")
   }
@@ -211,15 +215,16 @@ class MqlChannelSpec extends AnyFunSuite {
     import graft.sources.mem.MemStore
     MemStore.register("skip_langs",
       (0 until 40).map(i => (i, s"lang_$i")).toDF("index", "name"))
-    MemStore.lastOffset.remove("skip_langs")
-    val got = Channel.create(spark, sfDir) { b =>
-      b.q("""{ "index": { "$gte": 0 } }""")
-      b.memCollection("skip_langs")
-      b.skip(30)
-    }.count()
+    val (got, scans) = scansDuring("skip_langs") {
+      Channel.create(spark, sfDir) { b =>
+        b.q("""{ "index": { "$gte": 0 } }""")
+        b.memCollection("skip_langs")
+        b.skip(30)
+      }.count()
+    }
     assert(got === 10)
-    assert(MemStore.lastOffset.get("skip_langs").contains(30),
-      s"channel skip must reach the cursor: ${MemStore.lastOffset.get("skip_langs")}")
+    assert(scans.forall(_.spec.offset == 30),
+      s"channel skip must reach the cursor: ${scans.map(_.spec.offset)}")
   }
 
   test("streaming channel: MQL-filtered connector stream with offset resume") {

@@ -13,7 +13,7 @@ import graft.sources.mem.{MemStore, MemWireServer}
   * over both sides and with a top-n pushed on top, must give the rows
   * Spark's own join gives and leave no Join node in the plan. */
 class PushedJoinSpec extends AnyFunSuite {
-  import SparkTestSession.spark
+  import SparkTestSession.{scansDuring, spark}
 
   private val pushdownConf = "spark.sql.optimizer.datasourceV2JoinPushdown"
 
@@ -72,17 +72,19 @@ class PushedJoinSpec extends AnyFunSuite {
     test(s"pushed join over client=$client: the unpushed join's rows, no Join node") {
       def top(df: DataFrame) = df.orderBy(col("dname").desc).limit(7)
       val want = withPushdown(on = false)(top(joined(client)).collect().toSeq)
-      MemStore.lastTopN.remove("pj_devs")
-      val (got, plan) = withPushdown(on = true) {
-        val df = top(joined(client))
-        (df.collect().toSeq, df.queryExecution.executedPlan.toString)
+      val ((got, plan), scans) = scansDuring("pj_devs") {
+        withPushdown(on = true) {
+          val df = top(joined(client))
+          (df.collect().toSeq, df.queryExecution.executedPlan.toString)
+        }
       }
       assert(got === want && got.length === 7)
       assert(!plan.contains("Join"),
         s"pushed join must leave no Spark join node:\n${plan.take(1200)}")
       // the langs leaf took its filters, and the top-n reached the joined scan
       assert("⋈ pj_langs\\[\\d filters\\]".r.findFirstIn(plan).isDefined, plan.take(1200))
-      assert(MemStore.lastTopN.get("pj_devs").map(_._2).contains(7))
+      assert(scans.forall(s => s.spec.topN.nonEmpty && s.spec.limit.contains(7)),
+        scans.map(_.spec))
     }
 
     test(s"pushed join over client=$client: served rows count under the left collection") {

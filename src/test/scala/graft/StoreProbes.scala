@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.Assertions._
 
-import graft.sources.mem.MemStore
+import graft.sources.mem.MemAgg
+import graft.SparkTestSession.scansDuring
 
 /** Five queries whose pushed form a store must evaluate exactly as Spark
   * does, where Spark's value rules are subtle: -0.0 equals 0.0, NaN
@@ -29,16 +30,13 @@ object StoreProbes {
   private def rids(df: DataFrame): Seq[Long] =
     df.select("rid").collect().map(_.getLong(0)).toSeq.sorted
 
-  private def pushed(coll: String): String =
-    MemStore.lastPushed.getOrElse(coll, Nil).mkString(" ")
-
   /** `where(cond)` over the scan `store` of collection `coll` keeps the
     * frame's rows, and the store evaluated the condition. */
   private def filtered(store: DataFrame, coll: String, frame: DataFrame, cond: Column): Unit = {
-    MemStore.lastPushed.remove(coll)
-    val got = rids(store.where(cond))
+    val (got, scans) = scansDuring(coll)(rids(store.where(cond)))
     assert(got === rids(frame.where(cond)), s"$coll where $cond")
-    assert(pushed(coll).contains(s"(${frame.columns(1)},"), s"$cond not pushed: ${pushed(coll)}")
+    val pushed = scans.flatMap(_.cursorSpec.filters).mkString(" ")
+    assert(pushed.contains(s"(${frame.columns(1)},"), s"$cond not pushed: $pushed")
   }
 
   def negativeZero(store: DataFrame, coll: String, frame: DataFrame): Unit =
@@ -55,18 +53,18 @@ object StoreProbes {
   }
 
   def topDesc(store: DataFrame, coll: String, frame: DataFrame): Unit = {
-    MemStore.lastTopN.remove(coll)
     def top(df: DataFrame) = df.orderBy(col("s").desc).limit(1).collect().map(_.getString(1)).toSeq
-    assert(top(store) === top(frame))
-    assert(MemStore.lastTopN.get(coll).contains((Seq(("s", true)), 1)),
-      s"top-1 not pushed: ${MemStore.lastTopN.get(coll)}")
+    val (got, scans) = scansDuring(coll)(top(store))
+    assert(got === top(frame))
+    val pushed = scans.map(s => (s.spec.topN, s.spec.limit))
+    assert(pushed.forall(_ == ((Seq(("s", true)), Some(1)))), s"top-1 not pushed: $pushed")
   }
 
   def maxString(store: DataFrame, coll: String, frame: DataFrame): Unit = {
-    MemStore.lastAgg.remove(coll)
     def mx(df: DataFrame) = df.agg(max(col("s"))).head().getString(0)
-    assert(mx(store) === mx(frame))
-    assert(MemStore.lastAgg.get(coll).exists(_._2 === Seq("max(s)")),
-      s"max not pushed: ${MemStore.lastAgg.get(coll)}")
+    val (got, scans) = scansDuring(coll)(mx(store))
+    assert(got === mx(frame))
+    val pushed = scans.map(_.spec.agg.map(_._2.map(MemAgg.render)))
+    assert(pushed.forall(_.contains(Seq("max(s)"))), s"max not pushed: $pushed")
   }
 }

@@ -135,4 +135,31 @@ class WireQuerySpec extends AnyFunSuite {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
     assert(res.passed, s"wire agg property failed: ${res.status}")
   }
+
+  /** Every proper prefix of `json` is refused by `parse` as input that
+    * ends early: a cut request line or a corrupt checkpointed offset must
+    * never pass, nor fail with an index error. */
+  private def refusesEveryPrefix(json: String)(parse: String => Any): Boolean =
+    (0 until json.length).forall { n =>
+      try { parse(json.substring(0, n)); false }
+      catch {
+        case e: IllegalArgumentException =>
+          e.getMessage.startsWith("wire json: unexpected end of: ")
+      }
+    }
+
+  test("property: every proper prefix of a request or a keyed offset is refused as cut short") {
+    val requests = Prop.forAll(weirdName, specGen) { (coll, spec) =>
+      refusesEveryPrefix(WireQuery.render(coll, 3, 1000, spec))(WireJson.parse)
+    }
+    val offsets = Prop.forAll(Gen.mapOf(Gen.zip(weirdName, Gen.chooseNum(0L, Long.MaxValue)))) { m =>
+      val json = MemKeyedOffset(m).json()
+      MemKeyedOffset.parse(json) == MemKeyedOffset(m) &&
+        refusesEveryPrefix(json)(MemKeyedOffset.parse)
+    }
+    for ((name, prop) <- Seq("request" -> requests, "keyed offset" -> offsets)) {
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(100), prop)
+      assert(res.passed, s"$name prefix property failed: ${res.status}")
+    }
+  }
 }

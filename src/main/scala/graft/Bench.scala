@@ -49,60 +49,6 @@ object Bench {
     // class's flags. The per-entry `basket_sec` ratios in BENCH_DELTAS
     // are the diagnostic: a lone `_basket_sim_brute_topk` excursion
     // marks a float-class window, not a code regression.
-    // r15 (r14 verdict #2): the basket is now PER WORKLOAD CLASS — two
-    // consecutive driver windows (noise 1.87, 4.14) were contended in a
-    // CLASS-shaped way (pure-CPU decodes at 100-220× while shuffle gates
-    // ran near baseline), and a single global speed cannot adjudicate
-    // that. Each class gets one representative basket query; every
-    // gate's regression ratio is normalized by ITS class's measured
-    // speed, so a float-slow or decode-slow window self-adjudicates
-    // instead of flagging the whole family. The class speeds land in
-    // BENCH_DELTAS ("class_speed") as the contention fingerprint.
-    val classBaskets: Map[String, String] = Map(
-      "decode" -> "mm_png_decode", // pure-CPU codec loops (mm_*)
-      "stream" -> "s4_stream_window", // micro-batch + state-store commits
-      "fuzz" -> "q_fuzz_numeric", // codegen-dense multi-case stacks
-      "float" -> "sim_brute_topk", // vectorized float dot products
-      "shuffle" -> "q3_shipping", // exchange-bound relational
-      "map" -> "text_quality") // map-only text scans
-    // map-only per-document text scans (no corpus-level shuffle) — the
-    // "map" class; corpus-aggregating text gates (tfidf/bm25/xent/...)
-    // deliberately stay "default": they mix scan + exchange and neither
-    // the map nor the shuffle basket is their shape (ADVICE r15 #3).
-    val mapOnlyGates = Set("text_quality", "text_langid",
-      "text_gopher_rules", "text_c4_clean", "text_strip_html",
-      "text_normalize", "text_tokens", "text_pii_scrub",
-      "text_repetition", "pii_scrub")
-    // exchange-bound relational/join gates, EXPLICITLY (ADVICE r16 #1):
-    // the bare q*/j* prefix swept in expression-bound gates
-    // (q_scalar_funcs, q_array_funcs, q_sql_direct), the iterative
-    // q_pagerank/q_recursive_cte, and the command-shaped q_analyze_stats
-    // — none exchange-bound, so a contended shuffle window normalized
-    // them by the wrong class speed. Prefix families (q<digit>_ TPC-H,
-    // q_join*/q_window*/q_asof*, the whole j* join/zip family) plus a
-    // name set for the rest; anything new defaults to "default", which
-    // only costs it the class-specific normalizer, never mis-normalizes.
-    val shufflePrefixes = Seq("q_join", "q_window", "q_asof")
-    val shuffleNames = Set(
-      "q_topk", "q_grouping_sets", "q_cube", "q_rollup", "q_pivot",
-      "q_unpivot", "q_distinct_agg", "q_collect_list", "q_percentile",
-      "q_approx_percentile", "q_approx_distinct", "q_hll_distinct",
-      "q_except", "q_except_all", "q_intersect", "q_intersect_all",
-      "q_range_join", "q_interval_join", "q_session_window",
-      "q_sliding_window", "q_time_window", "q_lateral_topn",
-      "q_scalar_subquery", "q_correlated_exists", "q_zorder")
-    def classOf(name: String): String =
-      if (name.startsWith("mm_") || name == "src_binaryfile_media") "decode"
-      else if (name.contains("stream")) "stream"
-      else if (name.startsWith("q_fuzz")) "fuzz"
-      else if (name.startsWith("sim_") || name.startsWith("dedup_embedding") ||
-        name.startsWith("dedup_semantic")) "float"
-      else if (name.startsWith("j") ||
-        name.matches("q\\d+_.*") ||
-        shufflePrefixes.exists(name.startsWith) ||
-        shuffleNames(name)) "shuffle"
-      else if (mapOnlyGates(name)) "map"
-      else "default" // normalized by the global speed ratio
     val basketNames = classBaskets.values.toSeq.distinct.sorted
     // basket runs at the BENCHED sf: the point is measuring Spark wall
     // time in the exact regime being normalized — the first cut measured
@@ -318,50 +264,19 @@ object Bench {
         f"scaled by 1/speed = ${1.0 / speedRatio}%.3f")
     }
     if (prev.nonEmpty && !contaminated && !partial) {
-      // per-class speed: the class representative's own now/baseline
-      // ratio when both sides have it — CLAMPED at the global speed from
-      // below (a class can only read SLOWER than the machine, not
-      // faster: letting a fast-outlier rep deflate its class would
-      // manufacture flags) — falling back to the global ratio. The
-      // representative itself is never flagged through its own ratio
-      // (normalizing a gate by itself is vacuous): reps normalize by the
-      // global speed.
-      val basketNow = basket.toMap
-      val classSpeed: Map[String, Double] = classBaskets.flatMap {
-        case (cls, rep) =>
-          for {
-            now <- basketNow.get(rep)
-            base <- prev.get(s"_basket_$rep").filter(_ > 0)
-          } yield cls -> math.max(now / base, speedRatio)
-      }
-      val reps = classBaskets.values.toSet
-      def speedFor(k: String): Double =
-        if (reps(k)) speedRatio
-        else classSpeed.getOrElse(classOf(k), speedRatio)
-      // normalize by relative machine speed: a query is only as "slower"
-      // as it degraded BEYOND the speed shift ITS workload class measured
-      val ratios = healthy.flatMap { case (k, v) =>
-        prev.get(k).filter(_ > 0).map(p => (k, v, p, v / p / speedFor(k))) }
-      val deltas = ratios.map { case (k, _, _, r) => s""""$k":${num(r, 2)}""" }
-        .mkString("{", ",", "}")
-      val classSpeedJson = classSpeed.toSeq.sortBy(_._1)
-        .map { case (c, s) => s""""$c":${num(s, 3)}""" }.mkString("{", ",", "}")
-      val regressions = ratios.filter { case (k, v, _, r) => r > 1.5 && v > 0.5 }
-        .sortBy(-_._4)
-      val regJson = regressions.map { case (k, v, p, r) =>
-        s"""{"query":"$k","sec":${num(v, 3)},"prev_sec":${num(p, 3)},"ratio":${num(r, 2)}}""" }
-        .mkString("[", ",", "]")
+      val flags = regressionFlags(prev, basket, healthy, speedRatio)
       val probeJson = probes.map(p => num(p, 3)).mkString("[", ",", "]")
       val basketJson = basket.map { case (n, t) => s""""$n":${num(t, 3)}""" }
         .mkString("{", ",", "}")
       java.nio.file.Files.write(new java.io.File("BENCH_DELTAS.json").toPath,
         (s"""{"cal_sec":${num(cal, 3)},"machine_speed_vs_prev":${num(speedRatio, 3)},""" +
-          s""""basket_sec":$basketJson,"class_speed":$classSpeedJson,""" +
+          s""""basket_sec":$basketJson,"class_speed":${flags.classSpeedJson},""" +
           basketSpeed.map(b => s""""basket_speed":${num(b, 3)},""").getOrElse("") +
           medianRawRatio.map(m => s""""median_raw_ratio":${num(m, 3)},""").getOrElse("") +
-          s""""noise":${num(noise, 2)},"probes_sec":$probeJson,"prev_ratio":$deltas,"regressions":$regJson}""")
+          s""""noise":${num(noise, 2)},"probes_sec":$probeJson,"prev_ratio":${flags.ratiosJson},""" +
+          s""""regressions":${flags.regressionsJson}}""")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      regressions.foreach { case (k, v, p, r) =>
+      flags.regressions.foreach { case (k, v, p, r) =>
         System.err.println(f"[bench] REGRESSION $k: $v%.3fs vs $p%.3fs (${r}%.2fx)") }
     }
 
@@ -376,6 +291,110 @@ object Bench {
     spark.stop()
     println(line)
     System.out.flush()
+  }
+
+  // r15 (r14 verdict #2): the basket is now PER WORKLOAD CLASS — two
+  // consecutive driver windows (noise 1.87, 4.14) were contended in a
+  // CLASS-shaped way (pure-CPU decodes at 100-220× while shuffle gates
+  // ran near baseline), and a single global speed cannot adjudicate
+  // that. Each class gets one representative basket query; every
+  // gate's regression ratio is normalized by ITS class's measured
+  // speed, so a float-slow or decode-slow window self-adjudicates
+  // instead of flagging the whole family. The class speeds land in
+  // BENCH_DELTAS ("class_speed") as the contention fingerprint.
+  private val classBaskets: Map[String, String] = Map(
+    "decode" -> "mm_png_decode", // pure-CPU codec loops (mm_*)
+    "stream" -> "s4_stream_window", // micro-batch + state-store commits
+    "fuzz" -> "q_fuzz_numeric", // codegen-dense multi-case stacks
+    "float" -> "sim_brute_topk", // vectorized float dot products
+    "shuffle" -> "q3_shipping", // exchange-bound relational
+    "map" -> "text_quality") // map-only text scans
+  // map-only per-document text scans (no corpus-level shuffle) — the
+  // "map" class; corpus-aggregating text gates (tfidf/bm25/xent/...)
+  // deliberately stay "default": they mix scan + exchange and neither
+  // the map nor the shuffle basket is their shape (ADVICE r15 #3).
+  private val mapOnlyGates = Set("text_quality", "text_langid",
+    "text_gopher_rules", "text_c4_clean", "text_strip_html",
+    "text_normalize", "text_tokens", "text_pii_scrub",
+    "text_repetition", "pii_scrub")
+  // exchange-bound relational/join gates, EXPLICITLY (ADVICE r16 #1):
+  // the bare q*/j* prefix swept in expression-bound gates
+  // (q_scalar_funcs, q_array_funcs, q_sql_direct), the iterative
+  // q_pagerank/q_recursive_cte, and the command-shaped q_analyze_stats
+  // — none exchange-bound, so a contended shuffle window normalized
+  // them by the wrong class speed. Prefix families (q<digit>_ TPC-H,
+  // q_join*/q_window*/q_asof*, the whole j* join/zip family) plus a
+  // name set for the rest; anything new defaults to "default", which
+  // only costs it the class-specific normalizer, never mis-normalizes.
+  private val shufflePrefixes = Seq("q_join", "q_window", "q_asof")
+  private val shuffleNames = Set(
+    "q_topk", "q_grouping_sets", "q_cube", "q_rollup", "q_pivot",
+    "q_unpivot", "q_distinct_agg", "q_collect_list", "q_percentile",
+    "q_approx_percentile", "q_approx_distinct", "q_hll_distinct",
+    "q_except", "q_except_all", "q_intersect", "q_intersect_all",
+    "q_range_join", "q_interval_join", "q_session_window",
+    "q_sliding_window", "q_time_window", "q_lateral_topn",
+    "q_scalar_subquery", "q_correlated_exists", "q_zorder")
+  private def workloadClass(name: String): String =
+    if (name.startsWith("mm_") || name == "src_binaryfile_media") "decode"
+    else if (name.contains("stream")) "stream"
+    else if (name.startsWith("q_fuzz")) "fuzz"
+    else if (name.startsWith("sim_") || name.startsWith("dedup_embedding") ||
+      name.startsWith("dedup_semantic")) "float"
+    else if (name.startsWith("j") ||
+      name.matches("q\\d+_.*") ||
+      shufflePrefixes.exists(name.startsWith) ||
+      shuffleNames(name)) "shuffle"
+    else if (mapOnlyGates(name)) "map"
+    else "default" // normalized by the global speed ratio
+
+  /** A clean full run's regression watch against the pinned baseline
+    * `prev`: per-class machine speeds, every shared gate's normalized
+    * ratio, and the flagged regressions (slowest first).
+    *
+    * A class's speed is its representative's own now/baseline ratio when
+    * both sides have it, CLAMPED at the global speed from below (a class
+    * can only read SLOWER than the machine, not faster: letting a
+    * fast-outlier rep deflate its class would manufacture flags); a class
+    * without one falls back to the global ratio. The representative
+    * itself is never flagged through its own ratio (normalizing a gate by
+    * itself is vacuous): reps normalize by the global speed. A gate
+    * flags when it degraded more than 1.5x BEYOND the speed shift its
+    * class measured, and only above 0.5 s, where timings are stable
+    * enough to mean it. */
+  private[graft] def regressionFlags(prev: Map[String, Double],
+      basket: Seq[(String, Double)], healthy: Seq[(String, Double)],
+      speedRatio: Double): Flags = {
+    val basketNow = basket.toMap
+    val classSpeed: Map[String, Double] = classBaskets.flatMap {
+      case (cls, rep) =>
+        for {
+          now <- basketNow.get(rep)
+          base <- prev.get(s"_basket_$rep").filter(_ > 0)
+        } yield cls -> math.max(now / base, speedRatio)
+    }
+    val reps = classBaskets.values.toSet
+    def speedFor(k: String): Double =
+      if (reps(k)) speedRatio
+      else classSpeed.getOrElse(workloadClass(k), speedRatio)
+    val ratios = healthy.flatMap { case (k, v) =>
+      prev.get(k).filter(_ > 0).map(p => (k, v, p, v / p / speedFor(k))) }
+    Flags(classSpeed, ratios,
+      ratios.filter { case (_, v, _, r) => r > 1.5 && v > 0.5 }.sortBy(-_._4))
+  }
+
+  /** [[regressionFlags]]' result: (gate, sec, baseline sec, normalized
+    * ratio) per shared gate, and the BENCH_DELTAS fragments it renders. */
+  private[graft] final case class Flags(classSpeed: Map[String, Double],
+      ratios: Seq[(String, Double, Double, Double)],
+      regressions: Seq[(String, Double, Double, Double)]) {
+    def classSpeedJson: String = classSpeed.toSeq.sortBy(_._1)
+      .map { case (c, s) => s""""$c":${num(s, 3)}""" }.mkString("{", ",", "}")
+    def ratiosJson: String = ratios.map { case (k, _, _, r) => s""""$k":${num(r, 2)}""" }
+      .mkString("{", ",", "}")
+    def regressionsJson: String = regressions.map { case (k, v, p, r) =>
+      s"""{"query":"$k","sec":${num(v, 3)},"prev_sec":${num(p, 3)},"ratio":${num(r, 2)}}""" }
+      .mkString("[", ",", "]")
   }
 
   /** A CONTAMINATED run (probe spread > 2×: the machine was demonstrably

@@ -404,26 +404,19 @@ object Dedup {
     // that, a long session pins O(rounds) label maps + the edge set until
     // some future GC runs the ContextCleaner. Only the final round's
     // blocks stay alive: the returned DataFrame reads them.
-    val tSym0 = System.nanoTime()
     val sym = ckpt(fwd.unionByName(
         edges.select(col(bCol).as("src"), col(aCol).as("dst"))))
-    if (sys.env.contains("GRAFT_CC_TRACE"))
-      System.err.println(f"[cc] sym checkpoint: ${(System.nanoTime() - tSym0) / 1e9}%.2f s")
     // init fuses what would be round 0: label₀ = min(node, min neighbor).
     // One partial-aggregated groupBy over the edge set — it both dedups
     // the node set (replacing a distinct) and gives every node its 1-hop
     // minimum before the first join round runs.
-    val tInit0 = System.nanoTime()
     var labels = ckpt(sym.groupBy(col("src"))
       .agg(min(col("dst")).as("mn"))
       .select(col("src").as("node"),
         least(col("src"), col("mn")).as("label")))
-    if (sys.env.contains("GRAFT_CC_TRACE"))
-      System.err.println(f"[cc] init labels: ${(System.nanoTime() - tInit0) / 1e9}%.2f s")
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
       // neighbor minima: edge (src ← dst's label), then min over src's
       // neighborhood — partial aggregation combines map-side
       val nbrMin = sym
@@ -445,8 +438,6 @@ object Dedup {
         .select(col("node"), least(col("l1"), col("l2")).as("label"),
           (least(col("l1"), col("l2")) < col("old")).as("improved")))
       val changed = next.where(col("improved")).limit(1).count()
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        System.err.println(f"[cc] round $iter: changed=$changed in ${(System.nanoTime() - t0) / 1e9}%.2f s")
       // `next` is materialized — the previous round's checkpoint blocks
       // are dead now; free them instead of waiting for a GC
       checkpointBlocks(labels).foreach(_.unpersist(false))

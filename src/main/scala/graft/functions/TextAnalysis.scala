@@ -423,6 +423,10 @@ object TextAnalysis {
         col("bg.w1").as("w1"), col("bg.w2").as("w2"))
   }
 
+  /** Boolean identity the optimizer treats as nondeterministic: a filter
+    * on its result cannot be pushed beneath the projection computing it. */
+  private val pushdownBarrier = udf((b: Boolean) => b).asNondeterministic()
+
   /** Winnowing-style rolling fingerprints: hash token shingles, take the
     * minimum in each sliding window, dedupe. Near-identical documents share
     * most fingerprints (spec-verified; xxhash64 is not DuckDB-expressible
@@ -452,12 +456,18 @@ object TextAnalysis {
     val lines = split(col(textCol), "\n")
     val keepLine = (l: Column) =>
       l.rlike("[.!?\"]$") && size(split(l, " ")) >= minWordsPerLine
-    val kept = filter(lines, keepLine)
     val badDoc =
       lower(col(textCol)).contains("lorem ipsum") || col(textCol).contains("{")
+    // The drop verdict's inputs are projected first, `_bad` through a
+    // nondeterministic identity: Catalyst never pushes a Filter through a
+    // projection with a nondeterministic field, so the filter reads the
+    // projected columns. Pushed, it would recompute them once per
+    // reference, inlining every projection of `docs` beneath (over
+    // c4StagedDocs: 7 tokenizations of each document, not 1).
     docs
-      .withColumn("_kept", kept)
-      .where(!badDoc && size(col("_kept")) >= minLines)
+      .select(col(idCol), col(textCol), filter(lines, keepLine).as("_kept"),
+        pushdownBarrier(badDoc).as("_bad"))
+      .where(!col("_bad") && size(col("_kept")) >= minLines)
       .select(col(idCol),
         array_join(col("_kept"), "\n").as("clean_text"),
         size(col("_kept")).cast("long").as("n_lines_kept"),

@@ -2,6 +2,8 @@ package graft.gates
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 import graft.dsl._
 import graft.dsl.Dsl._
@@ -20,55 +22,87 @@ private[graft] object GateSupport {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** Child session for a STATEFUL streaming gate: isolated SQLConf
-    * (never mutate the caller's session — the s4 rule), workload-sized
-    * shuffle/state partition count, and a PARAMETERIZED state-store
-    * provider.
+  /** Child session for a stream gate: shared SparkContext, private
+    * SQLConf, so the gate never mutates the caller's session (that would
+    * leak to concurrent queries, and to later ones on a failure between
+    * set and restore). State-store count == shuffle partitions at query
+    * start, so `partitions` sizes the state to the workload: a bounded
+    * micro-batch feed.
     *
-    * Provider choice, measured (r20; full A/B in OPTIMIZATION_r20.md):
-    * the r19 verdict asked for RocksDB here (guide §5 — the default
-    * provider keeps every key's state on-heap per partition, so at
-    * 100 TB a stream-stream join window makes executor heap the scale
-    * ceiling; RocksDB keeps state off-heap with changelog checkpoints).
-    * Measured at every reachable scale, RocksDB LOST: +10–50% per gate
-    * at sf0.1, s12 22.7 s vs 8.7 s at sf1 (17.5 s after
-    * trackTotalNumberOfRows=false), ~2–3× sf10 walls — per-micro-batch
-    * native store load/commit dominates bounded feeds, while the default
-    * provider's peak state is 41–89 MB on-heap at sf1
-    * (`graft.tools.Profile` reports it as `peak_state_mem`), nowhere near
-    * a heap ceiling at any SF the decade instrument reaches. So the DEFAULT stays Spark's in-memory provider, and
-    * `SPARK_GRAFT_STREAM_STATE=rocksdb` flips every stateful gate to
-    * RocksDB (with changelog checkpointing and row-tracking off) for
-    * deployments where per-partition state actually exceeds heap —
-    * state at a 1 h join window over 10^12 events is 100s of GB per
-    * 1000 partitions, which only RocksDB survives. Output is
-    * provider-independent (oracle 242/242 under both). */
+    * The state-store provider is Spark's default (HDFS-backed,
+    * in-memory). A deployment whose per-partition state outgrows the heap
+    * selects another with Spark's own
+    * `spark.sql.streaming.stateStore.providerClass` on the session it
+    * builds (`SparkSession.builder.config` or `--conf`): a `newSession()`
+    * child starts from the SparkContext's conf, so it inherits that
+    * setting. A `conf.set` on the parent after start does not carry over.
+    * RocksDB measured slower at every scale this repository reaches
+    * (OPTIMIZATION_r20.md): per-micro-batch native store load and commit
+    * dominate a bounded feed. */
   def streamSession(s: SparkSession, partitions: Int = 8): SparkSession = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    if (rocksdbState) {
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // changelog checkpointing: commit only the batch's delta instead of
-      // snapshotting store files every commit — the per-micro-batch cost
-      // that dominates small bounded feeds, and at scale the difference
-      // between O(state) and O(delta) per-batch checkpoint I/O.
-      ss.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      // numRowsTotal bookkeeping costs a read-before-every-write in the
-      // RocksDB store; it is a UI metric, not a correctness input — off,
-      // per the Spark docs' write-heavy guidance.
-      ss.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        "false")
-    }
     ss
   }
 
-  /** Whether [[streamSession]] selects the RocksDB state store; otherwise
-    * Spark's default (HDFS-backed, in-memory) provider runs. */
-  def rocksdbState: Boolean = sys.env.get("SPARK_GRAFT_STREAM_STATE").contains("rocksdb")
+  /** `table`'s parquet file under `dir` as a file stream, with the batch
+    * table's schema (a file stream does not infer one). */
+  def fileStream(ss: SparkSession, dir: String, table: String): DataFrame =
+    ss.readStream.schema(t(ss, dir, table).schema)
+      .option("pathGlobFilter", s"$table.parquet").parquet(dir)
+
+  /** A staged feed (see [[stagedFeed]]) read one file per micro-batch, in
+    * mtime order. */
+  def stagedStream(ss: SparkSession, stage: String, schema: StructType): DataFrame =
+    ss.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(stage)
+
+  /** Runs `df` to its end (AvailableNow) into the memory sink `sink` and
+    * returns the sink's table. `awaitTermination` rethrows a failed
+    * query's error, so a broken stream fails the gate instead of
+    * returning a partial sink. */
+  def toMemory(df: DataFrame, sink: String, mode: String = "append"): DataFrame = {
+    df.writeStream.format("memory").queryName(sink).outputMode(mode)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    df.sparkSession.table(sink)
+  }
+
+  /** Two incarnations of one checkpointed query that drains `src`
+    * (re-evaluated per incarnation) into a parquet sink: the first drains
+    * what is there, `grow` adds input while the query is down, and the
+    * second resumes from the checkpoint. Returns the sink's read-back, which
+    * holds every input row exactly once iff the resume is exact. Fresh
+    * checkpoint and sink dirs per call, so warm re-executions replay the
+    * same lifecycle. */
+  def resumedRun(ss: SparkSession, tag: String, src: => DataFrame)(grow: => Unit): DataFrame = {
+    val ckpt = exitManagedTempDir(s"graft-$tag-ckpt").toString
+    val out = exitManagedTempDir(s"graft-$tag-out").toString
+    def incarnation(): Unit =
+      src.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    incarnation()
+    grow
+    incarnation()
+    ss.read.parquet(out)
+  }
+
+  /** Drains `src` (AvailableNow) through foreachBatch and returns the
+    * non-empty micro-batches it saw as (batch_id, n_rows): the evidence of
+    * how a source admitted its input. The only driver-side state is one
+    * pair per batch. */
+  def batchSizes(src: DataFrame, tag: String): DataFrame = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    src.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        seen.add((batchId, batch.count())); ()
+      }
+      .option("checkpointLocation", exitManagedTempDir(s"graft-$tag-ckpt").toString)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    import scala.jdk.CollectionConverters._
+    val ss = src.sparkSession
+    import ss.implicits._
+    seen.asScala.toSeq.filter(_._2 > 0).sortBy(_._1).toDF("batch_id", "n_rows")
+  }
 
   /** Best-effort recursive delete of a gate's temp staging tree (used by
     * the [[exitManagedTempDir]] shutdown hook — `File.deleteOnExit` cannot
@@ -179,12 +213,12 @@ private[graft] object GateSupport {
   def feedChunkRows: Long =
     sys.props.get("graft.feed.chunk.rows").map(_.toLong).getOrElse(250000L)
 
-  /** Staged feed SHARED by the s12 (left), s15 (full) and s17 (semi)
-    * stream-stream join gates — identical content, staged once per
-    * (JVM, dir) under one cache key:
+  /** Staged feed SHARED by the click/purchase join gates
+    * ([[clickPurchaseJoin]]) and s14's watermark dedup — identical
+    * content, staged once per (JVM, dir) under one cache key:
     *   batches 0..n-1 = the real events feed (matches emit as found),
     *             split into EVENT-TIME-ORDERED chunk files when the feed
-    *             exceeds [[FeedChunkRows]] (one file otherwise). Chunks
+    *             exceeds [[feedChunkRows]] (one file otherwise). Chunks
     *             are contiguous event-time ranges, so after batch i the
     *             watermark is hi_i − 1h and every later row's ts ≥ hi_i —
     *             nothing ever arrives late, and the final AvailableNow
@@ -206,8 +240,7 @@ private[graft] object GateSupport {
     * click and purchase sentinels carry DISJOINT user ids (-1 vs -2) so
     * they advance their sides' watermarks without joining each other.
     * Returns (stage path, feed schema). */
-  def outerJoinFeed(ss: SparkSession, dir: String)
-      : (String, org.apache.spark.sql.types.StructType) = {
+  def outerJoinFeed(ss: SparkSession, dir: String): (String, StructType) = {
     val ev = t(ss, dir, "events").select(col("event_id"), col("user_id"),
       col("event_type"), Tables.tsFromNanos(col("ts")).as("event_ts"))
     // v2 cache key (includes the chunk-size knob): the r18 single-file
@@ -268,6 +301,38 @@ private[graft] object GateSupport {
       writeStaged(st, sentinels(3L, 3), "z_s2", now - 60000)
     }
     (stage, ev.schema)
+  }
+
+  /** The stream-stream click ⋈ purchase join over [[outerJoinFeed]] that
+    * s6 (inner), s12 (left outer), s15 (full outer) and s17 (left semi)
+    * share: clicks joined to purchases by the same user within 30
+    * minutes, both sides watermarked 1 hour. The delay exceeds the join
+    * window and the chunks arrive in event-time order, so nothing arrives
+    * late and no match is lost; an unmatched row flushes once the global
+    * watermark passes its bound. Columns: c_user, click_id, c_ts, p_user,
+    * purchase_id, p_ts (the right side's drop out of a semi join).
+    *
+    * The outer and semi gates run 4 state partitions, not 8: each
+    * micro-batch initializes one state store per shuffle partition, and
+    * store setup dominates this bounded feed's cost. Idle min-of-3
+    * measured 3.4 s at 8 partitions and 2.5 s at 4, with 2 within noise
+    * of 4. */
+  def clickPurchaseJoin(ss: SparkSession, dir: String, how: String): DataFrame = {
+    val (stage, schema) = outerJoinFeed(ss, dir)
+    val src = stagedStream(ss, stage, schema)
+    val clicks = src.where(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
+        col("event_ts").as("c_ts"))
+      .withWatermark("c_ts", "1 hour")
+    val purchases = src.where(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
+        col("event_ts").as("p_ts"))
+      .withWatermark("p_ts", "1 hour")
+    clicks.join(purchases,
+      col("c_user") === col("p_user") &&
+        col("p_ts") >= col("c_ts") &&
+        col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
+      how)
   }
 
   /** Planted-contamination seeding SHARED by `text_decontaminate` and

@@ -3,11 +3,10 @@ package graft.gates
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.dsl._
-import graft.dsl.Dsl._
-import graft.functions.{Corpus, Dedup, Multimodal, Similarity, TextAnalysis, TextNormalize}
-import graft.operators.{EventLog, Joins}
+import graft.functions.{Corpus, TextAnalysis}
+import graft.operators.Joins
 import graft.sources.Tables
+import graft.sources.mem.MemStore
 import graft.gates.GateSupport._
 
 /** Structured Streaming twins and stateful operators.
@@ -15,7 +14,10 @@ import graft.gates.GateSupport._
   * Split out of SparkEntry (round-9 advice #8) purely for file size; the
   * driver surface is unchanged — SparkEntry.queries/oracleSql concatenate
   * every family. Scaladoc on each entry cites the reference behavior it
-  * re-expresses.
+  * re-expresses. Every gate opens its child session with
+  * [[GateSupport.streamSession]] and is built from the stream helpers
+  * beside it: a file or staged-feed source, an AvailableNow run into a
+  * memory sink, a two-incarnation resume, or a per-batch observer.
   */
 object StreamGates {
 
@@ -27,28 +29,15 @@ object StreamGates {
     // (≙ reference stream completion on bounded queries, storage.scala:137).
     // Verified against the identical DuckDB oracle as the batch form.
     "s4_stream_window" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      // State-store count == shuffle partitions at query start; size it to
-      // the workload (a bounded micro-batch) in an ISOLATED child session
-      // (shared SparkContext, private SQLConf) — mutating the caller's
-      // session-global conf would leak to concurrent queries and on
-      // failure between set and restore.
       val ss = streamSession(s)
-      val schema = t(ss, dir, "events").schema
-      val src = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val agg = src
+      val agg = fileStream(ss, dir, "events")
         .withColumn("event_ts", Tables.tsFromNanos(col("ts")))
         .withWatermark("event_ts", "1 hour")
         .groupBy(window(col("event_ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(money(col("value"))).cast("double").as("sum_value"))
         .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("sum_value"))
-      val sink = "s4_stream_window_sink"
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(agg, "s4_stream_window_sink", "complete")
     }),
 
 
@@ -59,37 +48,14 @@ object StreamGates {
     // chunked event-time-ordered feed (r19 — the same realism fix as
     // s12/s15/s17: one-file staging made micro-batch 1 the whole corpus,
     // so join state never evicted within the feed): matches emit as
-    // found, chunk ordering means nothing arrives late and no match is
-    // lost (1h watermark delay > 30min join window), and the sentinels'
-    // disjoint negative user ids can never join — the AvailableNow
-    // result still equals the batch join (the DuckDB oracle).
+    // found, and the sentinels' disjoint negative user ids can never
+    // join — the AvailableNow result still equals the batch join (the
+    // DuckDB oracle).
     "s6_stream_join" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      // Stream-stream join keeps 4 state stores per shuffle partition;
-      // size partitions to this bounded feed in an isolated child session
-      // (see s4 note — never mutate the shared session conf).
       val ss = streamSession(s)
-      val (stage, schema) = outerJoinFeed(ss, dir)
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-      val clicks = src.where(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-          col("event_ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = src.where(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-          col("event_ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-        col("c_user") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
-        .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"))
-      val sink = "s6_stream_join_sink"
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(clickPurchaseJoin(ss, dir, "inner")
+        .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id")),
+        "s6_stream_join_sink")
     }),
 
 
@@ -113,36 +79,10 @@ object StreamGates {
     // passes THEIR bounds) so they cannot pollute the output; the oracle
     // is the plain batch LEFT JOIN over the real feed.
     "s12_stream_outer_join" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ss = streamSession(s, 4)
-      // 4 state partitions, not the session's 32 (nor the old 8): each of
-      // the three micro-batches initializes one state store PER shuffle
-      // partition, and store setup dominates this bounded feed's cost —
-      // idle min-of-3 measured 3.4s at 8 partitions, 2.5s at 4, with 2
-      // within noise of 4. Sizing state-store count to the workload is
-      // the same per-gate dial s4 documents.
-      val (stage, schema) = outerJoinFeed(ss, dir)
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-      val clicks = src.where(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-          col("event_ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = src.where(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-          col("event_ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-          col("c_user") === col("p_user") &&
-            col("p_ts") >= col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
-          "left_outer")
-        .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"))
-      val sink = "s12_stream_outer_join_sink"
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(clickPurchaseJoin(ss, dir, "left_outer")
+        .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id")),
+        "s12_stream_outer_join_sink")
     }),
 
 
@@ -154,36 +94,10 @@ object StreamGates {
     // they can never match, so a correct semi join drops them — leak
     // check built into the row set). Oracle = batch EXISTS.
     "s17_stream_semi_join" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ss = streamSession(s, 4)
-      // 4 state partitions, not the session's 32 (nor the old 8): each of
-      // the three micro-batches initializes one state store PER shuffle
-      // partition, and store setup dominates this bounded feed's cost —
-      // idle min-of-3 measured 3.4s at 8 partitions, 2.5s at 4, with 2
-      // within noise of 4. Sizing state-store count to the workload is
-      // the same per-gate dial s4 documents.
-      val (stage, schema) = outerJoinFeed(ss, dir)
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-      val clicks = src.where(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-          col("event_ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = src.where(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-          col("event_ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-          col("c_user") === col("p_user") &&
-            col("p_ts") >= col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
-          "left_semi")
-        .select(col("c_user").as("user_id"), col("click_id"))
-      val sink = "s17_stream_semi_join_sink"
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(clickPurchaseJoin(ss, dir, "left_semi")
+        .select(col("c_user").as("user_id"), col("click_id")),
+        "s17_stream_semi_join_sink")
     }),
 
 
@@ -196,37 +110,11 @@ object StreamGates {
     // pollute either unmatched direction. Oracle = the plain batch FULL
     // JOIN over the real feed.
     "s15_stream_full_outer" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ss = streamSession(s, 4)
-      // 4 state partitions, not the session's 32 (nor the old 8): each of
-      // the three micro-batches initializes one state store PER shuffle
-      // partition, and store setup dominates this bounded feed's cost —
-      // idle min-of-3 measured 3.4s at 8 partitions, 2.5s at 4, with 2
-      // within noise of 4. Sizing state-store count to the workload is
-      // the same per-gate dial s4 documents.
-      val (stage, schema) = outerJoinFeed(ss, dir)
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-      val clicks = src.where(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-          col("event_ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = src.where(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-          col("event_ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-          col("c_user") === col("p_user") &&
-            col("p_ts") >= col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
-          "full_outer")
+      toMemory(clickPurchaseJoin(ss, dir, "full_outer")
         .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
-          col("click_id"), col("purchase_id"))
-      val sink = "s15_stream_full_outer_sink"
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+          col("click_id"), col("purchase_id")),
+        "s15_stream_full_outer_sink")
     }),
 
 
@@ -242,8 +130,7 @@ object StreamGates {
     // `batch` column; the gate projects it away.
     "s16_stream_foreach_batch" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s)
       val ev = t(ss, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
       val stage = stagedFeed(s"feb#$dir", "graft-feb-src") { st =>
@@ -254,16 +141,14 @@ object StreamGates {
         }
       }
       val out = exitManagedTempDir("graft-feb-out").toString
-      val src = ss.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-      val cleaned = src.where(col("event_type").isin("click", "purchase"))
-      val q = cleaned.writeStream
+      val cleaned = stagedStream(ss, stage, ev.schema)
+        .where(col("event_type").isin("click", "purchase"))
+      cleaned.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           batch.write.mode("overwrite").parquet(s"$out/batch=$batchId")
         }
         .option("checkpointLocation", s"$out/_ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
       ss.read.parquet(out).select("event_id", "user_id", "event_type")
     }),
 
@@ -290,7 +175,6 @@ object StreamGates {
     // emits exactly the windows with window_end ≤ max(ts) − 10 min), and
     // correct late-drop means replays contribute nothing to it.
     "s10_stream_late_drop" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ss = streamSession(s)
       val ev = t(ss, dir, "events").select(
         col("event_id"), col("user_id"), col("event_type"),
@@ -303,71 +187,42 @@ object StreamGates {
         val lateReplay = ev.where(col("event_ts") < lit(minTs) + expr("INTERVAL 1 HOUR"))
         val freshReplay = ev.where(col("event_ts") > lit(maxTs) - expr("INTERVAL 10 MINUTES"))
         val now = System.currentTimeMillis()
+        // mtime order is micro-batch order: A commits the watermark, B
+        // arms the late filter, C is provably late
         writeStaged(st, ev, "a_feed", now - 180000)
         writeStaged(st, freshReplay, "b_fresh", now - 120000)
         writeStaged(st, lateReplay, "c_late", now - 60000)
       }
-      val src = ss.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1") // one file per micro-batch, in
-        // mtime order: A commits the watermark, B arms the late filter,
-        // C is provably late
-        .parquet(stage)
-      val agg = src
+      val agg = stagedStream(ss, stage, ev.schema)
         .withWatermark("event_ts", "10 minutes")
         .groupBy(window(col("event_ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("w.start").as("window_start"), col("event_type"), col("n"))
-      val sink = "s10_stream_late_drop_sink"
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(agg, "s10_stream_late_drop_sink")
     }),
 
 
-    // Streaming dedup — dropDuplicates across micro-batches (the streaming
-    // form of exact dedup; state = seen keys, scales with watermark +
-    // key-partitioned state stores). AvailableNow feeds all data, so the
-    // result equals batch DISTINCT (the DuckDB oracle).
-    // Streaming twin of corpus_chunk: chunkTokens is stateless map-only
-    // (sequence+slice arithmetic), so the SAME operator code runs
-    // unchanged over readStream micro-batches — no state store, no
-    // watermark, per-batch parallelism. Oracle = the batch chunking SQL.
     // Streaming twin of corpus_cdc_chunks: content-defined chunking is a
     // stateless per-row map (the rolling hash lives inside the codegen
     // expression, not in stream state), so micro-batched ingestion chunks
     // BIT-IDENTICALLY to the batch pass — one oracle serves both gates.
     "s32_stream_cdc_chunks" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val schema = t(ss, dir, "documents").schema
-      val src = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val chunks = graft.functions.Corpus.cdcChunks(src, "doc_id", "text",
+      val ss = streamSession(s)
+      val chunks = Corpus.cdcChunks(fileStream(ss, dir, "documents"), "doc_id", "text",
         window = 16, modulus = 32, minLen = 24, maxLen = 96)
-      val sink = "s32_stream_cdc_chunks_sink"
-      val q = chunks.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(chunks, "s32_stream_cdc_chunks_sink")
     }),
 
 
+    // Streaming twin of corpus_chunk: chunkTokens is stateless map-only
+    // (sequence+slice arithmetic), so the SAME operator code runs
+    // unchanged over readStream micro-batches — no state store, no
+    // watermark, per-batch parallelism. Oracle = the batch chunking SQL.
     "s11_stream_chunk" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val schema = t(ss, dir, "documents").schema
-      val src = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val chunks = Corpus.chunkTokens(src, "doc_id", "text",
+      val ss = streamSession(s)
+      val chunks = Corpus.chunkTokens(fileStream(ss, dir, "documents"), "doc_id", "text",
         chunkSize = 64, overlap = 16)
-      val sink = "s11_stream_chunk_sink"
-      val q = chunks.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(chunks, "s11_stream_chunk_sink")
     }),
 
 
@@ -377,38 +232,27 @@ object StreamGates {
     // both branches union by name. Stateless ⇒ result equals the batch
     // UNION ALL.
     "s18_stream_union" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val schema = t(ss, dir, "events").schema
-      val src = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val ss = streamSession(s)
+      val src = fileStream(ss, dir, "events")
       val a = src.where(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), lit("click").as("kind"),
           col("value"))
       val b = src.where(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), lit("purchase_2x").as("kind"),
           (money(col("value")) * 2).cast("double").as("value"))
-      val sink = "s18_stream_union_sink"
-      val q = a.unionByName(b).writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(a.unionByName(b), "s18_stream_union_sink")
     }),
 
 
+    // Streaming dedup — dropDuplicates across micro-batches (the streaming
+    // form of exact dedup; state = seen keys, scales with watermark +
+    // key-partitioned state stores). AvailableNow feeds all data, so the
+    // result equals batch DISTINCT (the DuckDB oracle).
     "s7_stream_dedup" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ss = streamSession(s)
-      val schema = t(ss, dir, "events").schema
-      val src = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val dedup = src.select(col("user_id"), col("event_type")).dropDuplicates()
-      val sink = "s7_stream_dedup_sink"
-      val q = dedup.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(fileStream(ss, dir, "events")
+        .select(col("user_id"), col("event_type")).dropDuplicates(),
+        "s7_stream_dedup_sink")
     }),
 
 
@@ -417,23 +261,15 @@ object StreamGates {
     // oracle). Same bounded-run construction as s4: AvailableNow +
     // complete mode, so watermark state-purge cannot drop windows.
     "s5_stream_sliding" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ss = streamSession(s)
-      val schema = t(ss, dir, "events").schema
-      val src = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val agg = src
+      val agg = fileStream(ss, dir, "events")
         .withColumn("event_ts", Tables.tsFromNanos(col("ts")))
         .withWatermark("event_ts", "1 hour")
         .groupBy(window(col("event_ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(money(col("value"))).cast("double").as("sum_value"))
         .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("sum_value"))
-      val sink = "s5_stream_sliding_sink"
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(agg, "s5_stream_sliding_sink", "complete")
     }),
 
 
@@ -444,23 +280,15 @@ object StreamGates {
     // + complete mode makes the bounded run equal the batch answer (same
     // gaps-and-islands DuckDB oracle).
     "s5_stream_session" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ss = streamSession(s)
-      val schema = t(ss, dir, "events").schema
-      val src = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val agg = src
+      val agg = fileStream(ss, dir, "events")
         .withColumn("event_ts", Tables.tsFromNanos(col("ts")))
         .withWatermark("event_ts", "1 hour")
         .groupBy(session_window(col("event_ts"), "2 hours").as("w"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"), unix_micros(col("w.start")).as("session_start_us"),
           col("n_events"))
-      val sink = "s5_stream_session_sink"
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(agg, "s5_stream_session_sink", "complete")
     }),
 
 
@@ -470,21 +298,13 @@ object StreamGates {
     // broadcast dimension, so a 1000-executor stream pays no shuffle on
     // the fact side. Oracle = the equivalent batch join.
     "s8_stream_static_join" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val schema = t(ss, dir, "events").schema
-      val src = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val ss = streamSession(s)
+      val src = fileStream(ss, dir, "events")
       val dim = broadcast(t(ss, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")))
-      val joined = src.join(dim, col("user_id") === col("c_custkey"))
-        .select(col("event_id"), col("user_id"), col("c_mktsegment"))
-      val sink = "s8_stream_static_join_sink"
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(src.join(dim, col("user_id") === col("c_custkey"))
+        .select(col("event_id"), col("user_id"), col("c_mktsegment")),
+        "s8_stream_static_join_sink")
     }),
 
 
@@ -495,18 +315,14 @@ object StreamGates {
     // static side would be a nested-loop per micro-batch). Oracle = the
     // batch range join.
     "s9_stream_range_join" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s)
       val evBatch = t(ss, dir, "events")
         .withColumn("ts_us", Tables.tsMicros(col("ts")))
       val spikes = broadcast(
         evBatch.where(col("event_type") === "error" && col("value") > 150.0)
           .select(col("event_id").as("spike_id"), col("ts_us").as("start_us"),
             (col("ts_us") + 600000000L).as("end_us")))
-      val schema = t(ss, dir, "events").schema
-      val clicks = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val clicks = fileStream(ss, dir, "events")
         .where(col("event_type") === "click")
         .withColumn("click_us", Tables.tsMicros(col("ts")))
         .select(col("event_id").as("click_id"), col("user_id"), col("click_us"))
@@ -514,11 +330,7 @@ object StreamGates {
           "click_us", "start_us", "end_us", binWidth = 600000000L)
         .select(col("spike_id"), col("click_id"), col("user_id"),
           (col("click_us") - col("start_us")).as("gap_us"))
-      val sink = "s9_stream_range_join_sink"
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(joined, "s9_stream_range_join_sink")
     }),
 
 
@@ -537,37 +349,24 @@ object StreamGates {
     // incarnation 1 drains everything — the final output is identical
     // either way (that invariance IS exactly-once).
     "t_stream_restart" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s)
       val ev = t(ss, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
       val stage = stagedFeed(s"restart#$dir", "graft-restart-src") { st =>
         writeStaged(st, ev.where(pmod(col("event_id"), lit(3)) === 0),
           "a_slice0", System.currentTimeMillis() - 180000L)
       }
-      val ckpt = exitManagedTempDir("graft-restart-ckpt").toString
-      val out = exitManagedTempDir("graft-restart-out").toString
-      def incarnation(): Unit = {
-        val src = ss.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = src.where(col("event_type").isin("click", "purchase"))
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      incarnation() // drains whatever is staged, then terminates
-      (1 to 2).foreach { i => // the stream "keeps arriving" while down
-        // skip when already staged (warm re-executions in one JVM): the
-        // content is a pure function of the input, and re-writing would
-        // only re-time the staging, not the operator
-        if (!new java.io.File(s"$stage/${('a' + i).toChar}_slice$i.parquet").exists())
-          writeStaged(stage, ev.where(pmod(col("event_id"), lit(3)) === i),
-            s"${('a' + i).toChar}_slice$i", System.currentTimeMillis() - (3 - i) * 60000L)
-      }
-      incarnation() // resumes from the checkpoint: new files only
-      ss.read.parquet(out).select("event_id", "user_id", "event_type")
+      resumedRun(ss, "restart", stagedStream(ss, stage, ev.schema)
+          .where(col("event_type").isin("click", "purchase"))) {
+        (1 to 2).foreach { i => // the stream "keeps arriving" while down
+          // skip when already staged (warm re-executions in one JVM): the
+          // content is a pure function of the input, and re-writing would
+          // only re-time the staging, not the operator
+          if (!new java.io.File(s"$stage/${('a' + i).toChar}_slice$i.parquet").exists())
+            writeStaged(stage, ev.where(pmod(col("event_id"), lit(3)) === i),
+              s"${('a' + i).toChar}_slice$i", System.currentTimeMillis() - (3 - i) * 60000L)
+        }
+      }.select("event_id", "user_id", "event_type")
     }),
 
     // §2.8 T2 — BACKPRESSURE, data-checked (r9 advice #6: was spec-only).
@@ -579,11 +378,9 @@ object StreamGates {
     // and returns them as (batch_id, n_rows); slice i holds exactly the
     // event_id % 4 == i rows, so the oracle is a plain GROUP BY — if flow
     // control were ignored (one big batch) or order drifted, row count or
-    // hash breaks. The only driver-side state is 4 (id, count) pairs.
+    // hash breaks.
     "t_stream_backpressure" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s)
       val ev = t(ss, dir, "events").select(col("event_id"))
       val stage = stagedFeed(s"bp#$dir", "graft-bp-src") { st =>
         val now = System.currentTimeMillis()
@@ -592,20 +389,7 @@ object StreamGates {
             s"${('a' + i).toChar}_slice$i", now - (4 - i) * 60000L)
         }
       }
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-      val src = ss.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          seen.add((batchId, batch.count())): Unit
-        }
-        .option("checkpointLocation",
-          exitManagedTempDir("graft-bp-ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      import scala.jdk.CollectionConverters._
-      import ss.implicits._
-      seen.asScala.toSeq.filter(_._2 > 0).toDF("batch_id", "n_rows")
+      batchSizes(stagedStream(ss, stage, ev.schema), "bp")
     }),
 
 
@@ -616,27 +400,20 @@ object StreamGates {
     // total — equal to batch GROUP BY, the same DuckDB oracle as the
     // batch-gated twin.
     "t_stream_stateful" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ss = streamSession(s)
       import ss.implicits._
-      val schema = t(ss, dir, "events").schema
-      val src = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val src = fileStream(ss, dir, "events")
         .select(col("user_id"),
           (money(col("value")) * 100).cast("long").as("cents"))
         .as[(Long, Long)]
       val totals = graft.streaming.Stateful.runningTotals[(Long, Long)](
         src, _._1, _._2.toDouble)
-      val sink = "t_stream_stateful_sink"
-      val q = totals.toDF()
-        .select(col("key").as("user_id"), col("events"),
-          col("sum").cast("long").as("sum_cents"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
       // one snapshot per key per micro-batch reaches the sink; the final
       // state is the snapshot with the highest event count
-      ss.table(sink)
+      toMemory(totals.toDF()
+        .select(col("key").as("user_id"), col("events"),
+          col("sum").cast("long").as("sum_cents")),
+        "t_stream_stateful_sink")
         .groupBy(col("user_id"))
         .agg(max(struct(col("events"), col("sum_cents"))).as("m"))
         .select(col("user_id"), col("m.events").as("events"),
@@ -652,26 +429,18 @@ object StreamGates {
     // deterministic under any row order, unlike first-seen-wins). The
     // last emission per key equals batch GROUP BY MIN — the oracle.
     "t_stream_canonical" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s)
       // transformWithState requires the RocksDB state store provider
       ss.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import ss.implicits._
-      val schema = t(ss, dir, "events").schema
-      val src = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val src = fileStream(ss, dir, "events")
         .select(col("user_id"), col("event_type"), col("event_id"))
         .as[(Long, String, Long)]
-      val canon = graft.streaming.Stateful.canonicalDedup(src)
-      val sink = "t_stream_canonical_sink"
-      val q = canon.toDF().writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
       // one snapshot per key per micro-batch; the final canonical id is
       // the smallest ever emitted
-      ss.table(sink)
+      toMemory(graft.streaming.Stateful.canonicalDedup(src).toDF(),
+        "t_stream_canonical_sink")
         .groupBy(col("user_id"), col("event_type"))
         .agg(min(col("min_event_id")).as("min_event_id"))
     }),
@@ -682,19 +451,9 @@ object StreamGates {
     // the SAME operator code runs over readStream micro-batches and must
     // converge to exactly the batch answer — one oracle serves both.
     "s13_stream_c4_clean" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val schema = t(ss, dir, "documents").schema
-      val src = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val cleaned = TextAnalysis.c4Clean(c4StagedDocs(src), "doc_id",
-        "text", minWordsPerLine = 5, minLines = 3)
-      val sink = "s13_stream_c4_sink"
-      val q = cleaned.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      val ss = streamSession(s)
+      toMemory(TextAnalysis.c4Clean(c4StagedDocs(fileStream(ss, dir, "documents")),
+        "doc_id", "text", minWordsPerLine = 5, minLines = 3), "s13_stream_c4_sink")
     }),
 
 
@@ -720,22 +479,15 @@ object StreamGates {
     // filtered before the dedup — output-neutral (dropDuplicates emits on
     // first sight, not at eviction; sentinels advance nothing we need).
     "s14_stream_dedup_watermark" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ss = streamSession(s)
       val (stage, schema) = outerJoinFeed(ss, dir)
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-      val dedup = src
+      val dedup = stagedStream(ss, stage, schema)
         .where(col("user_id") >= 0)
         .select(col("user_id"), col("event_type"),
           date_trunc("hour", col("event_ts")).as("hr"))
         .withWatermark("hr", "2 hours")
         .dropDuplicatesWithinWatermark("user_id", "event_type", "hr")
-      val sink = "s14_stream_dedup_wm_sink"
-      val q = dedup.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(dedup, "s14_stream_dedup_wm_sink")
     }),
 
 
@@ -751,32 +503,23 @@ object StreamGates {
     // rows — a re-read of old offsets or a skipped append breaks the
     // row count / hash against the batch oracle.
     "s19_stream_mem_resume" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s)
       val feed = t(ss, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
         .where(pmod(col("event_id"), lit(5)) < 2)
       val coll = "evresume" + dir.replaceAll("[^A-Za-z0-9]", "_")
       val slice1 = feed.where(pmod(col("event_id"), lit(3)) =!= 2).orderBy("event_id")
       val slice2 = feed.where(pmod(col("event_id"), lit(3)) === 2).orderBy("event_id")
-      val ckpt = exitManagedTempDir("graft-memresume-ckpt").toString
-      val out = exitManagedTempDir("graft-memresume-out").toString
-      def incarnation(): Unit = {
-        val src = ss.readStream.format("graft.sources.mem.GraftMemSource")
-          .option("collection", coll).option("startOffset", "50").load()
-        val q = src.writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      // register RESETS the collection each execution (fresh ckpt/out too,
-      // so warm re-executions replay the same two-incarnation lifecycle)
-      graft.sources.mem.MemStore.register(coll, slice1)
-      incarnation() // drains offsets [50, len(slice1))
-      graft.sources.mem.MemStore.append(coll, slice2)
-      incarnation() // resumes from the checkpoint: appended offsets only
-      ss.read.parquet(out).select("event_id", "user_id", "event_type")
+      // register RESETS the collection each execution (with resumedRun's
+      // fresh checkpoint and sink, warm re-executions replay the same
+      // two-incarnation lifecycle)
+      MemStore.register(coll, slice1)
+      // incarnation 1 drains offsets [50, len(slice1)); incarnation 2
+      // resumes from the checkpoint: appended offsets only
+      resumedRun(ss, "memresume", ss.readStream.format("graft.sources.mem.GraftMemSource")
+          .option("collection", coll).option("startOffset", "50").load()) {
+        MemStore.append(coll, slice2)
+      }.select("event_id", "user_id", "event_type")
     }),
 
 
@@ -792,9 +535,7 @@ object StreamGates {
     // exactly the appended rows per key. Oracle = per-key rank filters
     // UNION ALL the appended slice, mirroring s19's contract key-wise.
     "s22_stream_mem_keyed" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s)
       val feed = t(ss, dir, "events")
         .where(pmod(col("event_id"), lit(5)) < 2)
         .select(
@@ -805,22 +546,14 @@ object StreamGates {
       val coll = "evkeyed" + dir.replaceAll("[^A-Za-z0-9]", "_")
       val slice1 = feed.where(pmod(col("event_id"), lit(3)) =!= 2).orderBy("event_id")
       val slice2 = feed.where(pmod(col("event_id"), lit(3)) === 2).orderBy("event_id")
-      val ckpt = exitManagedTempDir("graft-memkeyed-ckpt").toString
-      val out = exitManagedTempDir("graft-memkeyed-out").toString
-      def incarnation(): Unit = {
-        val src = ss.readStream.format("graft.sources.mem.GraftMemSource")
+      MemStore.register(coll, slice1)
+      // per key: incarnation 1 drains ranks [25, count_k(slice1)),
+      // incarnation 2 exactly the appended ranks
+      resumedRun(ss, "memkeyed", ss.readStream.format("graft.sources.mem.GraftMemSource")
           .option("collection", coll)
-          .option("keyColumn", "pkey").option("startOffset", "25").load()
-        val q = src.writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      graft.sources.mem.MemStore.register(coll, slice1)
-      incarnation() // per key: drains ranks [25, count_k(slice1))
-      graft.sources.mem.MemStore.append(coll, slice2)
-      incarnation() // per key: exactly the appended ranks
-      ss.read.parquet(out).select("pkey", "event_id", "user_id", "event_type")
+          .option("keyColumn", "pkey").option("startOffset", "25").load()) {
+        MemStore.append(coll, slice2)
+      }.select("pkey", "event_id", "user_id", "event_type")
     }),
 
 
@@ -832,22 +565,13 @@ object StreamGates {
     // expression needs no state, no watermark, no shuffle, so the stream
     // converges to the batch result for any micro-batch slicing.
     "s20_stream_bpe" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val docs = t(ss, dir, "documents")
-      val merges = graft.functions.Corpus.bpeTrain(docs, "text",
+      val ss = streamSession(s)
+      val merges = Corpus.bpeTrain(t(ss, dir, "documents"), "text",
         numMerges = CorpusGates.bpeN)
-      val src = ss.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val enc = graft.functions.Corpus.bpeEncode(src, "doc_id", "text", merges)
+      val enc = Corpus.bpeEncode(fileStream(ss, dir, "documents"), "doc_id", "text", merges)
         .select(col("doc_id"), col("n_subtokens"),
           array_join(col("subtokens"), " ").as("subtokens"))
-      val sink = "s20_stream_bpe_sink"
-      val q = enc.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(enc, "s20_stream_bpe_sink")
     }),
 
 
@@ -859,12 +583,8 @@ object StreamGates {
     // (one shared oracle). This is the materialized-view form of CDC: the
     // state store IS the current table.
     "s30_stream_changelog" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ss = streamSession(s)
-      val batch = t(ss, dir, "events")
-      val src = ss.readStream.schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val agg = src
+      val agg = fileStream(ss, dir, "events")
         .select(col("event_id"), col("user_id"), col("ts"),
           col("event_type"), col("value"))
         .withColumn("op",
@@ -873,11 +593,7 @@ object StreamGates {
         .groupBy(col("user_id"))
         .agg(max(struct(col("ts"), col("event_id"), col("op"),
           col("event_type"), col("value"))).as("last"))
-      val sink = "s30_stream_changelog_sink"
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(agg, "s30_stream_changelog_sink", "complete")
         .where(col("last.op") =!= "delete")
         .select(col("user_id"), col("last.event_id").as("event_id"),
           col("last.op").as("op"), col("last.event_type").as("event_type"),
@@ -891,21 +607,11 @@ object StreamGates {
     // stateless per-row, so the stream converges to EXACTLY the batch
     // answer (one shared oracle string, the corpus_chunk precedent).
     "s28_stream_unigram" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val docs = t(ss, dir, "documents")
-      val pieces = graft.functions.Corpus.unigramPieceTable(docs, "text",
+      val ss = streamSession(s)
+      val pieces = Corpus.unigramPieceTable(t(ss, dir, "documents"), "text",
         maxLen = CorpusGates.uniMaxLen, topK = CorpusGates.uniTopK)
-      val src = ss.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val enc = graft.functions.Corpus.unigramEncode(src, "doc_id", "text",
-        pieces, maxLen = CorpusGates.uniMaxLen)
-      val sink = "s28_stream_unigram_sink"
-      val q = enc.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(sink)
+      toMemory(Corpus.unigramEncode(fileStream(ss, dir, "documents"), "doc_id", "text",
+        pieces, maxLen = CorpusGates.uniMaxLen), "s28_stream_unigram_sink")
     }),
 
 
@@ -919,31 +625,16 @@ object StreamGates {
     // is a plain rank bucketing — one oversized batch (flow control
     // ignored) or a skipped/reordered slice breaks rows or hash.
     "t_stream_mem_backpressure" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s)
       // 20% feed: micro-batch count (= feed/1000) stays bench-honest at
       // sf0.1 (~20 bounded batches) while sf0.01 still yields 2 batches
       val feed = t(ss, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
         .where(pmod(col("event_id"), lit(5)) < 1).orderBy("event_id")
       val coll = "evbp" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      graft.sources.mem.MemStore.register(coll, feed)
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-      val src = ss.readStream.format("graft.sources.mem.GraftMemSource")
-        .option("collection", coll).option("maxRowsPerTrigger", "1000").load()
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          seen.add((batchId, batch.count())); ()
-        }
-        .option("checkpointLocation",
-          exitManagedTempDir("graft-membp-ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      import scala.jdk.CollectionConverters._
-      val rows = seen.asScala.toSeq.filter(_._2 > 0).sortBy(_._1)
-      import ss.implicits._
-      rows.toDF("batch_id", "n_rows")
+      MemStore.register(coll, feed)
+      batchSizes(ss.readStream.format("graft.sources.mem.GraftMemSource")
+        .option("collection", coll).option("maxRowsPerTrigger", "1000").load(), "membp")
     })
   )
 

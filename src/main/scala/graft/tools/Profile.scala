@@ -7,10 +7,7 @@ package graft.tools
   * whole run: jobs, stages, tasks, executor run/CPU/GC time, shuffle and
   * spill volume, codegen compiles, and for streams the micro-batch count,
   * peak state memory/rows and summed state-commit and `addBatch` time.
-  * `provider` is the state store stateful gates use
-  * (`GateSupport.rocksdbState`); flip it with
-  * SPARK_GRAFT_STREAM_STATE=rocksdb for an A/B. A development tool:
-  * Bench and Verify do not use it.
+  * A development tool: Bench and Verify do not use it.
   *
   * usage: runMain graft.tools.Profile <sfDir> <g1,g2,...> [runs=N] [warm=<dir>]
   *
@@ -36,8 +33,6 @@ object Profile {
         classOf[graft.profile.StreamRecorder].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val rocksdb = graft.gates.GateSupport.rocksdbState
-    val provider = if (rocksdb) "rocksdb" else "hdfs"
     val passes = opt("warm").map("warm" -> _).toSeq ++
       (1 to runs).map(i => s"run $i" -> sfDir)
     for (g <- gates; (label, dir) <- passes) {
@@ -48,11 +43,8 @@ object Profile {
         val n = df.count()
         (n, t1 - t0, System.nanoTime() - t1)
       }
-      // streamSession turns RocksDB row tracking off, and Spark then
-      // reports 0 state rows, not -1: the count is unknown, not zero
-      val shown = if (rocksdb) rec.copy(peakStateRows = -1L) else rec
       println(s"[profile] $g $label: rows=$rows build_ms=${buildNs / 1000000} " +
-        s"exec_ms=${execNs / 1000000} provider=$provider ${shown.render}")
+        s"exec_ms=${execNs / 1000000} ${rec.render}")
       spark.catalog.clearCache()
     }
     spark.stop()

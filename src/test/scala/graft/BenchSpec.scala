@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench's output-file policy and its stdout contract line, as pure
-  * functions: where a run's timings land, what it merges into the pinned
-  * baseline, and the exact bytes of the line its reader parses. */
+/** Bench's output-file policy, regression flags and stdout contract
+  * line, as pure functions: where a run's timings land, what it merges
+  * into the pinned baseline, which gates it flags, and the exact bytes of
+  * the line its reader parses. */
 class BenchSpec extends AnyFunSuite {
   import Bench._
 
@@ -42,6 +43,55 @@ class BenchSpec extends AnyFunSuite {
     // merged entries are scaled to the baseline machine, keys sorted
     assert(mergedJson(prev, merge(), 2.0) ===
       """{"_basket_new":0.25,"_basket_q3":1.0,"a":2.0,"b":1.5}""")
+  }
+
+  // q3_shipping is the shuffle class's representative, sim_brute_topk the
+  // float class's; q1_pricing is a shuffle gate, sim_lsh_topk a float gate
+  private val flagPrev = Map("_basket_q3_shipping" -> 1.0, "_basket_sim_brute_topk" -> 1.0,
+    "q3_shipping" -> 1.0, "q1_pricing" -> 1.0, "sim_lsh_topk" -> 1.0, "text_x" -> 0.1)
+
+  test("a class speed is clamped from below at the global speed") {
+    // the shuffle rep reads faster than the machine (0.5 < 1.2), the float
+    // rep slower (2.0); a class without a basket reading gets no entry
+    val f = regressionFlags(flagPrev,
+      Seq("q3_shipping" -> 0.5, "sim_brute_topk" -> 2.0), Nil, speedRatio = 1.2)
+    assert(f.classSpeed === Map("shuffle" -> 1.2, "float" -> 2.0))
+    assert(f.classSpeedJson === """{"float":2.000,"shuffle":1.200}""")
+    // a gate normalizes by its class speed; a class without a reading by the global
+    val g = regressionFlags(flagPrev, Seq("sim_brute_topk" -> 2.0),
+      Seq("sim_lsh_topk" -> 4.0, "q1_pricing" -> 4.0), speedRatio = 1.0)
+    assert(g.ratios === Seq(("sim_lsh_topk", 4.0, 1.0, 2.0), ("q1_pricing", 4.0, 1.0, 4.0)))
+  }
+
+  test("a basket representative is normalized by the global speed") {
+    // the shuffle class reads 3x slow; its rep q3_shipping is also 3x slow
+    // and must flag through the global speed, not vanish into its own ratio
+    val f = regressionFlags(flagPrev, Seq("q3_shipping" -> 3.0),
+      Seq("q3_shipping" -> 3.0, "q1_pricing" -> 3.0), speedRatio = 1.0)
+    assert(f.classSpeed === Map("shuffle" -> 3.0))
+    assert(f.ratios === Seq(("q3_shipping", 3.0, 1.0, 3.0), ("q1_pricing", 3.0, 1.0, 1.0)))
+    assert(f.regressions.map(_._1) === Seq("q3_shipping"))
+  }
+
+  test("a gate under 0.5 s, or absent from the baseline, never flags") {
+    val f = regressionFlags(flagPrev, Nil,
+      Seq("text_x" -> 0.5, "new_gate" -> 9.0, "q1_pricing" -> 0.51), speedRatio = 0.1)
+    // text_x is 50x its baseline but at 0.5 s; new_gate has no baseline
+    assert(f.ratios.map(_._1) === Seq("text_x", "q1_pricing"))
+    assert(f.regressions.map(_._1) === Seq("q1_pricing"))
+    // the bound is strict: exactly 1.5x beyond the class speed does not flag
+    assert(regressionFlags(flagPrev, Nil, Seq("q1_pricing" -> 1.5), 1.0).regressions === Nil)
+  }
+
+  test("the BENCH_DELTAS regression JSON, byte for byte") {
+    val f = regressionFlags(flagPrev, Seq("sim_brute_topk" -> 1.5),
+      Seq("q1_pricing" -> 2.0, "sim_lsh_topk" -> 3.4567, "q3_shipping" -> 1.2), speedRatio = 1.0)
+    // slowest first; sim_lsh_topk normalizes by its class's 1.5
+    assert(f.regressionsJson ===
+      """[{"query":"sim_lsh_topk","sec":3.457,"prev_sec":1.000,"ratio":2.30},""" +
+        """{"query":"q1_pricing","sec":2.000,"prev_sec":1.000,"ratio":2.00}]""")
+    assert(f.ratiosJson === """{"q1_pricing":2.00,"sim_lsh_topk":2.30,"q3_shipping":1.20}""")
+    assert(regressionFlags(flagPrev, Nil, Nil, 1.0).regressionsJson === "[]")
   }
 
   private val summary = Summary(

@@ -215,6 +215,12 @@ class StreamingSpec extends AnyFunSuite {
         assert(want.exceptAll(got).count() === 0, s"$tag: missing rows")
       }
 
+      val gotInner = SparkEntry.queries("s6_stream_join")(spark, sfDir)
+      assertSetEqual(gotInner,
+        c.join(p, cond).select(col("cu").as("user_id"), col("click_id"), col("purchase_id")),
+        "inner")
+      assert(gotInner.count() > 0, "chunked feed must still find inner matches")
+
       val gotOuter = SparkEntry.queries("s12_stream_outer_join")(spark, sfDir)
       assertSetEqual(gotOuter,
         c.join(p, cond, "left_outer")

@@ -184,6 +184,9 @@ object Dedup {
       threshold: Double = 0.9,
       budgetPerRow: Double = 32.0,
       dim: Int = 64): (DataFrame, Double) =
+    // eager by design: the corpus size picks the plane count and band
+    // geometry, which shape the plan itself (and the returned recall), so
+    // it cannot wait for the caller's action (DedupSpec pins the job)
     Similarity.cosinePairsLshScaled(emb, idCol, vecCol, threshold,
       corpusSize = emb.count(), budgetPerRow = budgetPerRow, dim = dim)
 
@@ -437,6 +440,9 @@ object Dedup {
       val next = ckpt(hop.join(jump, "l1")
         .select(col("node"), least(col("l1"), col("l2")).as("label"),
           (least(col("l1"), col("l2")) < col("old")).as("improved")))
+      // eager by design: whether to run another round is decided on this
+      // round's data before the next round is built (DedupSpec pins the
+      // jobs)
       val changed = next.where(col("improved")).limit(1).count()
       // `next` is materialized — the previous round's checkpoint blocks
       // are dead now; free them instead of waiting for a GC
@@ -462,6 +468,8 @@ object Dedup {
     // does not survive.)
     val out = labels.select(col("node").as("doc_id"), col("label").as("canon_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // eager: the managed copy must hold the labels before the blocks it
+    // reads go
     out.count()
     checkpointBlocks(labels).foreach(_.unpersist(false))
     out

@@ -1,6 +1,6 @@
 package graft.gates
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dsl._
@@ -119,6 +119,111 @@ object CoreGates {
     }
   }
 
+  /** One seeded case of a value grammar (window, dates, numeric, strings,
+    * decimal): the per-row value as a Spark `Column` and as DuckDB SQL,
+    * generated in lockstep. Each family's gate and oracle reduce every
+    * case to one checksum row ([[fuzzChecksums]], [[fuzzChecksumSql]]). */
+  private[graft] final case class ValueFuzzCase(
+      id: Int, value: org.apache.spark.sql.Column, valueSql: String)
+
+  /** One checksum row per case over `df`, unioned: count, sum, weighted
+    * sum (weight `weightKey % 97 + 1`), min and max of the case value.
+    * Without a weight key the values are strings and the sums become
+    * summed length and summed 32-bit md5 prefix. */
+  private def fuzzChecksums(df: DataFrame, cases: Seq[ValueFuzzCase],
+      weightKey: Option[String]): DataFrame = {
+    val v = col("v")
+    val (sumName, sumAgg, chk) = weightKey match {
+      case Some(_) => ("sum_v", sum(v), sum(v * col("wt")))
+      case None => ("sum_len", sum(length(v)),
+        sum(conv(substring(md5(v.cast("binary")), 1, 8), 16, 10).cast("long")))
+    }
+    cases.map { c =>
+      df.select(c.value.as("v") +: weightKey.map(k => (col(k) % 97 + 1).as("wt")).toSeq: _*)
+        .agg(count(v).as("n_rows"), sumAgg.as(sumName), chk.as("chk"),
+          min(v).as("min_v"), max(v).as("max_v"))
+        .select(lit(c.id).as("case_id"), col("n_rows"), col(sumName),
+          col("chk"), col("min_v"), col("max_v"))
+    }.reduce(_ unionByName _)
+  }
+
+  /** [[fuzzChecksums]] in DuckDB over `(case id, value SQL)` pairs; SUMs
+    * are BIGINT-cast (DuckDB SUM(BIGINT) widens to HUGEINT), and the
+    * md5-prefix checksum parses the same 8 hex chars as the Spark side. */
+  private def fuzzChecksumSql(cases: Seq[(Int, String)], table: String,
+      weightKey: Option[String]): String = cases.map { case (id, valueSql) =>
+    val (sums, wt) = weightKey match {
+      case Some(k) => ("CAST(SUM(v) AS BIGINT) AS sum_v, CAST(SUM(v * wt) AS BIGINT) AS chk",
+        s", $k % 97 + 1 AS wt")
+      case None => ("CAST(SUM(length(v)) AS BIGINT) AS sum_len, " +
+        "CAST(SUM(CAST(('0x' || substr(md5(v), 1, 8))::UBIGINT AS BIGINT)) AS BIGINT) AS chk", "")
+    }
+    s"""SELECT $id AS case_id, COUNT(v) AS n_rows, $sums,
+            MIN(v) AS min_v, MAX(v) AS max_v
+          FROM (SELECT $valueSql AS v$wt FROM $table)"""
+  }.mkString("\n          UNION ALL\n")
+
+  /** The predicate cases as conditional aggregates in one scan of
+    * lineitem — per case a count, a sum of l_quantity, min l_orderkey
+    * (ungrouped only) and max l_orderkey — stacked to one row per case,
+    * or per (group, case) under `group`.
+    *
+    * LONG-BACKED conditional sums (r19 verdict #4, guide §2.3 narrower
+    * types): sum(decimal(18,2)) carries a decimal(28,2) buffer, which
+    * exceeds Spark's 18-digit compact-long Decimal bound — every one of
+    * the 32 conditional updates per row deserializes, adds and
+    * re-serializes a BigDecimal in the UnsafeRow buffer. l_quantity is
+    * exact in cents (integer-valued 1..50 here; decimal(18,2) in
+    * general), so the sum is computed over ONE per-row cents projection
+    * into plain long buffers and divided back once per output cell.
+    * VALUE-IDENTICAL: cents ≤ 5000/row keeps any realistic SF far from
+    * long overflow (sf100 ≈ 3e13 ≪ 2^63, and < 2^53 so the final
+    * division's numerator is also exact in double); both
+    * `cast(sum_decimal as double)` and `sum_cents/100.0` are the
+    * correctly-rounded double nearest S/100, and an empty case sums to
+    * NULL on both paths. The decimal-sum aggregation path itself stays
+    * differentially covered by q_fuzz_decimal and the money() sums in
+    * q1/q3/q10. Oracle SQL unchanged ([[fuzzCondAggsSql]]). */
+  private def fuzzCondAggs(lineitem: DataFrame, group: Option[String]): DataFrame = {
+    val li = lineitem
+      .withColumn("__cents", (money(col("l_quantity")) * 100).cast("long"))
+    val keys = group.map(col).toSeq
+    // (column prefix, output name, aggregate) of the l_orderkey extremes
+    val extremes = (if (group.isEmpty) Seq(("mn", "min_ok", (c: Column) => min(c))) else Nil) :+
+      (("mx", "max_ok", (c: Column) => max(c)))
+    val aggs = fuzzCases.flatMap { c =>
+      Seq(count(when(c.pred, 1)).as(s"n_${c.id}"),
+        sum(when(c.pred, col("__cents"))).as(s"qc_${c.id}")) ++
+        extremes.map { case (p, _, f) => f(when(c.pred, col("l_orderkey"))).as(s"${p}_${c.id}") }
+    }
+    li.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+      .select(keys ++ fuzzCases.flatMap(c =>
+        col(s"n_${c.id}") +: (col(s"qc_${c.id}") / lit(100.0)).as(s"q_${c.id}") +:
+          extremes.map(e => col(s"${e._1}_${c.id}"))): _*)
+      .select(keys :+ expr(s"stack(${fuzzCases.size}, " +
+        fuzzCases.map(c => (Seq(s"${c.id}", s"n_${c.id}", s"q_${c.id}") ++
+          extremes.map(e => s"${e._1}_${c.id}")).mkString(", ")).mkString(", ") +
+        s") as (case_id, n_rows, sum_qty, ${extremes.map(_._2).mkString(", ")})"): _*)
+  }
+
+  /** [[fuzzCondAggs]] in DuckDB: the identical machine-made predicate
+    * inside the identical conditional aggregates (COUNT / decimal-exact
+    * SUM / MIN / MAX), one SELECT per case over one materialized scan. */
+  private def fuzzCondAggsSql(group: Option[String]): String = {
+    val cases = fuzzCases.map { c =>
+      val minOk = if (group.isEmpty) s"MIN(CASE WHEN ${c.sql} THEN l_orderkey END) AS min_ok," else ""
+      s"""SELECT ${group.fold("")(g => s"$g, ")}${c.id} AS case_id,
+              COUNT(CASE WHEN ${c.sql} THEN 1 END) AS n_rows,
+              CAST(SUM(CASE WHEN ${c.sql} THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_qty,
+              $minOk
+              MAX(CASE WHEN ${c.sql} THEN l_orderkey END) AS max_ok
+            FROM base${group.fold("")(g => s" GROUP BY $g")}"""
+    }.mkString("\n          UNION ALL\n")
+    "WITH base AS MATERIALIZED (SELECT l_quantity, l_linenumber, " +
+      "l_orderkey, l_returnflag, l_linestatus, l_discount FROM lineitem)\n" +
+      cases
+  }
+
   /** Window-function fuzz: seeded lockstep (Column, SQL) generation over
     * the ANALYTIC grammar — partition key × order key/direction × function
     * (row_number/rank/dense_rank/ntile/sum/count/min/lag) × ROWS frame.
@@ -132,10 +237,7 @@ object CoreGates {
     * checksum row (count/sum/weighted-sum/min/max) is integer-exact.
     * Weighted sum stays < 2^63 through sf1 (~2.7e18); re-derive before
     * any sf10 run. */
-  private[graft] final case class WinFuzzCase(
-      id: Int, value: org.apache.spark.sql.Column, valueSql: String)
-
-  private[graft] lazy val winFuzzCases: Seq[WinFuzzCase] = {
+  private[graft] lazy val winFuzzCases: Seq[ValueFuzzCase] = {
     import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(140261L)
     val parts = Seq[(String, org.apache.spark.sql.Column)](
@@ -186,31 +288,31 @@ object CoreGates {
         (wTotal.rowsBetween(lo, hi), s"$totalSql $fSql")
       }
       rnd.nextInt(8) match {
-        case 0 => WinFuzzCase(i, row_number().over(wTotal).cast("long"),
+        case 0 => ValueFuzzCase(i, row_number().over(wTotal).cast("long"),
           s"CAST(ROW_NUMBER() OVER ($totalSql) AS BIGINT)")
-        case 1 => WinFuzzCase(i, rank().over(wTies).cast("long"),
+        case 1 => ValueFuzzCase(i, rank().over(wTies).cast("long"),
           s"CAST(RANK() OVER ($tiesSql) AS BIGINT)")
-        case 2 => WinFuzzCase(i, dense_rank().over(wTies).cast("long"),
+        case 2 => ValueFuzzCase(i, dense_rank().over(wTies).cast("long"),
           s"CAST(DENSE_RANK() OVER ($tiesSql) AS BIGINT)")
         case 3 =>
           val n = 2 + rnd.nextInt(9)
-          WinFuzzCase(i, ntile(n).over(wTotal).cast("long"),
+          ValueFuzzCase(i, ntile(n).over(wTotal).cast("long"),
             s"CAST(NTILE($n) OVER ($totalSql) AS BIGINT)")
         case 4 =>
           val (w, ws) = framed(rnd.nextInt(frames.length))
-          WinFuzzCase(i, sum(cents).over(w),
+          ValueFuzzCase(i, sum(cents).over(w),
             s"SUM($centsSql) OVER ($ws)")
         case 5 =>
           val (w, ws) = framed(rnd.nextInt(frames.length))
-          WinFuzzCase(i, count(lit(1)).over(w),
+          ValueFuzzCase(i, count(lit(1)).over(w),
             s"COUNT(*) OVER ($ws)")
         case 6 =>
           val (w, ws) = framed(rnd.nextInt(frames.length))
-          WinFuzzCase(i, min(col("l_orderkey")).over(w),
+          ValueFuzzCase(i, min(col("l_orderkey")).over(w),
             s"MIN(l_orderkey) OVER ($ws)")
         case _ =>
           val k = 1 + rnd.nextInt(3)
-          WinFuzzCase(i, lag(cents, k).over(wTotal),
+          ValueFuzzCase(i, lag(cents, k).over(wTotal),
             s"LAG($centsSql, $k) OVER ($totalSql)")
       }
     }
@@ -228,10 +330,7 @@ object CoreGates {
     * an integer (days or a field number), so the per-case checksum row is
     * exact. o_orderdate is stored as TIMESTAMP in the testdata — both
     * engines start from an explicit CAST to DATE. */
-  private[graft] final case class DateFuzzCase(
-      id: Int, value: org.apache.spark.sql.Column, valueSql: String)
-
-  private[graft] lazy val dateFuzzCases: Seq[DateFuzzCase] = {
+  private[graft] lazy val dateFuzzCases: Seq[ValueFuzzCase] = {
     val rnd = new scala.util.Random(20261408L)
     val epoch = to_date(lit("1970-01-01"))
     (0 until 16).map { i =>
@@ -265,7 +364,7 @@ object CoreGates {
           s"(last_day($dSql) - DATE '1970-01-01')")
         case _ => (dayofweek(d) - 1, s"dayofweek($dSql)")
       }
-      DateFuzzCase(i, v.cast("long"), s"CAST($vSql AS BIGINT)")
+      ValueFuzzCase(i, v.cast("long"), s"CAST($vSql AS BIGINT)")
     }
   }
 
@@ -279,10 +378,7 @@ object CoreGates {
     * wrap on overflow while DuckDB BIGINTs raise — the bound keeps every
     * per-row value and every weighted sum exact in BOTH engines through
     * sf10. */
-  private[graft] final case class NumFuzzCase(
-      id: Int, value: org.apache.spark.sql.Column, valueSql: String)
-
-  private[graft] lazy val numFuzzCases: Seq[NumFuzzCase] = {
+  private[graft] lazy val numFuzzCases: Seq[ValueFuzzCase] = {
     val rnd = new scala.util.Random(140263L)
     type N = (org.apache.spark.sql.Column, String, Long)
     val centsQ: N = ((money(col("l_quantity")) * 100).cast("long") % 10000,
@@ -345,7 +441,7 @@ object CoreGates {
       (0 until depth).foreach { _ =>
         n = if (rnd.nextInt(3) == 0) unary(n) else combine(n, leaf())
       }
-      NumFuzzCase(i, n._1.cast("long"), s"CAST(${n._2} AS BIGINT)")
+      ValueFuzzCase(i, n._1.cast("long"), s"CAST(${n._2} AS BIGINT)")
     }
   }
 
@@ -359,10 +455,7 @@ object CoreGates {
     * generated grammar: substr positions start at 1 (position 0 is the
     * engines' one divergent convention), pad lengths exercise BOTH the
     * pad and truncate sides. */
-  private[graft] final case class StrFuzzCase(
-      id: Int, value: org.apache.spark.sql.Column, valueSql: String)
-
-  private[graft] lazy val strFuzzCases: Seq[StrFuzzCase] = {
+  private[graft] lazy val strFuzzCases: Seq[ValueFuzzCase] = {
     val rnd = new scala.util.Random(140262L)
     val bases = Seq("p_name", "p_type", "p_brand")
     def op(in: (org.apache.spark.sql.Column, String)): (org.apache.spark.sql.Column, String) = {
@@ -397,7 +490,7 @@ object CoreGates {
       val b = bases(rnd.nextInt(bases.length))
       val n = 1 + rnd.nextInt(3)
       val (c, s) = (1 to n).foldLeft((col(b), b)) { (acc, _) => op(acc) }
-      StrFuzzCase(i, c, s)
+      ValueFuzzCase(i, c, s)
     }
   }
 
@@ -431,10 +524,7 @@ object CoreGates {
     * Each case's per-row value is scaled by 10^scale into an exact BIGINT
     * while still DECIMAL-typed (never via a double→int cast: Spark
     * truncates those, DuckDB rounds half-even). */
-  private[graft] final case class DecFuzzCase(
-      id: Int, value: org.apache.spark.sql.Column, valueSql: String)
-
-  private[graft] lazy val decFuzzCases: Seq[DecFuzzCase] = {
+  private[graft] lazy val decFuzzCases: Seq[ValueFuzzCase] = {
     val rnd = new scala.util.Random(152601L)
     def pow10(k: Int): Long = { var r = 1L; (0 until k).foreach(_ => r *= 10); r }
     // (column, sql, scale, bound on |v|·10^scale)
@@ -537,11 +627,11 @@ object CoreGates {
         // DuckDB's quotient path is DOUBLE, so the scaled-integer checksum
         // re-rounds before the BIGINT cast (value is n ± ~1e-9, never near
         // a half boundary); Spark's stays DECIMAL-exact throughout
-        DecFuzzCase(i, (q._1 * pow10(s)).cast("long"),
+        ValueFuzzCase(i, (q._1 * pow10(s)).cast("long"),
           s"CAST(round((${q._2}) * ${pow10(s)}) AS BIGINT)")
       } else {
         val f = clamp(n)
-        DecFuzzCase(i, (f._1 * pow10(f._3)).cast("long"),
+        ValueFuzzCase(i, (f._1 * pow10(f._3)).cast("long"),
           s"CAST((${f._2}) * ${pow10(f._3)} AS BIGINT)")
       }
     }
@@ -565,6 +655,112 @@ object CoreGates {
       .option("client", "wire").option("port", port)
   }
 
+  /** Each click of the event log matched to the same user's purchase by
+    * an as-of join on exact-micros times (the q_asof_* gates): the most
+    * recent prior-or-equal purchase, or with `forward` the next one at or
+    * after the click; `keepUnmatched` keeps clicks with no match. */
+  private def clickPurchaseAsOf(s: SparkSession, dir: String,
+      forward: Boolean, keepUnmatched: Boolean): DataFrame = {
+    val ev = t(s, dir, "events")
+      .withColumn("ts_us", Tables.tsMicros(col("ts")))
+    val clicks = ev.where(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"), col("ts_us"))
+    val purchases = ev.where(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts_us"))
+    val join = if (forward) Joins.asOfForward _ else Joins.asOf _
+    val gap = if (forward) col("asof.p_ts_us") - col("ts_us")
+      else col("ts_us") - col("asof.p_ts_us")
+    join(clicks, col("user_id"), col("ts_us"),
+        purchases, col("user_id"), col("ts_us"),
+        Seq(col("purchase_id"), col("ts_us").as("p_ts_us")),
+        col("purchase_id"), keepUnmatched)
+      .select(col("click_id"), col("user_id"),
+        col("asof.purchase_id").as("purchase_id"), gap.as("gap_us"))
+  }
+
+  /** The WARC fixture of the src_warc_* gates, staged once per JVM under
+    * `tag` (stage key `tag#dir`, directory prefix `graft-tag`): the first
+    * 200 documents as HTTP response records with `<h1>Doc N</h1><p>text
+    * </p>` markup, written by `write` into 4 archive members
+    * `member_<m><suffix>`; read back with the HTTP header block peeled
+    * and the markup stripped. */
+  private def warcFixture(s: SparkSession, dir: String, tag: String,
+      suffix: String,
+      write: (Seq[graft.sources.Warc.WarcRecord], java.nio.file.Path) => Unit): DataFrame = {
+    val docs = t(s, dir, "documents")
+    val stage = stagedFeed(s"$tag#$dir", s"graft-$tag") { st =>
+      val rows = docs.where(col("doc_id") < 200)
+        .select(col("doc_id"), col("text"))
+        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+      val members = rows.groupBy { case (id, _) => id % 4 }
+      members.foreach { case (m, recs) =>
+        write(
+          recs.map { case (id, text) =>
+            val html = s"<html><body><h1>Doc $id</h1><p>$text</p></body></html>"
+            val payload = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" +
+              html).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            graft.sources.Warc.WarcRecord("response",
+              s"<urn:uuid:graft-$id>", s"http://graft.test/doc/$id",
+              payload.length.toLong, payload)
+          }.toSeq,
+          java.nio.file.Paths.get(s"$st/member_$m$suffix"))
+      }
+    }
+    graft.sources.Warc.readRecords(s, s"$stage/*$suffix").select(
+        regexp_extract(col("target_uri"), "doc/(\\d+)$", 1)
+          .cast("long").as("doc_id"),
+        col("target_uri"), col("warc_type"), col("content_length"),
+        TextAnalysis.stripHtml(
+          graft.sources.Warc.httpBody(col("payload"))).as("clean"))
+      .withColumn("n_clean_chars", length(col("clean")))
+  }
+
+  /** nation ⋈ region as (n_nationkey, n_name, r_name): the frame the
+    * sink and format round-trip gates write and read back. */
+  private def nationRegion(s: SparkSession, dir: String): DataFrame =
+    Joins.inner(t(s, dir, "nation"), "n_regionkey", t(s, dir, "region"), "r_regionkey")
+      .select("n_nationkey", "n_name", "r_name")
+
+  /** [[nationRegion]] written in `format` to a fresh temp dir and read
+    * back with the written schema. */
+  private def formatRoundtrip(s: SparkSession, dir: String, format: String,
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val out = exitManagedTempDir(s"graft_$format").toString
+    val df = nationRegion(s, dir)
+    df.write.mode("overwrite").options(options).format(format).save(out)
+    s.read.schema(df.schema).options(options).format(format).load(out)
+  }
+
+  /** nation zipped with region by key order (row i with row i) — shared
+    * by `j2_zipwith` and `j3_zip`. */
+  private val zipNationRegionSql =
+    """WITH l AS (SELECT n_nationkey, n_name,
+                         ROW_NUMBER() OVER (ORDER BY n_nationkey) AS rn FROM nation),
+            r AS (SELECT r_regionkey, r_name,
+                         ROW_NUMBER() OVER (ORDER BY r_regionkey) AS rn FROM region)
+       SELECT n_nationkey, n_name, r_regionkey, r_name FROM l JOIN r USING (rn)"""
+
+  /** Closed-form replay of the staged WARC fixture ([[warcFixture]]):
+    * uri/type from the id, declared length = 44-octet HTTP prefix + the
+    * staged markup, strip('<h1>Doc N</h1><p>text</p>') = 'Doc N text'
+    * exactly. */
+  private val warcOracleSql =
+    """SELECT doc_id,
+              'http://graft.test/doc/' || doc_id AS target_uri,
+              'response' AS warc_type,
+              CAST(44 + length('<html><body><h1>Doc ' || doc_id ||
+                '</h1><p>' || text || '</p></body></html>') AS BIGINT)
+                AS content_length,
+              'Doc ' || doc_id || ' ' || text AS clean,
+              CAST(length('Doc ' || doc_id || ' ' || text) AS BIGINT)
+                AS n_clean_chars
+       FROM documents WHERE doc_id < 200"""
+
+  /** The oracle of the sink and format round-trip gates. */
+  private val nationRegionSql =
+    """SELECT n_nationkey, n_name, r_name
+       FROM nation JOIN region ON n_regionkey = r_regionkey"""
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // The fuzz sweep extended to the ANALYTIC grammar: 12 seeded window
@@ -574,41 +770,16 @@ object CoreGates {
     // window evaluations fails the hash naming the case id. One window
     // pass + one aggregate per case; each case Catalyst-planned
     // independently (the window exec itself is under test).
-    "q_fuzz_window" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      winFuzzCases.map { c =>
-        li.select(c.value.as("v"),
-            (col("l_orderkey") % 97 + 1).as("wt"))
-          .agg(
-            count(col("v")).as("n_rows"),
-            sum(col("v")).as("sum_v"),
-            sum(col("v") * col("wt")).as("chk"),
-            min(col("v")).as("min_v"),
-            max(col("v")).as("max_v"))
-          .select(lit(c.id).as("case_id"), col("n_rows"), col("sum_v"),
-            col("chk"), col("min_v"), col("max_v"))
-      }.reduce(_ unionByName _)
-    }),
+    "q_fuzz_window" -> ((s, dir) =>
+      fuzzChecksums(t(s, dir, "lineitem"), winFuzzCases, Some("l_orderkey"))),
 
     // The fuzz sweep extended to CALENDAR arithmetic (see dateFuzzCases):
     // 16 seeded shift×terminal date expressions evaluated over every
     // order date and reduced to one integer-exact checksum row each —
     // month-clamping, ISO weeks, or DOW-origin divergence anywhere in
     // 2.4M date evaluations fails the hash naming the case id.
-    "q_fuzz_dates" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      dateFuzzCases.map { c =>
-        o.select(c.value.as("v"), (col("o_orderkey") % 97 + 1).as("wt"))
-          .agg(
-            count(col("v")).as("n_rows"),
-            sum(col("v")).as("sum_v"),
-            sum(col("v") * col("wt")).as("chk"),
-            min(col("v")).as("min_v"),
-            max(col("v")).as("max_v"))
-          .select(lit(c.id).as("case_id"), col("n_rows"), col("sum_v"),
-            col("chk"), col("min_v"), col("max_v"))
-      }.reduce(_ unionByName _)
-    }),
+    "q_fuzz_dates" -> ((s, dir) =>
+      fuzzChecksums(t(s, dir, "orders"), dateFuzzCases, Some("o_orderkey"))),
 
     // The fuzz sweep extended to INTEGER arithmetic (see numFuzzCases):
     // 16 seeded bounded op trees (+,-,*, toward-zero div/mod, two's-
@@ -616,20 +787,8 @@ object CoreGates {
     // one integer-exact checksum row per case — a sign-convention,
     // overflow-wrap, or bit-semantics divergence fails the hash naming
     // the case id.
-    "q_fuzz_numeric" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      numFuzzCases.map { c =>
-        li.select(c.value.as("v"), (col("l_orderkey") % 97 + 1).as("wt"))
-          .agg(
-            count(col("v")).as("n_rows"),
-            sum(col("v")).as("sum_v"),
-            sum(col("v") * col("wt")).as("chk"),
-            min(col("v")).as("min_v"),
-            max(col("v")).as("max_v"))
-          .select(lit(c.id).as("case_id"), col("n_rows"), col("sum_v"),
-            col("chk"), col("min_v"), col("max_v"))
-      }.reduce(_ unionByName _)
-    }),
+    "q_fuzz_numeric" -> ((s, dir) =>
+      fuzzChecksums(t(s, dir, "lineitem"), numFuzzCases, Some("l_orderkey"))),
 
     // The fuzz sweep extended to STRING functions (see strFuzzCases):
     // 16 seeded 1..3-deep function chains over the part table's string
@@ -637,21 +796,8 @@ object CoreGates {
     // summed length / summed 32-bit md5 prefix / bytewise min & max) —
     // a padding, truncation, replace, or case-mapping divergence anywhere
     // fails the hash naming the case id.
-    "q_fuzz_strings" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-      strFuzzCases.map { c =>
-        p.select(c.value.as("v"))
-          .agg(
-            count(col("v")).as("n_rows"),
-            sum(length(col("v"))).as("sum_len"),
-            sum(conv(substring(md5(col("v").cast("binary")), 1, 8), 16, 10)
-              .cast("long")).as("chk"),
-            min(col("v")).as("min_v"),
-            max(col("v")).as("max_v"))
-          .select(lit(c.id).as("case_id"), col("n_rows"), col("sum_len"),
-            col("chk"), col("min_v"), col("max_v"))
-      }.reduce(_ unionByName _)
-    }),
+    "q_fuzz_strings" -> ((s, dir) =>
+      fuzzChecksums(t(s, dir, "part"), strFuzzCases, None)),
 
     // The fuzz sweep extended to DECIMAL arithmetic (see decFuzzCases):
     // 16 seeded precision/scale-tracked op trees (+, -, ×, HALF_UP
@@ -660,20 +806,8 @@ object CoreGates {
     // checksum row — a scale-propagation, rounding-mode, or
     // decimal-overflow divergence anywhere in 600k evaluations fails the
     // hash naming the case id.
-    "q_fuzz_decimal" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      decFuzzCases.map { c =>
-        li.select(c.value.as("v"), (col("l_orderkey") % 97 + 1).as("wt"))
-          .agg(
-            count(col("v")).as("n_rows"),
-            sum(col("v")).as("sum_v"),
-            sum(col("v") * col("wt")).as("chk"),
-            min(col("v")).as("min_v"),
-            max(col("v")).as("max_v"))
-          .select(lit(c.id).as("case_id"), col("n_rows"), col("sum_v"),
-            col("chk"), col("min_v"), col("max_v"))
-      }.reduce(_ unionByName _)
-    }),
+    "q_fuzz_decimal" -> ((s, dir) =>
+      fuzzChecksums(t(s, dir, "lineitem"), decFuzzCases, Some("l_orderkey"))),
 
     // The fuzz sweep extended to JOINS: each seeded case filters both
     // sides and counts/sums the o_orderkey = l_orderkey equi-join —
@@ -760,69 +894,16 @@ object CoreGates {
     // is generated from the SAME FuzzCase list, so both engines run
     // machine-identical predicates — a combination either matches
     // row-for-row or the hash fails naming the case id.
-    "q_fuzz_parity" -> ((s, dir) => {
-      // LONG-BACKED conditional sums (r19 verdict #4, guide §2.3 narrower
-      // types): sum(decimal(18,2)) carries a decimal(28,2) buffer, which
-      // exceeds Spark's 18-digit compact-long Decimal bound — every one
-      // of the 32 conditional updates per row deserializes, adds and
-      // re-serializes a BigDecimal in the UnsafeRow buffer. l_quantity is
-      // exact in cents (integer-valued 1..50 here; decimal(18,2) in
-      // general), so the sum is computed over ONE per-row cents
-      // projection into plain long buffers and divided back once per
-      // output cell. VALUE-IDENTICAL: cents ≤ 5000/row keeps any
-      // realistic SF far from long overflow (sf100 ≈ 3e13 ≪ 2^63, and
-      // < 2^53 so the final division's numerator is also exact in
-      // double); both `cast(sum_decimal as double)` and `sum_cents/100.0`
-      // are the correctly-rounded double nearest S/100, and an empty
-      // case sums to NULL on both paths. The decimal-sum aggregation
-      // path itself stays differentially covered by q_fuzz_decimal and
-      // the money() sums in q1/q3/q10. Oracle SQL unchanged.
-      val li = t(s, dir, "lineitem")
-        .withColumn("__cents", (money(col("l_quantity")) * 100).cast("long"))
-      val aggs = fuzzCases.flatMap { c => Seq(
-        count(when(c.pred, 1)).as(s"n_${c.id}"),
-        sum(when(c.pred, col("__cents"))).as(s"qc_${c.id}"),
-        min(when(c.pred, col("l_orderkey"))).as(s"mn_${c.id}"),
-        max(when(c.pred, col("l_orderkey"))).as(s"mx_${c.id}")) }
-      val row = li.agg(aggs.head, aggs.tail: _*)
-        .select(fuzzCases.flatMap(c => Seq(
-          col(s"n_${c.id}"),
-          (col(s"qc_${c.id}") / lit(100.0)).as(s"q_${c.id}"),
-          col(s"mn_${c.id}"), col(s"mx_${c.id}"))): _*)
-      row.select(expr(s"stack(${fuzzCases.size}, " +
-        fuzzCases.map(c =>
-          s"${c.id}, n_${c.id}, q_${c.id}, mn_${c.id}, mx_${c.id}")
-          .mkString(", ") +
-        ") as (case_id, n_rows, sum_qty, min_ok, max_ok)"))
-    }),
+    "q_fuzz_parity" -> ((s, dir) => fuzzCondAggs(t(s, dir, "lineitem"), None)),
 
     // The fuzz sweep extended to the AGGREGATION grammar: the same 32
     // seeded predicates as conditional aggregates UNDER A GROUP BY — one
     // scan, one hash aggregate, per-(case, group) rows. Covers the
     // predicate × grouped-aggregation combination space the per-operator
-    // gates can't.
-    "q_fuzz_grouped" -> ((s, dir) => {
-      // long-backed conditional sums — the q_fuzz_parity rewrite (see its
-      // note for the exactness proof); the 96 aggregate buffers here were
-      // the single largest gate in the idle sweep, dominated by the
-      // 32 decimal(28,2) buffer updates per row.
-      val li = t(s, dir, "lineitem")
-        .withColumn("__cents", (money(col("l_quantity")) * 100).cast("long"))
-      val aggs = fuzzCases.flatMap { c => Seq(
-        count(when(c.pred, 1)).as(s"n_${c.id}"),
-        sum(when(c.pred, col("__cents"))).as(s"qc_${c.id}"),
-        max(when(c.pred, col("l_orderkey"))).as(s"mx_${c.id}")) }
-      val grouped = li.groupBy(col("l_returnflag")).agg(aggs.head, aggs.tail: _*)
-        .select(col("l_returnflag") +: fuzzCases.flatMap(c => Seq(
-          col(s"n_${c.id}"),
-          (col(s"qc_${c.id}") / lit(100.0)).as(s"q_${c.id}"),
-          col(s"mx_${c.id}"))): _*)
-      grouped.select(col("l_returnflag"), expr(
-        s"stack(${fuzzCases.size}, " +
-          fuzzCases.map(c => s"${c.id}, n_${c.id}, q_${c.id}, mx_${c.id}")
-            .mkString(", ") +
-          ") as (case_id, n_rows, sum_qty, max_ok)"))
-    }),
+    // gates can't. Its 96 aggregate buffers made it the single largest
+    // gate in the idle sweep before the long-backed sums.
+    "q_fuzz_grouped" -> ((s, dir) =>
+      fuzzCondAggs(t(s, dir, "lineitem"), Some("l_returnflag"))),
 
 
     // S1 — scan with predicate + projection pushdown (reference
@@ -1198,9 +1279,7 @@ object CoreGates {
     // schema + data survive the sink, oracle-checked).
     "s6_sink_roundtrip" -> ((s, dir) => {
       val out = exitManagedTempDir("graft_sink").toString
-      Joins.inner(t(s, dir, "nation"), "n_regionkey", t(s, dir, "region"), "r_regionkey")
-        .select("n_nationkey", "n_name", "r_name")
-        .write.mode("overwrite").parquet(out)
+      nationRegion(s, dir).write.mode("overwrite").parquet(out)
       s.read.parquet(out)
     }),
 
@@ -1296,13 +1375,7 @@ object CoreGates {
     // S6 sinks, more formats — CSV and JSON roundtrips: write the sink,
     // read it back with the written schema (proves schema + data survive
     // the format, oracle-checked like the parquet roundtrip).
-    "src_csv_roundtrip" -> ((s, dir) => {
-      val out = exitManagedTempDir("graft_csv").toString
-      val df = Joins.inner(t(s, dir, "nation"), "n_regionkey", t(s, dir, "region"), "r_regionkey")
-        .select("n_nationkey", "n_name", "r_name")
-      df.write.mode("overwrite").option("header", "true").csv(out)
-      s.read.schema(df.schema).option("header", "true").csv(out)
-    }),
+    "src_csv_roundtrip" -> ((s, dir) => formatRoundtrip(s, dir, "csv", Map("header" -> "true"))),
 
     // Text source, wholetext mode — raw-corpus ingestion (one document
     // per file, the layout crawl dumps and book corpora arrive in):
@@ -1326,21 +1399,9 @@ object CoreGates {
           col("value").as("text"))
     }),
 
-    "src_json_roundtrip" -> ((s, dir) => {
-      val out = exitManagedTempDir("graft_json").toString
-      val df = Joins.inner(t(s, dir, "nation"), "n_regionkey", t(s, dir, "region"), "r_regionkey")
-        .select("n_nationkey", "n_name", "r_name")
-      df.write.mode("overwrite").json(out)
-      s.read.schema(df.schema).json(out)
-    }),
+    "src_json_roundtrip" -> ((s, dir) => formatRoundtrip(s, dir, "json")),
 
-    "src_orc_roundtrip" -> ((s, dir) => {
-      val out = exitManagedTempDir("graft_orc").toString
-      val df = Joins.inner(t(s, dir, "nation"), "n_regionkey", t(s, dir, "region"), "r_regionkey")
-        .select("n_nationkey", "n_name", "r_name")
-      df.write.mode("overwrite").orc(out)
-      s.read.schema(df.schema).orc(out)
-    }),
+    "src_orc_roundtrip" -> ((s, dir) => formatRoundtrip(s, dir, "orc")),
 
 
     // §2.7 — full CUBE grouping sets (rollup's sibling).
@@ -1387,22 +1448,8 @@ object CoreGates {
     // each click matched to the user's most recent prior-or-equal purchase.
     // One shuffle on the key (union + per-key window), no range explosion.
     // Oracle: DuckDB's NATIVE ASOF JOIN. Time keys are exact micros longs.
-    "q_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .withColumn("ts_us", Tables.tsMicros(col("ts")))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts_us"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts_us"))
-      Joins.asOf(
-          clicks, col("user_id"), col("ts_us"),
-          purchases, col("user_id"), col("ts_us"),
-          rightPayload = Seq(col("purchase_id"), col("ts_us").as("p_ts_us")),
-          rightTieBreak = col("purchase_id"))
-        .select(col("click_id"), col("user_id"),
-          col("asof.purchase_id").as("purchase_id"),
-          (col("ts_us") - col("asof.p_ts_us")).as("gap_us"))
-    }),
+    "q_asof_join" -> ((s, dir) =>
+      clickPurchaseAsOf(s, dir, forward = false, keepUnmatched = false)),
 
 
     // FORWARD as-of — the NEXT purchase at or after each click (the
@@ -1410,43 +1457,14 @@ object CoreGates {
     // .asOfForward]] — the same one-shuffle window composition on
     // negated times). Oracle: DuckDB ASOF JOIN with the inequality
     // reversed.
-    "q_asof_forward" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .withColumn("ts_us", Tables.tsMicros(col("ts")))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts_us"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts_us"))
-      Joins.asOfForward(
-          clicks, col("user_id"), col("ts_us"),
-          purchases, col("user_id"), col("ts_us"),
-          rightPayload = Seq(col("purchase_id"), col("ts_us").as("p_ts_us")),
-          rightTieBreak = col("purchase_id"))
-        .select(col("click_id"), col("user_id"),
-          col("asof.purchase_id").as("purchase_id"),
-          (col("asof.p_ts_us") - col("ts_us")).as("gap_us"))
-    }),
+    "q_asof_forward" -> ((s, dir) =>
+      clickPurchaseAsOf(s, dir, forward = true, keepUnmatched = false)),
 
 
     // AS-OF join, LEFT variant — unmatched left rows survive with null
     // payload (`keepUnmatched = true`). Oracle: DuckDB ASOF LEFT JOIN.
-    "q_asof_left" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .withColumn("ts_us", Tables.tsMicros(col("ts")))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts_us"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts_us"))
-      Joins.asOf(
-          clicks, col("user_id"), col("ts_us"),
-          purchases, col("user_id"), col("ts_us"),
-          rightPayload = Seq(col("purchase_id"), col("ts_us").as("p_ts_us")),
-          rightTieBreak = col("purchase_id"),
-          keepUnmatched = true)
-        .select(col("click_id"), col("user_id"),
-          col("asof.purchase_id").as("purchase_id"),
-          (col("ts_us") - col("asof.p_ts_us")).as("gap_us"))
-    }),
+    "q_asof_left" -> ((s, dir) =>
+      clickPurchaseAsOf(s, dir, forward = false, keepUnmatched = true)),
 
 
     // §2.8 extension — session windows (gap-based): the stateful windowing
@@ -2036,35 +2054,8 @@ object CoreGates {
     // form over documents (the staged markup is `<h1>Doc N</h1><p>text
     // </p>`, whose strip is exactly 'Doc N text'; the HTTP prefix is 44
     // octets, and the corpus is ASCII so octets == chars).
-    "src_warc_ingest" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val stage = stagedFeed(s"warc#$dir", "graft-warc") { st =>
-        val rows = docs.where(col("doc_id") < 200)
-          .select(col("doc_id"), col("text"))
-          .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-        val members = rows.groupBy { case (id, _) => id % 4 }
-        members.foreach { case (m, recs) =>
-          graft.sources.Warc.writeMember(
-            recs.map { case (id, text) =>
-              val html = s"<html><body><h1>Doc $id</h1><p>$text</p></body></html>"
-              val payload = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" +
-                html).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-              graft.sources.Warc.WarcRecord("response",
-                s"<urn:uuid:graft-$id>", s"http://graft.test/doc/$id",
-                payload.length.toLong, payload)
-            }.toSeq,
-            java.nio.file.Paths.get(s"$st/member_$m.warc"))
-        }
-      }
-      val recs = graft.sources.Warc.readRecords(s, s"$stage/*.warc")
-      recs.select(
-          regexp_extract(col("target_uri"), "doc/(\\d+)$", 1)
-            .cast("long").as("doc_id"),
-          col("target_uri"), col("warc_type"), col("content_length"),
-          TextAnalysis.stripHtml(
-            graft.sources.Warc.httpBody(col("payload"))).as("clean"))
-        .withColumn("n_clean_chars", length(col("clean")))
-    }),
+    "src_warc_ingest" -> ((s, dir) =>
+      warcFixture(s, dir, "warc", ".warc", graft.sources.Warc.writeMember)),
 
 
     // GZIPPED WARC members (r15 verdict #3) — what Common Crawl actually
@@ -2074,35 +2065,8 @@ object CoreGates {
     // detects the 0x1f8b magic and inflates through the member-boundary-
     // transparent GZIPInputStream path, so rows must be BYTE-IDENTICAL to
     // the plain-text gate's — one oracle SQL serves both.
-    "src_warc_gz" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val stage = stagedFeed(s"warcgz#$dir", "graft-warcgz") { st =>
-        val rows = docs.where(col("doc_id") < 200)
-          .select(col("doc_id"), col("text"))
-          .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-        val members = rows.groupBy { case (id, _) => id % 4 }
-        members.foreach { case (m, recs) =>
-          graft.sources.Warc.writeMemberGz(
-            recs.map { case (id, text) =>
-              val html = s"<html><body><h1>Doc $id</h1><p>$text</p></body></html>"
-              val payload = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" +
-                html).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-              graft.sources.Warc.WarcRecord("response",
-                s"<urn:uuid:graft-$id>", s"http://graft.test/doc/$id",
-                payload.length.toLong, payload)
-            }.toSeq,
-            java.nio.file.Paths.get(s"$st/member_$m.warc.gz"))
-        }
-      }
-      val recs = graft.sources.Warc.readRecords(s, s"$stage/*.warc.gz")
-      recs.select(
-          regexp_extract(col("target_uri"), "doc/(\\d+)$", 1)
-            .cast("long").as("doc_id"),
-          col("target_uri"), col("warc_type"), col("content_length"),
-          TextAnalysis.stripHtml(
-            graft.sources.Warc.httpBody(col("payload"))).as("clean"))
-        .withColumn("n_clean_chars", length(col("clean")))
-    }),
+    "src_warc_gz" -> ((s, dir) =>
+      warcFixture(s, dir, "warcgz", ".warc.gz", graft.sources.Warc.writeMemberGz)),
 
 
     // Hive-style PARTITIONED layout — the other storage lever (with
@@ -2383,110 +2347,25 @@ object CoreGates {
       (outers ++ exists).mkString("\n          UNION ALL\n")
     },
 
-    // generated from the SAME WinFuzzCase list: identical window text,
-    // identical checksum aggregates; BIGINT casts keep DuckDB's
-    // HUGEINT-returning SUM off the hash surface
-    "q_fuzz_window" -> winFuzzCases.map { c =>
-      s"""SELECT ${c.id} AS case_id,
-            COUNT(v) AS n_rows,
-            CAST(SUM(v) AS BIGINT) AS sum_v,
-            CAST(SUM(v * wt) AS BIGINT) AS chk,
-            MIN(v) AS min_v,
-            MAX(v) AS max_v
-          FROM (SELECT CAST(${c.valueSql} AS BIGINT) AS v,
-                       l_orderkey % 97 + 1 AS wt
-                FROM lineitem)"""
-    }.mkString("\n          UNION ALL\n"),
+    // the five value grammars, each generated from the SAME case list as
+    // its gate: both engines evaluate machine-identical expressions
+    // (aligned where their builtin semantics differ: DOW origin,
+    // interval-add types, the decimal rules in decFuzzCases' scaladoc)
+    "q_fuzz_window" -> fuzzChecksumSql(
+      winFuzzCases.map(c => c.id -> s"CAST(${c.valueSql} AS BIGINT)"),
+      "lineitem", Some("l_orderkey")),
+    "q_fuzz_numeric" -> fuzzChecksumSql(
+      numFuzzCases.map(c => c.id -> c.valueSql), "lineitem", Some("l_orderkey")),
+    "q_fuzz_decimal" -> fuzzChecksumSql(
+      decFuzzCases.map(c => c.id -> c.valueSql), "lineitem", Some("l_orderkey")),
+    "q_fuzz_strings" -> fuzzChecksumSql(
+      strFuzzCases.map(c => c.id -> c.valueSql), "part", None),
+    "q_fuzz_dates" -> fuzzChecksumSql(
+      dateFuzzCases.map(c => c.id -> c.valueSql), "orders", Some("o_orderkey")),
 
-    // generated from the SAME NumFuzzCase list; SUMs BIGINT-cast (DuckDB
-    // SUM(BIGINT) widens to HUGEINT — the r13 lesson)
-    "q_fuzz_numeric" -> numFuzzCases.map { c =>
-      s"""SELECT ${c.id} AS case_id,
-            COUNT(v) AS n_rows,
-            CAST(SUM(v) AS BIGINT) AS sum_v,
-            CAST(SUM(v * wt) AS BIGINT) AS chk,
-            MIN(v) AS min_v,
-            MAX(v) AS max_v
-          FROM (SELECT ${c.valueSql} AS v,
-                       l_orderkey % 97 + 1 AS wt
-                FROM lineitem)"""
-    }.mkString("\n          UNION ALL\n"),
-
-    // generated from the SAME DecFuzzCase list; per-row values are exact
-    // scaled BIGINTs on both sides (see decFuzzCases scaladoc for the
-    // engine-alignment ground rules), sums BIGINT-cast (HUGEINT lesson)
-    "q_fuzz_decimal" -> decFuzzCases.map { c =>
-      s"""SELECT ${c.id} AS case_id,
-            COUNT(v) AS n_rows,
-            CAST(SUM(v) AS BIGINT) AS sum_v,
-            CAST(SUM(v * wt) AS BIGINT) AS chk,
-            MIN(v) AS min_v,
-            MAX(v) AS max_v
-          FROM (SELECT ${c.valueSql} AS v,
-                       l_orderkey % 97 + 1 AS wt
-                FROM lineitem)"""
-    }.mkString("\n          UNION ALL\n"),
-
-    // generated from the SAME StrFuzzCase list as the gate; sum_len is
-    // BIGINT-cast (the HUGEINT lesson), the md5-prefix checksum parses
-    // the same 8 hex chars both sides
-    "q_fuzz_strings" -> strFuzzCases.map { c =>
-      s"""SELECT ${c.id} AS case_id,
-            COUNT(v) AS n_rows,
-            CAST(SUM(length(v)) AS BIGINT) AS sum_len,
-            CAST(SUM(CAST(('0x' || substr(md5(v), 1, 8))::UBIGINT AS BIGINT))
-              AS BIGINT) AS chk,
-            MIN(v) AS min_v,
-            MAX(v) AS max_v
-          FROM (SELECT ${c.valueSql} AS v FROM part)"""
-    }.mkString("\n          UNION ALL\n"),
-
-    // generated from the SAME DateFuzzCase list as the gate — both
-    // engines evaluate machine-identical calendar expressions (the Spark
-    // Column tree and this SQL come from one generator, aligned where the
-    // engines' builtin semantics differ: DOW origin, interval-add types)
-    "q_fuzz_dates" -> dateFuzzCases.map { c =>
-      s"""SELECT ${c.id} AS case_id,
-            COUNT(v) AS n_rows,
-            CAST(SUM(v) AS BIGINT) AS sum_v,
-            CAST(SUM(v * wt) AS BIGINT) AS chk,
-            MIN(v) AS min_v,
-            MAX(v) AS max_v
-          FROM (SELECT ${c.valueSql} AS v,
-                       o_orderkey % 97 + 1 AS wt
-                FROM orders)"""
-    }.mkString("\n          UNION ALL\n"),
-
-    // generated from the SAME FuzzCase list as the gate: per case, the
-    // identical machine-made predicate inside the identical conditional
-    // aggregates (COUNT / decimal-exact SUM / MIN / MAX), one row each
-    "q_fuzz_parity" -> {
-      val cases = fuzzCases.map { c =>
-        s"""SELECT ${c.id} AS case_id,
-              COUNT(CASE WHEN ${c.sql} THEN 1 END) AS n_rows,
-              CAST(SUM(CASE WHEN ${c.sql} THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_qty,
-              MIN(CASE WHEN ${c.sql} THEN l_orderkey END) AS min_ok,
-              MAX(CASE WHEN ${c.sql} THEN l_orderkey END) AS max_ok
-            FROM base"""
-      }.mkString("\n          UNION ALL\n")
-      "WITH base AS MATERIALIZED (SELECT l_quantity, l_linenumber, " +
-        "l_orderkey, l_returnflag, l_linestatus, l_discount FROM lineitem)\n" +
-        cases
-    },
-
-    // the same FuzzCase list under a GROUP BY — per-(case, group) rows
-    "q_fuzz_grouped" -> {
-      val cases = fuzzCases.map { c =>
-        s"""SELECT l_returnflag, ${c.id} AS case_id,
-              COUNT(CASE WHEN ${c.sql} THEN 1 END) AS n_rows,
-              CAST(SUM(CASE WHEN ${c.sql} THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_qty,
-              MAX(CASE WHEN ${c.sql} THEN l_orderkey END) AS max_ok
-            FROM base GROUP BY l_returnflag"""
-      }.mkString("\n          UNION ALL\n")
-      "WITH base AS MATERIALIZED (SELECT l_quantity, l_linenumber, " +
-        "l_orderkey, l_returnflag, l_linestatus, l_discount FROM lineitem)\n" +
-        cases
-    },
+    // generated from the SAME FuzzCase list as the gate
+    "q_fuzz_parity" -> fuzzCondAggsSql(None),
+    "q_fuzz_grouped" -> fuzzCondAggsSql(Some("l_returnflag")),
 
     "s21_client_parquet" ->
       """SELECT c_custkey, c_name, c_acctbal FROM customer
@@ -2622,12 +2501,7 @@ object CoreGates {
                   AS boosted_bal
          FROM customer WHERE c_acctbal > 5000.0""",
 
-    "j3_zip" ->
-      """WITH l AS (SELECT n_nationkey, n_name,
-                           ROW_NUMBER() OVER (ORDER BY n_nationkey) AS rn FROM nation),
-              r AS (SELECT r_regionkey, r_name,
-                           ROW_NUMBER() OVER (ORDER BY r_regionkey) AS rn FROM region)
-         SELECT n_nationkey, n_name, r_regionkey, r_name FROM l JOIN r USING (rn)""",
+    "j3_zip" -> zipNationRegionSql,
 
     "j4_zip_limit" ->
       """WITH l AS (SELECT n_nationkey, n_name,
@@ -2650,13 +2524,9 @@ object CoreGates {
                     FROM events WHERE event_type = 'view')
          SELECT click_id, click_user, view_id, view_user FROM c JOIN v USING (rn)""",
 
-    "s6_sink_roundtrip" ->
-      """SELECT n_nationkey, n_name, r_name
-         FROM nation JOIN region ON n_regionkey = r_regionkey""",
+    "s6_sink_roundtrip" -> nationRegionSql,
 
-    "src_csv_roundtrip" ->
-      """SELECT n_nationkey, n_name, r_name
-         FROM nation JOIN region ON n_regionkey = r_regionkey""",
+    "src_csv_roundtrip" -> nationRegionSql,
 
     // the merged view the two-era read must produce: early rows carry
     // NULL for the column their files never had
@@ -2669,13 +2539,9 @@ object CoreGates {
     "src_text_roundtrip" ->
       """SELECT doc_id, text FROM documents WHERE doc_id < 25""",
 
-    "src_json_roundtrip" ->
-      """SELECT n_nationkey, n_name, r_name
-         FROM nation JOIN region ON n_regionkey = r_regionkey""",
+    "src_json_roundtrip" -> nationRegionSql,
 
-    "src_orc_roundtrip" ->
-      """SELECT n_nationkey, n_name, r_name
-         FROM nation JOIN region ON n_regionkey = r_regionkey""",
+    "src_orc_roundtrip" -> nationRegionSql,
 
     "q_window_range" ->
       """SELECT user_id, event_id,
@@ -2685,11 +2551,7 @@ object CoreGates {
                   AS sum_cents_1h
          FROM events""",
 
-    "t_stateful_running" ->
-      """SELECT user_id, COUNT(*) AS events,
-                CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
-                  AS sum_cents
-         FROM events GROUP BY user_id""",
+    "t_stateful_running" -> runningCentsOracleSql,
 
     "q_cube" ->
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
@@ -2711,12 +2573,7 @@ object CoreGates {
          FROM lineitem
          GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""",
 
-    "j2_zipwith" ->
-      """WITH l AS (SELECT n_nationkey, n_name,
-                           ROW_NUMBER() OVER (ORDER BY n_nationkey) AS rn FROM nation),
-              r AS (SELECT r_regionkey, r_name,
-                           ROW_NUMBER() OVER (ORDER BY r_regionkey) AS rn FROM region)
-         SELECT n_nationkey, n_name, r_regionkey, r_name FROM l JOIN r USING (rn)""",
+    "j2_zipwith" -> zipNationRegionSql,
 
     "u1_either" ->
       """SELECT 'left' AS side, c_name AS name FROM customer
@@ -2834,42 +2691,13 @@ object CoreGates {
                 true AS parts_within_tol, true AS orders_within_tol
          FROM lineitem""",
 
-    "q_range_join" ->
-      """SELECT i.event_id AS spike_id, p.event_id AS click_id, p.user_id,
-                epoch_us(p.ts) - epoch_us(i.ts) AS gap_us
-         FROM (SELECT * FROM events WHERE event_type = 'error' AND value > 150.0) i
-         JOIN (SELECT * FROM events WHERE event_type = 'click') p
-           ON epoch_us(p.ts) >= epoch_us(i.ts)
-          AND epoch_us(p.ts) <= epoch_us(i.ts) + 600000000""",
+    "q_range_join" -> rangeJoinOracleSql,
 
-    // closed-form replay of the staged WARC fixture: uri/type from the
-    // id, declared length = 44-octet HTTP prefix + the staged markup,
-    // strip('<h1>Doc N</h1><p>text</p>') = 'Doc N text' exactly
-    "src_warc_ingest" ->
-      """SELECT doc_id,
-                'http://graft.test/doc/' || doc_id AS target_uri,
-                'response' AS warc_type,
-                CAST(44 + length('<html><body><h1>Doc ' || doc_id ||
-                  '</h1><p>' || text || '</p></body></html>') AS BIGINT)
-                  AS content_length,
-                'Doc ' || doc_id || ' ' || text AS clean,
-                CAST(length('Doc ' || doc_id || ' ' || text) AS BIGINT)
-                  AS n_clean_chars
-         FROM documents WHERE doc_id < 200""",
+    "src_warc_ingest" -> warcOracleSql,
 
-    // gzipped twin: the layout is storage-only — rows must equal the
-    // plain member gate's exactly, so the oracle is the same closed form
-    "src_warc_gz" ->
-      """SELECT doc_id,
-                'http://graft.test/doc/' || doc_id AS target_uri,
-                'response' AS warc_type,
-                CAST(44 + length('<html><body><h1>Doc ' || doc_id ||
-                  '</h1><p>' || text || '</p></body></html>') AS BIGINT)
-                  AS content_length,
-                'Doc ' || doc_id || ' ' || text AS clean,
-                CAST(length('Doc ' || doc_id || ' ' || text) AS BIGINT)
-                  AS n_clean_chars
-         FROM documents WHERE doc_id < 200""",
+    // the gzipped layout is storage-only: rows must equal the plain
+    // member gate's exactly
+    "src_warc_gz" -> warcOracleSql,
 
     // binaryFile ingestion of the staged id range — same closed form
     "src_binaryfile_media" ->
@@ -2880,11 +2708,7 @@ object CoreGates {
                 CAST(doc_id % 256 AS DOUBLE) AS mean_red
          FROM documents WHERE doc_id < 100""",
 
-    "q_time_window" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
-                COUNT(*) AS n,
-                CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2""",
+    "q_time_window" -> hourWindowOracleSql,
 
     // the right side is pre-deduped per (user_id, ts) to max(event_id):
     // DuckDB's ASOF JOIN leaves the pick among equal-timestamp matches
@@ -2922,19 +2746,7 @@ object CoreGates {
                          GROUP BY user_id, ts) p
            ON c.user_id = p.user_id AND c.ts >= p.ts""",
 
-    "q_session_window" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-              m AS (SELECT user_id, us,
-                           CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL
-                                  OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us) >= 7200000000
-                                THEN 1 ELSE 0 END AS new_s
-                    FROM e),
-              s AS (SELECT user_id, us,
-                           SUM(new_s) OVER (PARTITION BY user_id ORDER BY us
-                                            ROWS UNBOUNDED PRECEDING) AS sid
-                    FROM m)
-         SELECT user_id, MIN(us) AS session_start_us, COUNT(*) AS n_events
-         FROM s GROUP BY user_id, sid""",
+    "q_session_window" -> sessionWindowOracleSql,
 
     "q_window_rank" ->
       """SELECT l_orderkey, l_linenumber, l_extendedprice, rn FROM (
@@ -3101,13 +2913,7 @@ object CoreGates {
          FULL JOIN (SELECT * FROM lineitem WHERE l_quantity >= 49.0) l
            ON p_partkey = l_partkey""",
 
-    "q_sliding_window" ->
-      """SELECT time_bucket(INTERVAL '30 minutes', ts) - o.off AS window_start, event_type,
-                COUNT(*) AS n,
-                CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events,
-              (VALUES (INTERVAL '0 minutes'), (INTERVAL '30 minutes')) o(off)
-         GROUP BY 1, 2""",
+    "q_sliding_window" -> slidingWindowOracleSql,
 
     "q_join_semi" ->
       """SELECT c_custkey, c_name FROM customer

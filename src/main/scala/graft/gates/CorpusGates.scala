@@ -133,13 +133,40 @@ object CorpusGates {
     s"WITH ${bpeChainSql(n)}\n${rows.mkString("\nUNION ALL\n")}"
   }
 
-  private[gates] def bpeEncodeOracleSql(n: Int, byteLevel: Boolean = false): String =
+  /** Greedy 512-token bins per md5 shard (8 shards) over whole-word
+    * token counts — shared by `corpus_pack_budget` and `pipe_pretokenize`
+    * (the composed pipe's token counts are the same single-space split
+    * lengths). */
+  private val packBudgetOracleSql =
+    """WITH d AS (
+         SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
+                CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT % 8 AS INT) AS shard
+         FROM documents),
+         r AS (
+         SELECT doc_id, shard, n_tokens,
+                CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+                                         ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS tok_before
+         FROM d)
+       SELECT doc_id, shard, n_tokens,
+              CAST(floor(tok_before / 512.0) AS BIGINT) AS bin,
+              tok_before % 512 AS bin_offset
+       FROM r"""
+
+  /** The BPE encode prelude over `n` merges: the merge chain, each word
+    * type's final subtokens (`fin`), and `j`, every non-empty token
+    * occurrence (doc_id, and its position unless `withPos` is off) joined
+    * to its subtokens `sub`. */
+  private def bpeEncodePrelude(n: Int, byteLevel: Boolean = false,
+      withPos: Boolean = true): String =
     s"""WITH ${bpeChainSql(n, byteLevel)},
         fin AS MATERIALIZED (SELECT w, list_filter(string_split(replace(seg, chr(31), ''), chr(30)), x -> x <> '') AS sub FROM w$n),
         sdoc AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         tk AS MATERIALIZED (SELECT doc_id, unnest(range(1, len(ws) + 1)) AS pos, unnest(ws) AS w FROM sdoc),
         tf AS MATERIALIZED (SELECT doc_id, pos, w FROM tk WHERE length(w) > 0),
-        j AS MATERIALIZED (SELECT tf.doc_id, tf.pos, f.sub FROM tf JOIN fin f ON tf.w = f.w)
+        j AS MATERIALIZED (SELECT tf.doc_id, ${if (withPos) "tf.pos, " else ""}f.sub FROM tf JOIN fin f ON tf.w = f.w)"""
+
+  private[gates] def bpeEncodeOracleSql(n: Int, byteLevel: Boolean = false): String =
+    s"""${bpeEncodePrelude(n, byteLevel)}
       SELECT doc_id, CAST(SUM(len(sub)) AS BIGINT) AS n_subtokens,
              array_to_string(flatten(list(sub ORDER BY pos)), ' ') AS subtokens
       FROM j GROUP BY doc_id"""
@@ -148,12 +175,7 @@ object CorpusGates {
     * per-doc subtoken counts feed the same md5-shard greedy bin assignment
     * the whole-word pipe_pretokenize oracle replays. */
   private def bpePretokenizeOracleSql(n: Int): String =
-    s"""WITH ${bpeChainSql(n)},
-        fin AS MATERIALIZED (SELECT w, list_filter(string_split(replace(seg, chr(31), ''), chr(30)), x -> x <> '') AS sub FROM w$n),
-        sdoc AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        tk AS MATERIALIZED (SELECT doc_id, unnest(range(1, len(ws) + 1)) AS pos, unnest(ws) AS w FROM sdoc),
-        tf AS MATERIALIZED (SELECT doc_id, pos, w FROM tk WHERE length(w) > 0),
-        j AS MATERIALIZED (SELECT tf.doc_id, f.sub FROM tf JOIN fin f ON tf.w = f.w),
+    s"""${bpeEncodePrelude(n, withPos = false)},
         e AS MATERIALIZED (SELECT doc_id, CAST(SUM(len(sub)) AS BIGINT) AS n_tokens FROM j GROUP BY doc_id),
         d AS MATERIALIZED (SELECT doc_id, n_tokens,
                CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT % 8 AS INT) AS shard
@@ -171,12 +193,7 @@ object CorpusGates {
     * long sums, one double division per ratio — IEEE-identical across
     * engines since both divide the same exact operands. */
   private def bpeFertilityOracleSql(n: Int): String =
-    s"""WITH ${bpeChainSql(n)},
-        fin AS MATERIALIZED (SELECT w, list_filter(string_split(replace(seg, chr(31), ''), chr(30)), x -> x <> '') AS sub FROM w$n),
-        sdoc AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        tk AS MATERIALIZED (SELECT doc_id, unnest(range(1, len(ws) + 1)) AS pos, unnest(ws) AS w FROM sdoc),
-        tf AS MATERIALIZED (SELECT doc_id, pos, w FROM tk WHERE length(w) > 0),
-        j AS MATERIALIZED (SELECT tf.doc_id, f.sub FROM tf JOIN fin f ON tf.w = f.w),
+    s"""${bpeEncodePrelude(n, withPos = false)},
         e AS MATERIALIZED (SELECT doc_id, CAST(SUM(len(sub)) AS BIGINT) AS n_subtokens FROM j GROUP BY doc_id),
         m AS MATERIALIZED (SELECT d.source,
                CAST(len(list_filter(string_split(d.text, ' '), x -> x <> '')) AS BIGINT) AS n_words,
@@ -199,12 +216,7 @@ object CorpusGates {
   private def bpePretrainedOracleSql(n: Int): String = {
     val mergedRows = (1 to n).map(i =>
       s"SELECT $i AS rank, l || r AS merged FROM b$i").mkString("\nUNION ALL\n")
-    s"""WITH ${bpeChainSql(n)},
-        fin AS MATERIALIZED (SELECT w, list_filter(string_split(replace(seg, chr(31), ''), chr(30)), x -> x <> '') AS sub FROM w$n),
-        sdoc AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        tk AS MATERIALIZED (SELECT doc_id, unnest(range(1, len(ws) + 1)) AS pos, unnest(ws) AS w FROM sdoc),
-        tf AS MATERIALIZED (SELECT doc_id, pos, w FROM tk WHERE length(w) > 0),
-        j AS MATERIALIZED (SELECT tf.doc_id, tf.pos, f.sub FROM tf JOIN fin f ON tf.w = f.w),
+    s"""${bpeEncodePrelude(n)},
         wrd AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
         chs AS (SELECT DISTINCT unnest(string_split(w, '')) AS sym FROM wrd WHERE length(w) > 0),
         vb AS MATERIALIZED (SELECT sym, CAST(ROW_NUMBER() OVER (ORDER BY sym ASC) - 1 AS BIGINT) AS id FROM chs),
@@ -223,12 +235,7 @@ object CorpusGates {
   /** The encode chain's per-word-occurrence symbol stream, counted and
     * ranked like the corpus_vocab oracle. */
   private def bpeVocabOracleSql(n: Int): String =
-    s"""WITH ${bpeChainSql(n)},
-        fin AS MATERIALIZED (SELECT w, list_filter(string_split(replace(seg, chr(31), ''), chr(30)), x -> x <> '') AS sub FROM w$n),
-        sdoc AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        tk AS MATERIALIZED (SELECT doc_id, unnest(range(1, len(ws) + 1)) AS pos, unnest(ws) AS w FROM sdoc),
-        tf AS MATERIALIZED (SELECT doc_id, pos, w FROM tk WHERE length(w) > 0),
-        j AS MATERIALIZED (SELECT tf.doc_id, f.sub FROM tf JOIN fin f ON tf.w = f.w),
+    s"""${bpeEncodePrelude(n, withPos = false)},
         occ AS MATERIALIZED (SELECT unnest(sub) AS sym FROM j),
         v AS MATERIALIZED (SELECT sym, CAST(COUNT(*) AS BIGINT) AS cnt FROM occ GROUP BY sym)
       SELECT sym, cnt,
@@ -983,32 +990,15 @@ object CorpusGates {
     // the text_perplexity xent CTE + the stratified-sample langid CASE,
     // then the same per-language (xent, doc_id) tercile
     "corpus_ccnet_buckets" ->
-      """WITH s AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           tok AS (SELECT doc_id,
-                          unnest(range(1, len(ws) + 1)) AS pos,
-                          unnest(ws) AS w
-                   FROM s),
-           vocab AS (SELECT w, COUNT(*) AS cnt FROM tok GROUP BY w),
-           tot AS (SELECT COUNT(*) AS total FROM tok),
-           lp AS (SELECT doc_id, pos,
-                         -ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE)) AS lp
-                  FROM tok JOIN vocab USING (w) CROSS JOIN tot),
-           g AS (SELECT doc_id, list(lp ORDER BY pos) AS lps FROM lp GROUP BY doc_id),
+      s"""WITH $unigramLogProbCtes,
            x AS (SELECT doc_id,
-                        list_reduce(list_prepend(0.0, lps), (a, b) -> a + b) / len(lps) AS xent
+                        $meanLogProbSql AS xent
                  FROM g),
            h AS (SELECT doc_id, text,
-                len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS en,
-                len(regexp_extract_all(text, '\b(der|die|das|und|ist|nicht|ein|zu|mit|den)\b')) AS de,
-                len(regexp_extract_all(text, '\b(le|la|les|et|est|un|une|de|que|pour)\b')) AS fr,
-                len(regexp_extract_all(text, '\b(el|la|los|las|es|un|una|que|de|por)\b')) AS es
+                $langHitsSql
               FROM documents),
            l AS (SELECT doc_id,
-                CASE WHEN en > 0 AND en = greatest(en, de, fr, es) THEN 'en'
-                     WHEN de > 0 AND de = greatest(en, de, fr, es) THEN 'de'
-                     WHEN fr > 0 AND fr = greatest(en, de, fr, es) THEN 'fr'
-                     WHEN es > 0 AND es = greatest(en, de, fr, es) THEN 'es'
-                     ELSE 'und' END AS lang
+                $langCaseSql AS lang
               FROM h),
            tcl AS (SELECT x.doc_id, l.lang, x.xent,
                           ntile(3) OVER (PARTITION BY l.lang
@@ -1020,24 +1010,15 @@ object CorpusGates {
          FROM tcl""",
 
     "pipe_clean_corpus" ->
-      """WITH b AS (SELECT doc_id, text,
+      s"""WITH b AS (SELECT doc_id, text,
                 length(text) AS n_chars,
                 len(string_split(text, ' ')) AS n_words,
-                len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS en,
-                len(regexp_extract_all(text, '\b(der|die|das|und|ist|nicht|ein|zu|mit|den)\b')) AS de,
-                len(regexp_extract_all(text, '\b(le|la|les|et|est|un|une|de|que|pour)\b')) AS fr,
-                len(regexp_extract_all(text, '\b(el|la|los|las|es|un|una|que|de|por)\b')) AS es,
+                $langHitsSql,
                 len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha
               FROM documents),
               q AS (SELECT doc_id, n_words,
-                least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4 +
-                least(CAST(en AS DOUBLE) / CAST(n_words AS DOUBLE) * 5.0, 1.0) * 0.3 +
-                CAST(n_alpha AS DOUBLE) / NULLIF(CAST(n_chars AS DOUBLE), 0) * 0.3 AS quality,
-                CASE WHEN en > 0 AND en = greatest(en, de, fr, es) THEN 'en'
-                     WHEN de > 0 AND de = greatest(en, de, fr, es) THEN 'de'
-                     WHEN fr > 0 AND fr = greatest(en, de, fr, es) THEN 'fr'
-                     WHEN es > 0 AND es = greatest(en, de, fr, es) THEN 'es'
-                     ELSE 'und' END AS pred_lang
+                ${qualityScoreSql("en")} AS quality,
+                $langCaseSql AS pred_lang
               FROM b),
               k AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY MD5(text))
          SELECT q.doc_id, n_words AS ws_tokens, quality
@@ -1048,7 +1029,7 @@ object CorpusGates {
     // the pipe_clean_corpus oracle plus the train split and the
     // text_decontaminate shingle CTE, composed over the same seeded text
     "pipe_training_corpus" ->
-      """WITH seeded AS (
+      s"""WITH seeded AS (
            SELECT doc_id,
                   CASE WHEN doc_id < 40 OR doc_id % 10 = 3
                        THEN text || ' the quick brown fox jumps over the lazy dog tonight'
@@ -1057,21 +1038,12 @@ object CorpusGates {
            b AS (SELECT doc_id, text,
                 length(text) AS n_chars,
                 len(string_split(text, ' ')) AS n_words,
-                len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS en,
-                len(regexp_extract_all(text, '\b(der|die|das|und|ist|nicht|ein|zu|mit|den)\b')) AS de,
-                len(regexp_extract_all(text, '\b(le|la|les|et|est|un|une|de|que|pour)\b')) AS fr,
-                len(regexp_extract_all(text, '\b(el|la|los|las|es|un|una|que|de|por)\b')) AS es,
+                $langHitsSql,
                 len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha
               FROM seeded),
            q AS (SELECT doc_id, n_words,
-                least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4 +
-                least(CAST(en AS DOUBLE) / CAST(n_words AS DOUBLE) * 5.0, 1.0) * 0.3 +
-                CAST(n_alpha AS DOUBLE) / NULLIF(CAST(n_chars AS DOUBLE), 0) * 0.3 AS quality,
-                CASE WHEN en > 0 AND en = greatest(en, de, fr, es) THEN 'en'
-                     WHEN de > 0 AND de = greatest(en, de, fr, es) THEN 'de'
-                     WHEN fr > 0 AND fr = greatest(en, de, fr, es) THEN 'fr'
-                     WHEN es > 0 AND es = greatest(en, de, fr, es) THEN 'es'
-                     ELSE 'und' END AS pred_lang
+                ${qualityScoreSql("en")} AS quality,
+                $langCaseSql AS pred_lang
               FROM b),
            k AS (SELECT MIN(doc_id) AS doc_id FROM seeded GROUP BY MD5(text)),
            s2 AS (SELECT doc_id, string_split(text, ' ') AS w FROM seeded),
@@ -1091,18 +1063,11 @@ object CorpusGates {
            AND q.doc_id NOT IN (SELECT doc_id FROM contam)""",
 
     "corpus_stratified_sample" ->
-      """WITH h AS (SELECT doc_id, text,
-                len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS en,
-                len(regexp_extract_all(text, '\b(der|die|das|und|ist|nicht|ein|zu|mit|den)\b')) AS de,
-                len(regexp_extract_all(text, '\b(le|la|les|et|est|un|une|de|que|pour)\b')) AS fr,
-                len(regexp_extract_all(text, '\b(el|la|los|las|es|un|una|que|de|por)\b')) AS es
+      s"""WITH h AS (SELECT doc_id, text,
+                $langHitsSql
               FROM documents),
               l AS (SELECT doc_id,
-                CASE WHEN en > 0 AND en = greatest(en, de, fr, es) THEN 'en'
-                     WHEN de > 0 AND de = greatest(en, de, fr, es) THEN 'de'
-                     WHEN fr > 0 AND fr = greatest(en, de, fr, es) THEN 'fr'
-                     WHEN es > 0 AND es = greatest(en, de, fr, es) THEN 'es'
-                     ELSE 'und' END AS lang
+                $langCaseSql AS lang
               FROM h)
          SELECT doc_id, lang FROM l
          WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT % 100 <
@@ -1137,16 +1102,11 @@ object CorpusGates {
     // the TopK-Aggregator cap is equivalent to the window form for finite
     // scores (score desc, doc_id asc is a total order)
     "corpus_source_cap" ->
-      """WITH b AS (SELECT doc_id, source,
-                length(text) AS n_chars,
-                len(string_split(text, ' ')) AS n_words,
-                len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS n_stop,
-                len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha
+      s"""WITH b AS (SELECT doc_id, source,
+                ${qualityInputsSql()}
               FROM documents),
            q AS (SELECT doc_id, source,
-                least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4 +
-                least(CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE) * 5.0, 1.0) * 0.3 +
-                CAST(n_alpha AS DOUBLE) / NULLIF(CAST(n_chars AS DOUBLE), 0) * 0.3 AS score
+                ${qualityScoreSql()} AS score
               FROM b),
            r AS (SELECT source, doc_id, score,
                         ROW_NUMBER() OVER (PARTITION BY source
@@ -1208,16 +1168,11 @@ object CorpusGates {
     // same quality formula (bit-equal per text_quality's hash), same
     // per-source ntile(2) cut
     "corpus_quality_filter" ->
-      """WITH b AS (SELECT doc_id, source,
-                length(text) AS n_chars,
-                len(string_split(text, ' ')) AS n_words,
-                len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS n_stop,
-                len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha
+      s"""WITH b AS (SELECT doc_id, source,
+                ${qualityInputsSql()}
               FROM documents),
             q AS (SELECT doc_id, source,
-                least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4 +
-                least(CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE) * 5.0, 1.0) * 0.3 +
-                CAST(n_alpha AS DOUBLE) / NULLIF(CAST(n_chars AS DOUBLE), 0) * 0.3 AS quality
+                ${qualityScoreSql()} AS quality
               FROM b)
          SELECT doc_id, source, quality FROM q
          QUALIFY ntile(2) OVER (PARTITION BY source
@@ -1280,37 +1235,11 @@ object CorpusGates {
          ORDER BY samp_key DESC, doc_id ASC
          LIMIT 60""",
 
-    "corpus_pack_budget" ->
-      """WITH d AS (
-           SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
-                  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT % 8 AS INT) AS shard
-           FROM documents),
-           r AS (
-           SELECT doc_id, shard, n_tokens,
-                  CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                                           ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS tok_before
-           FROM d)
-         SELECT doc_id, shard, n_tokens,
-                CAST(floor(tok_before / 512.0) AS BIGINT) AS bin,
-                tok_before % 512 AS bin_offset
-         FROM r""",
+    "corpus_pack_budget" -> packBudgetOracleSql,
 
     // the composed pipe's token counts are the same single-space split
     // lengths, so the pack stage's oracle is the corpus_pack_budget SQL
-    "pipe_pretokenize" ->
-      """WITH d AS (
-           SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
-                  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT % 8 AS INT) AS shard
-           FROM documents),
-           r AS (
-           SELECT doc_id, shard, n_tokens,
-                  CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                                           ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS tok_before
-           FROM d)
-         SELECT doc_id, shard, n_tokens,
-                CAST(floor(tok_before / 512.0) AS BIGINT) AS bin,
-                tok_before % 512 AS bin_offset
-         FROM r""",
+    "pipe_pretokenize" -> packBudgetOracleSql,
 
     // identical 64/48 windowing replayed with unnest(range) + 1-based
     // inclusive list slicing (both engines clamp the final window)
@@ -1485,7 +1414,7 @@ object CorpusGates {
     // (both proven bit-stable by their own gates); RRF then only touches
     // integer ranks inside one fixed float expression
     "pipe_hybrid_retrieval" ->
-      """WITH qmap AS (SELECT * FROM (VALUES (0::BIGINT,'spark'),(1::BIGINT,'hash'),
+      s"""WITH qmap AS (SELECT * FROM (VALUES (0::BIGINT,'spark'),(1::BIGINT,'hash'),
                                              (2::BIGINT,'window')) AS v(qid, term)),
               tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term,
                              len(list_filter(string_split(text,' '), w -> w <> '')) AS dl
@@ -1512,12 +1441,7 @@ object CorpusGates {
               e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
               qv AS (SELECT vec_id AS qid, v FROM e WHERE vec_id < 3),
               dn AS (SELECT qv.qid, c.vec_id AS doc_id,
-                            CASE WHEN list_dot_product(qv.v, qv.v) = 0
-                                   OR list_dot_product(c.v, c.v) = 0 THEN NULL
-                                 ELSE list_dot_product(qv.v, c.v) /
-                                      (sqrt(list_dot_product(qv.v, qv.v)) *
-                                       sqrt(list_dot_product(c.v, c.v)))
-                            END AS cos
+                            ${cosineSql("qv", "c")} AS cos
                      FROM qv JOIN e c ON TRUE),
               dr AS (SELECT qid, doc_id, cos,
                             ROW_NUMBER() OVER (PARTITION BY qid
@@ -1542,7 +1466,7 @@ object CorpusGates {
     // chunking + the text_quality scoring (IEEE-identical doubles) +
     // row_number arg-max + embedding payload join
     "pipe_rag_index" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
               c AS (SELECT doc_id, toks,
                            CASE WHEN len(toks) <= 64 THEN 1
                                 ELSE CAST(ceil((len(toks) - 16) / 48.0) AS INT)
@@ -1553,15 +1477,10 @@ object CorpusGates {
                             array_to_string(toks[chunk_id*48+1 : chunk_id*48+64], ' ') AS chunk_text
                      FROM x),
               b AS (SELECT doc_id, chunk_id,
-                           length(chunk_text) AS n_chars,
-                           len(string_split(chunk_text, ' ')) AS n_words,
-                           len(regexp_extract_all(chunk_text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS n_stop,
-                           len(regexp_extract_all(chunk_text, '[A-Za-z]')) AS n_alpha
+                           ${qualityInputsSql("chunk_text")}
                     FROM ch),
               q AS (SELECT doc_id, chunk_id,
-                           least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4 +
-                           least(CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE) * 5.0, 1.0) * 0.3 +
-                           CAST(n_alpha AS DOUBLE) / NULLIF(CAST(n_chars AS DOUBLE), 0) * 0.3 AS quality
+                           ${qualityScoreSql()} AS quality
                     FROM b),
               r AS (SELECT doc_id, chunk_id, quality,
                            row_number() OVER (PARTITION BY doc_id

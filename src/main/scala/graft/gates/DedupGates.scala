@@ -22,6 +22,12 @@ object DedupGates {
 
   import GateSupport.{shingleCte, jaccardPairsSql, natEdgesCtes}
 
+  /** Every vector pair `a.vec_id < b.vec_id` of `e` with its cosine. */
+  private val cosinePairsCte =
+    s"""p AS (
+          SELECT a.vec_id AS id_a, b.vec_id AS id_b, ${cosineSql("a", "b")} AS cos
+          FROM e a JOIN e b ON a.vec_id < b.vec_id)"""
+
   /** dedup_semantic oracle: min-label closure over the θ=0.45 cosine
     * edges as `rounds` UNROLLED hop+jump CTE rounds — the Spark
     * operator's own pointer-jumping recurrence
@@ -49,12 +55,7 @@ object DedupGates {
     }.mkString(",\n")
     s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                    CASE WHEN list_dot_product(a.v, a.v) = 0
-                           OR list_dot_product(b.v, b.v) = 0 THEN NULL
-                         ELSE list_dot_product(a.v, b.v) /
-                              (sqrt(list_dot_product(a.v, a.v)) *
-                               sqrt(list_dot_product(b.v, b.v)))
-                    END AS cos
+                    ${cosineSql("a", "b")} AS cos
              FROM e a JOIN e b ON a.vec_id < b.vec_id),
        pe AS MATERIALIZED (SELECT id_a, id_b FROM p WHERE cos >= 0.45),
        edges AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM pe
@@ -63,6 +64,18 @@ object DedupGates {
        $body
      SELECT em.vec_id, l.lab AS canon_id, (l.lab = em.vec_id) AS kept
      FROM e em JOIN l$rounds l ON l.node = em.vec_id"""
+  }
+
+  /** (doc_id, text) of the documents plus 40 identical boilerplate docs
+    * (ids 900000+): a planted template cluster that puts 40 rows in one
+    * LSH bucket per band. */
+  private def withPlantedTemplate(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val planted = s.range(40).select(
+      (col("id") + 900000L).as("doc_id"),
+      lit("the same boilerplate template navigation footer text " +
+        "repeated verbatim across every crawled page").as("text"))
+    docs.unionByName(planted)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -255,12 +268,7 @@ object DedupGates {
     // the same brute oracle as the uncapped gate, now proving both that
     // the cap removes the mega-bucket and that it removes nothing else.
     "dedup_minhash_capped" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val planted = s.range(40).select(
-        (col("id") + 900000L).as("doc_id"),
-        lit("the same boilerplate template navigation footer text " +
-          "repeated verbatim across every crawled page").as("text"))
-      Dedup.minHashLshPairs(docs.unionByName(planted), "doc_id", "text",
+      Dedup.minHashLshPairs(withPlantedTemplate(s, dir), "doc_id", "text",
         shingleLen = 3, bands = 16, rowsPerBand = 4, threshold = 0.8,
         maxBucketSize = 32)
     }),
@@ -276,12 +284,7 @@ object DedupGates {
     // the same sharp oracle that proved the opt-in cap, now proving the
     // shipped default.
     "dedup_neardup_default" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val planted = s.range(40).select(
-        (col("id") + 900000L).as("doc_id"),
-        lit("the same boilerplate template navigation footer text " +
-          "repeated verbatim across every crawled page").as("text"))
-      Dedup.nearDupPairs(docs.unionByName(planted), "doc_id", "text")
+      Dedup.nearDupPairs(withPlantedTemplate(s, dir), "doc_id", "text")
     }),
 
 
@@ -493,20 +496,13 @@ object DedupGates {
     * by `dedup_embedding_cosine_t90` and `dedup_neardup_embeddings`
     * (identical planting, identical exact answer; one definition). */
   private val twinCosine90Sql =
-    """WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
             e AS (SELECT vec_id, v FROM base
                   UNION ALL
                   SELECT vec_id + 100000 AS vec_id,
                          list_transform(v, x -> x * 2) AS v
                   FROM base),
-            p AS (
-              SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                     CASE WHEN list_dot_product(a.v, a.v) = 0
-                            OR list_dot_product(b.v, b.v) = 0 THEN NULL
-                          ELSE list_dot_product(a.v, b.v) /
-                               (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-                     END AS cos
-              FROM e a JOIN e b ON a.vec_id < b.vec_id)
+            $cosinePairsCte
        SELECT id_a, id_b, cos FROM p WHERE cos >= 0.9"""
 
   val oracleSql: Map[String, String] = Map(
@@ -725,10 +721,7 @@ object DedupGates {
     // — lexicographic on the same IEEE doubles the text_quality oracle
     // already matches bit-for-bit
     "dedup_keep_best" ->
-      // raw interpolator: the quality regex's \b word boundaries must
-      // stay literal (the s interpolator processes escapes even in
-      // triple quotes and would turn them into backspace chars)
-      raw"""WITH RECURSIVE
+      s"""WITH RECURSIVE
            $shingleCte,
            $natEdgesCtes,
            edges AS (SELECT da AS a, db AS b FROM nat
@@ -740,10 +733,7 @@ object DedupGates {
            member AS (SELECT d.doc_id, coalesce(cc.canon, d.doc_id) AS canon_id
                       FROM documents d LEFT JOIN cc ON cc.node = d.doc_id),
            b AS (SELECT doc_id,
-                        length(text) AS n_chars,
-                        len(string_split(text, ' ')) AS n_words,
-                        len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS n_stop,
-                        len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha
+                        ${qualityInputsSql()}
                  FROM documents),
            -- NULLIF mirrors the engine's try_divide NULL-on-zero (a
            -- zero-length text would otherwise be NaN here, and DuckDB
@@ -751,9 +741,7 @@ object DedupGates {
            -- ranks the NULL-quality row last — the divergence would
            -- SELECT the keeper, not just shade a value)
            q AS (SELECT doc_id,
-                        least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4 +
-                        least(CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE) * 5.0, 1.0) * 0.3 +
-                        CAST(n_alpha AS DOUBLE) / NULLIF(CAST(n_chars AS DOUBLE), 0) * 0.3 AS quality
+                        ${qualityScoreSql()} AS quality
                  FROM b),
            r AS (SELECT m.canon_id, q.doc_id, q.quality,
                         row_number() OVER (PARTITION BY m.canon_id
@@ -769,15 +757,8 @@ object DedupGates {
     // oracle encodes the same convention explicitly (NULL never passes
     // the >= threshold filter in either engine).
     "dedup_embedding_cosine" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              p AS (
-                SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                       CASE WHEN list_dot_product(a.v, a.v) = 0
-                              OR list_dot_product(b.v, b.v) = 0 THEN NULL
-                            ELSE list_dot_product(a.v, b.v) /
-                                 (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-                       END AS cos
-                FROM e a JOIN e b ON a.vec_id < b.vec_id)
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+              $cosinePairsCte
          SELECT id_a, id_b, cos FROM p WHERE cos >= 0.45""",
 
     // exact all-pairs cosine edges (the SQL proven by

@@ -403,6 +403,143 @@ private[graft] object GateSupport {
            SELECT r.src, e2.dst FROM reach r JOIN e e2 ON r.dst = e2.src)
        SELECT src, dst FROM reach"""
 
+  /** Sliding 1 h windows every 30 min: count and decimal-exact value sum
+    * per event type — shared by `q_sliding_window` and
+    * `s5_stream_sliding`. */
+  val slidingWindowOracleSql =
+    """SELECT time_bucket(INTERVAL '30 minutes', ts) - o.off AS window_start, event_type,
+              COUNT(*) AS n,
+              CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+       FROM events,
+            (VALUES (INTERVAL '0 minutes'), (INTERVAL '30 minutes')) o(off)
+       GROUP BY 1, 2"""
+
+  /** Gap-based (2 h) sessions per user by gaps-and-islands — shared by
+    * `q_session_window` and `s5_stream_session` (the streaming form must
+    * converge to exactly the batch answer). */
+  val sessionWindowOracleSql =
+    """WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events),
+            m AS (SELECT user_id, us,
+                         CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL
+                                OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us) >= 7200000000
+                              THEN 1 ELSE 0 END AS new_s
+                  FROM e),
+            s AS (SELECT user_id, us,
+                         SUM(new_s) OVER (PARTITION BY user_id ORDER BY us
+                                          ROWS UNBOUNDED PRECEDING) AS sid
+                  FROM m)
+       SELECT user_id, MIN(us) AS session_start_us, COUNT(*) AS n_events
+       FROM s GROUP BY user_id, sid"""
+
+  /** Hourly tumbling-window count and decimal-exact value sum per event
+    * type — shared by `q_time_window` and `s4_stream_window`. */
+  val hourWindowOracleSql =
+    """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
+              COUNT(*) AS n,
+              CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+       FROM events GROUP BY 1, 2"""
+
+  /** Error spikes joined to the clicks of the next 10 minutes — shared by
+    * `q_range_join` and `s9_stream_range_join` (the streaming form must
+    * converge to exactly the batch answer). */
+  val rangeJoinOracleSql =
+    """SELECT i.event_id AS spike_id, p.event_id AS click_id, p.user_id,
+              epoch_us(p.ts) - epoch_us(i.ts) AS gap_us
+       FROM (SELECT * FROM events WHERE event_type = 'error' AND value > 150.0) i
+       JOIN (SELECT * FROM events WHERE event_type = 'click') p
+         ON epoch_us(p.ts) >= epoch_us(i.ts)
+        AND epoch_us(p.ts) <= epoch_us(i.ts) + 600000000"""
+
+  /** Per-user event count and exact-cents value sum — shared by
+    * `t_stateful_running` and `t_stream_stateful`. */
+  val runningCentsOracleSql =
+    """SELECT user_id, COUNT(*) AS events,
+              CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
+                AS sum_cents
+       FROM events GROUP BY user_id"""
+
+  /** The language-ID stopword lists, in argmax priority order. */
+  private val stopwordLists = Seq(
+    "en" -> "the|a|of|and|to|in|is|it|that|for",
+    "de" -> "der|die|das|und|ist|nicht|ein|zu|mit|den",
+    "fr" -> "le|la|les|et|est|un|une|de|que|pour",
+    "es" -> "el|la|los|las|es|un|una|que|de|por")
+
+  /** DuckDB count of `lang`'s whole-word stopword hits in column `text`.
+    * The `\\b` escapes yield a literal `\b`: an oracle that writes one in
+    * its own `s"""` text gets a backspace, as the s interpolator processes
+    * escapes even in triple quotes. */
+  def stopHitsSql(lang: String, text: String = "text"): String =
+    s"len(regexp_extract_all($text, '\\b(${stopwordLists.toMap.apply(lang)})\\b'))"
+
+  /** The stopword-hit columns (`en, de, fr, es`) of the language-ID
+    * oracles. */
+  val langHitsSql: String =
+    stopwordLists.map { case (l, _) => s"${stopHitsSql(l)} AS $l" }.mkString(",\n")
+
+  /** Language-ID argmax over [[langHitsSql]]: the first language with the
+    * most hits, 'und' when none hits. */
+  val langCaseSql: String = {
+    val all = stopwordLists.map(_._1).mkString(", ")
+    stopwordLists.map { case (l, _) => s"WHEN $l > 0 AND $l = greatest($all) THEN '$l'" }
+      .mkString("CASE ", "\n", " ELSE 'und' END")
+  }
+
+  /** The quality-score inputs `n_chars, n_words, n_stop, n_alpha` of
+    * column `text`. */
+  def qualityInputsSql(text: String = "text"): String =
+    s"""length($text) AS n_chars,
+        len(string_split($text, ' ')) AS n_words,
+        ${stopHitsSql("en", text)} AS n_stop,
+        len(regexp_extract_all($text, '[A-Za-z]')) AS n_alpha"""
+
+  /** The quality score over n_words, n_alpha, n_chars and the English
+    * stopword count column `stops`. */
+  def qualityScoreSql(stops: String = "n_stop"): String =
+    s"""least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4 +
+        least(CAST($stops AS DOUBLE) / CAST(n_words AS DOUBLE) * 5.0, 1.0) * 0.3 +
+        CAST(n_alpha AS DOUBLE) / NULLIF(CAST(n_chars AS DOUBLE), 0) * 0.3"""
+
+  /** Per-token unigram log-probabilities over the whole corpus: CTEs
+    * `s, tok, vocab, tot, lp, g`, ending in each document's position-ordered
+    * list `lps` (shared by the perplexity oracles). */
+  val unigramLogProbCtes =
+    """s AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+       tok AS (SELECT doc_id,
+                      unnest(range(1, len(ws) + 1)) AS pos,
+                      unnest(ws) AS w
+               FROM s),
+       vocab AS (SELECT w, COUNT(*) AS cnt FROM tok GROUP BY w),
+       tot AS (SELECT COUNT(*) AS total FROM tok),
+       lp AS (SELECT doc_id, pos,
+                     -ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE)) AS lp
+              FROM tok JOIN vocab USING (w) CROSS JOIN tot),
+       g AS (SELECT doc_id, list(lp ORDER BY pos) AS lps FROM lp GROUP BY doc_id)"""
+
+  /** Mean of a document's `lps` by the zero-seeded position-ordered fold
+    * the Spark side runs. */
+  val meanLogProbSql = "list_reduce(list_prepend(0.0, lps), (a, b) -> a + b) / len(lps)"
+
+  /** Bigram CTEs `s, b, bb, c2`: every (doc, position, w1, w2) and the
+    * corpus count of each (w1, w2). */
+  val bigramCtes =
+    """s AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+       b AS (SELECT doc_id, unnest(range(0, len(w) - 1)) AS pos, w
+             FROM s WHERE len(w) >= 2),
+       bb AS (SELECT doc_id, pos, w[pos+1] AS w1, w[pos+2] AS w2 FROM b),
+       c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM bb GROUP BY 1, 2)"""
+
+  /** Term-frequency CTEs `tok, tf, df, n`: per-document counts of terms
+    * seen at least twice, their document frequency and the document
+    * count. */
+  val tfDfCtes =
+    """tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+               FROM documents),
+       tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
+              GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+       df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
+       n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents)"""
+
   /** Chunk-windowing oracle (64-token windows, stride 48) — shared by
     * `corpus_chunk` and `s11_stream_chunk` (the streaming twin must
     * converge to exactly the batch answer, so one SQL serves both; a
@@ -598,25 +735,36 @@ private[graft] object GateSupport {
                           JOIN sz zb ON inter.db = zb.doc_id
                WHERE CAST(i AS DOUBLE) / CAST(za.z + zb.z - i AS DOUBLE) >= 0.8)"""
 
+  /** DuckDB cosine of the `v` vectors of rows `a` and `b`; NULL when
+    * either norm is zero (the engine's try_divide convention — plain
+    * division would give NaN, which DuckDB sorts above every value). */
+  def cosineSql(a: String, b: String): String =
+    s"""CASE WHEN list_dot_product($a.v, $a.v) = 0
+              OR list_dot_product($b.v, $b.v) = 0 THEN NULL
+            ELSE list_dot_product($a.v, $b.v) /
+                 (sqrt(list_dot_product($a.v, $a.v)) * sqrt(list_dot_product($b.v, $b.v)))
+       END"""
+
+  /** Cosine top-5 per query: `scored` (each query row `q` against each
+    * candidate row `c` of `from`), `ranked` (score desc, id asc, zero-norm
+    * pairs dropped) and the final top-5 select. */
+  def cosineTop5Sql(from: String): String =
+    s"""scored AS (
+          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, ${cosineSql("q", "c")} AS s
+          FROM $from),
+        ranked AS (
+          SELECT query_id, neighbor_id, s,
+                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id ASC) AS rank
+          FROM scored WHERE s IS NOT NULL)
+       SELECT query_id, neighbor_id, s AS score, CAST(rank AS INT) AS rank
+       FROM ranked WHERE rank <= 5"""
+
   /** Brute-force cosine top-k oracle — shared by `sim_brute_topk` and
     * `sim_ivf_exhaustive` (IVF probing every cell IS exhaustive search). */
   val bruteTopkSql =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
             q AS (SELECT * FROM e WHERE vec_id < 10),
-            scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     CASE WHEN list_dot_product(q.v, q.v) = 0
-                            OR list_dot_product(c.v, c.v) = 0 THEN NULL
-                          ELSE list_dot_product(q.v, c.v) /
-                               (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v)))
-                     END AS s
-              FROM q JOIN e c ON q.vec_id <> c.vec_id),
-            ranked AS (
-              SELECT query_id, neighbor_id, s,
-                     ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id ASC) AS rank
-              FROM scored WHERE s IS NOT NULL)
-       SELECT query_id, neighbor_id, s AS score, CAST(rank AS INT) AS rank
-       FROM ranked WHERE rank <= 5"""
+            ${cosineTop5Sql("q JOIN e c ON q.vec_id <> c.vec_id")}"""
 
   /** Full SQL replication of `Similarity.lshTopK(k=5, nPlanes=6)`: the
     * seeded hyperplanes are deterministic, so their exact values are
@@ -633,20 +781,7 @@ private[graft] object GateSupport {
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
             b AS (SELECT vec_id, v, $bucket AS bucket FROM e),
             q AS (SELECT * FROM b WHERE vec_id < 10),
-            scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     CASE WHEN list_dot_product(q.v, q.v) = 0
-                            OR list_dot_product(c.v, c.v) = 0 THEN NULL
-                          ELSE list_dot_product(q.v, c.v) /
-                               (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v)))
-                     END AS s
-              FROM q JOIN b c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id),
-            ranked AS (
-              SELECT query_id, neighbor_id, s,
-                     ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id ASC) AS rank
-              FROM scored WHERE s IS NOT NULL)
-       SELECT query_id, neighbor_id, s AS score, CAST(rank AS INT) AS rank
-       FROM ranked WHERE rank <= 5"""
+            ${cosineTop5Sql("q JOIN b c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id")}"""
   }
 
   /** Full SQL replication of `Similarity.lshMultiProbeTopK(k=5, nPlanes=6,
@@ -681,22 +816,8 @@ private[graft] object GateSupport {
               UNION ALL
               SELECT q.vec_id, xor(q.bucket, CAST(1 AS BIGINT) << f.j) AS bucket
               FROM q JOIN f USING (vec_id)),
-            scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     CASE WHEN list_dot_product(q.v, q.v) = 0
-                            OR list_dot_product(c.v, c.v) = 0 THEN NULL
-                          ELSE list_dot_product(q.v, c.v) /
-                               (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v)))
-                     END AS s
-              FROM probes p
-              JOIN q ON q.vec_id = p.vec_id
-              JOIN b c ON c.bucket = p.bucket AND q.vec_id <> c.vec_id),
-            ranked AS (
-              SELECT query_id, neighbor_id, s,
-                     ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id ASC) AS rank
-              FROM scored WHERE s IS NOT NULL)
-       SELECT query_id, neighbor_id, s AS score, CAST(rank AS INT) AS rank
-       FROM ranked WHERE rank <= 5"""
+            ${cosineTop5Sql("probes p JOIN q ON q.vec_id = p.vec_id " +
+              "JOIN b c ON c.bucket = p.bucket AND q.vec_id <> c.vec_id")}"""
   }
 
 }

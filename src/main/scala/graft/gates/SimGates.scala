@@ -19,6 +19,41 @@ import graft.gates.GateSupport._
   */
 object SimGates {
 
+  /** The invariants of a PQ ADC probe (sim_pq_topk, sim_ivfpq_topk), per
+    * query: result and distinct-neighbor counts, ranks equal to the
+    * recomputed (score desc, id asc) sequence, and every ADC score equal
+    * to dot(q̂, decode(codes)) — the codes fetched back from `pq` — within
+    * float re-association tolerance (the two formulations sum the same
+    * terms in different order). */
+  private def pqInvariants(probe: DataFrame, pq: Similarity.PqIndex,
+      queries: DataFrame): DataFrame = {
+    // decode(codes): concat of the selected per-subspace centroids —
+    // reconstructed corpus vector in the quantized space
+    val decoded = pq.encoded.select(col("neighbor_id"),
+      flatten(zip_with(col("codes"),
+        typedLit((0 until pq.m).map(j => pq.codebooks(j).map(_.toSeq).toSeq)),
+        (c, book) => element_at(book, c + lit(1)))).as("rv"))
+    val qn = queries.select(col("vec_id").as("query_id"),
+      transform(col("embedding").cast("array<double>"),
+        x => x / Similarity.l2norm(col("embedding"))).as("qvn"))
+    val checked = probe
+      .join(decoded, Seq("neighbor_id"))
+      .join(broadcast(qn), Seq("query_id"))
+      .withColumn("recon", Similarity.dot(col("qvn"), col("rv")))
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("neighbor_id").asc)
+    checked
+      .withColumn("expected_rank", row_number().over(w))
+      .groupBy(col("query_id"))
+      .agg(
+        count(lit(1)).cast("int").as("n_results"),
+        countDistinct(col("neighbor_id")).cast("int").as("n_distinct"),
+        sum(when(col("rank") === col("expected_rank"), 1).otherwise(0))
+          .cast("int").as("n_rank_ok"),
+        (max(abs(col("score") - col("recon"))) < 1e-9).as("scores_match_recon"))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Per-label embedding centroids — the deterministic sorted-fold AUDIT
@@ -205,10 +240,8 @@ object SimGates {
     // score codes via per-query lookup tables. Differential gate: trained
     // codebooks are not SQL-expressible, but a correct ADC probe must emit
     // exactly k distinct ranked rows per query AND its LUT-summed score
-    // must match an independent reconstruction — dot(q̂, decode(codes)),
-    // the codes fetched back from the registered index — within float
-    // re-association tolerance (the two formulations sum the same terms
-    // in different order). SimilaritySpec keeps planted-twin recall.
+    // must match an independent reconstruction ([[pqInvariants]]).
+    // SimilaritySpec keeps planted-twin recall.
     "sim_pq_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.where(col("vec_id") < 10)
@@ -216,31 +249,7 @@ object SimGates {
           "vec_id", "embedding", k = 5, m = 8, ksub = 16,
           indexKey = Some(s"$dir#pq8x16"))
       val index = Similarity.pqBuildOrGet(s"$dir#pq8x16", emb, "vec_id", "embedding")
-      // decode(codes): concat of the selected per-subspace centroids —
-      // reconstructed corpus vector in the quantized space
-      val decoded = index.encoded.select(col("neighbor_id"),
-        flatten(zip_with(col("codes"),
-          typedLit((0 until index.m).map(j => index.codebooks(j).map(_.toSeq).toSeq)),
-          (c, book) => element_at(book, c + lit(1)))).as("rv"))
-      val qn = queries.select(col("vec_id").as("query_id"),
-        transform(col("embedding").cast("array<double>"),
-          x => x / Similarity.l2norm(col("embedding"))).as("qvn"))
-      val checked = probe
-        .join(decoded, Seq("neighbor_id"))
-        .join(broadcast(qn), Seq("query_id"))
-        .withColumn("recon", Similarity.dot(col("qvn"), col("rv")))
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("neighbor_id").asc)
-      checked
-        .withColumn("expected_rank", row_number().over(w))
-        .groupBy(col("query_id"))
-        .agg(
-          count(lit(1)).cast("int").as("n_results"),
-          countDistinct(col("neighbor_id")).cast("int").as("n_distinct"),
-          sum(when(col("rank") === col("expected_rank"), 1).otherwise(0))
-            .cast("int").as("n_rank_ok"),
-          (max(abs(col("score") - col("recon"))) < 1e-9).as("scores_match_recon"))
+      pqInvariants(probe, index, queries)
     }),
 
 
@@ -259,29 +268,7 @@ object SimGates {
       val pq = Similarity.pqBuildOrGet(s"$dir#pq8x16", emb, "vec_id", "embedding")
       val probe = Similarity.ivfPqTopK(ivf, pq, queries,
         "vec_id", "embedding", k = 5, nprobe = 3)
-      val decoded = pq.encoded.select(col("neighbor_id"),
-        flatten(zip_with(col("codes"),
-          typedLit((0 until pq.m).map(j => pq.codebooks(j).map(_.toSeq).toSeq)),
-          (c, book) => element_at(book, c + lit(1)))).as("rv"))
-      val qn = queries.select(col("vec_id").as("query_id"),
-        transform(col("embedding").cast("array<double>"),
-          x => x / Similarity.l2norm(col("embedding"))).as("qvn"))
-      val checked = probe
-        .join(decoded, Seq("neighbor_id"))
-        .join(broadcast(qn), Seq("query_id"))
-        .withColumn("recon", Similarity.dot(col("qvn"), col("rv")))
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("neighbor_id").asc)
-      checked
-        .withColumn("expected_rank", row_number().over(w))
-        .groupBy(col("query_id"))
-        .agg(
-          count(lit(1)).cast("int").as("n_results"),
-          countDistinct(col("neighbor_id")).cast("int").as("n_distinct"),
-          sum(when(col("rank") === col("expected_rank"), 1).otherwise(0))
-            .cast("int").as("n_rank_ok"),
-          (max(abs(col("score") - col("recon"))) < 1e-9).as("scores_match_recon"))
+      pqInvariants(probe, pq, queries)
     }),
 
 
@@ -329,49 +316,35 @@ object SimGates {
     // where Spark's 0.0 seed yields +0.0)
     // full two-iteration Lloyd replay: same seeds (k smallest ids), same
     // seeded-fold distances and centroid means, same (dist, cl) tie-break
-    "sim_kmeans" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    "sim_kmeans" -> {
+      def assign(k: Int) =
+        s"""d$k AS (SELECT e.vec_id, c.cl,
+                          list_reduce(list_prepend(0.0,
+                            [ (e.v[i] - c.cent[i]) * (e.v[i] - c.cent[i])
+                              for i in range(1, len(e.v) + 1) ]),
+                            (a, b) -> a + b) AS dist
+                   FROM e CROSS JOIN c${k - 1} c)"""
+      def step(k: Int) =
+        s"""${assign(k)},
+            a$k AS (SELECT vec_id, cl FROM d$k
+                   QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cl) = 1),
+            x$k AS (SELECT a.cl, e.vec_id, UNNEST(range(0, len(e.v))) AS pos, UNNEST(e.v) AS val
+                   FROM a$k a JOIN e USING (vec_id)),
+            g$k AS (SELECT cl, pos, list(val ORDER BY vec_id) AS vs FROM x$k GROUP BY cl, pos),
+            p$k AS (SELECT cl, pos,
+                          list_reduce(list_prepend(0.0, vs), (a, b) -> a + b) / len(vs) AS cv
+                   FROM g$k),
+            c$k AS (SELECT cl, list(cv ORDER BY pos) AS cent FROM p$k GROUP BY cl)"""
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
             c0 AS (SELECT CAST(rn - 1 AS INT) AS cl, v AS cent
                    FROM (SELECT v, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM e)
                    WHERE rn <= 8),
-            d1 AS (SELECT e.vec_id, c.cl,
-                          list_reduce(list_prepend(0.0,
-                            [ (e.v[i] - c.cent[i]) * (e.v[i] - c.cent[i])
-                              for i in range(1, len(e.v) + 1) ]),
-                            (a, b) -> a + b) AS dist
-                   FROM e CROSS JOIN c0 c),
-            a1 AS (SELECT vec_id, cl FROM d1
-                   QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cl) = 1),
-            x1 AS (SELECT a.cl, e.vec_id, UNNEST(range(0, len(e.v))) AS pos, UNNEST(e.v) AS val
-                   FROM a1 a JOIN e USING (vec_id)),
-            g1 AS (SELECT cl, pos, list(val ORDER BY vec_id) AS vs FROM x1 GROUP BY cl, pos),
-            p1 AS (SELECT cl, pos,
-                          list_reduce(list_prepend(0.0, vs), (a, b) -> a + b) / len(vs) AS cv
-                   FROM g1),
-            c1 AS (SELECT cl, list(cv ORDER BY pos) AS cent FROM p1 GROUP BY cl),
-            d2 AS (SELECT e.vec_id, c.cl,
-                          list_reduce(list_prepend(0.0,
-                            [ (e.v[i] - c.cent[i]) * (e.v[i] - c.cent[i])
-                              for i in range(1, len(e.v) + 1) ]),
-                            (a, b) -> a + b) AS dist
-                   FROM e CROSS JOIN c1 c),
-            a2 AS (SELECT vec_id, cl FROM d2
-                   QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cl) = 1),
-            x2 AS (SELECT a.cl, e.vec_id, UNNEST(range(0, len(e.v))) AS pos, UNNEST(e.v) AS val
-                   FROM a2 a JOIN e USING (vec_id)),
-            g2 AS (SELECT cl, pos, list(val ORDER BY vec_id) AS vs FROM x2 GROUP BY cl, pos),
-            p2 AS (SELECT cl, pos,
-                          list_reduce(list_prepend(0.0, vs), (a, b) -> a + b) / len(vs) AS cv
-                   FROM g2),
-            c2 AS (SELECT cl, list(cv ORDER BY pos) AS cent FROM p2 GROUP BY cl),
-            d3 AS (SELECT e.vec_id, c.cl,
-                          list_reduce(list_prepend(0.0,
-                            [ (e.v[i] - c.cent[i]) * (e.v[i] - c.cent[i])
-                              for i in range(1, len(e.v) + 1) ]),
-                            (a, b) -> a + b) AS dist
-                   FROM e CROSS JOIN c2 c)
+            ${step(1)},
+            ${step(2)},
+            ${assign(3)}
          SELECT vec_id, cl AS cluster FROM d3
-         QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cl) = 1""",
+         QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cl) = 1"""
+    },
 
     "sim_label_centroids" ->
       """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -406,22 +379,9 @@ object SimGates {
 
     // brute ranking restricted to different-label candidates
     "sim_hard_negatives" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
               q AS (SELECT * FROM e WHERE vec_id < 10),
-              scored AS (
-                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                       CASE WHEN list_dot_product(q.v, q.v) = 0
-                              OR list_dot_product(c.v, c.v) = 0 THEN NULL
-                            ELSE list_dot_product(q.v, c.v) /
-                                 (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v)))
-                       END AS s
-                FROM q JOIN e c ON q.vec_id <> c.vec_id AND q.label <> c.label),
-              ranked AS (
-                SELECT query_id, neighbor_id, s,
-                       ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id ASC) AS rank
-                FROM scored WHERE s IS NOT NULL)
-         SELECT query_id, neighbor_id, s AS score, CAST(rank AS INT) AS rank
-         FROM ranked WHERE rank <= 5""",
+              ${cosineTop5Sql("q JOIN e c ON q.vec_id <> c.vec_id AND q.label <> c.label")}""",
 
     // raw dot ranking (MIPS): no norms, no NULL path
     "sim_mips_topk" ->

@@ -638,6 +638,12 @@ object StreamGates {
     })
   )
 
+  /** The click and purchase rows of the event log — the oracle of every
+    * gate whose stream is result-invariant over the batch filter. */
+  private val clickPurchaseRowsSql =
+    """SELECT event_id, user_id, event_type FROM events
+       WHERE event_type IN ('click', 'purchase')"""
+
   val oracleSql: Map[String, String] = Map(
     // offset semantics replayed in SQL: slice-1 rows past the startOffset
     // (its registration order is event_id ASC, so offset == rank) plus
@@ -697,11 +703,7 @@ object StreamGates {
                 CAST(CAST(value AS DECIMAL(18,2)) * 2 AS DOUBLE) AS value
          FROM events WHERE event_type = 'purchase'""",
 
-    "t_stream_stateful" ->
-      """SELECT user_id, COUNT(*) AS events,
-                CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
-                  AS sum_cents
-         FROM events GROUP BY user_id""",
+    "t_stream_stateful" -> runningCentsOracleSql,
 
     "t_stream_canonical" ->
       """SELECT user_id, event_type, MIN(event_id) AS min_event_id
@@ -709,9 +711,7 @@ object StreamGates {
 
     // restart: two checkpointed incarnations over a growing feed must
     // emit each row exactly once — equal to the batch filter
-    "t_stream_restart" ->
-      """SELECT event_id, user_id, event_type FROM events
-         WHERE event_type IN ('click', 'purchase')""",
+    "t_stream_restart" -> clickPurchaseRowsSql,
 
     // backpressure: one micro-batch per staged file (mtime order), so the
     // observed per-batch counts are exactly the per-slice cardinalities
@@ -736,45 +736,16 @@ object StreamGates {
          WHERE epoch_us(time_bucket(INTERVAL '1 hour', ts)) + 3600000000 <= w
          GROUP BY 1, 2""",
 
-    // the streaming form must converge to exactly the batch answer
-    "s9_stream_range_join" ->
-      """SELECT i.event_id AS spike_id, p.event_id AS click_id, p.user_id,
-                epoch_us(p.ts) - epoch_us(i.ts) AS gap_us
-         FROM (SELECT * FROM events WHERE event_type = 'error' AND value > 150.0) i
-         JOIN (SELECT * FROM events WHERE event_type = 'click') p
-           ON epoch_us(p.ts) >= epoch_us(i.ts)
-          AND epoch_us(p.ts) <= epoch_us(i.ts) + 600000000""",
+    "s9_stream_range_join" -> rangeJoinOracleSql,
 
     // the streaming form must converge to exactly the batch chunking
     "s11_stream_chunk" -> chunkOracleSql,
 
-    "s4_stream_window" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
-                COUNT(*) AS n,
-                CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2""",
+    "s4_stream_window" -> hourWindowOracleSql,
 
-    "s5_stream_sliding" ->
-      """SELECT time_bucket(INTERVAL '30 minutes', ts) - o.off AS window_start, event_type,
-                COUNT(*) AS n,
-                CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events,
-              (VALUES (INTERVAL '0 minutes'), (INTERVAL '30 minutes')) o(off)
-         GROUP BY 1, 2""",
+    "s5_stream_sliding" -> slidingWindowOracleSql,
 
-    "s5_stream_session" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-              m AS (SELECT user_id, us,
-                           CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL
-                                  OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us) >= 7200000000
-                                THEN 1 ELSE 0 END AS new_s
-                    FROM e),
-              s AS (SELECT user_id, us,
-                           SUM(new_s) OVER (PARTITION BY user_id ORDER BY us
-                                            ROWS UNBOUNDED PRECEDING) AS sid
-                    FROM m)
-         SELECT user_id, MIN(us) AS session_start_us, COUNT(*) AS n_events
-         FROM s GROUP BY user_id, sid""",
+    "s5_stream_session" -> sessionWindowOracleSql,
 
     "s8_stream_static_join" ->
       """SELECT e.event_id, e.user_id, c.c_mktsegment
@@ -817,9 +788,7 @@ object StreamGates {
           AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE""",
 
     // foreachBatch is a sink mechanism, result-invariant: plain filter SQL
-    "s16_stream_foreach_batch" ->
-      """SELECT event_id, user_id, event_type FROM events
-         WHERE event_type IN ('click', 'purchase')""",
+    "s16_stream_foreach_batch" -> clickPurchaseRowsSql,
 
     "s13_stream_c4_clean" -> c4CleanOracleSql,
 

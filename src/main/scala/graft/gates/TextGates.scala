@@ -31,6 +31,17 @@ object TextGates {
     }
   private[gates] val qcBias = new java.math.BigDecimal("0.010000")
 
+  /** Each document's text bytes as a PCM16 WAV record (one sample per
+    * byte) — the input of the WAV gates. */
+  private def pcm16Wavs(s: SparkSession,
+      dir: String): org.apache.spark.sql.Dataset[Multimodal.MediaRecord] = {
+    import s.implicits._
+    Multimodal.encodeAsBinary(t(s, dir, "documents"), "doc_id", "text")
+      .as[Multimodal.MediaRecord]
+      .mapPartitions(_.map(r =>
+        Multimodal.MediaRecord(r.doc_id, Multimodal.encodeWavPcm16(r.media), "wav")))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Text analysis — corpus-wide top-k n-gram frequencies (the classic
@@ -409,12 +420,7 @@ object TextGates {
     // count all recovered from the actual bytes, oracle-checked (the
     // encoder's geometry is a closed form over the text length).
     "mm_wav_decode" -> ((s, dir) => {
-      import s.implicits._
-      val media = Multimodal.encodeAsBinary(t(s, dir, "documents"), "doc_id", "text")
-        .as[Multimodal.MediaRecord]
-      val wavs = media.mapPartitions(_.map(r =>
-        Multimodal.MediaRecord(r.doc_id, Multimodal.encodeWavPcm16(r.media), "wav")))
-      Multimodal.decodeWavMeta(wavs).toDF()
+      Multimodal.decodeWavMeta(pcm16Wavs(s, dir)).toDF()
         .select("doc_id", "sample_rate", "channels", "bits_per_sample", "n_samples")
     }),
 
@@ -425,12 +431,7 @@ object TextGates {
     // (1 byte → 1 sample → 2 data bytes; 25-sample frames, last frame
     // partial), so frame counts and byte totals are SQL-oracle-able.
     "mm_wav_frames" -> ((s, dir) => {
-      import s.implicits._
-      val media = Multimodal.encodeAsBinary(t(s, dir, "documents"), "doc_id", "text")
-        .as[Multimodal.MediaRecord]
-      val wavs = media.mapPartitions(_.map(r =>
-        Multimodal.MediaRecord(r.doc_id, Multimodal.encodeWavPcm16(r.media), "wav")))
-      Multimodal.wavFrames(wavs, frameSamples = 25).toDF()
+      Multimodal.wavFrames(pcm16Wavs(s, dir), frameSamples = 25).toDF()
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_frames"),
           sum(length(col("frame"))).as("frame_bytes"))
@@ -569,18 +570,11 @@ object TextGates {
       """SELECT doc_id, true AS forms_agree FROM documents""",
 
     "text_langid" ->
-      """WITH h AS (SELECT doc_id, text,
-                len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS en,
-                len(regexp_extract_all(text, '\b(der|die|das|und|ist|nicht|ein|zu|mit|den)\b')) AS de,
-                len(regexp_extract_all(text, '\b(le|la|les|et|est|un|une|de|que|pour)\b')) AS fr,
-                len(regexp_extract_all(text, '\b(el|la|los|las|es|un|una|que|de|por)\b')) AS es
+      s"""WITH h AS (SELECT doc_id, text,
+                $langHitsSql
               FROM documents)
          SELECT doc_id,
-                CASE WHEN en > 0 AND en = greatest(en, de, fr, es) THEN 'en'
-                     WHEN de > 0 AND de = greatest(en, de, fr, es) THEN 'de'
-                     WHEN fr > 0 AND fr = greatest(en, de, fr, es) THEN 'fr'
-                     WHEN es > 0 AND es = greatest(en, de, fr, es) THEN 'es'
-                     ELSE 'und' END AS pred_lang,
+                $langCaseSql AS pred_lang,
                 en AS en_hits
          FROM h""",
 
@@ -619,36 +613,22 @@ object TextGates {
          FROM planted""",
 
     "text_perplexity" ->
-      """WITH s AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           tok AS (SELECT doc_id,
-                          unnest(range(1, len(ws) + 1)) AS pos,
-                          unnest(ws) AS w
-                   FROM s),
-           vocab AS (SELECT w, COUNT(*) AS cnt FROM tok GROUP BY w),
-           tot AS (SELECT COUNT(*) AS total FROM tok),
-           lp AS (SELECT doc_id, pos,
-                         -ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE)) AS lp
-                  FROM tok JOIN vocab USING (w) CROSS JOIN tot),
-           g AS (SELECT doc_id, list(lp ORDER BY pos) AS lps FROM lp GROUP BY doc_id)
+      s"""WITH $unigramLogProbCtes
          SELECT doc_id, CAST(len(lps) AS BIGINT) AS n_tokens,
-                list_reduce(list_prepend(0.0, lps), (a, b) -> a + b) / len(lps) AS xent
+                $meanLogProbSql AS xent
          FROM g""",
 
     // bigram conditional: P(w2|w1) = c(w1,w2)/c(w1,·); same ordered-fold
     // mean as text_perplexity
     "text_bigram_xent" ->
-      """WITH s AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-           b AS (SELECT doc_id, unnest(range(0, len(w) - 1)) AS pos, w
-                 FROM s WHERE len(w) >= 2),
-           bb AS (SELECT doc_id, pos, w[pos+1] AS w1, w[pos+2] AS w2 FROM b),
-           c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM bb GROUP BY 1, 2),
+      s"""WITH $bigramCtes,
            c1 AS (SELECT w1, SUM(c2) AS c1 FROM c2 GROUP BY 1),
            lp AS (SELECT bb.doc_id, bb.pos,
                          -ln(CAST(c2.c2 AS DOUBLE) / CAST(c1.c1 AS DOUBLE)) AS lp
                   FROM bb JOIN c2 USING (w1, w2) JOIN c1 USING (w1)),
            g AS (SELECT doc_id, list(lp ORDER BY pos) AS lps FROM lp GROUP BY doc_id)
          SELECT doc_id, CAST(len(lps) AS BIGINT) AS n_bigrams,
-                list_reduce(list_prepend(0.0, lps), (a, b) -> a + b) / len(lps) AS xent
+                $meanLogProbSql AS xent
          FROM g""",
 
     // same planted-contamination synthesis as the Spark side; the 8-gram
@@ -671,12 +651,7 @@ object TextGates {
     // integer tf/df aggregation; the one floating step (tf·ln(N/df)) is
     // the same IEEE divide→ln→multiply sequence in both engines
     "text_tfidf" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-                      FROM documents),
-              tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
-                     GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-              df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-              n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents)
+      s"""WITH $tfDfCtes
          SELECT tf.doc_id, tf.term, tf.tf, df.df,
                 CAST(tf.tf AS DOUBLE) *
                   ln(CAST(n_docs AS DOUBLE) / CAST(df.df AS DOUBLE)) AS tfidf
@@ -685,11 +660,7 @@ object TextGates {
     // same type-table CTEs + the identical parenthesized KN expression;
     // ordered list_reduce fold = the Spark position-ordered aggregate
     "text_kneser_ney" ->
-      """WITH s AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-           b AS (SELECT doc_id, unnest(range(0, len(w) - 1)) AS pos, w
-                 FROM s WHERE len(w) >= 2),
-           bb AS (SELECT doc_id, pos, w[pos+1] AS w1, w[pos+2] AS w2 FROM b),
-           c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM bb GROUP BY 1, 2),
+      s"""WITH $bigramCtes,
            c1 AS (SELECT w1, SUM(c2) AS c1, COUNT(*) AS nf FROM c2 GROUP BY 1),
            np AS (SELECT w2, COUNT(*) AS np FROM c2 GROUP BY 1),
            nt AS (SELECT COUNT(*) AS nt FROM c2),
@@ -701,7 +672,7 @@ object TextGates {
                           JOIN np USING (w2), nt),
            g AS (SELECT doc_id, list(lp ORDER BY pos) AS lps FROM lp GROUP BY doc_id)
          SELECT doc_id, CAST(len(lps) AS BIGINT) AS n_bigrams,
-                list_reduce(list_prepend(0.0, lps), (a, b) -> a + b) / len(lps) AS xent_kn
+                $meanLogProbSql AS xent_kn
          FROM g""",
 
     // the same seeded decimals as a VALUES table; SUM(DECIMAL) is exact
@@ -755,12 +726,7 @@ object TextGates {
     // top-3 of the same tfidf values (bit-equal per text_tfidf's hash),
     // ties by term
     "text_keywords" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-                      FROM documents),
-              tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
-                     GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-              df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-              n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents),
+      s"""WITH $tfDfCtes,
               scored AS (SELECT tf.doc_id, tf.term,
                                 CAST(tf.tf AS DOUBLE) *
                                   ln(CAST(n_docs AS DOUBLE) / CAST(df.df AS DOUBLE)) AS tfidf
@@ -781,35 +747,23 @@ object TextGates {
          SELECT term, cnt, true AS in_sketch FROM e, n WHERE cnt * 64 > n""",
 
     "text_lang_mismatch" ->
-      """WITH h AS (SELECT doc_id, lang, text,
-                len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS en,
-                len(regexp_extract_all(text, '\b(der|die|das|und|ist|nicht|ein|zu|mit|den)\b')) AS de,
-                len(regexp_extract_all(text, '\b(le|la|les|et|est|un|une|de|que|pour)\b')) AS fr,
-                len(regexp_extract_all(text, '\b(el|la|los|las|es|un|una|que|de|por)\b')) AS es
+      s"""WITH h AS (SELECT doc_id, lang, text,
+                $langHitsSql
               FROM documents),
               l AS (SELECT doc_id, lang AS declared,
-                CASE WHEN en > 0 AND en = greatest(en, de, fr, es) THEN 'en'
-                     WHEN de > 0 AND de = greatest(en, de, fr, es) THEN 'de'
-                     WHEN fr > 0 AND fr = greatest(en, de, fr, es) THEN 'fr'
-                     WHEN es > 0 AND es = greatest(en, de, fr, es) THEN 'es'
-                     ELSE 'und' END AS pred_lang
+                $langCaseSql AS pred_lang
               FROM h)
          SELECT doc_id, declared, pred_lang FROM l WHERE pred_lang <> declared""",
 
     "text_quality" ->
-      """WITH b AS (SELECT doc_id,
-                length(text) AS n_chars,
-                len(string_split(text, ' ')) AS n_words,
-                len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS n_stop,
-                len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha
+      s"""WITH b AS (SELECT doc_id,
+                ${qualityInputsSql()}
               FROM documents)
          SELECT doc_id, n_chars, n_words,
                 CAST(n_chars - (n_words - 1) AS DOUBLE) / CAST(n_words AS DOUBLE) AS mean_word_len,
                 CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE) AS stopword_ratio,
                 CAST(n_alpha AS DOUBLE) / NULLIF(CAST(n_chars AS DOUBLE), 0) AS alpha_ratio,
-                least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4 +
-                least(CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE) * 5.0, 1.0) * 0.3 +
-                CAST(n_alpha AS DOUBLE) / NULLIF(CAST(n_chars AS DOUBLE), 0) * 0.3 AS quality
+                ${qualityScoreSql()} AS quality
          FROM b""",
 
     "text_normalize" ->
@@ -832,33 +786,27 @@ object TextGates {
     // identical staged markup (concat from doc_id), identical
     // backreference-free regex chain with 'g' flags, entities unescaped
     // in the same order (&amp; last)
-    "text_strip_html" ->
-      """WITH h AS (SELECT doc_id,
+    "text_strip_html" -> {
+      val stripped = raw"""trim(regexp_replace(
+              replace(replace(replace(replace(replace(
+                regexp_replace(
+                  regexp_replace(
+                    regexp_replace(html, '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
+                    '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
+                  '<[^>]+>', ' ', 'g'),
+                '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', chr(39)), '&amp;', '&'),
+              '\s+', ' ', 'g'))"""
+      s"""WITH h AS (SELECT doc_id,
               '<html><head><style type="text/css">p{margin:0}</style><script>track("'
               || doc_id || '")</script></head><body><h1>Doc ' || doc_id
               || '</h1><p>' || text || '</p><br/><a href="/d/' || doc_id
               || '">&lt;more&gt; &amp; &quot;info&quot;</a></body></html>' AS html
             FROM documents)
          SELECT doc_id,
-                trim(regexp_replace(
-                  replace(replace(replace(replace(replace(
-                    regexp_replace(
-                      regexp_replace(
-                        regexp_replace(html, '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-                        '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-                      '<[^>]+>', ' ', 'g'),
-                    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', chr(39)), '&amp;', '&'),
-                  '\s+', ' ', 'g')) AS clean,
-                length(trim(regexp_replace(
-                  replace(replace(replace(replace(replace(
-                    regexp_replace(
-                      regexp_replace(
-                        regexp_replace(html, '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-                        '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-                      '<[^>]+>', ' ', 'g'),
-                    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', chr(39)), '&amp;', '&'),
-                  '\s+', ' ', 'g'))) AS n_clean_chars
-         FROM h""",
+                $stripped AS clean,
+                length($stripped) AS n_clean_chars
+         FROM h"""
+    },
 
     // identical staged string, identical three-pass scrub; counts probed
     // on t0/t1/t2 — the text exactly as the prior pass left it — and
@@ -997,12 +945,12 @@ object TextGates {
          FROM r WHERE rk = 1""",
 
     "text_gopher_rules" ->
-      """WITH b AS (SELECT doc_id,
+      s"""WITH b AS (SELECT doc_id,
                       len(string_split(text, ' ')) AS n_words,
                       length(text) AS n_chars,
                       len(list_filter(string_split(text, ' '),
                                       w -> regexp_matches(w, '[A-Za-z]'))) AS n_alpha_words,
-                      len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS n_stop
+                      ${stopHitsSql("en")} AS n_stop
                     FROM documents)
          SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
                 CAST(n_chars - (n_words - 1) AS DOUBLE) / CAST(n_words AS DOUBLE) AS mean_word_len,

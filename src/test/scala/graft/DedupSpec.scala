@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{Dedup, TextOps}
 
 class DedupSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, table}
+  import SparkTestSession.{jobsDuring, spark, table}
 
   lazy val docs = table("documents").cache()
 
@@ -33,6 +33,14 @@ class DedupSpec extends AnyFunSuite {
     // every planted twin pair found
     val n = emb.count()
     assert(want.count { case (a, b) => b - a == 100000L } === n)
+  }
+
+  test("nearDupEmbeddings: building runs exactly the corpus count that sizes the geometry") {
+    val emb = table("embeddings").select(col("vec_id"), col("embedding"))
+    val (_, countJobs) = jobsDuring(emb.count())
+    val (_, jobs) = jobsDuring(Dedup.nearDupEmbeddings(emb, "vec_id", "embedding"))
+    assert(countJobs === 2) // AQE: the partial-count stage, then the final one
+    assert(jobs === countJobs, "build-time jobs of nearDupEmbeddings")
   }
 
   test("exact dedup: distinct corpus keeps every doc as its own representative") {
@@ -222,6 +230,23 @@ class DedupSpec extends AnyFunSuite {
     val ok = Dedup.connectedComponents(chain, "doc_a", "doc_b", maxIter = 6)
       .where(col("canon_id") === 1L).count()
     assert(ok === 5L)
+  }
+
+  test("connected components: build-time jobs are the checkpoints, one fixpoint probe per round and the final copy") {
+    import spark.implicits._
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("doc_a", "doc_b")
+    // the fixture needs exactly 3 rounds: one fewer fails. Its 29 jobs are
+    // the edge and initial-label checkpoints, each round's checkpoint and
+    // fixpoint probe, and the final managed copy — AQE runs each shuffle
+    // stage of a checkpoint as its own job. A new eager action, or a probe
+    // the loop no longer needs, moves the count.
+    intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(chain, "doc_a", "doc_b", maxIter = 3 - 1)
+    }
+    val (cc, jobs) = jobsDuring(
+      Dedup.connectedComponents(chain, "doc_a", "doc_b", maxIter = 3))
+    assert(jobs === 29, "build-time jobs of connectedComponents")
+    assert(cc.where(col("canon_id") === 1L).count() === 5L)
   }
 
   test("connected components: reliable-checkpoint path matches localCheckpoint") {

@@ -8,7 +8,8 @@ already (or pass --run to run it here), then for each result parquet under
 outDir, executes the matching oracle SQL from oracle_sql.json in DuckDB over
 the same parquet tables and compares row counts, column-name sets, and a
 row-order-insensitive hash of values (floats rounded to 6 significant-ish
-decimals).
+decimals). Writes <outDir>/selfcheck.json: per gate the status, the row
+count and the Spark-side value hash.
 """
 import json
 import math
@@ -177,6 +178,7 @@ def main():
     # rows/schema/value-hash (the driver's actual compare) still run.
     fast = os.environ.get("GRAFT_SELFCHECK_FAST", "") == "1"
     results = {}
+    compared = {}  # per gate: what the Spark side produced (selfcheck.json)
     for d in sorted(out_dir.iterdir()):
         if not d.is_dir():
             continue
@@ -188,6 +190,8 @@ def main():
         got = con.execute(f"SELECT * FROM '{d}/*.parquet'")
         got_cols = [c[0] for c in got.description]
         got_rows = got.fetchall()
+        compared[name] = {"rows": len(got_rows),
+                          "table_hash": table_hash(got_rows, got_cols)}
         if name not in oracle:
             results[name] = f"ROWS-ONLY rows={len(got_rows)}"
             _emit(name, results[name])
@@ -227,6 +231,12 @@ def main():
                 results[name] = f"OK rows={len(got_rows)}{w}"
         _emit(name, results[name])
 
+    for k, v in results.items():
+        compared[k]["status"] = v.split(" ", 1)[0]
+    # the record of what was compared, so two dumps can be diffed gate by
+    # gate (rows and Spark-side value hash) without re-running either
+    (out_dir / "selfcheck.json").write_text(
+        json.dumps(compared, indent=1, sort_keys=True) + "\n")
     ok = sum(1 for v in results.values() if v.startswith("OK") or v.startswith("ROWS-ONLY"))
     for k, v in sorted(results.items()):
         print(f"{'PASS' if v.startswith('OK') or v.startswith('ROWS-ONLY') else 'FAIL':4} {k}: {v}")

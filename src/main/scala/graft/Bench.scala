@@ -1,13 +1,9 @@
 package graft
 
-object Bench {
-  // All numeric output that lands in a JSON file or the stdout contract
-  // line must be locale-independent: the f-interpolator and String.format
-  // default to the JVM locale, and a comma-decimal locale would emit
-  // invalid JSON (ADVICE r4 #3).
-  private def num(v: Double, decimals: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
+import graft.tools.Measure
+import graft.tools.Measure.num
 
+object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_ONLY=q1,q2,... : time just the named queries (profiling
@@ -22,71 +18,40 @@ object Bench {
     val spark = SparkEntry.localSession(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val cpus = spark.sparkContext.defaultParallelism
-    // Warm-up: run EVERY query once at the smallest scale factor (falling
-    // back to the benchmarked dir) so whole-stage codegen compilation and
-    // JIT warm per QUERY SHAPE before anything is timed — measured runs
-    // then time the operators, not first-call compilation, which was the
-    // dominant source of ±20% run-to-run variance. Failures are loud.
-    val warmDir = {
-      val small = "/root/testdata/sf0.001"
-      if (new java.io.File(small).isDirectory) small else sfDir
-    }
-    // Pinned calibration basket (r11 verdict #1): three REPRESENTATIVE
-    // queries — one shuffle-heavy, one streaming, one map-only — timed at
-    // sf0.01; machine speed is the MEDIAN ratio against the baseline's
-    // recorded basket. The former scalar CPU probe (hash-reduce) measured
-    // raw CPU throughput, which sf0.1 Spark wall time does NOT track
-    // (scheduler/overhead-dominated): a 4.4× probe swing between sandboxes
-    // manufactured a uniform phantom 4.3× "regression" across all 186
-    // queries. The basket IS Spark wall time at the same overhead regime,
-    // so its ratio tracks what the per-query timings actually do.
-    // r13 addition: sim_brute_topk as a FOURTH basket entry covering the
-    // CPU-float-bound workload class (vectorized dot products). Measured
-    // same-machine this round: a contention window slowed every float
-    // gate ~1.8× while the three original (shuffle/stream/text) basket
-    // queries ran at baseline speed — machine speed is workload-class
-    // dependent, and a basket blind to a class cannot adjudicate that
-    // class's flags. The per-entry `basket_sec` ratios in BENCH_DELTAS
-    // are the diagnostic: a lone `_basket_sim_brute_topk` excursion
-    // marks a float-class window, not a code regression.
+    // Calibration basket (r11 verdict #1; one gate per workload class
+    // since r15, see classBaskets): machine speed is the MEDIAN ratio
+    // against the baseline's recorded basket. A scalar CPU probe does not
+    // track sf0.1 Spark wall time (scheduler/overhead-dominated: a 4.4×
+    // probe swing once manufactured a uniform phantom 4.3× "regression"),
+    // and a basket blind to a class cannot adjudicate that class's flags
+    // (r13: a float-slow window slowed every float gate ~1.8× while the
+    // other entries read baseline speed). A lone `_basket_<gate>`
+    // excursion in BENCH_DELTAS marks a class-shaped window, not a code
+    // regression. The basket runs at the BENCHED sf, the regime being
+    // normalized: at sf0.01 its sub-second timings swung ~30% between
+    // back-to-back idle runs.
     val basketNames = classBaskets.values.toSeq.distinct.sorted
-    // basket runs at the BENCHED sf: the point is measuring Spark wall
-    // time in the exact regime being normalized — the first cut measured
-    // it at sf0.01 regardless, and those sub-second timings swung ~30%
-    // between back-to-back idle runs
-    val basketDir = sfDir
-    // warm basket queries too — partial runs may not select them
+    // warm EVERY selected query at the smallest scale factor, and the
+    // basket queries too — partial runs may not select them
     val warmSet = selected ++
       SparkEntry.queries.filter { case (k, _) => basketNames.contains(k) }
-    warmSet.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try { fn(spark, warmDir).count(); () }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warm-up of $name failed: ${e.getMessage}") }
-      spark.catalog.clearCache()
-    }
+    Measure.warmUp(spark, "bench", warmSet.toSeq.sortBy(_._1), Measure.warmDir(sfDir))
     // The scalar CPU workload stays for the CONTENTION probes below (its
     // job: detect a non-idle machine within one run) and as a recorded
     // diagnostic; it is no longer the cross-machine normalizer.
-    val cal = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
+    val cal = Measure.bestOf3 {
       // pmod keeps the ANSI sum far from long overflow (2e8 * 1e6 < 2^63)
       spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("sum(pmod(xxhash64(id), 1000000)) s").collect()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-    // basket timings: min-of-3 per query, measured like the real sweep
+      true
+    }.get
+    // basket timings: min-of-3 per query, measured like the real sweep;
+    // any failed pass drops the entry
     val basket: Seq[(String, Double)] = basketNames.flatMap { name =>
       SparkEntry.queries.get(name).flatMap { fn =>
-        try {
-          val times = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            fn(spark, basketDir).count()
-            val dt = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache()
-            dt
-          }
-          Some(name -> times.min)
-        } catch { case e: Throwable =>
+        try Measure.bestOf3({ fn(spark, sfDir).count(); true },
+            spark.catalog.clearCache()).map(name -> _)
+        catch { case e: Throwable =>
           System.err.println(s"[bench] basket $name failed: ${e.getMessage}")
           None
         }
@@ -136,46 +101,21 @@ object Bench {
     // entries are added, which moves one-time JIT/codegen warmup between
     // queries and makes per-query times incomparable across rounds.
     //
-    // Per-query time = MIN of 2 back-to-back measured passes (round-7
-    // verdict #1): a single-shot timing hands a transient contention spike
-    // entirely to one query — BENCH_r07 recorded 245s on code that a clean
-    // re-run measured at 52s. Min-of-2 requires contention to persist across
-    // both passes of the SAME query to contaminate its number, and the min
-    // is the right estimator for "what the plan costs on an idle machine".
-    val results = selected.toSeq.sortBy(_._1).zipWithIndex.map {
-      case ((name, fn), i) =>
+    // Per-query time = min of 3 back-to-back passes (Measure.bestOf3; the
+    // r8 contended runs showed spikes regularly outlasting two passes but
+    // not three). One good pass makes the query ok — a flaky pass-3 error
+    // must not mark a query that ran twice as failed (failures still log
+    // to stderr). Per-query persists (dedup/LSH signature stages etc.)
+    // must not accumulate across the 100+ queries of one session — cached
+    // blocks are dropped after each pass so later timings aren't skewed.
+    val results: Seq[(String, Option[Double])] =
+      selected.toSeq.sortBy(_._1).zipWithIndex.map { case ((name, fn), i) =>
         if (i % PROBE_EVERY == 0) probe()
-        def onePass(): (Double, Boolean) = {
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-          val dt = (System.nanoTime() - t0) / 1e9
-          // per-query persists (dedup/LSH signature stages etc.) must not
-          // accumulate across the 100+ queries of one session — drop cached
-          // blocks after each measurement so later timings aren't skewed
-          spark.catalog.clearCache()
-          (dt, ok)
-        }
-        val (dt1, ok1) = onePass()
-        // a failed first pass is not re-timed (its elapsed is garbage either
-        // way and a deterministic failure would just double the cost).
-        // MIN OF 3 passes (round-7 verdict #1 "ideally 3"): a contention
-        // spike now has to span three back-to-back runs of the same query
-        // to contaminate its number — the r8 contended runs showed spikes
-        // regularly outlasting two passes but not three.
-        // Only SUCCESSFUL passes enter the min (ADVICE r8 #2: a failed
-        // pass's elapsed is time-to-failure, not a timing), and one good
-        // pass makes the query ok — a flaky pass-3 error must not mark a
-        // query that ran twice as failed (failures still log to stderr).
-        val (dt, ok) = if (!ok1) (dt1, false) else {
-          val (dt2, ok2) = onePass()
-          val (dt3, ok3) = onePass()
-          val okTimes = dt1 +: Seq((dt2, ok2), (dt3, ok3)).collect { case (d, true) => d }
-          (okTimes.min, true)
-        }
-        (name, dt, ok)
-    }
+        name -> Measure.bestOf3(
+          try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false },
+          spark.catalog.clearCache())
+      }
     probe()
     val noise = if (probes.nonEmpty && probes.min > 0) {
       val sorted = probes.sorted
@@ -193,16 +133,11 @@ object Bench {
     // the sf0.1 baseline and poison the next round's regression ratios
     val sfTag = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_")
     val prevFile = new java.io.File(s"BENCH_LOCAL_$sfTag.json")
-    val prev: Map[String, Double] =
-      if (prevFile.isFile) {
-        val txt = scala.io.Source.fromFile(prevFile).mkString
-        "\"([A-Za-z0-9_]+)\":([0-9.Ee+-]+)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
+    val prev = readBaseline(prevFile)
     // only HEALTHY timings enter the baseline and the comparison — a
     // failed query's elapsed time is garbage that would both poison the
     // stored baseline and produce nonsense ratios against it
-    val healthy = results.collect { case (k, v, true) => (k, v) }
+    val healthy = results.collect { case (k, Some(v)) => (k, v) }
 
     // ---- machine speed vs the baseline machine (r11 verdict #1) ----
     def median(xs: Seq[Double]): Option[Double] =
@@ -249,14 +184,12 @@ object Bench {
       System.err.println(f"[bench] NOISE ${noise}%.2fx > 2x: baseline " +
         s"$prevFile left untouched; this run's timings -> $outFile; " +
         "regression flags skipped")
-    java.nio.file.Files.write(outFile.toPath,
-      full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.writeString(outFile.toPath, full)
     val candidates = mergeCandidates(prev, basketEntries, healthy, noise,
       partial, refreshRequested, speedRatio)
     if (candidates.nonEmpty) {
-      java.nio.file.Files.write(prevFile.toPath,
-        mergedJson(prev, candidates, speedRatio)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.writeString(prevFile.toPath,
+        mergedJson(prev, candidates, speedRatio))
       System.err.println(f"[bench] clean ${if (partial) "partial" else "full"} " +
         f"run (noise ${noise}%.2fx): merged ${candidates.size} " +
         s"${if (partial && refreshRequested) "selected (REFRESH)" else "NEW"} " +
@@ -268,19 +201,18 @@ object Bench {
       val probeJson = probes.map(p => num(p, 3)).mkString("[", ",", "]")
       val basketJson = basket.map { case (n, t) => s""""$n":${num(t, 3)}""" }
         .mkString("{", ",", "}")
-      java.nio.file.Files.write(new java.io.File("BENCH_DELTAS.json").toPath,
+      java.nio.file.Files.writeString(new java.io.File("BENCH_DELTAS.json").toPath,
         (s"""{"cal_sec":${num(cal, 3)},"machine_speed_vs_prev":${num(speedRatio, 3)},""" +
           s""""basket_sec":$basketJson,"class_speed":${flags.classSpeedJson},""" +
           basketSpeed.map(b => s""""basket_speed":${num(b, 3)},""").getOrElse("") +
           medianRawRatio.map(m => s""""median_raw_ratio":${num(m, 3)},""").getOrElse("") +
           s""""noise":${num(noise, 2)},"probes_sec":$probeJson,"prev_ratio":${flags.ratiosJson},""" +
-          s""""regressions":${flags.regressionsJson}}""")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          s""""regressions":${flags.regressionsJson}}"""))
       flags.regressions.foreach { case (k, v, p, r) =>
         System.err.println(f"[bench] REGRESSION $k: $v%.3fs vs $p%.3fs (${r}%.2fx)") }
     }
 
-    val line = contractLine(Summary(healthy, results.size, results.count(!_._3),
+    val line = contractLine(Summary(healthy, results.size, results.count(_._2.isEmpty),
       cal, noise, speedRatio, prev.nonEmpty, sfTag))
     if (line.length > MaxLine)
       System.err.println(s"[bench] WARNING: JSON line ${line.length} chars even at " +
@@ -396,6 +328,11 @@ object Bench {
       s"""{"query":"$k","sec":${num(v, 3)},"prev_sec":${num(p, 3)},"ratio":${num(r, 2)}}""" }
       .mkString("[", ",", "]")
   }
+
+  /** A BENCH_LOCAL file's per-gate seconds (and the `_basket_`/`_cal`
+    * entries); empty when there is no baseline yet. */
+  private[graft] def readBaseline(file: java.io.File): Map[String, Double] =
+    Measure.readPin(file).collect { case (k, Measure.Num(v)) => k -> v }
 
   /** A CONTAMINATED run (probe spread > 2×: the machine was demonstrably
     * not idle) must not clobber the committed min-of-3 baseline — r8's

@@ -419,6 +419,9 @@ object Similarity {
     // saturating +1: maxBroadcastQueries = Int.MaxValue means "always
     // broadcast" and must not overflow the limit into a negative
     val probeCap = math.min(maxBroadcastQueries.toLong + 1L, Int.MaxValue.toLong).toInt
+    // eager on purpose: the query-side size picks the broadcast probe or
+    // the batch plan below, so building a probe runs this bounded count
+    // (SimilaritySpec pins its jobs)
     val small =
       q.limit(probeCap).count() <= maxBroadcastQueries
     val probesPlan =
@@ -504,6 +507,9 @@ object Similarity {
       vecCol: String,
       k: Int,
       indexKey: Option[String] = None): DataFrame = {
+    // eager on purpose, on a registry miss only: nlist follows from the
+    // corpus size, and the k-means build that uses it is eager anyway
+    // (SimilaritySpec pins the build-time jobs of a miss and of a hit)
     def contractNlist(): Int = {
       val n = corpus.count()
       math.min(64L, math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong)).toInt

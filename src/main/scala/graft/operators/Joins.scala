@@ -101,6 +101,9 @@ object Joins {
       key: String,
       fraction: Double,
       seed: Long): (Double, Long) = {
+    // eager on purpose: innerAutoSalted picks the salted or the plain plan
+    // from this share, so building that join runs this probe (ScaleSpec
+    // pins its jobs); a lazy form would have to defer the plan choice
     val r = df.sample(withReplacement = false, fraction, seed)
       .groupBy(col(key)).agg(count(lit(1)).as("c"))
       .agg(max(col("c")).as("mx"), sum(col("c")).as("n"))

@@ -188,8 +188,10 @@ object WireCodec {
   * decimal numbers, booleans, null) replacing the former field regex,
   * which broke framing on any collection name containing `"` or `}`
   * (r12 verdict #3 hardening). Integral numbers parse as Long, decimal
-  * forms as Double; object values keep insertion independence (Map). */
-private[mem] object WireJson {
+  * forms as Double; object values keep insertion independence (Map).
+  * The measuring tools read their pinned files with it too, so
+  * whitespace between tokens includes line breaks and tabs. */
+private[graft] object WireJson {
   private def esc(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
@@ -227,7 +229,9 @@ private[mem] object WireJson {
     private var i = 0
     def pos: Int = i
     def eof: Boolean = i >= s.length
-    def ws(): Unit = while (i < s.length && s.charAt(i) == ' ') i += 1
+    def ws(): Unit = while (i < s.length && {
+      val c = s.charAt(i); c == ' ' || c == '\n' || c == '\r' || c == '\t'
+    }) i += 1
     private def end(at: Int): Unit =
       if (at > s.length) throw new IllegalArgumentException(s"wire json: unexpected end of: $s")
     private def peek(at: Int = i): Char = { end(at + 1); s.charAt(at) }

@@ -29,8 +29,7 @@ import graft.functions.Similarity
   * usage: runMain graft.tools.AnnCrossover [nQueries] [k]
   */
 object AnnCrossover {
-  private def num(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+  private def num(v: Double): String = Measure.num(v, 4)
 
   def main(args: Array[String]): Unit = {
     val nQ = if (args.length > 0) args(0).toInt else 50
@@ -50,15 +49,7 @@ object AnnCrossover {
       ("n20k", "/tmp/graft_emb20k", 10),
       ("n100k", "/tmp/graft_emb100k", 50))
 
-    def timedMin3(fn: => DataFrame): Double = {
-      var best = Double.MaxValue
-      (1 to 3).foreach { _ =>
-        val t0 = System.nanoTime()
-        fn.count()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      best
-    }
+    def timedMin3(fn: => DataFrame): Double = Measure.bestOf3 { fn.count(); true }.get
 
     val rows = sizes.map { case (label, dir, factor) =>
       if (!new java.io.File(s"$dir/embeddings.parquet").exists()) {
@@ -99,9 +90,7 @@ object AnnCrossover {
 
     val json = s"""{"metric":"ann_crossover","config":"ivf n64 p48",""" +
       s""""n_queries":$nQ,"k":$k,"sizes":{${rows.mkString(",")}}}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("ANN_CROSSOVER.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("ANN_CROSSOVER.json"), json)
     println(json)
     spark.stop()
   }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.execution.debug._
 
+import graft.sources.mem.WireJson
+
 /** Plan-signature audit: the 100 TB plan review, mechanized and PINNED.
   *
   * Every round the plan of every batch gate is read for the same
@@ -102,8 +104,8 @@ object PlanAudit {
   /** Per-SF artifact names, trailing-slash-safe: sf0.01 keeps the legacy
     * names; any other scale factor gets a _<tag> suffix. One helper for
     * BOTH the audit and baseline paths so they cannot diverge. */
-  private def sfTag(sfDir: String): String =
-    sfDir.reverse.dropWhile(_ == '/').reverse.split("/").last
+  private def trimSlash(d: String): String = d.reverse.dropWhile(_ == '/').reverse
+  private def sfTag(sfDir: String): String = trimSlash(sfDir).split("/").last
   private def artifact(prefix: String, sfDir: String): String =
     if (sfTag(sfDir) == "sf0.01") s"$prefix.json"
     else s"${prefix}_${sfTag(sfDir).replace('.', '_')}.json"
@@ -114,7 +116,7 @@ object PlanAudit {
     n.contains("stream") || n.startsWith("mm_") ||
       n == "s6_sink_roundtrip" || n.startsWith("src_")
 
-  private def renderJson(sfDir: String,
+  private[graft] def renderJson(sfDir: String,
       sigs: Seq[(String, Either[String, Seq[(String, Int)]])]): String = {
     val sb = new StringBuilder
     sb.append("{\n  \"sf_dir\": \"").append(sfDir).append("\",\n  \"gates\": {\n")
@@ -125,11 +127,7 @@ object PlanAudit {
           // truncate BEFORE escaping — truncating after could split a
           // two-char escape and leave a lone trailing backslash, making
           // the written file invalid JSON
-          sb.append("{\"error\": \"")
-            .append(err.take(160)
-              .replace("\\", "\\\\").replace("\"", "\\\"")
-              .map(c => if (c < ' ') ' ' else c).mkString)
-            .append("\"}")
+          sb.append("{\"error\": ").append(WireJson.q(err.take(160))).append("}")
         case Right(kvs) =>
           sb.append(kvs.map { case (k, v) => s""""$k": $v""" }
             .mkString("{", ", ", "}"))
@@ -140,22 +138,52 @@ object PlanAudit {
     sb.toString
   }
 
-  /** Tolerant line parser for the files THIS tool writes (one gate per
-    * line) — no external JSON dependency in main. The gate pattern is
-    * anchored to the 4-space indent renderJson emits, so the outer
-    * `"gates": {` wrapper (which would otherwise swallow the first
-    * gate's counts under the key "gates") can never match. */
-  private def parseGates(text: String): (String, Map[String, Map[String, Int]]) = {
-    val sf = "\"sf_dir\": \"([^\"]*)\"".r.findFirstMatchIn(text)
-      .map(_.group(1)).getOrElse("")
-    val gate = "(?m)^    \"([A-Za-z0-9_]+)\": \\{([^}]*)\\}".r
-    val kv = "\"([a-z_]+)\": (-?\\d+)".r
-    val m = gate.findAllMatchIn(text).map { g =>
-      g.group(1) -> kv.findAllMatchIn(g.group(2))
-        .map(x => x.group(1) -> x.group(2).toInt).toMap
-    }.toMap
-    (sf, m)
+  /** A signature file's sf dir and per-gate counts. An error entry reads
+    * as no counts, so against a pinned signature it shows as drift of
+    * every nonzero count to 0. */
+  private[graft] def parseGates(text: String): (String, Map[String, Map[String, Int]]) = {
+    val file = Measure.obj(WireJson.parse(text))
+    val gates = Measure.obj(file.getOrElse("gates", Map.empty)).map { case (g, sig) =>
+      g -> Measure.obj(sig).collect { case (k, v: Long) => k -> v.toInt }
+    }
+    (file.get("sf_dir").fold("")(_.toString), gates)
   }
+
+  /** The audit's verdict against a pinned baseline: NEW-gate notes (a
+    * `pin` adopts them) and failures — a baseline pinned at another sf
+    * dir, a pinned gate missing from the audit, a gate whose counts
+    * drifted — in gate order. */
+  private[graft] def baselineDiff(sfDir: String, baseline: String,
+      audit: String): (Seq[String], Seq[String]) = {
+    val ((baseSf, base), (_, cur)) = (parseGates(baseline), parseGates(audit))
+    val gates = (base.keySet ++ cur.keySet).toSeq.sorted
+    if (trimSlash(baseSf) != trimSlash(sfDir))
+      (Nil, Seq(s"baseline pinned at $baseSf, audit ran at $sfDir - not comparable"))
+    else (gates.filterNot(base.contains).map(g => s"NEW gate $g (no baseline entry) - pin to adopt"),
+      gates.flatMap { g =>
+        (base.get(g), cur.get(g)) match {
+          case (Some(_), None) => Some(s"$g: present in baseline, missing from audit")
+          case (Some(b), Some(c)) if b != c =>
+            val diffs = (b.keySet ++ c.keySet).toSeq.sorted.flatMap { k =>
+              val (bv, cv) = (b.getOrElse(k, 0), c.getOrElse(k, 0))
+              if (bv != cv) Some(s"$k $bv->$cv") else None
+            }
+            Some(s"$g: plan drift [${diffs.mkString(", ")}]")
+          case _ => None
+        }
+      })
+  }
+
+  /** The tripwires that hold regardless of baseline: a gate whose plan
+    * could not be built, a CartesianProduct anywhere. */
+  private[graft] def tripwires(
+      sigs: Seq[(String, Either[String, Seq[(String, Int)]])]): Seq[String] =
+    sigs.flatMap {
+      case (n, Left(err)) => Some(s"$n: plan construction ERROR $err")
+      case (n, Right(kvs)) =>
+        val cart = kvs.collectFirst { case ("cartesian", v) => v }.getOrElse(0)
+        if (cart > 0) Some(s"$n: CartesianProduct in plan (tripwire)") else None
+    }
 
   /** Whole-stage generated Java per codegen subtree, built in a child
     * session with AQE off: under AQE the codegen subtrees only exist after
@@ -234,54 +262,35 @@ object PlanAudit {
           java.nio.file.Paths.get(auditPath), auditJson)
         println(s"[planaudit] wrote $auditPath (${sigs.size} gates)")
 
-        var failures = List.empty[String]
-        sigs.foreach {
-          case (n, Left(err)) => failures ::= s"$n: plan construction ERROR $err"
-          case (n, Right(kvs)) =>
-            val cart = kvs.collectFirst { case ("cartesian", v) => v }.getOrElse(0)
-            if (cart > 0) failures ::= s"$n: CartesianProduct in plan (tripwire)"
-        }
-
         // per-SF baselines: statistics feed join strategy, so each scale
         // factor pins its own signature file — sf0.01 keeps the legacy
         // name; the sf0.1 twin answers "does the plan HOLD at 10x the
         // data" (a broadcast that flips to SMJ shows up as strategy
         // drift between the two pinned files)
         val basePath = java.nio.file.Paths.get(artifact("PLAN_BASELINE", sfDir))
-        if (mode == "pin") {
-          // never replace a good baseline with a failed sweep: a wrong
-          // sfDir or a tripwired gate must not destroy the committed pin
-          if (failures.isEmpty) {
-            java.nio.file.Files.writeString(basePath, auditJson)
-            println(s"[planaudit] PINNED $basePath")
-          } else println("[planaudit] REFUSING to pin: failures below")
-        } else if (java.nio.file.Files.exists(basePath)) {
-          val (baseSf, base) = parseGates(java.nio.file.Files.readString(basePath))
-          def norm(d: String) = d.reverse.dropWhile(_ == '/').reverse
-          if (norm(baseSf) != norm(sfDir))
-            failures ::= s"baseline pinned at $baseSf, audit ran at $sfDir - not comparable"
-          else {
-            val (_, cur) = parseGates(auditJson)
-            (base.keySet ++ cur.keySet).toSeq.sorted.foreach { g =>
-              (base.get(g), cur.get(g)) match {
-                case (None, Some(_)) =>
-                  println(s"[planaudit] NEW gate $g (no baseline entry) - pin to adopt")
-                case (Some(_), None) =>
-                  failures ::= s"$g: present in baseline, missing from audit"
-                case (Some(b), Some(c)) if b != c =>
-                  val diffs = (b.keySet ++ c.keySet).toSeq.sorted.flatMap { k =>
-                    val (bv, cv) = (b.getOrElse(k, 0), c.getOrElse(k, 0))
-                    if (bv != cv) Some(s"$k $bv->$cv") else None
-                  }
-                  failures ::= s"$g: plan drift [${diffs.mkString(", ")}]"
-                case _ => ()
-              }
-            }
+        val trips = tripwires(sigs)
+        val failures = trips ++ {
+          if (mode == "pin") {
+            // never replace a good baseline with a failed sweep: a wrong
+            // sfDir or a tripwired gate must not destroy the committed pin
+            if (trips.isEmpty) {
+              java.nio.file.Files.writeString(basePath, auditJson)
+              println(s"[planaudit] PINNED $basePath")
+            } else println("[planaudit] REFUSING to pin: failures below")
+            Nil
+          } else if (java.nio.file.Files.exists(basePath)) {
+            val (notes, drift) = baselineDiff(sfDir,
+              java.nio.file.Files.readString(basePath), auditJson)
+            notes.foreach(n => println(s"[planaudit] $n"))
+            drift
+          } else {
+            println(s"[planaudit] no $basePath - run `pin` to create one")
+            Nil
           }
-        } else println(s"[planaudit] no $basePath - run `pin` to create one")
+        }
 
         if (failures.nonEmpty) {
-          failures.reverse.foreach(f => println(s"[planaudit] FAIL $f"))
+          failures.foreach(f => println(s"[planaudit] FAIL $f"))
           spark.stop()
           sys.exit(1)
         } else println("[planaudit] clean: no tripwires, no drift")

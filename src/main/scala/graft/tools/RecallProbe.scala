@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Similarity
+import graft.sources.mem.WireJson
 
 /** ANN recall at scale (r14 verdict #5): the sim_lsh_recall /
   * sim_ivf_topk gates prove recall mechanics on 10-query fixtures; this
@@ -33,8 +34,7 @@ import graft.functions.Similarity
   * SPARK_GRAFT_REFRESH_RECALL=1 re-pins (required after GenScale changes).
   */
 object RecallProbe {
-  private def num(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+  private def num(v: Double): String = Measure.num(v, 4)
 
   /** Per-method ABSOLUTE recall floors (r15 verdict #7). These are
     * accuracy contracts, not regression pins: a config listed here is
@@ -53,6 +53,14 @@ object RecallProbe {
     // so "exact re-rank" can never silently decay further
     "ivfpq_rerank_p48" -> 0.85)
 
+  /** The pinned (recall, seconds) of every method in a recall file. */
+  private[graft] def pins(file: Map[String, Any]): Map[String, (Double, Double)] =
+    Measure.obj(file.getOrElse("methods", Map.empty)).flatMap { case (name, m) =>
+      val fields = Measure.obj(m)
+      for (Measure.Num(r) <- fields.get("recall"); Measure.Num(s) <- fields.get("sec"))
+        yield name -> (r, s)
+    }
+
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/tmp/graft_sf1"
     val nQ = if (args.length > 1) args(1).toInt else 50
@@ -67,17 +75,17 @@ object RecallProbe {
 
     // min-of-3 like Bench: single-shot timings swung 3× between
     // adjacent methods in the r15 artifact (JIT/page-cache order effects)
-    // — the recall number needs one run, the RUNTIME needs the min
+    // — the recall number needs one run, the RUNTIME needs the min. Each
+    // pass drops the previous pass's cached result first (a plan that is
+    // still cached would be read, not computed); the last one is scored.
     def timed(fn: => DataFrame): (DataFrame, Double) = {
-      var best = Double.MaxValue
       var out: DataFrame = null
-      (1 to 3).foreach { _ =>
+      val best = Measure.bestOf3 {
         if (out != null) out.unpersist()
-        val t0 = System.nanoTime()
         out = fn.cache()
         out.count()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
+        true
+      }.get
       (out, best)
     }
 
@@ -142,14 +150,7 @@ object RecallProbe {
     brute.unpersist(); emb.unpersist()
 
     val baseFile = new java.io.File("RECALL_sf1.json")
-    val base: Map[String, (Double, Double)] =
-      if (baseFile.isFile) {
-        val txt = scala.io.Source.fromFile(baseFile).mkString
-        """"([A-Za-z0-9_]+)":\{"recall":([0-9.Ee+-]+),"sec":([0-9.Ee+-]+)""".r
-          .findAllMatchIn(txt)
-          .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble))
-          .toMap
-      } else Map.empty
+    val base = pins(Measure.readPin(baseFile))
     var flags = List.empty[String]
     // Absolute accuracy floors (r15 verdict #7): methods carrying a user
     // contract flag below these regardless of what the pin drifts to.
@@ -178,12 +179,11 @@ object RecallProbe {
       s""""$nm":{"recall":${num(r)},"sec":${num(s)}}""" }.mkString(",")
     val json = s"""{"metric":"recall","dir":"$dir","n_vectors":$n,""" +
       s""""n_queries":$nQ,"k":$k,"brute_sec":${num(bruteSec)},""" +
-      s""""flags":${flags.map(f => "\"" + f + "\"").mkString("[", ",", "]")},""" +
+      s""""flags":${flags.map(WireJson.q).mkString("[", ",", "]")},""" +
       s""""methods":{$body}}"""
     val outFile = if (base.isEmpty || refresh) baseFile
       else new java.io.File("RECALL_RUN_sf1.json")
-    java.nio.file.Files.write(outFile.toPath,
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.writeString(outFile.toPath, json)
     spark.stop()
     println(json)
     if (flags.nonEmpty) sys.exit(1)

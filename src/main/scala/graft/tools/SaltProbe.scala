@@ -35,12 +35,7 @@ object SaltProbe {
       concat(lit("dim_"), col("id")).as("dv")).cache()
     dim.count()
 
-    def time(body: => Unit): Double = {
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }
-      ts.min
-    }
+    def time(body: => Unit): Double = Measure.bestOf3 { body; true }.get
 
     /** total shuffle records written across the stages `body` triggers */
     def shuffleRecords(body: => Unit): Long =

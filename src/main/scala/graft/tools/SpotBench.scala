@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.sources.mem.WireJson
 
 /** sf1 spot-bench (r11 verdict #6; median-of-3 + pinned baseline r12
   * verdict #3): times the pinned 10 most expensive gates plus the full
@@ -20,10 +20,11 @@ import org.apache.spark.sql.SparkSession
   * the successful rounds only.
   *
   * PINNED BASELINE + DELTAS (the sf0.1 calibration lesson applied at
-  * sf1): the committed BENCH_SPOT_sf1.json is the baseline. A run with
-  * no baseline (or SPARK_GRAFT_REFRESH_SPOT=1 — required after a
+  * sf1): the committed BENCH_SPOT_<sf>.json is the baseline, <sf> named
+  * by the sf1 dir (`/tmp/graft_sf10` pins BENCH_SPOT_sf10.json). A run
+  * with no baseline (or SPARK_GRAFT_REFRESH_SPOT=1 — required after a
   * GenScale change, which redefines the staged corpus) writes it;
-  * otherwise results land in BENCH_SPOT_RUN_sf1.json with a deltas block
+  * otherwise results land in BENCH_SPOT_RUN_<sf>.json with a deltas block
   * of growth-ratio ratios vs baseline, flagging > 1.5× on stderr —
   * growth is a same-machine quotient, so machine speed divides out.
   *
@@ -32,6 +33,9 @@ import org.apache.spark.sql.SparkSession
   * shipped form, at both scales.
   *
   * usage: runMain graft.tools.SpotBench [sf1Dir] [refDir]
+  * SPARK_GRAFT_SPOT_TIMEOUT (seconds per run, default 360) and
+  * SPARK_GRAFT_SPOT_ROUNDS (default 3) set the run conditions the header
+  * records; the sf100 pin used 900 s and 2 rounds.
   */
 object SpotBench {
   // the 10 most expensive gates of the committed sf0.1 baseline (r11)
@@ -86,8 +90,86 @@ object SpotBench {
     "dedup_keep_best", "dedup_cluster_cc", "dedup_semantic",
     "dedup_embedding_cosine", "dedup_embedding_cosine_t90")
 
-  private def num(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def num(v: Double): String = Measure.num(v, 3)
+
+  /** BENCH_SPOT_<sf>.json, the pinned baseline, which a bootstrap (no
+    * baseline yet) or a refresh writes; BENCH_SPOT_RUN_<sf>.json, which
+    * any other run writes. <sf> is the staged dir's name without the
+    * `graft_` of the `graft_sfN` convention ([[GenScale.ensureStaged]]). */
+  private[graft] def outFileName(sf1Dir: String, bootstrap: Boolean,
+      refresh: Boolean): String = {
+    val sf = new java.io.File(sf1Dir).getName.stripPrefix("graft_")
+      .replaceAll("[^A-Za-z0-9.]", "_")
+    if (bootstrap || refresh) s"BENCH_SPOT_$sf.json" else s"BENCH_SPOT_RUN_$sf.json"
+  }
+
+  /** One gate's reading: median seconds at the reference and the staged
+    * dir, their quotient and the staged dir's max/min spread. None is a
+    * timeout or failure, written as "timeout". */
+  private[graft] final case class Reading(sf01: Option[Double], sf1: Option[Double],
+      growth: Option[Double], spread: Option[Double]) {
+    def json: String = {
+      def v(o: Option[Double]) = o.map(num).getOrElse("\"timeout\"")
+      s"""{"sf01":${v(sf01)},"sf1":${v(sf1)},"growth":${v(growth)}""" +
+        spread.map(s => s""","sf1_spread":${num(s)}""").getOrElse("") + "}"
+    }
+  }
+
+  /** The per-gate readings of a spot file's `gates` object. */
+  private[graft] def readings(file: Map[String, Any]): Map[String, Reading] =
+    Measure.obj(file.getOrElse("gates", Map.empty)).map { case (gate, e) =>
+      val m = Measure.obj(e)
+      def d(k: String) = m.get(k).collect { case Measure.Num(v) => v }
+      gate -> Reading(d("sf01"), d("sf1"), d("growth"), d("sf1_spread"))
+    }
+
+  /** The pinned growth of every baseline gate that has one: a timeout
+    * entry pins nothing, so it never flags and a later clean reading
+    * adopts over it. */
+  private[graft] def growthPins(base: Map[String, Reading]): Map[String, Double] =
+    base.collect { case (g, Reading(_, _, Some(growth), _)) => g -> growth }
+
+  /** (gate, growth, pinned growth, ratio) of every gate whose growth is
+    * more than 1.5× its pin; none on a bootstrap or refresh run, which
+    * re-pins instead. */
+  private[graft] def growthFlags(results: Seq[(String, Reading)],
+      pins: Map[String, Double], repin: Boolean): Seq[(String, Double, Double, Double)] =
+    if (repin) Nil
+    else results.flatMap { case (name, r) =>
+      for {
+        g <- r.growth
+        b <- pins.get(name)
+        if b > 0 && g / b > 1.5
+      } yield (name, g, b, g / b)
+    }
+
+  /** The gates object of a spot file, keys sorted. */
+  private[graft] def gatesJson(gates: Map[String, Reading]): String =
+    gates.toSeq.sortBy(_._1).map { case (n, r) => s""""$n":${r.json}""" }
+      .mkString("{", ",", "}")
+
+  /** Never-seen gates ADOPT into the pinned baseline (the sf0.1 bench
+    * policy applied at sf1): a non-refresh run never touches an existing
+    * baseline entry, but a brand-new gate has no pin to regress against,
+    * so its first CLEAN growth reading becomes the pin. Returns the new
+    * baseline text and the adopted gates, or None when nothing adopts.
+    * Only the gates object is rewritten: the header (timeout_sec, rounds,
+    * sf1_dir, flags) keeps describing the conditions the EXISTING pins
+    * were measured under. */
+  private[graft] def adopt(baseText: String,
+      results: Seq[(String, Reading)]): Option[(String, Seq[String])] = {
+    val base = readings(Measure.obj(WireJson.parse(baseText)))
+    val pins = growthPins(base)
+    // a run's growth exists only when both of its scales read clean
+    val newcomers = results.filter { case (n, r) => r.growth.isDefined && !pins.contains(n) }
+    if (newcomers.isEmpty) None
+    else {
+      val cut = baseText.indexOf("\"gates\":")
+      require(cut >= 0, "spot baseline has no gates object")
+      Some((baseText.substring(0, cut) + "\"gates\":" + gatesJson(base ++ newcomers) + "}",
+        newcomers.map(_._1)))
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sf1Dir = if (args.length > 0) args(0) else "/tmp/graft_sf1"
@@ -111,7 +193,7 @@ object SpotBench {
 
     // the pre-r12 containment form, in the gate's exact planted shape —
     // the "before" of the r11 verdict's scale-killer fix
-    val containmentBrute: (SparkSession, String) => org.apache.spark.sql.DataFrame =
+    val containmentBrute: Measure.Gate =
       (s, dir) => {
         import org.apache.spark.sql.functions._
         val docs = graft.sources.Tables.load(s, dir, "documents")
@@ -123,7 +205,7 @@ object SpotBench {
           "doc_id", "text", shingleLen = 3, threshold = 0.8)
       }
 
-    val allGates: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
+    val allGates: Seq[(String, Measure.Gate)] =
       (top10 ++ dedupFamily ++ newOps ++ starOps ++ streamOps).distinct.map(n => n -> graft.SparkEntry.queries(n)) :+
         ("dedup_containment_brute" -> containmentBrute)
     val gates = only match {
@@ -133,8 +215,7 @@ object SpotBench {
 
     /** run body with a hard timeout; cancel the job group on expiry.
       * Some(seconds) on success, None on timeout/error (logged). */
-    def timed(tag: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String): Option[Double] = {
+    def timed(tag: String, fn: Measure.Gate, dir: String): Option[Double] = {
       @volatile var failed: Option[String] = None
       val t0 = System.nanoTime()
       val th = new Thread(() => {
@@ -161,15 +242,7 @@ object SpotBench {
       out
     }
 
-    // warm every gate shape once at the smallest sf (codegen/JIT)
-    val warmDir = {
-      val d = "/root/testdata/sf0.001"
-      if (new java.io.File(d).isDirectory) d else refDir
-    }
-    gates.foreach { case (n, fn) =>
-      try { fn(spark, warmDir).count(); () } catch { case _: Throwable => () }
-      spark.catalog.clearCache()
-    }
+    Measure.warmUp(spark, "spot", gates, Measure.warmDir(refDir))
 
     // ROUND-ALTERNATED measurement: rounds × (every gate once at each
     // scale). A timeout/failure removes the gate from later rounds.
@@ -207,108 +280,40 @@ object SpotBench {
       val tRef = median(refTimes.getOrElse(name, Nil))
       val t1 = median(sf1Times.getOrElse(name, Nil))
       val growth = for (a <- tRef; b <- t1) yield b / a
+      val sp = spread(sf1Times.getOrElse(name, Nil))
       System.err.println(s"[spot] $name ref=${tRef.map(num)} sf1=${t1.map(num)} " +
-        s"growth=${growth.map(g => num(g) + "x")} " +
-        s"spread=${spread(sf1Times.getOrElse(name, Nil)).map(s => num(s) + "x")}")
-      (name, tRef, t1, growth, spread(sf1Times.getOrElse(name, Nil)))
+        s"growth=${growth.map(g => num(g) + "x")} spread=${sp.map(s => num(s) + "x")}")
+      name -> Reading(tRef, t1, growth, sp)
     }
 
     // ---- baseline / deltas (growth is the machine-independent signal) ----
-    // SPARK_GRAFT_SPOT_OUT names an alternate baseline/run file pair —
-    // the sf10 decade probe (r15 verdict #6) pins into its own namespace
-    // (BENCH_SPOT_sf10.json) instead of polluting the sf1 baseline
-    val (baseFile, runFile) = sys.env.get("SPARK_GRAFT_SPOT_OUT") match {
-      case Some(p) => (new java.io.File(p),
-        new java.io.File(p.stripSuffix(".json") + "_RUN.json"))
-      case None => (new java.io.File("BENCH_SPOT_sf1.json"),
-        new java.io.File("BENCH_SPOT_RUN_sf1.json"))
-    }
-    // parsed, not passed through: the factor is interpolated into the
-    // output JSON, so a non-numeric value must fail loudly HERE instead
-    // of silently corrupting the baseline file (ADVICE r16 #4)
-    val rowFactor = sys.env.getOrElse("SPARK_GRAFT_SPOT_FACTOR", "10").toInt
-    val baseGrowth: Map[String, Double] =
-      if (baseFile.isFile) {
-        val txt = scala.io.Source.fromFile(baseFile).mkString
-        // anchor on the per-gate {"sf01": shape (like the `prior` regex
-        // below): an unanchored {...growth} match latched leftmost onto
-        // the top-level "gates":{ wrapper, consuming the alphabetically
-        // FIRST gate's entry — that gate was silently absent from
-        // baseGrowth and its growth regressions never flagged
-        """"([A-Za-z0-9_]+)":\{"sf01":[^}]*"growth":([0-9.Ee+-]+)""".r
-          .findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    val bootstrap = baseGrowth.isEmpty
-    val outFile =
-      if (bootstrap || refresh) baseFile
-      else runFile
+    val baseFile = new java.io.File(outFileName(sf1Dir, bootstrap = true, refresh))
+    val pins = growthPins(readings(Measure.readPin(baseFile)))
+    val bootstrap = pins.isEmpty
+    val outFile = new java.io.File(outFileName(sf1Dir, bootstrap, refresh))
 
-    val flags = results.flatMap { case (name, _, _, growth, _) =>
-      for {
-        g <- growth
-        b <- baseGrowth.get(name)
-        if b > 0 && g / b > 1.5 && !refresh && !bootstrap
-      } yield {
-        System.err.println(f"[spot] GROWTH REGRESSION $name: ${g}%.2fx vs " +
-          f"baseline ${b}%.2fx (${g / b}%.2fx worse)")
-        s"""{"gate":"$name","growth":${num(g)},"baseline":${num(b)},"ratio":${num(g / b)}}"""
-      }
-    }
+    val flagsJson = growthFlags(results, pins, bootstrap || refresh).map { case (name, g, b, r) =>
+      System.err.println(f"[spot] GROWTH REGRESSION $name: ${g}%.2fx vs " +
+        f"baseline ${b}%.2fx (${r}%.2fx worse)")
+      s"""{"gate":"$name","growth":${num(g)},"baseline":${num(b)},"ratio":${num(r)}}"""
+    }.mkString("[", ",", "]")
 
     // merge with any prior chunk's entries in the TARGET file (latest wins)
-    val prior: Seq[(String, String)] =
-      if (outFile.isFile) {
-        val txt = scala.io.Source.fromFile(outFile).mkString
-        """"([A-Za-z0-9_]+)":(\{"sf01":[^}]*\})""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2)).toSeq
-      } else Nil
-    val fresh = results.map { case (n, tRef, t1, g, sp) =>
-      def v(o: Option[Double]) = o.map(num).getOrElse("\"timeout\"")
-      n -> (s"""{"sf01":${v(tRef)},"sf1":${v(t1)},"growth":${v(g)}""" +
-        sp.map(s => s""","sf1_spread":${num(s)}""").getOrElse("") + "}")
-    }
-    val merged = (prior.toMap ++ fresh.toMap).toSeq.sortBy(_._1)
-    val gatesJson = merged.map { case (n, b) => s""""$n":$b""" }
-      .mkString("{", ",", "}")
-    val flagsJson = flags.mkString("[", ",", "]")
+    val prior = readings(Measure.readPin(outFile))
+    // row_factor: every staged dir is GenScale's sources at 10x the rows
     val json =
       s"""{"metric":"spot","unit":"sec","timeout_sec":$timeoutSec,""" +
-        s""""rounds":$rounds,"row_factor":$rowFactor,"sf1_dir":"$sf1Dir",""" +
-        s""""flags":$flagsJson,"gates":$gatesJson}"""
-    java.nio.file.Files.write(outFile.toPath,
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        s""""rounds":$rounds,"row_factor":10,"sf1_dir":"$sf1Dir",""" +
+        s""""flags":$flagsJson,"gates":${gatesJson(prior ++ results)}}"""
+    java.nio.file.Files.writeString(outFile.toPath, json)
 
-    // never-seen gates ADOPT into the pinned baseline (the sf0.1 bench
-    // policy applied at sf1): a non-refresh run never touches an existing
-    // baseline entry, but a brand-new gate has no pin to regress against,
-    // so its first clean growth reading becomes the pin
-    if (!bootstrap && !refresh) {
-      // only CLEAN readings adopt (a timeout/failure entry would both
-      // violate "first clean growth reading becomes the pin" and stay
-      // invisible to baseGrowth's numeric-growth regex forever)
-      val cleanNames = results.collect {
-        case (n, Some(_), Some(_), Some(_), _) => n }.toSet
-      val newcomers = fresh.filter { case (n, _) =>
-        cleanNames(n) && !baseGrowth.contains(n) }
-      if (newcomers.nonEmpty) {
-        // splice ONLY the gates object into the existing baseline text —
-        // the header (timeout_sec/rounds/sf1_dir/flags) keeps describing
-        // the conditions the EXISTING pins were measured under
-        val txt = scala.io.Source.fromFile(baseFile).mkString
-        val basePrior = """"([A-Za-z0-9_]+)":(\{"sf01":[^}]*\})""".r
-          .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2)).toSeq
-        val mergedBase = (basePrior.toMap ++ newcomers.toMap).toSeq.sortBy(_._1)
-          .map { case (n, b) => s""""$n":$b""" }.mkString("{", ",", "}")
-        val cut = txt.indexOf("\"gates\":")
-        require(cut >= 0, "spot baseline has no gates object")
-        val baseJson = txt.substring(0, cut) + "\"gates\":" + mergedBase + "}"
-        java.nio.file.Files.write(baseFile.toPath,
-          baseJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        System.err.println(s"[spot] adopted ${newcomers.size} never-seen " +
-          s"gate(s) into the pinned baseline: ${newcomers.map(_._1).mkString(", ")}")
+    if (!bootstrap && !refresh)
+      adopt(java.nio.file.Files.readString(baseFile.toPath), results).foreach {
+        case (baseJson, adopted) =>
+          java.nio.file.Files.writeString(baseFile.toPath, baseJson)
+          System.err.println(s"[spot] adopted ${adopted.size} never-seen " +
+            s"gate(s) into the pinned baseline: ${adopted.mkString(", ")}")
       }
-    }
     spark.stop()
     println(json)
   }

@@ -9,7 +9,7 @@ import graft.operators.Joins
   * Bucketing removes the shuffle from a co-located join; salting spreads a
   * hot key without changing the join result. */
 class ScaleSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, table}
+  import SparkTestSession.{jobsDuring, spark, table}
 
   test("bucketed co-located join plans with NO shuffle exchange") {
     val wh = java.nio.file.Files.createTempDirectory("graft_bucket").toString
@@ -78,6 +78,20 @@ class ScaleSpec extends AnyFunSuite {
     val autoU = Joins.innerAutoSalted(uniform, "k", small, "dk")
     assert(!autoU.queryExecution.executedPlan.toString.contains("graft_salt"))
     assert(autoU.count() === uniform.join(small, col("k") === col("dk")).count())
+  }
+
+  test("auto-salted join: building runs exactly the sampled skew probe") {
+    import spark.implicits._
+    val big = spark.range(0L, 40000L).select(
+      when(col("id") % 5 < 3, 1L).otherwise(col("id") % 997L).as("k"),
+      col("id").as("payload"))
+    val small = (0L until 997L).map(k => (k, s"dim_$k")).toDF("dk", "dv")
+    // the probe stays eager: the salted-or-plain plan is chosen from it.
+    // AQE runs the sample's partial aggregate and the final one as jobs.
+    val (_, probeJobs) = jobsDuring(Joins.sampledMaxKeyShare(big, "k", 0.05, 42L))
+    val (_, jobs) = jobsDuring(Joins.innerAutoSalted(big, "k", small, "dk"))
+    assert(probeJobs === 3)
+    assert(jobs === probeJobs, "build-time jobs of innerAutoSalted")
   }
 
   /** r11 verdict #8: the 0.15 default threshold is the MEASURED crossover

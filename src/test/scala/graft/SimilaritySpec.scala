@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Similarity
 
 class SimilaritySpec extends AnyFunSuite {
-  import SparkTestSession.{spark, table}
+  import SparkTestSession.{jobsDuring, spark, table}
 
   lazy val emb = table("embeddings").cache()
 
@@ -134,6 +134,32 @@ class SimilaritySpec extends AnyFunSuite {
       keyed2.orderBy("query_id", "rank").collect().toSeq)
     Similarity.dropIndex("spec#ann_default")
     Similarity.dropIndex(Similarity.annDerivedKey(emb, "vec_id", "embedding"))
+  }
+
+  test("ivfProbe and annTopK: build-time jobs are the size checks that pick their plans") {
+    val q = emb.where(col("vec_id") < 10)
+    val idx = Similarity.ivfBuild(emb, "vec_id", "embedding", nlist = 8)
+    try {
+      // the bounded limit(n+1).count() that picks the broadcast or the
+      // batch probe, on either side of the choice
+      val (_, probeJobs) = jobsDuring(Similarity.ivfProbe(idx, q, "vec_id", "embedding", 5,
+        nprobe = 3))
+      val (_, batchJobs) = jobsDuring(Similarity.ivfProbe(idx, q, "vec_id", "embedding", 5,
+        nprobe = 1, maxBroadcastQueries = 5))
+      assert(probeJobs === 2 && batchJobs === 2, "build-time jobs of ivfProbe")
+    } finally idx.unpersist()
+    // a registry miss also counts the corpus for nlist and trains the
+    // index; a hit only probes
+    val key = "spec#ann_build_jobs"
+    Similarity.dropIndex(key)
+    try {
+      val (_, miss) = jobsDuring(Similarity.annTopK(emb, q, "vec_id", "embedding", 5,
+        indexKey = Some(key)))
+      val (_, hit) = jobsDuring(Similarity.annTopK(emb, q, "vec_id", "embedding", 5,
+        indexKey = Some(key)))
+      assert(miss === 6, "build-time jobs of annTopK on a registry miss")
+      assert(hit === 2, "build-time jobs of annTopK on a registry hit")
+    } finally Similarity.dropIndex(key)
   }
 
   test("annTopK: two anonymous calls over the same corpus hit one build") {

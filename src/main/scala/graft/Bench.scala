@@ -10,7 +10,7 @@ object Bench {
     // aid). A partial run never touches the baseline file — the full-map
     // overwrite would silently drop every unselected query's entry.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .map(Measure.gateNames(_, SparkEntry.queries.contains).toSet)
     val selected = only match {
       case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
       case None => SparkEntry.queries
@@ -18,19 +18,15 @@ object Bench {
     val spark = SparkEntry.localSession(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val cpus = spark.sparkContext.defaultParallelism
-    // Calibration basket (r11 verdict #1; one gate per workload class
-    // since r15, see classBaskets): machine speed is the MEDIAN ratio
-    // against the baseline's recorded basket. A scalar CPU probe does not
-    // track sf0.1 Spark wall time (scheduler/overhead-dominated: a 4.4×
-    // probe swing once manufactured a uniform phantom 4.3× "regression"),
-    // and a basket blind to a class cannot adjudicate that class's flags
-    // (r13: a float-slow window slowed every float gate ~1.8× while the
-    // other entries read baseline speed). A lone `_basket_<gate>`
-    // excursion in BENCH_DELTAS marks a class-shaped window, not a code
-    // regression. The basket runs at the BENCHED sf, the regime being
+    // Calibration basket (r11 verdict #1): machine speed is the MEDIAN
+    // ratio of six pinned gates against the baseline's recorded basket.
+    // A scalar CPU probe does not track sf0.1 Spark wall time
+    // (scheduler/overhead-dominated: a 4.4× probe swing once manufactured
+    // a uniform phantom 4.3× "regression"). The basket is the speed of
+    // partial runs, which have no median raw ratio, and the cross-check
+    // of full ones. It runs at the BENCHED sf, the regime being
     // normalized: at sf0.01 its sub-second timings swung ~30% between
     // back-to-back idle runs.
-    val basketNames = classBaskets.values.toSeq.distinct.sorted
     // warm EVERY selected query at the smallest scale factor, and the
     // basket queries too — partial runs may not select them
     val warmSet = selected ++
@@ -140,8 +136,6 @@ object Bench {
     val healthy = results.collect { case (k, Some(v)) => (k, v) }
 
     // ---- machine speed vs the baseline machine (r11 verdict #1) ----
-    def median(xs: Seq[Double]): Option[Double] =
-      if (xs.isEmpty) None else Some(xs.sorted.apply(xs.size / 2))
     // the pinned-basket ratio against the baseline's recorded basket
     // (same queries, same sf, same min-of-3 discipline)
     val basketSpeed = median(basket.flatMap { case (n, t) =>
@@ -158,13 +152,15 @@ object Bench {
     // partial merge would write near-old values back into the baseline,
     // defeating the refresh. Partial runs normalize by the independent
     // pinned basket instead (the "basket serves partial runs" contract).
-    val medianRawRatio = median(healthy.flatMap { case (k, v) =>
-      prev.get(k).filter(_ > 0).map(v / _) })
+    val medianRawRatio = rawRatioMedian(prev, healthy)
       .filter(_ => only.isEmpty && healthy.size >= 10)
     // PRIMARY: median raw ratio when the sweep is big enough to carry it
-    // (full runs); the 3-query basket serves partial runs and stands as
-    // the independent cross-check either way (disagreement warns below)
+    // (full runs); the basket serves partial runs and stands as the
+    // independent cross-check either way (disagreement warns below)
     val speedRatio = medianRawRatio.orElse(basketSpeed).getOrElse(1.0)
+    def speedText(s: Option[Double]) = s.fold("-")(num(_, 3))
+    System.err.println(s"[bench] machine speed ${num(speedRatio, 3)} (basket " +
+      s"${speedText(basketSpeed)}, median raw ratio ${speedText(medianRawRatio)})")
     for (b <- basketSpeed; m <- medianRawRatio)
       if (b / m > 1.3 || m / b > 1.3)
         System.err.println(f"[bench] CALIBRATION DISAGREEMENT: basket speed " +
@@ -197,13 +193,13 @@ object Bench {
         f"scaled by 1/speed = ${1.0 / speedRatio}%.3f")
     }
     if (prev.nonEmpty && !contaminated && !partial) {
-      val flags = regressionFlags(prev, basket, healthy, speedRatio)
+      val flags = regressionFlags(prev, healthy, speedRatio)
       val probeJson = probes.map(p => num(p, 3)).mkString("[", ",", "]")
       val basketJson = basket.map { case (n, t) => s""""$n":${num(t, 3)}""" }
         .mkString("{", ",", "}")
       java.nio.file.Files.writeString(new java.io.File("BENCH_DELTAS.json").toPath,
         (s"""{"cal_sec":${num(cal, 3)},"machine_speed_vs_prev":${num(speedRatio, 3)},""" +
-          s""""basket_sec":$basketJson,"class_speed":${flags.classSpeedJson},""" +
+          s""""basket_sec":$basketJson,""" +
           basketSpeed.map(b => s""""basket_speed":${num(b, 3)},""").getOrElse("") +
           medianRawRatio.map(m => s""""median_raw_ratio":${num(m, 3)},""").getOrElse("") +
           s""""noise":${num(noise, 2)},"probes_sec":$probeJson,"prev_ratio":${flags.ratiosJson},""" +
@@ -225,103 +221,39 @@ object Bench {
     System.out.flush()
   }
 
-  // r15 (r14 verdict #2): the basket is now PER WORKLOAD CLASS — two
-  // consecutive driver windows (noise 1.87, 4.14) were contended in a
-  // CLASS-shaped way (pure-CPU decodes at 100-220× while shuffle gates
-  // ran near baseline), and a single global speed cannot adjudicate
-  // that. Each class gets one representative basket query; every
-  // gate's regression ratio is normalized by ITS class's measured
-  // speed, so a float-slow or decode-slow window self-adjudicates
-  // instead of flagging the whole family. The class speeds land in
-  // BENCH_DELTAS ("class_speed") as the contention fingerprint.
-  private val classBaskets: Map[String, String] = Map(
-    "decode" -> "mm_png_decode", // pure-CPU codec loops (mm_*)
-    "stream" -> "s4_stream_window", // micro-batch + state-store commits
-    "fuzz" -> "q_fuzz_numeric", // codegen-dense multi-case stacks
-    "float" -> "sim_brute_topk", // vectorized float dot products
-    "shuffle" -> "q3_shipping", // exchange-bound relational
-    "map" -> "text_quality") // map-only text scans
-  // map-only per-document text scans (no corpus-level shuffle) — the
-  // "map" class; corpus-aggregating text gates (tfidf/bm25/xent/...)
-  // deliberately stay "default": they mix scan + exchange and neither
-  // the map nor the shuffle basket is their shape (ADVICE r15 #3).
-  private val mapOnlyGates = Set("text_quality", "text_langid",
-    "text_gopher_rules", "text_c4_clean", "text_strip_html",
-    "text_normalize", "text_tokens", "text_pii_scrub",
-    "text_repetition", "pii_scrub")
-  // exchange-bound relational/join gates, EXPLICITLY (ADVICE r16 #1):
-  // the bare q*/j* prefix swept in expression-bound gates
-  // (q_scalar_funcs, q_array_funcs, q_sql_direct), the iterative
-  // q_pagerank/q_recursive_cte, and the command-shaped q_analyze_stats
-  // — none exchange-bound, so a contended shuffle window normalized
-  // them by the wrong class speed. Prefix families (q<digit>_ TPC-H,
-  // q_join*/q_window*/q_asof*, the whole j* join/zip family) plus a
-  // name set for the rest; anything new defaults to "default", which
-  // only costs it the class-specific normalizer, never mis-normalizes.
-  private val shufflePrefixes = Seq("q_join", "q_window", "q_asof")
-  private val shuffleNames = Set(
-    "q_topk", "q_grouping_sets", "q_cube", "q_rollup", "q_pivot",
-    "q_unpivot", "q_distinct_agg", "q_collect_list", "q_percentile",
-    "q_approx_percentile", "q_approx_distinct", "q_hll_distinct",
-    "q_except", "q_except_all", "q_intersect", "q_intersect_all",
-    "q_range_join", "q_interval_join", "q_session_window",
-    "q_sliding_window", "q_time_window", "q_lateral_topn",
-    "q_scalar_subquery", "q_correlated_exists", "q_zorder")
-  private def workloadClass(name: String): String =
-    if (name.startsWith("mm_") || name == "src_binaryfile_media") "decode"
-    else if (name.contains("stream")) "stream"
-    else if (name.startsWith("q_fuzz")) "fuzz"
-    else if (name.startsWith("sim_") || name.startsWith("dedup_embedding") ||
-      name.startsWith("dedup_semantic")) "float"
-    else if (name.startsWith("j") ||
-      name.matches("q\\d+_.*") ||
-      shufflePrefixes.exists(name.startsWith) ||
-      shuffleNames(name)) "shuffle"
-    else if (mapOnlyGates(name)) "map"
-    else "default" // normalized by the global speed ratio
+  /** The calibration basket: one pinned gate per kind of work (codec
+    * loops, exchange-bound relational, codegen-dense case stacks,
+    * micro-batch commits, float dot products, map-only text), each recorded
+    * in the baseline as `_basket_<gate>`. */
+  private val basketNames = Seq("mm_png_decode", "q3_shipping",
+    "q_fuzz_numeric", "s4_stream_window", "sim_brute_topk", "text_quality")
+
+  private def median(xs: Seq[Double]): Option[Double] =
+    if (xs.isEmpty) None else Some(xs.sorted.apply(xs.size / 2))
+
+  /** The median per-gate raw ratio (now / baseline) over the gates both
+    * `healthy` and the baseline `prev` hold: a full run's machine speed. */
+  private[graft] def rawRatioMedian(prev: Map[String, Double],
+      healthy: Seq[(String, Double)]): Option[Double] =
+    median(healthy.flatMap { case (k, v) => prev.get(k).filter(_ > 0).map(v / _) })
 
   /** A clean full run's regression watch against the pinned baseline
-    * `prev`: per-class machine speeds, every shared gate's normalized
-    * ratio, and the flagged regressions (slowest first).
-    *
-    * A class's speed is its representative's own now/baseline ratio when
-    * both sides have it, CLAMPED at the global speed from below (a class
-    * can only read SLOWER than the machine, not faster: letting a
-    * fast-outlier rep deflate its class would manufacture flags); a class
-    * without one falls back to the global ratio. The representative
-    * itself is never flagged through its own ratio (normalizing a gate by
-    * itself is vacuous): reps normalize by the global speed. A gate
-    * flags when it degraded more than 1.5x BEYOND the speed shift its
-    * class measured, and only above 0.5 s, where timings are stable
-    * enough to mean it. */
+    * `prev`: every shared gate's ratio normalized by the one machine
+    * speed, and the flagged regressions (slowest first). A gate flags
+    * when it degraded more than 1.5x BEYOND the machine's speed shift,
+    * and only above 0.5 s, where timings are stable enough to mean it. */
   private[graft] def regressionFlags(prev: Map[String, Double],
-      basket: Seq[(String, Double)], healthy: Seq[(String, Double)],
-      speedRatio: Double): Flags = {
-    val basketNow = basket.toMap
-    val classSpeed: Map[String, Double] = classBaskets.flatMap {
-      case (cls, rep) =>
-        for {
-          now <- basketNow.get(rep)
-          base <- prev.get(s"_basket_$rep").filter(_ > 0)
-        } yield cls -> math.max(now / base, speedRatio)
-    }
-    val reps = classBaskets.values.toSet
-    def speedFor(k: String): Double =
-      if (reps(k)) speedRatio
-      else classSpeed.getOrElse(workloadClass(k), speedRatio)
+      healthy: Seq[(String, Double)], speedRatio: Double): Flags = {
     val ratios = healthy.flatMap { case (k, v) =>
-      prev.get(k).filter(_ > 0).map(p => (k, v, p, v / p / speedFor(k))) }
-    Flags(classSpeed, ratios,
-      ratios.filter { case (_, v, _, r) => r > 1.5 && v > 0.5 }.sortBy(-_._4))
+      prev.get(k).filter(_ > 0).map(p => (k, v, p, v / p / speedRatio)) }
+    Flags(ratios, ratios.filter { case (_, v, _, r) => r > 1.5 && v > 0.5 }.sortBy(-_._4))
   }
 
   /** [[regressionFlags]]' result: (gate, sec, baseline sec, normalized
     * ratio) per shared gate, and the BENCH_DELTAS fragments it renders. */
-  private[graft] final case class Flags(classSpeed: Map[String, Double],
+  private[graft] final case class Flags(
       ratios: Seq[(String, Double, Double, Double)],
       regressions: Seq[(String, Double, Double, Double)]) {
-    def classSpeedJson: String = classSpeed.toSeq.sortBy(_._1)
-      .map { case (c, s) => s""""$c":${num(s, 3)}""" }.mkString("{", ",", "}")
     def ratiosJson: String = ratios.map { case (k, _, _, r) => s""""$k":${num(r, 2)}""" }
       .mkString("{", ",", "}")
     def regressionsJson: String = regressions.map { case (k, v, p, r) =>
@@ -433,10 +365,9 @@ object Bench {
     // the reader's signal that the machine was contended during this run
     val noiseF = if (s.noise <= 1.2) "" else s""","noise":${num(s.noise, 2)}"""
     // machine-independent headline: total scaled to the committed
-    // baseline machine's speed via the BASKET ratio (median of the
-    // pinned representative queries; falls back to the median per-query
-    // raw ratio while the baseline has no basket) — lets the
-    // recorded number track CODE across machines of different speed.
+    // baseline machine's speed (the median raw ratio on a full run, the
+    // basket's on a partial one) — lets the recorded number track CODE
+    // across machines of different speed.
     // cal_sec stays as a raw-CPU diagnostic only.
     val normF = if (!s.hasBaseline || s.speedRatio <= 0) ""
       else s""","value_norm":${num(total / s.speedRatio, 3)}"""

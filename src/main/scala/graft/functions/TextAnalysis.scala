@@ -692,7 +692,10 @@ object TextAnalysis {
     // content-keyed ORDER before limit: a bare LIMIT takes whichever
     // rows arrive first, so the sample — and the returned weights —
     // would depend on partitioning; ordered, the take is a
-    // TakeOrderedAndProject and the sample is a pure function of the data
+    // TakeOrderedAndProject and the sample is a pure function of the data.
+    // Eager by design: the model is plain weights the caller embeds as
+    // literals, so there is no plan to defer, and the collect is capped
+    // at maxDocs rows (one job, pinned in CorpusSpec).
     val sample = docs.select(col(textCol).cast("string").as("t"),
         label.cast("double").as("y"))
       .where(col("t").isNotNull)

@@ -919,12 +919,14 @@ object CoreGates {
 
     // P1/P2/P7 + O1/O2/O3 — chained range (implicit AND map-merge,
     // reference dsl/package.scala:62-69) + sort/skip/limit pushdown
-    // (dsl/package.scala:48-58). Sort keys form a unique key so the
-    // skip/limit slice is deterministic.
+    // (dsl/package.scala:48-58). The sort runs over every selected
+    // column, so the skip/limit slice is deterministic: (l_orderkey,
+    // l_linenumber) alone repeats in the test data.
     "p_dsl_range_sort_page" -> ((s, dir) => {
       val q = Q()
         .where("l_quantity" $gte 10.0 $lte 15.0)
-        .sort("l_orderkey" -> Order.Ascending, "l_linenumber" -> Order.Ascending)
+        .sort("l_orderkey" -> Order.Ascending, "l_linenumber" -> Order.Ascending,
+          "l_quantity" -> Order.Ascending)
         .skip(5)
         .limit(100)
         .select("l_orderkey", "l_linenumber", "l_quantity")
@@ -1071,7 +1073,8 @@ object CoreGates {
         b.q("""{ "$or": [ { "l_quantity": { "$gte": 45 } },
                           { "l_returnflag": { "$in": ["A"] }, "l_quantity": { "$lt": 5 } } ] }""")
         b.collection("lineitem")
-        b.sort("l_orderkey" -> Order.Ascending, "l_linenumber" -> Order.Ascending)
+        b.sort("l_orderkey" -> Order.Ascending, "l_linenumber" -> Order.Ascending,
+          "l_quantity" -> Order.Ascending, "l_returnflag" -> Order.Ascending)
         b.skip(3)
         b.limit(500)
       }.select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
@@ -1084,8 +1087,9 @@ object CoreGates {
     // the connector's pushed filter, cursor TopN, and skip, so a pushdown
     // bug that corrupts ordering, pagination, or filtering breaks the
     // hash, not just a spec assertion. Collection = a 5% lineitem slice
-    // registered once per (JVM, dir); (l_orderkey, l_linenumber) is a
-    // unique total order, so the page is deterministic in both engines.
+    // registered once per (JVM, dir); the sort runs over every column,
+    // a total order on the rows, so the page is deterministic in both
+    // engines ((l_orderkey, l_linenumber) alone repeats in the test data).
     "p19_channel_mem_cursor" -> ((s, dir) => {
       val coll = "li_cursor" + dir.replaceAll("[^A-Za-z0-9]", "_")
       stageCache.getOrElseUpdate(s"memli#$dir", {
@@ -1098,7 +1102,8 @@ object CoreGates {
       graft.channel.Channel.create(s, dir) { b =>
         b.q("""{ "l_quantity": { "$gte": 30 } }""")
         b.memCollection(coll)
-        b.sort("l_orderkey" -> Order.Ascending, "l_linenumber" -> Order.Ascending)
+        b.sort("l_orderkey" -> Order.Ascending, "l_linenumber" -> Order.Ascending,
+          "l_quantity" -> Order.Ascending, "l_returnflag" -> Order.Ascending)
         b.skip(5)
         b.limit(200)
       }
@@ -2178,7 +2183,8 @@ object CoreGates {
       wireLineitem(s, dir)
         .load()
         .where(col("l_quantity") >= 25)
-        .orderBy(col("l_orderkey").asc, col("l_linenumber").asc)
+        .orderBy(col("l_orderkey").asc, col("l_linenumber").asc,
+          col("l_quantity").asc, col("l_returnflag").asc)
         .limit(300)
     }),
 
@@ -2192,7 +2198,8 @@ object CoreGates {
         .option("deflate", "true")
         .load()
         .where(col("l_quantity") >= 20 && col("l_quantity") <= 35)
-        .orderBy(col("l_orderkey").asc, col("l_linenumber").asc)
+        .orderBy(col("l_orderkey").asc, col("l_linenumber").asc,
+          col("l_quantity").asc, col("l_returnflag").asc)
         .limit(200)
     }),
 
@@ -2207,7 +2214,8 @@ object CoreGates {
         .option("deflate", "true")
         .load()
         .where(col("l_returnflag") =!= "N" && col("l_quantity") < 20)
-        .orderBy(col("l_orderkey").asc, col("l_linenumber").asc)
+        .orderBy(col("l_orderkey").asc, col("l_linenumber").asc,
+          col("l_quantity").asc, col("l_returnflag").asc)
         .limit(250)
     }),
 
@@ -2375,17 +2383,17 @@ object CoreGates {
     "s23_wire_cursor" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem
          WHERE l_orderkey % 20 = 1 AND l_quantity >= 25
-         ORDER BY l_orderkey, l_linenumber LIMIT 300""",
+         ORDER BY l_orderkey, l_linenumber, l_quantity, l_returnflag LIMIT 300""",
 
     "s26_wire_deflate" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem
          WHERE l_orderkey % 20 = 1 AND l_returnflag <> 'N' AND l_quantity < 20
-         ORDER BY l_orderkey, l_linenumber LIMIT 250""",
+         ORDER BY l_orderkey, l_linenumber, l_quantity, l_returnflag LIMIT 250""",
 
     "s27_wire_binary" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem
          WHERE l_orderkey % 20 = 1 AND l_quantity BETWEEN 20 AND 35
-         ORDER BY l_orderkey, l_linenumber LIMIT 200""",
+         ORDER BY l_orderkey, l_linenumber, l_quantity, l_returnflag LIMIT 200""",
 
     "s25_wire_agg" ->
       """SELECT l_returnflag, count(*) AS n,
@@ -2409,7 +2417,7 @@ object CoreGates {
     "p_dsl_range_sort_page" ->
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
          WHERE l_quantity >= 10.0 AND l_quantity <= 15.0
-         ORDER BY l_orderkey, l_linenumber LIMIT 100 OFFSET 5""",
+         ORDER BY l_orderkey, l_linenumber, l_quantity LIMIT 100 OFFSET 5""",
 
     "p_dsl_bool_ops" ->
       """SELECT o_orderkey, o_orderstatus, o_orderpriority, o_totalprice FROM orders
@@ -2433,13 +2441,13 @@ object CoreGates {
     "p11_mql_channel" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem
          WHERE l_quantity >= 45 OR (l_returnflag IN ('A') AND l_quantity < 5)
-         ORDER BY l_orderkey, l_linenumber LIMIT 500 OFFSET 3""",
+         ORDER BY l_orderkey, l_linenumber, l_quantity, l_returnflag LIMIT 500 OFFSET 3""",
 
-    // the same slice, filter, total order, and page in DuckDB
+    // the same slice, filter, sort over every column, and page in DuckDB
     "p19_channel_mem_cursor" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem
          WHERE l_orderkey % 20 = 0 AND l_quantity >= 30
-         ORDER BY l_orderkey, l_linenumber LIMIT 200 OFFSET 5""",
+         ORDER BY l_orderkey, l_linenumber, l_quantity, l_returnflag LIMIT 200 OFFSET 5""",
 
     // $exists ⇒ IS [NOT] NULL, $not ⇒ three-valued NOT (see the gate)
     "p17_mql_not_exists" ->

@@ -154,7 +154,13 @@ object Joins {
   /** Scalable ordinal assignment: `RDD.zipWithIndex` computes per-partition
     * offsets with one lightweight count job instead of a global sort —
     * the 100 TB path for zip-style alignment when the input's existing
-    * partition order is the intended order. */
+    * partition order is the intended order.
+    *
+    * Eager by design: `zipWithIndex` runs a job at construction to size
+    * the partitions, because a partition's first ordinal is the sum of
+    * the sizes before it. The lazy forms are worse: a `row_number` over a
+    * global window moves every row onto one reducer, and
+    * `monotonically_increasing_id` is not dense. JoinsSpec pins the jobs. */
   def zipWithOrdinal(df: DataFrame, ordCol: String = "zip_ord"): DataFrame = {
     val schema = StructType(df.schema.fields :+
       org.apache.spark.sql.types.StructField(ordCol, org.apache.spark.sql.types.LongType, nullable = false))

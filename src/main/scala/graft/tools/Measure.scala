@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.mem.WireJson
 
 /** What the measuring tools share: one number format, one pin-file
-  * reader, one min-of-3 timed pass and one warm-up. Each tool keeps its
-  * own file layout and flag policy. */
+  * reader, one gate-name selection, one min-of-3 timed pass and one
+  * warm-up. Each tool keeps its own file layout and flag policy. */
 object Measure {
   type Gate = (SparkSession, String) => DataFrame
 
@@ -34,6 +34,18 @@ object Measure {
       case l: Long => Some(l.toDouble)
       case _ => None
     }
+  }
+
+  /** The gates a comma list names: trimmed, empties dropped, each once in
+    * list order. A name `known` rejects, or a list naming nothing, fails
+    * loudly: a typo would otherwise select nothing, and the tool would
+    * time nothing and still exit 0. */
+  def gateNames(list: String, known: String => Boolean): Seq[String] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    require(names.nonEmpty, s"no gate named in '$list'")
+    val unknown = names.filterNot(known)
+    require(unknown.isEmpty, s"unknown gates: ${unknown.mkString(", ")}")
+    names
   }
 
   /** Wall seconds of the best of three back-to-back passes, `after`

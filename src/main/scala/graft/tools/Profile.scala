@@ -20,13 +20,11 @@ object Profile {
     require(args.length >= 2,
       "usage: Profile <sfDir> <g1,g2,...> [runs=N] [warm=<dir>]")
     val sfDir = args(0)
-    val gates = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val queries = graft.SparkEntry.queries
+    val gates = Measure.gateNames(args(1), queries.contains)
     def opt(key: String) = args.drop(2).collectFirst {
       case a if a.startsWith(s"$key=") => a.stripPrefix(s"$key=") }
     val runs = opt("runs").map(_.toInt).getOrElse(1)
-    val queries = graft.SparkEntry.queries
-    val unknown = gates.filterNot(queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
 
     val spark = graft.SparkEntry.localSession(4)
       .config("spark.sql.streaming.streamingQueryListeners",

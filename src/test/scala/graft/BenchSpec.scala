@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.tools.Measure
+import graft.tools.Measure.num
+
 /** Bench's output-file policy, regression flags and stdout contract
   * line, as pure functions: where a run's timings land, what it merges
   * into the pinned baseline, which gates it flags, and the exact bytes of
@@ -45,53 +48,65 @@ class BenchSpec extends AnyFunSuite {
       """{"_basket_new":0.25,"_basket_q3":1.0,"a":2.0,"b":1.5}""")
   }
 
-  // q3_shipping is the shuffle class's representative, sim_brute_topk the
-  // float class's; q1_pricing is a shuffle gate, sim_lsh_topk a float gate
+  // q3_shipping and sim_brute_topk are basket gates; q1_pricing and
+  // sim_lsh_topk share their kinds of work
   private val flagPrev = Map("_basket_q3_shipping" -> 1.0, "_basket_sim_brute_topk" -> 1.0,
     "q3_shipping" -> 1.0, "q1_pricing" -> 1.0, "sim_lsh_topk" -> 1.0, "text_x" -> 0.1)
 
-  test("a class speed is clamped from below at the global speed") {
-    // the shuffle rep reads faster than the machine (0.5 < 1.2), the float
-    // rep slower (2.0); a class without a basket reading gets no entry
+  test("a gate of a slow basket gate's kind flags through the machine speed") {
+    // a window where the float basket gate sim_brute_topk reads 2x slow
+    // does not excuse sim_lsh_topk: the basket is no input to the flags,
+    // and every gate, basket gates too, normalizes by the one speed
     val f = regressionFlags(flagPrev,
-      Seq("q3_shipping" -> 0.5, "sim_brute_topk" -> 2.0), Nil, speedRatio = 1.2)
-    assert(f.classSpeed === Map("shuffle" -> 1.2, "float" -> 2.0))
-    assert(f.classSpeedJson === """{"float":2.000,"shuffle":1.200}""")
-    // a gate normalizes by its class speed; a class without a reading by the global
-    val g = regressionFlags(flagPrev, Seq("sim_brute_topk" -> 2.0),
-      Seq("sim_lsh_topk" -> 4.0, "q1_pricing" -> 4.0), speedRatio = 1.0)
-    assert(g.ratios === Seq(("sim_lsh_topk", 4.0, 1.0, 2.0), ("q1_pricing", 4.0, 1.0, 4.0)))
+      Seq("sim_brute_topk" -> 2.0, "sim_lsh_topk" -> 2.0, "q1_pricing" -> 1.2), speedRatio = 1.2)
+    assert(f.ratios.map(r => (r._1, num(r._4, 3))) ===
+      Seq(("sim_lsh_topk", "1.667"), ("q1_pricing", "1.000")))
+    assert(f.regressions.map(_._1) === Seq("sim_lsh_topk"))
   }
 
-  test("a basket representative is normalized by the global speed") {
-    // the shuffle class reads 3x slow; its rep q3_shipping is also 3x slow
-    // and must flag through the global speed, not vanish into its own ratio
-    val f = regressionFlags(flagPrev, Seq("q3_shipping" -> 3.0),
-      Seq("q3_shipping" -> 3.0, "q1_pricing" -> 3.0), speedRatio = 1.0)
-    assert(f.classSpeed === Map("shuffle" -> 3.0))
-    assert(f.ratios === Seq(("q3_shipping", 3.0, 1.0, 3.0), ("q1_pricing", 3.0, 1.0, 1.0)))
-    assert(f.regressions.map(_._1) === Seq("q3_shipping"))
+  test("the committed 4-core idle sweep flags 21 gates, the class rule's 18 among them") {
+    def gateTimings(m: Map[String, Any]) = m.toSeq
+      .collect { case (k, Measure.Num(v)) if !k.startsWith("_") => k -> v }.sortBy(_._1)
+    val idle = Measure.readPin(new java.io.File("BENCH_IDLE_2026-10-20_c4.json"))
+    val healthy = gateTimings(Measure.obj(idle("timings")))
+    val prev = readBaseline(new java.io.File("BENCH_LOCAL_sf0.1.json"))
+    assert(healthy.size === 242)
+    val speed = rawRatioMedian(prev, healthy).get
+    assert(num(speed, 4) === "0.7726")
+    val flagged = regressionFlags(prev, healthy, speed).regressions.map(_._1)
+    assert(flagged.toSet === Set("corpus_bpe_fertility", "corpus_bpe_pretrained",
+      "corpus_split_safe", "corpus_stratified_sample", "dedup_containment",
+      "dedup_edit_distance", "dedup_embedding_cosine_t90", "dedup_jaccard_prefix",
+      "dedup_keep_best", "dedup_minhash_lsh", "dedup_neardup_default",
+      "dedup_neardup_embeddings", "dedup_ngram_jaccard", "dedup_paragraphs",
+      "dedup_semantic", "dedup_substring", "mm_jpeg_decode", "pipe_bpe_pretokenize",
+      "s14_stream_dedup_watermark", "text_kneser_ney", "text_ngram_coverage"))
+    val recorded = Measure.obj(idle("deltas"))("regressions").asInstanceOf[Seq[Any]]
+      .map(r => Measure.obj(r)("query").toString)
+    assert(recorded.size === 18 && recorded.toSet.subsetOf(flagged.toSet))
+    assert(flagged.toSet -- recorded ===
+      Set("dedup_semantic", "s14_stream_dedup_watermark", "mm_jpeg_decode"))
   }
 
   test("a gate under 0.5 s, or absent from the baseline, never flags") {
-    val f = regressionFlags(flagPrev, Nil,
+    val f = regressionFlags(flagPrev,
       Seq("text_x" -> 0.5, "new_gate" -> 9.0, "q1_pricing" -> 0.51), speedRatio = 0.1)
     // text_x is 50x its baseline but at 0.5 s; new_gate has no baseline
     assert(f.ratios.map(_._1) === Seq("text_x", "q1_pricing"))
     assert(f.regressions.map(_._1) === Seq("q1_pricing"))
-    // the bound is strict: exactly 1.5x beyond the class speed does not flag
-    assert(regressionFlags(flagPrev, Nil, Seq("q1_pricing" -> 1.5), 1.0).regressions === Nil)
+    // the bound is strict: exactly 1.5x beyond the machine speed does not flag
+    assert(regressionFlags(flagPrev, Seq("q1_pricing" -> 1.5), 1.0).regressions === Nil)
   }
 
   test("the BENCH_DELTAS regression JSON, byte for byte") {
-    val f = regressionFlags(flagPrev, Seq("sim_brute_topk" -> 1.5),
+    val f = regressionFlags(flagPrev,
       Seq("q1_pricing" -> 2.0, "sim_lsh_topk" -> 3.4567, "q3_shipping" -> 1.2), speedRatio = 1.0)
-    // slowest first; sim_lsh_topk normalizes by its class's 1.5
+    // slowest first
     assert(f.regressionsJson ===
-      """[{"query":"sim_lsh_topk","sec":3.457,"prev_sec":1.000,"ratio":2.30},""" +
+      """[{"query":"sim_lsh_topk","sec":3.457,"prev_sec":1.000,"ratio":3.46},""" +
         """{"query":"q1_pricing","sec":2.000,"prev_sec":1.000,"ratio":2.00}]""")
-    assert(f.ratiosJson === """{"q1_pricing":2.00,"sim_lsh_topk":2.30,"q3_shipping":1.20}""")
-    assert(regressionFlags(flagPrev, Nil, Nil, 1.0).regressionsJson === "[]")
+    assert(f.ratiosJson === """{"q1_pricing":2.00,"sim_lsh_topk":3.46,"q3_shipping":1.20}""")
+    assert(regressionFlags(flagPrev, Nil, 1.0).regressionsJson === "[]")
   }
 
   private val summary = Summary(

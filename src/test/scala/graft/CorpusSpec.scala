@@ -781,6 +781,11 @@ class CorpusSpec extends AnyFunSuite {
     val (w2, b2, _) = TextAnalysis.trainLogistic(labeled, "text", col("y"),
       dim = 256, iters = 3000, lr = 5.0, maxDocs = 400)
     assert(w === w2 && b === b2)
+    // stays eager: the model is plain weights, so building it runs
+    // the capped sample's one top-N collect
+    val (_, jobs) = SparkTestSession.jobsDuring(TextAnalysis.trainLogistic(
+      labeled, "text", col("y"), dim = 256, iters = 10, maxDocs = 400))
+    assert(jobs === 1, "build-time jobs of trainLogistic")
   }
 
   test("corpus_mlm_mask: raw-position hashing survives messy spacing (oracle order)") {

@@ -49,6 +49,16 @@ class JoinsSpec extends AnyFunSuite {
     assert(ords.toSeq === (0L until nation.count()).toSeq)
   }
 
+  test("zipWithOrdinal: building runs the sorted input and its partition sizes") {
+    // stays eager: RDD.zipWithIndex sizes the partitions at construction
+    // (the offsets are the ordinal's base). Two jobs: the range exchange
+    // samples its bounds, then the size job runs the sorted input.
+    val sorted = lineitem.orderBy(col("l_orderkey"), col("l_linenumber"))
+    val (z, jobs) = SparkTestSession.jobsDuring(Joins.zipWithOrdinal(sorted))
+    assert(jobs === 2, "build-time jobs of zipWithOrdinal")
+    assert(z.count() === lineitem.count())
+  }
+
   test("U1 either is a tagged union with both sides intact") {
     val e = Joins.either(nation, region)
     assert(e.count() === nation.count() + region.count())

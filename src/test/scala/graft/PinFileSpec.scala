@@ -11,7 +11,7 @@ import graft.tools.SpotBench.Reading
   * ([[graft.sources.mem.WireJson]] via [[Measure.readPin]]), and the
   * policies built on them: SpotBench's output file, growth flags and
   * newcomer adoption, PlanAudit's verdict against its baseline, and the
-  * min-of-3 timed pass every tool shares. */
+  * min-of-3 timed pass and gate-name selection every tool shares. */
 class PinFileSpec extends AnyFunSuite {
   private def md5(lines: Iterable[String]): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -175,6 +175,17 @@ class PinFileSpec extends AnyFunSuite {
     assert(passes === 3 && afters === 3)
     assert(best >= 0.1 && best < 0.5, s"best of passes 1 and 3: $best")
     assert(run(_ == 1, _ => 0).isDefined, "one good pass is enough")
+  }
+
+  test("gateNames: trimmed, empties dropped, each once; unknown or no names fail") {
+    val known = Set("q1_agg", "s23_wire_cursor")
+    assert(Measure.gateNames(" s23_wire_cursor,,q1_agg , s23_wire_cursor,", known) ===
+      Seq("s23_wire_cursor", "q1_agg"))
+    val typo = intercept[IllegalArgumentException](Measure.gateNames("q1_agg,q1_agq", known))
+    assert(typo.getMessage.contains("unknown gates: q1_agq"))
+    intercept[IllegalArgumentException](Measure.gateNames(" , ", known))
+    // the tools check against every gate they can run
+    assert(Measure.gateNames("q1_agg", SparkEntry.queries.contains) === Seq("q1_agg"))
   }
 
   test("numbers are written locale-independently") {

@@ -1,7 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.{Column, GraftInputTypes}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
@@ -27,15 +26,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * join downstream for exact semantics; the expression only prunes.
   */
 case class BloomMightContain(child: Expression, bloom: BloomFilter)
-    extends UnaryExpression with Predicate {
+    extends UnaryExpression with Predicate with GraftInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case LongType | IntegerType | ShortType | ByteType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"bloom_might_contain needs an integral key, got ${other.sql}")
-    }
+  protected def acceptedTypes: Seq[Seq[DataType]] =
+    Seq(Seq(LongType, IntegerType, ShortType, ByteType))
 
   override def nullSafeEval(input: Any): Any = {
     val key = input match {

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftInputTypes}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -81,7 +81,7 @@ object CdcUtil {
   * form survives as the DuckDB oracle at test scale.
   */
 case class CdcChunkBounds(child: Expression, window: Int, modulus: Int,
-    minLen: Int, maxLen: Int) extends UnaryExpression {
+    minLen: Int, maxLen: Int) extends UnaryExpression with GraftInputTypes {
 
   require(window >= 2, s"window must be >= 2, got $window")
   require(modulus >= 2, s"modulus must be >= 2, got $modulus")
@@ -96,14 +96,7 @@ case class CdcChunkBounds(child: Expression, window: Int, modulus: Int,
       StructField("end", IntegerType, nullable = false))),
     containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cdc_chunk_bounds needs string, got ${other.sql}")
-    }
+  protected def acceptedTypes: Seq[Seq[DataType]] = Seq(Seq(StringType))
 
   override def nullSafeEval(input: Any): Any =
     CdcUtil.bounds(input.asInstanceOf[UTF8String], window, modulus, minLen, maxLen)

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftInputTypes}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -21,20 +21,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * the seed).
   */
 case class XxHash64ModArray(child: Expression, mod: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with GraftInputTypes {
 
   private val Seed = 42L
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"xxhash64_mod_array needs array<string>, got ${other.sql}")
-    }
+  protected def acceptedTypes: Seq[Seq[DataType]] = Seq(Seq(ArrayType(StringType)))
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
@@ -78,6 +71,54 @@ case class XxHash64ModArray(child: Expression, mod: Long)
     copy(child = newChild)
 }
 
+/** The one `array<float>`/`array<double>` vector input of an expression
+  * that reads it against a `dim`-wide table ([[LshBandBuckets]],
+  * [[NearestCell]]): the accepted types, the dimension guard (fail fast,
+  * the dot_product contract) and the element read widened to double, both
+  * interpreted and generated. The guard's message names the expression
+  * (`fn`) and its table. */
+trait VectorInput extends UnaryExpression with GraftInputTypes {
+  protected def dim: Int
+  protected def fn: String
+  protected def table: String
+
+  protected def acceptedTypes: Seq[Seq[DataType]] = Seq(VectorInput.Types)
+
+  protected def isFloat: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  /** The input vector, after the dimension guard. */
+  protected def vector(input: Any): ArrayData = {
+    val vec = input.asInstanceOf[ArrayData]
+    if (vec.numElements() != dim)
+      throw new IllegalArgumentException(
+        s"$fn: vector length ${vec.numElements()} != $table dim $dim")
+    vec
+  }
+
+  /** Element `d` widened to double (`fl` = [[isFloat]], hoisted by callers). */
+  @inline protected final def elem(vec: ArrayData, fl: Boolean, d: Int): Double =
+    if (fl) vec.getFloat(d).toDouble else vec.getDouble(d)
+
+  /** Generated code: the dimension guard, then `body(input, get)` with
+    * `get` the element getter (`getFloat`/`getDouble`). */
+  protected def vectorCode(ctx: CodegenContext, ev: ExprCode)(
+      body: (String, String) => String): ExprCode = {
+    val get = if (isFloat) "getFloat" else "getDouble"
+    nullSafeCodeGen(ctx, ev, input =>
+      s"""
+         |if ($input.numElements() != $dim) {
+         |  throw new IllegalArgumentException(
+         |    "$fn: vector length " + $input.numElements() + " != $table dim $dim");
+         |}""".stripMargin + body(input, get))
+  }
+}
+
+object VectorInput {
+  /** `array<float>` or `array<double>`. */
+  val Types: Seq[DataType] = Seq(ArrayType(FloatType), ArrayType(DoubleType))
+}
+
 /** Custom Catalyst expression: all random-hyperplane sign buckets of a
   * vector in one pass — `bands` bucket ids, each packing `planesPerBand`
   * sign bits.
@@ -95,33 +136,20 @@ case class LshBandBuckets(
     child: Expression,
     planes: Array[Array[Double]],
     planesPerBand: Int)
-    extends UnaryExpression {
+    extends VectorInput {
 
   require(planes.nonEmpty && planes.length % planesPerBand == 0,
     s"planes (${planes.length}) must be a multiple of planesPerBand ($planesPerBand)")
 
   private val bands = planes.length / planesPerBand
-  private val dim = planes(0).length
+  protected val dim: Int = planes(0).length
+  protected def fn: String = "lsh_band_buckets"
+  protected def table: String = "plane"
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lsh_band_buckets needs array<float>/array<double>, got ${other.sql}")
-    }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    if (vec.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"lsh_band_buckets: vector length ${vec.numElements()} != plane dim $dim")
+    val vec = vector(input)
     val out = new Array[Long](bands)
     val fl = isFloat
     var b = 0
@@ -133,7 +161,7 @@ case class LshBandBuckets(
         var acc = 0.0
         var d = 0
         while (d < dim) {
-          acc += plane(d) * (if (fl) vec.getFloat(d).toDouble else vec.getDouble(d))
+          acc += plane(d) * elem(vec, fl, d)
           d += 1
         }
         if (acc > 0.0) bucket |= (1L << j)
@@ -147,8 +175,7 @@ case class LshBandBuckets(
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val planesRef = ctx.addReferenceObj("lshPlanes", planes, "double[][]")
-    val get = if (isFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, input => {
+    vectorCode(ctx, ev) { (input, get) =>
       val b = ctx.freshName("b")
       val j = ctx.freshName("j")
       val d = ctx.freshName("d")
@@ -157,10 +184,6 @@ case class LshBandBuckets(
       val bucket = ctx.freshName("bucket")
       val out = ctx.freshName("out")
       s"""
-         |if ($input.numElements() != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "lsh_band_buckets: vector length " + $input.numElements() + " != plane dim $dim");
-         |}
          |long[] $out = new long[$bands];
          |for (int $b = 0; $b < $bands; $b++) {
          |  long $bucket = 0L;
@@ -176,7 +199,7 @@ case class LshBandBuckets(
          |}
          |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
        """.stripMargin
-    })
+    }
   }
 
   override protected def withNewChildInternal(newChild: Expression): LshBandBuckets =
@@ -190,31 +213,18 @@ case class LshBandBuckets(
   * through a shuffle; this is one pass, no shuffle, no blow-up.
   * Fails fast on dimension mismatch. */
 case class NearestCell(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
+    extends VectorInput {
 
   require(centroids.nonEmpty, "NearestCell: empty centroid table")
   private val nlist = centroids.length
-  private val dim = centroids(0).length
+  protected val dim: Int = centroids(0).length
+  protected def fn: String = "nearest_cell"
+  protected def table: String = "centroid"
 
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nearest_cell needs array<float>/array<double>, got ${other.sql}")
-    }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    if (vec.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"nearest_cell: vector length ${vec.numElements()} != centroid dim $dim")
+    val vec = vector(input)
     val fl = isFloat
     var best = 0
     var bestD = Double.MaxValue
@@ -224,7 +234,7 @@ case class NearestCell(child: Expression, centroids: Array[Array[Double]])
       var d2 = 0.0
       var d = 0
       while (d < dim) {
-        val diff = (if (fl) vec.getFloat(d).toDouble else vec.getDouble(d)) - cent(d)
+        val diff = elem(vec, fl, d) - cent(d)
         d2 += diff * diff
         d += 1
       }
@@ -236,8 +246,7 @@ case class NearestCell(child: Expression, centroids: Array[Array[Double]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val centRef = ctx.addReferenceObj("ivfCentroids", centroids, "double[][]")
-    val get = if (isFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, input => {
+    vectorCode(ctx, ev) { (input, get) =>
       val c = ctx.freshName("c")
       val d = ctx.freshName("d")
       val d2 = ctx.freshName("d2")
@@ -246,10 +255,6 @@ case class NearestCell(child: Expression, centroids: Array[Array[Double]])
       val bestD = ctx.freshName("bestD")
       val cent = ctx.freshName("cent")
       s"""
-         |if ($input.numElements() != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "nearest_cell: vector length " + $input.numElements() + " != centroid dim $dim");
-         |}
          |int $best = 0;
          |double $bestD = Double.MAX_VALUE;
          |for (int $c = 0; $c < $nlist; $c++) {
@@ -263,7 +268,7 @@ case class NearestCell(child: Expression, centroids: Array[Array[Double]])
          |}
          |${ev.value} = $best;
        """.stripMargin
-    })
+    }
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCell =

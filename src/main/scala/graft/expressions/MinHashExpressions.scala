@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftInputTypes}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * jaccard answer.
   */
 case class MinHashSignature(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with GraftInputTypes {
 
   private val P = 2147483647L
 
@@ -33,14 +33,7 @@ case class MinHashSignature(child: Expression, k: Int, seed: Long)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_signature needs array<bigint>, got ${other.sql}")
-    }
+  protected def acceptedTypes: Seq[Seq[DataType]] = Seq(Seq(ArrayType(LongType)))
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]

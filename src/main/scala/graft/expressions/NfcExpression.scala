@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftInputTypes}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -16,18 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * so ASCII rows cost one pass and zero allocation; only rows with a
   * non-ASCII byte pay the `java.text.Normalizer` round-trip.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+case class NfcNormalize(child: Expression) extends UnaryExpression with GraftInputTypes {
 
   override def dataType: DataType = StringType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nfc_normalize needs string, got ${other.sql}")
-    }
+  protected def acceptedTypes: Seq[Seq[DataType]] = Seq(Seq(StringType))
 
   override def nullSafeEval(input: Any): Any =
     NfcUtil.nfc(input.asInstanceOf[UTF8String])

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftInputTypes}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -57,20 +57,14 @@ object ShingleUtil {
   * builds each shingle with a reused StringBuilder; output is
   * bit-identical (see [[ShingleUtil.shingles]]).
   */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, n: Int)
+    extends UnaryExpression with GraftInputTypes {
 
   require(n >= 1, s"shingle length must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"word_shingles needs string, got ${other.sql}")
-    }
+  protected def acceptedTypes: Seq[Seq[DataType]] = Seq(Seq(StringType))
 
   override def nullSafeEval(input: Any): Any =
     ShingleUtil.shingles(input.asInstanceOf[UTF8String], n)

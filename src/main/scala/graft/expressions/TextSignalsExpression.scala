@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftInputTypes}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -39,18 +39,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * and would break runs at ß/é/marks. The oracle corpus is pure ASCII,
   * where the two agree exactly.
   */
-case class TextSignals(child: Expression) extends UnaryExpression {
+case class TextSignals(child: Expression) extends UnaryExpression with GraftInputTypes {
 
   override def dataType: DataType = TextSignalsUtil.schema
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"text_signals needs string, got ${other.sql}")
-    }
+  protected def acceptedTypes: Seq[Seq[DataType]] = Seq(Seq(StringType))
 
   override def nullSafeEval(input: Any): Any =
     TextSignalsUtil.compute(input.asInstanceOf[UTF8String])

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftInputTypes}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -20,23 +20,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * DOUBLE[], which the correctness oracle uses).
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with GraftInputTypes {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = left.nullable || right.nullable
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"dot_product needs array<float>/array<double> inputs, " +
-          s"got ${left.dataType.sql} and ${right.dataType.sql}")
-  }
+  protected def acceptedTypes: Seq[Seq[DataType]] = Seq(VectorInput.Types, VectorInput.Types)
 
   private def isFloat(dt: DataType): Boolean =
     dt.asInstanceOf[ArrayType].elementType == FloatType

@@ -584,6 +584,25 @@ object Corpus {
       java.nio.charset.StandardCharsets.UTF_8)
   }
 
+  /** (w, cnt): the corpus word histogram — single-space split, empty
+    * tokens dropped, one partial-aggregated groupBy. The only corpus-sized
+    * work of every tokenizer trainer here. */
+  private def wordCounts(docs: DataFrame, textCol: String): DataFrame =
+    docs
+      .select(explode(split(col(textCol), " ")).as("w"))
+      .where(length(col("w")) > 0)
+      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
+
+  /** The `maxWords` most frequent word types with their counts, ties by
+    * word (TakeOrderedAndProject: per-partition heaps, k-bounded driver
+    * state). */
+  private def wordHistogram(docs: DataFrame, textCol: String,
+      maxWords: Int): Array[(String, Long)] =
+    // eager by design: the trainers run on the driver over this table
+    wordCounts(docs, textCol)
+      .orderBy(col("cnt").desc, col("w").asc).limit(maxWords)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+
   /** Subword BPE merge training (Sennrich et al. 2016, "Neural Machine
     * Translation of Rare Words with Subword Units" — public literature):
     * learn `numMerges` byte-pair merges from the corpus, most-frequent
@@ -613,12 +632,7 @@ object Corpus {
       byteLevel: Boolean = false): DataFrame = {
     require(numMerges > 0, s"bpeTrain: numMerges must be positive, got $numMerges")
     val spark = docs.sparkSession
-    val hist: Array[(String, Long)] = docs
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .where(length(col("w")) > 0)
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("w").asc).limit(maxWords)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val hist = wordHistogram(docs, textCol, maxWords)
     // word type -> current symbol segmentation: chars initially, or the
     // byte alphabet + end-of-word sentinel in byte-level (GPT-2-class)
     // mode — the merge machinery below is representation-agnostic
@@ -693,6 +707,8 @@ object Corpus {
       textCol: String,
       merges: DataFrame,
       byteLevel: Boolean = false): DataFrame = {
+    // eager by design: the merges are the plan itself — inlined replace
+    // calls or the matcher's closure table (CorpusSpec pins the jobs)
     val ms: Array[(String, String)] = merges
       .orderBy(col("rank").asc)
       .select(col("left"), col("right"))
@@ -745,15 +761,10 @@ object Corpus {
       ms: Array[(String, String)],
       byteLevel: Boolean): DataFrame = {
     import org.apache.spark.sql.types._
-    val src = docs.select(col(idCol).as("doc_id"),
-      col(textCol).cast("string").as("text"))
-    val outSchema = StructType(Seq(
-      src.schema("doc_id"),
-      StructField("n_subtokens", LongType, nullable = false),
-      StructField("subtokens", ArrayType(StringType, containsNull = false))))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
     val sep = BpeOpen // never occurs inside a symbol — the wrap invariant
-    src.mapPartitions { it =>
+    encodeWords[Array[String]](docs, idCol, textCol, Seq(
+        StructField("n_subtokens", LongType, nullable = false),
+        StructField("subtokens", ArrayType(StringType, containsNull = false)))) { () =>
       val n = ms.length
       val lArr = new Array[String](n + 1)
       val rArr = new Array[String](n + 1)
@@ -764,7 +775,7 @@ object Corpus {
         ranks.put(ms(k)._1 + sep + ms(k)._2, Integer.valueOf(k + 1))
         k += 1
       }
-      def applySeq(word: String): Array[String] = {
+      (word: String) => {
         var syms: Array[String] =
           if (byteLevel) byteSymbols(word)
           else word.split("").filter(_.nonEmpty)
@@ -796,33 +807,11 @@ object Corpus {
         }
         syms
       }
-      val cache = new java.util.HashMap[String, Array[String]]()
-      it.flatMap { row =>
-        val text = row.getString(1)
-        if (text == null) Iterator.empty
-        else {
-          val words = text.split(" ")
-          val sub = scala.collection.mutable.ArrayBuffer.empty[String]
-          var wi = 0
-          while (wi < words.length) {
-            val w = words(wi)
-            if (w.nonEmpty) {
-              var s = cache.get(w)
-              if (s == null) {
-                s = applySeq(w)
-                if (cache.size >= WordCacheCap) cache.clear()
-                cache.put(w, s)
-              }
-              sub ++= s
-            }
-            wi += 1
-          }
-          if (sub.isEmpty) Iterator.empty
-          else Iterator.single(
-            org.apache.spark.sql.Row(row.get(0), sub.length.toLong, sub.toSeq))
-        }
-      }
-    }(enc)
+    } { (id, words) =>
+      val sub = scala.collection.mutable.ArrayBuffer.empty[String]
+      words.foreach(sub ++= _)
+      org.apache.spark.sql.Row(id, sub.length.toLong, sub.toSeq)
+    }
   }
 
   /** Write a merge table in the public GPT-2 tokenizer `merges.txt`
@@ -832,6 +821,7 @@ object Corpus {
     * driver-side collect is a model-artifact write, not a corpus read —
     * the same discipline as the vocab builders. */
   def bpeSaveMerges(merges: DataFrame, path: String): Unit = {
+    // eager by design: a save is an action — it writes the file now
     val rows = merges.orderBy(col("rank").asc)
       .select(col("left"), col("right"))
       .collect().map(r => s"${r.getString(0)} ${r.getString(1)}")
@@ -877,6 +867,7 @@ object Corpus {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     }
+    // eager by design: a save is an action — it writes the file now
     val rows = vocab.select(col("token"), col("id").cast("long"))
       .collect().map(r => s""""${esc(r.getString(0))}": ${r.getLong(1)}""")
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
@@ -915,6 +906,8 @@ object Corpus {
     // a non-distinct `base` would otherwise gap/shift every merged-token
     // id past the emitted base-id range (ADVICE r15 #4)
     val b0 = base.select(col("sym")).distinct()
+    // eager by design: the base count is a literal offset of every merged
+    // id (CorpusSpec pins the jobs)
     val k = b0.count()
     val b = graft.operators.Joins
       .zipWithOrdinal(b0.orderBy(col("sym")), "id")
@@ -945,10 +938,7 @@ object Corpus {
       textCol: String,
       k: Int = 150,
       maxPieceLen: Int = 6): DataFrame = {
-    val wc = docs
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .where(length(col("w")) > 0)
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
+    val wc = wordCounts(docs, textCol)
     // singles via substr(w, p, 1) over codepoint positions — NOT
     // split(w, ""), which cuts at Java chars and would split a surrogate
     // pair into two broken pieces the codepoint-based encoder can never
@@ -999,6 +989,8 @@ object Corpus {
       vocab: DataFrame,
       maxPieceLen: Int = 6): DataFrame = {
     import org.apache.spark.sql.types._
+    // eager by design: the piece set lives in the matcher's closure
+    // (CorpusSpec pins the jobs)
     val pieces: Array[String] =
       vocab.select(col("piece")).collect().map(_.getString(0))
     val tok = docs.select(col(idCol).as("doc_id"),
@@ -1119,17 +1111,13 @@ object Corpus {
     * |types| × maxWordLen × maxLen rows, never corpus-sized. */
   private def pieceCandidates(docs: DataFrame, textCol: String,
       maxLen: Int): DataFrame = {
-    val words = docs
-      .select(explode(split(col(textCol), " ")).as("word"))
-      .where(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("wc"))
     val subsArr = flatten(transform(
-      sequence(lit(1), length(col("word"))), i =>
+      sequence(lit(1), length(col("w"))), i =>
         transform(
-          sequence(lit(1), least(lit(maxLen), length(col("word")) - i + lit(1))),
-          n => col("word").substr(i, n))))
-    words.select(explode(subsArr).as("sub"), col("wc"))
-      .groupBy(col("sub")).agg(sum(col("wc")).as("cnt"))
+          sequence(lit(1), least(lit(maxLen), length(col("w")) - i + lit(1))),
+          n => col("w").substr(i, n))))
+    wordCounts(docs, textCol).select(explode(subsArr).as("sub"), col("cnt"))
+      .groupBy(col("sub")).agg(sum(col("cnt")).as("cnt"))
   }
 
   /** The piece table: top-`topK` substrings by (count DESC, piece ASC)
@@ -1156,11 +1144,28 @@ object Corpus {
     * capped driver-side table. */
   def unigramPieceTable(docs: DataFrame, textCol: String,
       maxLen: Int = 4, topK: Int = 60): Array[(String, Long)] = {
+    // eager by design: the caller gets a driver-side table
     val t = unigramPieces(docs, textCol, maxLen, topK)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     require(t.length <= (1 << 20),
       s"unigram: piece table ${t.length} exceeds the closure budget")
     t
+  }
+
+  /** Every edge (pre, j) of a word's segmentation lattice in forward
+    * order — for each end j = 1..L, the starts j − n of the pieces of
+    * length n = 1..min(maxLen, j) — the traversal of the Viterbi passes
+    * and of the EM forward pass. */
+  private def forEachEdge(L: Int, maxLen: Int)(edge: (Int, Int) => Unit): Unit = {
+    var j = 1
+    while (j <= L) {
+      var n = 1
+      while (n <= math.min(maxLen, j)) {
+        edge(j - n, j)
+        n += 1
+      }
+      j += 1
+    }
   }
 
   /** Exact-integer Viterbi segmentation of one word: minimize piece
@@ -1179,32 +1184,24 @@ object Corpus {
     val btot = new Array[Long](L + 1)
     val bpath = new Array[String](L + 1)
     bnp(0) = 0; btot(0) = 0L; bpath(0) = ""
-    var j = 1
-    while (j <= L) {
-      val nMax = math.min(maxLen, j)
-      var n = 1
-      while (n <= nMax) {
-        val pre = j - n
-        if (bnp(pre) != Int.MaxValue) {
-          val piece = word.substring(pre, j)
-          val c = pm.get(piece)
-          if (c != null) {
-            val cnp = bnp(pre) + 1
-            val ctot = btot(pre) + c.longValue
-            val better0 = cnp < bnp(j) ||
-              (cnp == bnp(j) && ctot > btot(j))
-            val tie = cnp == bnp(j) && ctot == btot(j)
-            if (better0 || tie) {
-              val cpath = if (pre == 0) piece else bpath(pre) + "|" + piece
-              if (better0 || cpath.compareTo(bpath(j)) < 0) {
-                bnp(j) = cnp; btot(j) = ctot; bpath(j) = cpath
-              }
+    forEachEdge(L, maxLen) { (pre, j) =>
+      if (bnp(pre) != Int.MaxValue) {
+        val piece = word.substring(pre, j)
+        val c = pm.get(piece)
+        if (c != null) {
+          val cnp = bnp(pre) + 1
+          val ctot = btot(pre) + c.longValue
+          val better0 = cnp < bnp(j) ||
+            (cnp == bnp(j) && ctot > btot(j))
+          val tie = cnp == bnp(j) && ctot == btot(j)
+          if (better0 || tie) {
+            val cpath = if (pre == 0) piece else bpath(pre) + "|" + piece
+            if (better0 || cpath.compareTo(bpath(j)) < 0) {
+              bnp(j) = cnp; btot(j) = ctot; bpath(j) = cpath
             }
           }
         }
-        n += 1
       }
-      j += 1
     }
     if (bnp(L) == Int.MaxValue)
       throw new IllegalArgumentException(
@@ -1263,64 +1260,82 @@ object Corpus {
     * a clear the Zipf head refills within a few documents. */
   private[graft] val WordCacheCap = 200000
 
-  /** Shared map-only encode core for the unigram regimes: per-partition
-    * segment function (piece table lives in its closure, built ONCE per
-    * partition by `mkSeg`), bounded word-type memo ([[WordCacheCap]]),
-    * per-doc word loop joining pipe-joined paths with spaces. Documents
-    * with no words (null/empty text) emit nothing — the SQL oracle's
-    * join drops them identically. */
-  private def encodeCorpus(
-      docs: DataFrame, idCol: String, textCol: String, withScore: Boolean)(
-      mkSeg: () => String => (String, Int, Double)): DataFrame = {
-    import org.apache.spark.sql.types._
+  /** The map-only per-document encode loop of every word-level encoder
+    * ([[bpeEncodeSeq]], [[encodeCorpus]]): `docs` as (doc_id, text); per
+    * partition `mkEncode()` builds the word encoder ONCE (its tables live
+    * in the closure), each non-empty single-space-split word is encoded
+    * through a bounded word-type memo ([[WordCacheCap]]), and `row` turns
+    * (doc_id, the document's encoded words in order) into a row of schema
+    * doc_id +: `fields`. Documents with no words (null/empty text) emit
+    * nothing — the SQL oracles' joins drop them identically. */
+  private def encodeWords[W <: AnyRef](
+      docs: DataFrame, idCol: String, textCol: String,
+      fields: Seq[org.apache.spark.sql.types.StructField])(
+      mkEncode: () => String => W)(
+      row: (Any, scala.collection.mutable.ArrayBuffer[W]) => org.apache.spark.sql.Row)
+      : DataFrame = {
     val src = docs.select(col(idCol).as("doc_id"),
       col(textCol).cast("string").as("text"))
-    val base = Seq(
-      src.schema("doc_id"),
-      StructField("encoded", StringType, nullable = false),
-      StructField("n_tokens", LongType, nullable = false))
-    val outSchema = StructType(
-      if (withScore) base :+ StructField("logp", DoubleType, nullable = false)
-      else base)
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
+    val enc = org.apache.spark.sql.Encoders.row(
+      org.apache.spark.sql.types.StructType(src.schema("doc_id") +: fields))
     src.mapPartitions { it =>
-      val seg = mkSeg()
-      val cache = new java.util.HashMap[String, (String, Int, Double)]()
-      it.flatMap { row =>
-        val text = row.getString(1)
+      val encode = mkEncode()
+      val cache = new java.util.HashMap[String, W]()
+      it.flatMap { r =>
+        val text = r.getString(1)
         if (text == null) Iterator.empty
         else {
           val words = text.split(" ")
-          val sb = new StringBuilder
-          var nTok = 0L
-          var score = 0.0
-          var any = false
+          val out = scala.collection.mutable.ArrayBuffer.empty[W]
           var wi = 0
           while (wi < words.length) {
             val w = words(wi)
             if (w.nonEmpty) {
               var s = cache.get(w)
               if (s == null) {
-                s = seg(w)
+                s = encode(w)
                 if (cache.size >= WordCacheCap) cache.clear()
                 cache.put(w, s)
               }
-              if (any) sb.append(' ')
-              sb.append(s._1)
-              nTok += s._2
-              score += s._3
-              any = true
+              out += s
             }
             wi += 1
           }
-          if (!any) Iterator.empty
-          else Iterator.single(
-            if (withScore)
-              org.apache.spark.sql.Row(row.get(0), sb.toString, nTok, score)
-            else org.apache.spark.sql.Row(row.get(0), sb.toString, nTok))
+          if (out.isEmpty) Iterator.empty else Iterator.single(row(r.get(0), out))
         }
       }
     }(enc)
+  }
+
+  /** Shared encode core for the unigram regimes ([[encodeWords]] with the
+    * per-partition segment function built by `mkSeg`): pipe-joined word
+    * paths joined with spaces, the piece count and, `withScore`, the
+    * summed log-probability. */
+  private def encodeCorpus(
+      docs: DataFrame, idCol: String, textCol: String, withScore: Boolean)(
+      mkSeg: () => String => (String, Int, Double)): DataFrame = {
+    import org.apache.spark.sql.types._
+    val base = Seq(
+      StructField("encoded", StringType, nullable = false),
+      StructField("n_tokens", LongType, nullable = false))
+    encodeWords[(String, Int, Double)](docs, idCol, textCol,
+      if (withScore) base :+ StructField("logp", DoubleType, nullable = false)
+      else base)(mkSeg) { (id, segs) =>
+      val sb = new StringBuilder
+      var nTok = 0L
+      var score = 0.0
+      var i = 0
+      while (i < segs.length) {
+        val s = segs(i)
+        if (i > 0) sb.append(' ')
+        sb.append(s._1)
+        nTok += s._2
+        score += s._3
+        i += 1
+      }
+      if (withScore) org.apache.spark.sql.Row(id, sb.toString, nTok, score)
+      else org.apache.spark.sql.Row(id, sb.toString, nTok)
+    }
   }
 
   /** Map-only corpus encode under the exact-integer objective: per doc,
@@ -1357,12 +1372,7 @@ object Corpus {
       emIters: Int = 2,
       pruneRounds: Int = 3,
       maxWords: Int = 1000000): Array[(String, Double)] = {
-    val hist: Array[(String, Long)] = docs
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .where(length(col("w")) > 0)
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("w").asc).limit(maxWords)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val hist = wordHistogram(docs, textCol, maxWords)
     // seed pieces: every <=maxLen substring of the word types, prob
     // proportional to weighted occurrence count
     val seed = scala.collection.mutable.HashMap.empty[String, Double]
@@ -1398,16 +1408,10 @@ object Corpus {
           // forward: alpha(j) = logsum over n of alpha(j-n) + logp(piece)
           val alpha = Array.fill(L + 1)(Double.NegativeInfinity)
           alpha(0) = 0.0
-          var j = 1
-          while (j <= L) {
-            var n = 1
-            while (n <= math.min(maxLen, j)) {
-              probs.get(w.substring(j - n, j)).foreach { p =>
-                alpha(j) = logSumExp(alpha(j), alpha(j - n) + math.log(p))
-              }
-              n += 1
+          forEachEdge(L, maxLen) { (pre, j) =>
+            probs.get(w.substring(pre, j)).foreach { p =>
+              alpha(j) = logSumExp(alpha(j), alpha(pre) + math.log(p))
             }
-            j += 1
           }
           val z = alpha(L)
           if (z != Double.NegativeInfinity) {
@@ -1478,25 +1482,18 @@ object Corpus {
     val bn = new Array[Int](L + 1)
     val bp = new Array[String](L + 1)
     bs(0) = 0.0; bp(0) = ""
-    var j = 1
-    while (j <= L) {
-      var n = 1
-      while (n <= math.min(maxLen, j)) {
-        val pre = j - n
-        if (bs(pre) != Double.NegativeInfinity) {
-          val lp = pm.get(word.substring(pre, j))
-          if (lp != null) {
-            val c = bs(pre) + lp.doubleValue
-            if (c > bs(j)) {
-              bs(j) = c; bn(j) = bn(pre) + 1
-              bp(j) = if (pre == 0) word.substring(pre, j)
-                else bp(pre) + "|" + word.substring(pre, j)
-            }
+    forEachEdge(L, maxLen) { (pre, j) =>
+      if (bs(pre) != Double.NegativeInfinity) {
+        val lp = pm.get(word.substring(pre, j))
+        if (lp != null) {
+          val c = bs(pre) + lp.doubleValue
+          if (c > bs(j)) {
+            bs(j) = c; bn(j) = bn(pre) + 1
+            bp(j) = if (pre == 0) word.substring(pre, j)
+              else bp(pre) + "|" + word.substring(pre, j)
           }
         }
-        n += 1
       }
-      j += 1
     }
     if (bs(L) == Double.NegativeInfinity)
       throw new IllegalArgumentException(

@@ -76,6 +76,120 @@ object Dedup {
     graft.expressions.MinHashFunctions.minhash_signature(hashed, k, seed)
   }
 
+  /** Persistence of every multi-consumer near-dup stage: spill-safe at
+    * cluster scale, where the stage would be a checkpointed intermediate
+    * table; it stays for the query's lifetime (callers clear the cache,
+    * Spark evicts LRU). */
+  private val Spill = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+  /** (doc_id, extra…, sh): each document's distinct `n`-word shingle set,
+    * the first stage of every shingle-keyed near-dup operator. */
+  private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
+      n: Int, extra: Column*): DataFrame =
+    docs.select((col(idCol).as("doc_id") +: extra :+
+      TextOps.shingles(col(textCol), n).as("sh")): _*)
+
+  /** [[shingleSets]] without the documents that have no shingle. */
+  private def nonEmptySets(docs: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame =
+    shingleSets(docs, idCol, textCol, n).where(size(col("sh")) > 0)
+
+  /** Document frequency `df` per shingle `s` of an exploded shingle stream
+    * (shingles are distinct within a doc, so occurrences = documents). */
+  private def docFreq(exploded: DataFrame): DataFrame =
+    exploded.groupBy(col("s")).agg(count(lit(1)).as("df"))
+
+  /** The heavy-shingle cap: `exploded` without the shingles of more than
+    * `cap` documents (`df` from [[docFreq]]). Broadcast the HEAVY set
+    * (small by definition — it's the cap's point) and anti-join:
+    * broadcasting the complement ("rare") would ship nearly the whole
+    * shingle vocabulary of a natural-language corpus through the driver.
+    * `None` keeps every shingle. */
+  private def dropHeavy(exploded: DataFrame, df: => DataFrame,
+      maxDocFreq: Option[Int]): DataFrame = maxDocFreq match {
+    case Some(cap) =>
+      exploded.join(broadcast(df.where(col("df") > cap).select("s")), Seq("s"), "left_anti")
+    case None => exploded
+  }
+
+  /** Exact shared-shingle counts, column `as`, per pair doc_a < doc_b of
+    * an exploded (doc_id, s, h = xxhash64(s)) stream: an equi-self-join
+    * keyed on the hash with the string itself verified in the same
+    * condition — exactness is untouched (string equality still gates
+    * every matched row) but the sort/compare hot loop works on longs
+    * first, measured 13% faster than the string-keyed join at sf0.1. */
+  private def sharedCounts(exploded: DataFrame, as: String): DataFrame =
+    exploded.alias("a").join(exploded.alias("b"),
+        col("a.h") === col("b.h") && col("a.s") === col("b.s") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as(as))
+
+  /** The exploded (doc_id, s, h = xxhash64(s)) stream of `sh` under the
+    * heavy-shingle cap ([[dropHeavy]]). */
+  private def cappedHashed(sh: DataFrame, maxDocFreq: Option[Int]): DataFrame = {
+    val exploded = sh.select(col("doc_id"), explode(col("sh")).as("s"))
+      .withColumn("h", xxhash64(col("s")))
+    dropHeavy(exploded, docFreq(exploded), maxDocFreq)
+  }
+
+  /** Exact intersection counts `inter` of every shingle-sharing pair of
+    * `sh` ([[sharedCounts]] over `exploded`), with both set sizes
+    * `sz_a`, `sz_b`. */
+  private def interWithSizes(sh: DataFrame, exploded: DataFrame): DataFrame =
+    bothSides(sharedCounts(exploded, "inter"),
+      sh.select(col("doc_id"), size(col("sh")).as("sz")), "sz")
+
+  /** (doc_id, sz, s): every shingle of `sh` beside its set's size. */
+  private def sizedShingles(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))
+
+  /** `pairs` (doc_a, doc_b, …) with `perDoc`'s column `v` of each side
+    * joined on as `v_a` and `v_b`. */
+  private def bothSides(pairs: DataFrame, perDoc: DataFrame, v: String): DataFrame =
+    pairs
+      .join(perDoc.select(col("doc_id").as("doc_a"), col(v).as(s"${v}_a")), "doc_a")
+      .join(perDoc.select(col("doc_id").as("doc_b"), col(v).as(s"${v}_b")), "doc_b")
+
+  /** The exact verifier: candidate pairs whose shingle-set Jaccard, over
+    * the full sets of `sh`, reaches `threshold` — (doc_a, doc_b, jaccard),
+    * no false positives whatever generated the candidates. */
+  private def verifiedJaccard(cand: DataFrame, sh: DataFrame,
+      threshold: Double): DataFrame =
+    bothSides(cand, sh, "sh")
+      .withColumn("jaccard", TextOps.jaccard(col("sh_a"), col("sh_b")))
+      .where(col("jaccard") >= threshold)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+
+  /** Containment of each side in the other from an `inter` count and the
+    * two set sizes; pairs whose larger containment reaches `threshold`. */
+  private def containments(pairs: DataFrame, szA: Column, szB: Column,
+      threshold: Double): DataFrame =
+    pairs
+      .withColumn("cont_a_in_b", col("inter").cast("double") / szA.cast("double"))
+      .withColumn("cont_b_in_a", col("inter").cast("double") / szB.cast("double"))
+      .where(greatest(col("cont_a_in_b"), col("cont_b_in_a")) >= threshold)
+      .select(col("doc_a"), col("doc_b"), col("inter"),
+        col("cont_a_in_b"), col("cont_b_in_a"))
+
+  /** The prefix filter (AllPairs/PPJoin): the rows of `ranked` (doc_id,
+    * sz, s, df) inside their document's prefix — the first
+    * `sz - ceil(t*sz) + 1` shingles under the global (df asc, s asc)
+    * rarity order — with their position `pos`. Two sets reaching `t`
+    * must share a prefix shingle, so candidates drawn from prefixes lose
+    * nothing. The per-doc window runs over thousands of small
+    * partitions, never one reducer. ceil(t*sz - 1e-9): the epsilon only
+    * ever LENGTHENS the prefix (a 1-ulp wobble can add a candidate —
+    * harmless, verification is exact — but never lose one). */
+  private def prefixRows(ranked: DataFrame, threshold: Double): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("doc_id")).orderBy(col("df").asc, col("s").asc)
+    ranked
+      .withColumn("pos", row_number().over(w))
+      .where(col("pos") <=
+        col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + 1)
+  }
+
   /** Exact duplicate groups by content fingerprint (hash-groupBy).
     * Returns (fp, keep_id, n_copies): the retained representative is the
     * minimum id — deterministic under any partitioning. */
@@ -219,12 +333,8 @@ object Dedup {
     // The shingle+signature stage feeds FOUR consumers (both sides of the
     // band self-join, both sides of the verify join). Without persistence
     // Spark recomputes the O(k·|shingles|) signature per consumer — 4× the
-    // dominant cost. MEMORY_AND_DISK: spill-safe at cluster scale, where
-    // this stage would be a checkpointed intermediate table.
-    val sh = docs
-      .select(col(idCol).as("doc_id"), TextOps.shingles(col(textCol), shingleLen).as("sh"))
-      .where(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // dominant cost.
+    val sh = nonEmptySets(docs, idCol, textCol, shingleLen).persist(Spill)
     val withSig = sh.withColumn("sig", minhashSignature(col("sh"), k, seed))
     val bandDf = withSig.select(
       col("doc_id"),
@@ -252,7 +362,7 @@ object Dedup {
         // sits at the pre-signature `sh` stage — without its own persist
         // the O(k·|shingles|) signature+explode stage recomputes per
         // consumer (ADVICE r17 #3). Same lifetime note as `sh`.
-        val bandP = bandDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val bandP = bandDf.persist(Spill)
         val ok = bandP.groupBy("band_idx", "band_hash")
           .agg(count(lit(1)).as("bucket_n"))
           .where(col("bucket_n") <= maxBucketSize)
@@ -267,14 +377,7 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    val shA = sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-    val shB = sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-    candidates
-      .join(shA, "doc_a").join(shB, "doc_b")
-      .withColumn("jaccard", TextOps.jaccard(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    // Note: sh stays persisted for the query's lifetime; Spark evicts LRU.
+    verifiedJaccard(candidates, sh, threshold)
   }
 
   /** Bit j of a nonnegative value < 2^52, extracted with exact power-of-two
@@ -317,7 +420,7 @@ object Dedup {
     // fp feeds both sides of the chunk self-join — persist to avoid
     // recomputing the O(bits·|tokens|) fingerprint fold twice.
     val withFp = docs.select(col(idCol).as("doc_id"), simhash(col(textCol)).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Spill)
     val chunks = withFp.select(col("doc_id"), col("fp"),
       posexplode(transform(sequence(lit(0), lit(3)),
         j => pmod(floor(col("fp").cast("double") / pow(lit(2.0), j * lit(13))).cast("long"),
@@ -390,7 +493,6 @@ object Dedup {
     checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
     def ckpt(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    val fwd = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
     // localCheckpoint (eager), NOT persist: `labels` appears THREE times in
     // each round's plan (neighbor-min, hop, jump), so with lineage intact
     // the logical plan would grow 3^round copies of the full edge-derivation
@@ -407,8 +509,15 @@ object Dedup {
     // that, a long session pins O(rounds) label maps + the edge set until
     // some future GC runs the ContextCleaner. Only the final round's
     // blocks stay alive: the returned DataFrame reads them.
-    val sym = ckpt(fwd.unionByName(
-        edges.select(col(bCol).as("src"), col(aCol).as("dst"))))
+    //
+    // Both directions come from ONE pass over the edges: a union of the
+    // forward and reversed projections would evaluate the whole pair
+    // derivation twice.
+    val sym = ckpt(edges
+      .select(explode(array(
+        struct(col(aCol).as("src"), col(bCol).as("dst")),
+        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
     // init fuses what would be round 0: label₀ = min(node, min neighbor).
     // One partial-aggregated groupBy over the edge set — it both dedups
     // the node set (replacing a distinct) and gives every node its 1-hop
@@ -467,7 +576,7 @@ object Dedup {
     // requires executor failure, which localCheckpoint itself already
     // does not survive.)
     val out = labels.select(col("node").as("doc_id"), col("label").as("canon_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Spill)
     // eager: the managed copy must hold the labels before the blocks it
     // reads go
     out.count()
@@ -514,25 +623,8 @@ object Dedup {
       idCol: String,
       textCol: String,
       evalPred: Column,
-      shingleLen: Int = 8): DataFrame = {
-    // sh feeds both the eval-gram build and the train probe — persist so
-    // the corpus (and the 8-gram pass) is read once, same discipline as
-    // ngramJaccardPairs (callers clear the cache per query).
-    // A NULL predicate must not drop the doc from BOTH sides (`where(p)`
-    // and `where(!p)` each discard NULLs) — normalize to false so every
-    // doc lands on exactly one side and is contamination-checked.
-    val sh = docs.select(col(idCol).as("doc_id"),
-      coalesce(evalPred, lit(false)).as("is_eval"),
-      TextOps.shingles(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val evalGrams = sh.where(col("is_eval"))
-      .select(explode(col("sh")).as("g")).distinct()
-    val train = sh.where(!col("is_eval"))
-      .select(col("doc_id"), explode(col("sh")).as("g"))
-    train.join(broadcast(evalGrams), Seq("g"))
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("g")).as("n_hits"))
-  }
+      shingleLen: Int = 8): DataFrame =
+    contaminationHits(docs, idCol, textCol, evalPred, shingleLen, bloom = None)
 
   /** Bloom-pruned [[contamination]] — EXACTLY the same result through the
     * scale path for when the eval side outgrows a broadcast hash set: a
@@ -560,19 +652,38 @@ object Dedup {
       evalPred: Column,
       shingleLen: Int = 8,
       expectedGrams: Long = 1000000L,
-      fpp: Double = 0.01): DataFrame = {
-    val sh = docs.select(col(idCol).as("doc_id"),
-      coalesce(evalPred, lit(false)).as("is_eval"),
-      TextOps.shingles(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val evalGrams = sh.where(col("is_eval"))
+      fpp: Double = 0.01): DataFrame =
+    contaminationHits(docs, idCol, textCol, evalPred, shingleLen,
+      bloom = Some((expectedGrams, fpp)))
+
+  /** The body of [[contamination]] and, with `bloom` = (expected grams,
+    * fpp), of [[contaminationBloom]]: per non-eval document, the distinct
+    * eval grams it holds. */
+  private def contaminationHits(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      evalPred: Column,
+      shingleLen: Int,
+      bloom: Option[(Long, Double)]): DataFrame = {
+    // sh feeds both the eval-gram build and the train probe — persist so
+    // the corpus (and the 8-gram pass) is read once.
+    // A NULL predicate must not drop the doc from BOTH sides (`where(p)`
+    // and `where(!p)` each discard NULLs) — normalize to false so every
+    // doc lands on exactly one side and is contamination-checked.
+    val sh = shingleSets(docs, idCol, textCol, shingleLen,
+      coalesce(evalPred, lit(false)).as("is_eval")).persist(Spill)
+    val grams = sh.where(col("is_eval"))
       .select(explode(col("sh")).as("g")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bf = evalGrams.stat.bloomFilter(xxhash64(col("g")), expectedGrams, fpp)
-    val train = sh.where(!col("is_eval"))
+    // the Bloom build and the join both read the eval grams
+    val evalGrams = if (bloom.isDefined) grams.persist(Spill) else grams
+    val trainAll = sh.where(!col("is_eval"))
       .select(col("doc_id"), explode(col("sh")).as("g"))
-      .where(graft.expressions.BloomFunctions.bloom_might_contain(
+    val train = bloom.fold(trainAll) { case (expectedGrams, fpp) =>
+      val bf = evalGrams.stat.bloomFilter(xxhash64(col("g")), expectedGrams, fpp)
+      trainAll.where(graft.expressions.BloomFunctions.bloom_might_contain(
         xxhash64(col("g")), bf))
+    }
     train.join(broadcast(evalGrams), Seq("g"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("g")).as("n_hits"))
@@ -607,23 +718,8 @@ object Dedup {
       textCol: String,
       windowTokens: Int = 20,
       maxDocFreq: Option[Int] = Some(DefaultMaxDocFreq)): DataFrame = {
-    val sh = docs.select(col(idCol).as("doc_id"),
-      TextOps.shingles(col(textCol), windowTokens).as("sh"))
-      .where(size(col("sh")) > 0)
-    val explodedAll = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-      .withColumn("h", xxhash64(col("s")))
-    val exploded = maxDocFreq match {
-      case Some(cap) =>
-        val heavy = explodedAll.groupBy(col("s"))
-          .agg(count(lit(1)).as("df")).where(col("df") > cap).select("s")
-        explodedAll.join(broadcast(heavy), Seq("s"), "left_anti")
-      case None => explodedAll
-    }
-    exploded.alias("a").join(exploded.alias("b"),
-        col("a.h") === col("b.h") && col("a.s") === col("b.s") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
+    val sh = nonEmptySets(docs, idCol, textCol, windowTokens)
+    sharedCounts(cappedHashed(sh, maxDocFreq), "n_shared")
   }
 
   /** Exact n-gram Jaccard pairs — delegates to the prefix-filtered
@@ -679,42 +775,13 @@ object Dedup {
       threshold: Double = 0.8,
       maxDocFreq: Option[Int] = None): DataFrame = {
     // sh feeds sizes (×2) and the pair generation — persist once.
-    val sh = docs.select(col(idCol).as("doc_id"),
-      TextOps.shingles(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = sh.select(col("doc_id"), size(col("sh")).as("sz"))
-    // Intersection counts via exploded equi-self-join, keyed on
-    // xxhash64(shingle) with the string itself verified in the same
-    // condition — exactness is untouched (string equality still gates
-    // every matched row) but the sort/compare hot loop works on longs
-    // first, measured 13% faster than the string-keyed join at sf0.1.
     // A postings-list formulation (groupBy shingle + HOF pair expansion)
     // re-measured within noise of the self-join; a df>=2 shingle
     // prefilter measured NO win (the extra aggregation costs what the
     // pruned join saves). Revisit only if shuffle becomes the bottleneck
     // at cluster scale.
-    val explodedAll = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-      .withColumn("h", xxhash64(col("s")))
-    val exploded = maxDocFreq match {
-      case Some(cap) =>
-        // one extra aggregation; the join then never sees heavy hitters.
-        // Broadcast the HEAVY set (small by definition — it's the cap's
-        // point) and anti-join: broadcasting the complement ("rare") would
-        // ship nearly the whole shingle vocabulary of a natural-language
-        // corpus through the driver.
-        val heavy = explodedAll.groupBy(col("s"))
-          .agg(count(lit(1)).as("df")).where(col("df") > cap).select("s")
-        explodedAll.join(broadcast(heavy), Seq("s"), "left_anti")
-      case None => explodedAll
-    }
-    val inter = exploded.alias("a").join(exploded.alias("b"),
-        col("a.h") === col("b.h") && col("a.s") === col("b.s") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
+    val sh = shingleSets(docs, idCol, textCol, shingleLen).persist(Spill)
+    interWithSizes(sh, cappedHashed(sh, maxDocFreq))
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
       .where(col("jaccard") >= threshold)
@@ -760,31 +827,12 @@ object Dedup {
       shingleLen: Int = 3,
       threshold: Double = 0.8,
       maxDocFreq: Option[Int] = Some(DefaultMaxDocFreq)): DataFrame = {
-    val sh = docs.select(col(idCol).as("doc_id"),
-      TextOps.shingles(col(textCol), shingleLen).as("sh"))
-      .where(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val explodedAll = sh.select(col("doc_id"), size(col("sh")).as("sz"),
-      explode(col("sh")).as("s"))
-    // distinct-doc frequency per shingle = occurrence count (shingles are
-    // distinct within a doc by construction)
-    val dfCounts = explodedAll.groupBy(col("s")).agg(count(lit(1)).as("df"))
+    val sh = nonEmptySets(docs, idCol, textCol, shingleLen).persist(Spill)
+    val explodedAll = sizedShingles(sh)
+    val dfCounts = docFreq(explodedAll)
     // the optional heavy-hitter cap prunes BOTH sides of candidate
-    // generation (broadcast the heavy set, anti-join — ngramJaccardPairs'
-    // discipline: broadcasting the complement would ship the vocabulary)
-    val exploded = maxDocFreq match {
-      case Some(cap) =>
-        val heavy = dfCounts.where(col("df") > cap).select("s")
-        explodedAll.join(broadcast(heavy), Seq("s"), "left_anti")
-      case None => explodedAll
-    }
-    // prefix membership: position within the doc under the global
-    // (df asc, shingle asc) order; per-doc window — thousands of small
-    // partitions, never one reducer. ceil(t*sz - 1e-9): the epsilon only
-    // ever LENGTHENS the prefix (a 1-ulp wobble can add a candidate —
-    // harmless, verification is exact — but never lose one).
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("df").asc, col("s").asc)
+    // generation
+    val exploded = dropHeavy(explodedAll, dfCounts, maxDocFreq)
     // candidates join on the 64-bit HASH ALONE — unlike ngramJaccardPairs
     // (whose intersection COUNTS must be exact, so it re-verifies the
     // string in the join), a false candidate here is harmless: every
@@ -800,10 +848,7 @@ object Dedup {
     // window) over ALL occurrences — instead of only the prefix — costs
     // more than the pruned candidates save. Reverted; the prefix ⋈ full
     // shape below stands.
-    val prefix = exploded.join(dfCounts, "s")
-      .withColumn("pos", row_number().over(w))
-      .where(col("pos") <=
-        col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + 1)
+    val prefix = prefixRows(exploded.join(dfCounts, "s"), threshold)
       .select(col("doc_id"), xxhash64(col("s")).as("h"))
     val full = exploded.select(col("doc_id"), xxhash64(col("s")).as("h"))
     // prefix ⋈ full (not prefix ⋈ prefix: only the SMALLER side's prefix
@@ -813,18 +858,10 @@ object Dedup {
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
       .distinct()
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("inter",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("cont_a_in_b",
-        col("inter").cast("double") / size(col("sh_a")).cast("double"))
-      .withColumn("cont_b_in_a",
-        col("inter").cast("double") / size(col("sh_b")).cast("double"))
-      .where(greatest(col("cont_a_in_b"), col("cont_b_in_a")) >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("inter"),
-        col("cont_a_in_b"), col("cont_b_in_a"))
+    containments(
+      bothSides(cand, sh, "sh").withColumn("inter",
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long")),
+      size(col("sh_a")), size(col("sh_b")), threshold)
   }
 
   /** The pre-r12 full-self-join containment form — kept as the
@@ -837,27 +874,9 @@ object Dedup {
       textCol: String,
       shingleLen: Int = 3,
       threshold: Double = 0.8): DataFrame = {
-    val sh = docs.select(col(idCol).as("doc_id"),
-      TextOps.shingles(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = sh.select(col("doc_id"), size(col("sh")).as("sz"))
-    val exploded = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-      .withColumn("h", xxhash64(col("s")))
-    val inter = exploded.alias("a").join(exploded.alias("b"),
-        col("a.h") === col("b.h") && col("a.s") === col("b.s") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
-      .withColumn("cont_a_in_b",
-        col("inter").cast("double") / col("sz_a").cast("double"))
-      .withColumn("cont_b_in_a",
-        col("inter").cast("double") / col("sz_b").cast("double"))
-      .where(greatest(col("cont_a_in_b"), col("cont_b_in_a")) >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("inter"),
-        col("cont_a_in_b"), col("cont_b_in_a"))
+    val sh = shingleSets(docs, idCol, textCol, shingleLen).persist(Spill)
+    containments(interWithSizes(sh, cappedHashed(sh, None)),
+      col("sz_a"), col("sz_b"), threshold)
   }
 
   /** Prefix-filtered exact Jaccard pairs — the AllPairs/PPJoin candidate
@@ -912,12 +931,8 @@ object Dedup {
       shingleLen: Int = 3,
       threshold: Double = 0.8,
       maxDocFreq: Option[Int] = Some(DefaultMaxDocFreq)): DataFrame = {
-    val sh = docs.select(col(idCol).as("doc_id"),
-      TextOps.shingles(col(textCol), shingleLen).as("sh"))
-      .where(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val exploded = sh.select(col("doc_id"), size(col("sh")).as("sz"),
-      explode(col("sh")).as("s"))
+    val sh = nonEmptySets(docs, idCol, textCol, shingleLen).persist(Spill)
+    val exploded = sizedShingles(sh)
     // Global canonical rarity order = the (df asc, shingle asc) PAIR
     // itself: a total order needs no dense ordinal, so the former
     // zipWithOrdinal stage (a full vocabulary range-sort + offset job,
@@ -926,13 +941,7 @@ object Dedup {
     // equi-join on the shingle (hash first, string verified — the
     // ngramJaccardPairs long-key discipline), which rank equality was
     // 1:1 with anyway. Measured 1.9x on the gate at sf0.1 (5.3s -> 2.8s).
-    val dfCounts = exploded.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    // Prefix membership: position within the doc under the global order.
-    // ceil(t*sz - 1e-9): the epsilon only ever LENGTHENS the prefix, so a
-    // 1-ulp double wobble can add a candidate (harmless — verification is
-    // exact) but never lose one.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("df").asc, col("s").asc)
+    val dfCounts = docFreq(exploded)
     // the heavy-hitter cap filters the joined stream BEFORE the window, so
     // prefix positions run over the kept shingles with sz still FULL —
     // same structure as containmentPairs' capped path (dropping rows can
@@ -944,10 +953,7 @@ object Dedup {
       case Some(cap) => exploded.join(dfCounts, "s").where(col("df") <= cap)
       case None => exploded.join(dfCounts, "s")
     }
-    val prefix = kept
-      .withColumn("pos", row_number().over(w))
-      .where(col("pos") <=
-        col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + 1)
+    val prefix = prefixRows(kept, threshold)
       .select(col("doc_id"), col("sz"), col("pos"), xxhash64(col("s")).as("h"))
     // candidates join on the 64-bit hash ALONE (r12, same reasoning as
     // containmentPairs): every candidate is verified exactly against the
@@ -983,11 +989,6 @@ object Dedup {
               (col("a.sz") + col("b.sz")) - lit(1e-9)))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("jaccard", TextOps.jaccard(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    verifiedJaccard(cand, sh, threshold)
   }
 }

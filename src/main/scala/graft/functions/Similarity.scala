@@ -43,6 +43,40 @@ object Similarity {
   private def cosineFromNorms(d: Column, na: Column, nb: Column): Column =
     try_divide(d, na * nb)
 
+  /** (query_id, qv, qn, extra…): the query side's id, vector and norm. */
+  private def querySide(queries: DataFrame, idCol: String, vecCol: String,
+      extra: Column*): DataFrame =
+    queries.select(Seq(col(idCol).as("query_id"), col(vecCol).as("qv"),
+      l2norm(col(vecCol)).as("qn")) ++ extra: _*)
+
+  /** (neighbor_id, cv, cn, extra…): the corpus side's id, vector and norm. */
+  private def corpusSide(corpus: DataFrame, idCol: String, vecCol: String,
+      extra: Column*): DataFrame =
+    corpus.select(Seq(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+      l2norm(col(vecCol)).as("cn")) ++ extra: _*)
+
+  /** Top-k of joined query/corpus rows by their exact cosine `score`. */
+  private def cosineTopK(joined: DataFrame, k: Int): DataFrame =
+    rankTopK(joined.withColumn("score",
+      cosineFromNorms(dot(col("qv"), col("cv")), col("qn"), col("cn"))), k)
+
+  /** `sort_array(collect_list(struct(key, value)))`: a group's values in
+    * key order, the input of [[foldMean]]. */
+  private[functions] def sortedBy(key: Column, value: Column): Column =
+    sort_array(collect_list(struct(key, value)))
+
+  /** The audit fold: the mean of the `field` values of `sorted` (structs
+    * in key order, [[sortedBy]]) as a LEFT FOLD seeded with 0.0, then one
+    * division — a fully deterministic float pipeline that the DuckDB
+    * oracle reproduces bit-for-bit via `list_reduce(list_prepend(0.0,
+    * vs))` (the prepended seed matters: an unseeded fold starts from the
+    * first ELEMENT, which diverges on an all-negative-zero group — +0.0
+    * vs -0.0). A plain SUM would be partition-order-dependent in the last
+    * ulps and unhashable cross-engine. */
+  private[functions] def foldMean(sorted: Column, field: String): Column =
+    aggregate(transform(sorted, v => v.getField(field)),
+      lit(0.0), (a, x) => a + x) / size(sorted)
+
   /** Rank scored (query_id, neighbor_id, score) candidates to top-k per
     * query with the k-bounded [[TopK]] Aggregator: partial aggregation
     * ships O(k) per partition per query (map-side combine), vs. the
@@ -80,13 +114,9 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      l2norm(col(vecCol)).as("qn")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      l2norm(col(vecCol)).as("cn"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", cosineFromNorms(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-    rankTopK(scored, k)
+    val q = broadcast(querySide(queries, idCol, vecCol))
+    val c = corpusSide(corpus, idCol, vecCol)
+    cosineTopK(q.join(c, col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Max-inner-product top-k (MIPS) — the recommender/reranker retrieval
@@ -124,14 +154,10 @@ object Similarity {
       vecCol: String,
       labelCol: String,
       k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      l2norm(col(vecCol)).as("qn"), col(labelCol).as("q_label")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      l2norm(col(vecCol)).as("cn"), col(labelCol).as("c_label"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id") &&
-        col("q_label") =!= col("c_label"))
-      .withColumn("score", cosineFromNorms(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-    rankTopK(scored, k)
+    val q = broadcast(querySide(queries, idCol, vecCol, col(labelCol).as("q_label")))
+    val c = corpusSide(corpus, idCol, vecCol, col(labelCol).as("c_label"))
+    cosineTopK(q.join(c, col("query_id") =!= col("neighbor_id") &&
+      col("q_label") =!= col("c_label")), k)
   }
 
   /** Deterministic random hyperplanes (seeded) as a nested literal.
@@ -166,16 +192,18 @@ object Similarity {
       nPlanes: Int = 8,
       dim: Int = 64,
       seed: Long = 42L): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      l2norm(col(vecCol)).as("qn"),
+    val q = broadcast(querySide(queries, idCol, vecCol,
       lshBucket(col(vecCol), nPlanes, dim, seed).as("bucket")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      l2norm(col(vecCol)).as("cn"),
+    bucketTopK(q, corpus, idCol, vecCol, k, nPlanes, dim, seed)
+  }
+
+  /** Exact-cosine top-k of the (query_id, qv, qn, bucket) probes `q`
+    * against the corpus rows in the same sign bucket. */
+  private def bucketTopK(q: DataFrame, corpus: DataFrame, idCol: String,
+      vecCol: String, k: Int, nPlanes: Int, dim: Int, seed: Long): DataFrame = {
+    val c = corpusSide(corpus, idCol, vecCol,
       lshBucket(col(vecCol), nPlanes, dim, seed).as("bucket"))
-    val scored = q.join(c, Seq("bucket"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", cosineFromNorms(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-    rankTopK(scored, k)
+    cosineTopK(q.join(c, Seq("bucket")).where(col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Query-directed MULTI-PROBE LSH top-k (Lv et al., "Multi-Probe LSH",
@@ -228,19 +256,11 @@ object Similarity {
       if (nFlips == 0) array(col("base"))
       else concat(array(col("base")),
         transform(flipBits, b => col("base").bitwiseXOR(b)))
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        l2norm(col(vecCol)).as("qn"))
+    val q = broadcast(querySide(queries, idCol, vecCol)
       .withColumn("base", base)
       .withColumn("bucket", explode(probeBuckets))
       .select(col("query_id"), col("qv"), col("qn"), col("bucket")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      l2norm(col(vecCol)).as("cn"),
-      lshBucket(col(vecCol), nPlanes, dim, seed).as("bucket"))
-    val scored = q.join(c, Seq("bucket"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", cosineFromNorms(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-    rankTopK(scored, k)
+    bucketTopK(q, corpus, idCol, vecCol, k, nPlanes, dim, seed)
   }
 
   /** A built IVF index: the corpus with cell assignments + precomputed
@@ -414,8 +434,7 @@ object Similarity {
       k: Int,
       nprobe: Int = 2,
       maxBroadcastQueries: Int = 100000): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      l2norm(col(vecCol)).as("qn"))
+    val q = querySide(queries, idCol, vecCol)
     // saturating +1: maxBroadcastQueries = Int.MaxValue means "always
     // broadcast" and must not overflow the limit into a negative
     val probeCap = math.min(maxBroadcastQueries.toLong + 1L, Int.MaxValue.toLong).toInt
@@ -426,11 +445,7 @@ object Similarity {
       q.limit(probeCap).count() <= maxBroadcastQueries
     val probesPlan =
       if (small || nprobe > 1) {
-        val probeW = Window.partitionBy(col("query_id"))
-          .orderBy(cosine(col("qv"), col("centroid")).desc, col("cell").asc)
-        q.crossJoin(broadcast(index.centroids))
-          .withColumn("probe_rank", row_number().over(probeW))
-          .where(col("probe_rank") <= nprobe)
+        nearestCells(q, index, nprobe)
           .select(col("query_id"), col("qv"), col("qn"), col("cell"))
       } else {
         // map-only single-cell probe against the driver-side centroid
@@ -445,10 +460,19 @@ object Similarity {
         q.withColumn("cell", best)
       }
     val probes = if (small) broadcast(probesPlan) else probesPlan
-    val scored = probes.join(index.assigned, Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", cosineFromNorms(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-    rankTopK(scored, k)
+    cosineTopK(probes.join(index.assigned, Seq("cell"))
+      .where(col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  /** Each query of `q` (query_id, qv, …) beside its `nprobe` nearest
+    * cells by centroid cosine, ties to the lower cell: the centroid table
+    * broadcast into a crossJoin plus a per-query window. */
+  private def nearestCells(q: DataFrame, index: IvfIndex, nprobe: Int): DataFrame = {
+    val probeW = Window.partitionBy(col("query_id"))
+      .orderBy(cosine(col("qv"), col("centroid")).desc, col("cell").asc)
+    q.crossJoin(broadcast(index.centroids))
+      .withColumn("probe_rank", row_number().over(probeW))
+      .where(col("probe_rank") <= nprobe)
   }
 
   /** One-shot IVF top-k (build + probe). `indexKey` reuses a registered
@@ -658,26 +682,37 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int): DataFrame = {
-    val lut = array((0 until index.m).map { j =>
-      array((0 until index.ksub).map { c =>
-        dot(slice(col("qvn"), j * index.dsub + 1, index.dsub),
-          typedLit(index.codebooks(j)(c).toSeq))
-      }: _*)
-    }: _*)
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
+    val q = broadcast(unitQueries(queries, idCol, vecCol)
+      .select(col("query_id"), adcLut(index).as("lut")))
+    rankTopK(q.join(index.encoded, col("query_id") =!= col("neighbor_id"))
+      .withColumn("score", adcScore), k)
+  }
+
+  /** (query_id, qv, qn, qvn): the queries with a non-zero norm, beside
+    * their unit vector `qvn`. */
+  private def unitQueries(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("qv"),
         l2norm(col(vecCol)).as("qn"))
       .where(col("qn") > 0)
       .withColumn("qvn", transform(col("qv"), x => x / col("qn")))
-      .select(col("query_id"), lut.as("lut")))
-    val scored = q.join(index.encoded, col("query_id") =!= col("neighbor_id"))
-      .withColumn("score",
-        aggregate(
-          zip_with(col("codes"), col("lut"),
-            (c, t) => element_at(t, c + lit(1))),
-          lit(0.0), (a, x) => a + x))
-    rankTopK(scored, k)
-  }
+
+  /** The ADC lookup table of a query's unit vector `qvn`: per subspace,
+    * its dot product with every codebook entry. */
+  private def adcLut(pq: PqIndex): Column =
+    array((0 until pq.m).map { j =>
+      array((0 until pq.ksub).map { c =>
+        dot(slice(col("qvn"), j * pq.dsub + 1, pq.dsub),
+          typedLit(pq.codebooks(j)(c).toSeq))
+      }: _*)
+    }: _*)
+
+  /** The ADC score: the sum of the `lut` entries the candidate's `codes`
+    * select, one table lookup per subspace. */
+  private def adcScore: Column =
+    aggregate(
+      zip_with(col("codes"), col("lut"), (c, t) => element_at(t, c + lit(1))),
+      lit(0.0), (a, x) => a + x)
 
   /** IVF+PQ composed probe — the FAISS `IVFx,PQy` production shape, and
     * the answer to "PQ ADC is inherently query × corpus": IVF first cuts
@@ -696,32 +731,13 @@ object Similarity {
       vecCol: String,
       k: Int,
       nprobe: Int = 2): DataFrame = {
-    val lut = array((0 until pq.m).map { j =>
-      array((0 until pq.ksub).map { c =>
-        dot(slice(col("qvn"), j * pq.dsub + 1, pq.dsub),
-          typedLit(pq.codebooks(j)(c).toSeq))
-      }: _*)
-    }: _*)
-    val q = queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"),
-        l2norm(col(vecCol)).as("qn"))
-      .where(col("qn") > 0)
-      .withColumn("qvn", transform(col("qv"), x => x / col("qn")))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(cosine(col("qv"), col("centroid")).desc, col("cell").asc)
-    val probes = broadcast(q.crossJoin(broadcast(ivf.centroids))
-      .withColumn("probe_rank", row_number().over(probeW))
-      .where(col("probe_rank") <= nprobe)
-      .select(col("query_id"), col("cell"), lut.as("lut")))
-    val scored = probes
+    val probes = broadcast(nearestCells(unitQueries(queries, idCol, vecCol), ivf, nprobe)
+      .select(col("query_id"), col("cell"), adcLut(pq).as("lut")))
+    rankTopK(probes
       .join(ivf.assigned.select(col("neighbor_id"), col("cell")), Seq("cell"))
       .where(col("query_id") =!= col("neighbor_id"))
       .join(pq.encoded, Seq("neighbor_id"))
-      .withColumn("score",
-        aggregate(
-          zip_with(col("codes"), col("lut"), (c, t) => element_at(t, c + lit(1))),
-          lit(0.0), (a, x) => a + x))
-    rankTopK(scored, k)
+      .withColumn("score", adcScore), k)
   }
 
   /** IVF+PQ probe with an EXACT RE-RANK stage (r15 verdict #2a — the
@@ -761,16 +777,11 @@ object Similarity {
     val shortlist = ivfPqTopK(ivf, pq, queries, idCol, vecCol,
         k = cMult * k, nprobe = nprobe)
       .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), l2norm(col(vecCol)).as("qn")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      l2norm(col(vecCol)).as("cn"))
-    val rescored = broadcast(shortlist)
+    val q = broadcast(querySide(queries, idCol, vecCol))
+    val c = corpusSide(corpus, idCol, vecCol)
+    cosineTopK(broadcast(shortlist)
       .join(c, Seq("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("score",
-        cosineFromNorms(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-    rankTopK(rescored, k)
+      .join(q, Seq("query_id")), k)
   }
 
   /** One-shot PQ top-k (build + probe); `indexKey` reuses a registered
@@ -867,9 +878,7 @@ object Similarity {
     candidates
       .join(base.select(col("id").as("id_a"), col("v").as("va"), col("n").as("na")), "id_a")
       .join(base.select(col("id").as("id_b"), col("v").as("vb"), col("n").as("nb")), "id_b")
-      .withColumn("cos", cosineFromNorms(dot(col("va"), col("vb")), col("na"), col("nb")))
-      .where(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
+      .transform(cosineAtLeast(threshold))
   }
 
   /** Banded LSH candidate generation over a prepared `(id, v)` relation:
@@ -1098,15 +1107,10 @@ object Similarity {
       .agg((sum(col("col")) / count(lit(1))).as("centroid"))
       .select(col("label"), col("pos").cast("long").as("pos"), col("centroid"))
 
-  /** AUDIT form of [[labelCentroids]]: the mean is a LEFT FOLD seeded with
-    * 0.0 over the group's values sorted by vec_id, then one division — a
-    * fully deterministic float pipeline that the DuckDB oracle reproduces
-    * bit-for-bit via `list(val ORDER BY vec_id)` +
-    * `list_reduce(list_prepend(0.0, vs))` (the prepended seed matters: an
-    * unseeded fold starts from the first ELEMENT, which diverges on an
-    * all-negative-zero group — +0.0 vs -0.0). A plain SUM would be
-    * partition-order-dependent in the last ulps and unhashable
-    * cross-engine. Cost: materializes each (label, dim) group as an array,
+  /** AUDIT form of [[labelCentroids]]: the mean is the [[foldMean]] of
+    * the group's values sorted by vec_id, which the DuckDB oracle
+    * reproduces bit-for-bit via `list(val ORDER BY vec_id)`. Cost:
+    * materializes each (label, dim) group as an array,
     * so per-group memory is the label's corpus share — small-slice
     * verification only; [[labelCentroids]] is the production path. */
   def labelCentroidsAudit(
@@ -1117,10 +1121,9 @@ object Similarity {
     df.select(col(labelCol).as("label"), col(idCol).as("vid"),
         posexplode(col(vecCol).cast("array<double>")))
       .groupBy(col("label"), col("pos"))
-      .agg(sort_array(collect_list(struct(col("vid"), col("col")))).as("vs"))
+      .agg(sortedBy(col("vid"), col("col")).as("vs"))
       .select(col("label"), col("pos").cast("long").as("pos"),
-        (aggregate(transform(col("vs"), v => v.getField("col")),
-          lit(0.0), (a, x) => a + x) / size(col("vs"))).as("centroid"))
+        foldMean(col("vs"), "col").as("centroid"))
 
   /** Shared Lloyd-iteration core for [[kmeansLloyd]]/[[kmeansLloydAudit]]:
     * seeds = the embeddings of the k smallest ids (cluster = seed rank —
@@ -1177,13 +1180,17 @@ object Similarity {
       k: Int,
       iters: Int): DataFrame =
     kmLoop(df, idCol, vecCol, k, iters) { members =>
-      members.select(col("cl"), posexplode(col("v")))
+      centroidVectors(members.select(col("cl"), posexplode(col("v")))
         .groupBy(col("cl"), col("pos"))
-        .agg((sum(col("col")) / count(lit(1))).as("cv"))
-        .groupBy(col("cl"))
-        .agg(sort_array(collect_list(struct(col("pos"), col("cv")))).as("ps"))
-        .select(col("cl"), transform(col("ps"), p => p.getField("cv")).as("cent"))
+        .agg((sum(col("col")) / count(lit(1))).as("cv")))
     }
+
+  /** (cl, cent): per-(cluster, dim) means `cv` reassembled into centroid
+    * vectors in dimension order. */
+  private def centroidVectors(means: DataFrame): DataFrame =
+    means.groupBy(col("cl"))
+      .agg(sortedBy(col("pos"), col("cv")).as("ps"))
+      .select(col("cl"), transform(col("ps"), p => p.getField("cv")).as("cent"))
 
   /** AUDIT form of [[kmeansLloyd]]: centroid means are seeded left folds
     * over member values sorted by vec_id (the [[labelCentroidsAudit]]
@@ -1199,15 +1206,10 @@ object Similarity {
       k: Int,
       iters: Int): DataFrame =
     kmLoop(df, idCol, vecCol, k, iters) { members =>
-      members.select(col("cl"), col("vec_id"), posexplode(col("v")))
+      centroidVectors(members.select(col("cl"), col("vec_id"), posexplode(col("v")))
         .groupBy(col("cl"), col("pos"))
-        .agg(sort_array(collect_list(struct(col("vec_id"), col("col")))).as("vs"))
-        .select(col("cl"), col("pos"),
-          (aggregate(transform(col("vs"), v => v.getField("col")),
-            lit(0.0), (a, b) => a + b) / size(col("vs"))).as("cv"))
-        .groupBy(col("cl"))
-        .agg(sort_array(collect_list(struct(col("pos"), col("cv")))).as("ps"))
-        .select(col("cl"), transform(col("ps"), p => p.getField("cv")).as("cent"))
+        .agg(sortedBy(col("vec_id"), col("col")).as("vs"))
+        .select(col("cl"), col("pos"), foldMean(col("vs"), "col").as("cv")))
     }
 
   /** 1-bit (sign) binary quantization: each embedding becomes
@@ -1273,9 +1275,14 @@ object Similarity {
       l2norm(col(vecCol)).as("na"))
     val b = emb.select(col(idCol).as("id_b"), col(vecCol).as("vb"),
       l2norm(col(vecCol)).as("nb"))
-    a.join(b, col("id_a") < col("id_b"))
+    a.join(b, col("id_a") < col("id_b")).transform(cosineAtLeast(threshold))
+  }
+
+  /** (id_a, id_b, cos) of the vector pairs (id_a, va, na, id_b, vb, nb)
+    * whose exact cosine reaches `threshold`. */
+  private def cosineAtLeast(threshold: Double)(pairs: DataFrame): DataFrame =
+    pairs
       .withColumn("cos", cosineFromNorms(dot(col("va"), col("vb")), col("na"), col("nb")))
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos"))
-  }
 }

@@ -28,8 +28,12 @@ object TextAnalysis {
 
   /** Predicted language: argmax of stopword hits, first-listed wins ties,
     * "und" (undetermined) when nothing matches. */
-  def langId(text: Column): Column = {
-    val hits = langStopwords.map { case (l, _) => l -> langHits(text, l) }
+  def langId(text: Column): Column =
+    pickLang(langStopwords.map { case (l, _) => l -> langHits(text, l) })
+
+  /** The language with the most (and at least one) hits, first-listed
+    * wins ties, "und" when nothing matches. */
+  private def pickLang(hits: Seq[(String, Column)]): Column = {
     val best = hits.map(_._2).reduce((a, b) => greatest(a, b))
     hits.foldRight(lit("und"): Column) { case ((l, h), acc) =>
       when(h > 0 && h === best, lit(l)).otherwise(acc)
@@ -103,13 +107,8 @@ object TextAnalysis {
 
   /** [[langId]] from a materialized [[signals]] struct — same argmax /
     * tie-break / "und" fallback as the composed form. */
-  def langIdFromSignals(sig: Column): Column = {
-    val hits = langStopwords.map { case (l, _) => l -> sig.getField(s"hits_$l") }
-    val best = hits.map(_._2).reduce((a, b) => greatest(a, b))
-    hits.foldRight(lit("und"): Column) { case ((l, h), acc) =>
-      when(h > 0 && h === best, lit(l)).otherwise(acc)
-    }
-  }
+  def langIdFromSignals(sig: Column): Column =
+    pickLang(langStopwords.map { case (l, _) => l -> sig.getField(s"hits_$l") })
 
   /** Gopher-style repetition signals: what fraction of a document's word
     * occurrences are repeats, and how much mass its single most frequent
@@ -191,16 +190,21 @@ object TextAnalysis {
       posexplode(split(col(textCol), " ")).as(Seq("pos", "w")))
     val vocab = tok.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
     val total = vocab.agg(sum(col("cnt")).as("total"))
-    tok.join(vocab, "w")
+    val lps = tok.join(vocab, "w")
       .crossJoin(broadcast(total))
       .select(col("doc_id"), col("pos"),
         (-log(col("cnt").cast("double") / col("total").cast("double"))).as("lp"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("pos"), col("lp")))).as("lps"))
-      .select(col("doc_id"), size(col("lps")).cast("long").as("n_tokens"),
-        (aggregate(transform(col("lps"), x => x.getField("lp")),
-          lit(0.0), (a, x) => a + x) / size(col("lps"))).as("xent"))
+    positionFold(lps, "n_tokens", "xent")
   }
+
+  /** Per document of (doc_id, pos, lp), its row count `nCol` and the
+    * [[Similarity.foldMean]] of its `lp` values in position order
+    * `meanCol` — the cross-engine-stable mean of the audit forms. */
+  private def positionFold(lps: DataFrame, nCol: String, meanCol: String): DataFrame =
+    lps.groupBy(col("doc_id"))
+      .agg(Similarity.sortedBy(col("pos"), col("lp")).as("lps"))
+      .select(col("doc_id"), size(col("lps")).cast("long").as(nCol),
+        Similarity.foldMean(col("lps"), "lp").as(meanCol))
 
   /** Per-(document, term) TF-IDF — the classic sparse relevance weight
     * (keyword extraction, lexical retrieval scoring, quality signals):
@@ -328,13 +332,8 @@ object TextAnalysis {
       idCol: String,
       textCol: String): DataFrame = {
     val bg = bigramStream(docs, idCol, textCol)
-    bg.join(scoredBigramTypes(bg), Seq("w1", "w2"))
-      .select(col("doc_id"), col("pos"), col("lp"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("pos"), col("lp")))).as("lps"))
-      .select(col("doc_id"), size(col("lps")).cast("long").as("n_bigrams"),
-        (aggregate(transform(col("lps"), x => x.getField("lp")),
-          lit(0.0), (a, x) => a + x) / size(col("lps"))).as("xent"))
+    positionFold(bg.join(scoredBigramTypes(bg), Seq("w1", "w2"))
+      .select(col("doc_id"), col("pos"), col("lp")), "n_bigrams", "xent")
   }
 
   /** Interpolated Kneser–Ney bigram cross-entropy (absolute discount
@@ -369,13 +368,8 @@ object TextAnalysis {
             (lit(d) * col("nf").cast("double") / col("c1").cast("double")) *
               (col("np").cast("double") / col("nt").cast("double"))))
           .as("lp"))
-    bg.join(scored, Seq("w1", "w2"))
-      .select(col("doc_id"), col("pos"), col("lp"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("pos"), col("lp")))).as("lps"))
-      .select(col("doc_id"), size(col("lps")).cast("long").as("n_bigrams"),
-        (aggregate(transform(col("lps"), x => x.getField("lp")),
-          lit(0.0), (a, x) => a + x) / size(col("lps"))).as("xent_kn"))
+    positionFold(bg.join(scored, Seq("w1", "w2"))
+      .select(col("doc_id"), col("pos"), col("lp")), "n_bigrams", "xent_kn")
   }
 
   /** Per-bigram-type score table: -ln(c(w1,w2)/c(w1,·)). The marginal

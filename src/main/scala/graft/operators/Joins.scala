@@ -300,12 +300,7 @@ object Joins {
     val overlap = points.columns.toSet.intersect(intervals.columns.toSet)
     require(overlap.isEmpty,
       s"rangeJoin: point/interval column names must be disjoint, both have ${overlap.mkString(", ")}")
-    // (c - pmod) is an exact multiple of binWidth; dividing in decimal
-    // keeps it exact (long `/` is double true-division in Spark — loses
-    // low bits past 2^53, i.e. for nanosecond epochs)
-    def binOf(c: Column): Column =
-      ((c - pmod(c, lit(binWidth))).cast("decimal(38,0)") / lit(binWidth))
-        .cast("long")
+    def binOf(c: Column): Column = bin(c, binWidth)
     val p = points.withColumn("_rj_bin", binOf(col(pointCol)))
     val i = intervals
       .withColumn("_rj_bin",
@@ -315,6 +310,14 @@ object Joins {
           col(pointCol) >= col(startCol) && col(pointCol) <= col(endCol))
       .select((points.columns ++ intervals.columns).map(col): _*)
   }
+
+  /** The `binWidth` bin of `c` by exact floor-division: (c - pmod) is an
+    * exact multiple of binWidth; dividing in decimal keeps it exact (long
+    * `/` is double true-division in Spark — loses low bits past 2^53, i.e.
+    * for nanosecond epochs). */
+  private def bin(c: Column, binWidth: Long): Column =
+    ((c - pmod(c, lit(binWidth))).cast("decimal(38,0)") / lit(binWidth))
+      .cast("long")
 
   /** Interval-OVERLAP join — both inputs are intervals (the temporal /
     * genomic overlap operator; [[rangeJoin]]'s point-in-interval is the
@@ -342,9 +345,7 @@ object Joins {
     val shared = left.columns.toSet.intersect(right.columns.toSet)
     require(shared.isEmpty,
       s"intervalJoin: column names must be disjoint, both have ${shared.mkString(", ")}")
-    def binOf(c: Column): Column =
-      ((c - pmod(c, lit(binWidth))).cast("decimal(38,0)") / lit(binWidth))
-        .cast("long")
+    def binOf(c: Column): Column = bin(c, binWidth)
     val l = left.withColumn("_ij_lbin",
       explode(sequence(binOf(col(lStart)), binOf(col(lEnd)))))
     val r = right.withColumn("_ij_rbin",
@@ -379,6 +380,30 @@ object Joins {
   def concat(first: DataFrame, second: DataFrame): DataFrame =
     first.unionByName(second)
 
+  // The Bloom pair only supports integral keys (the sketch hashes longs).
+  // REQUIRE instead of cast: a silent cast("long") on a string key would
+  // produce NULLs (or ANSI cast errors) and break the documented
+  // "Result == exact join" contract; requiring makes the widening to long
+  // provably lossless.
+  private def requireIntegralKey(df: DataFrame, key: String, op: String): Unit = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val dt = df.schema(key).dataType
+    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(dt),
+      s"$op: key '$key' must be integral (byte/short/int/long), got ${dt.sql}")
+  }
+
+  /** The Bloom prelude of [[bloomSemiJoin]]/[[bloomAntiJoin]]: both keys
+    * checked integral, the filter built over the dim keys (one
+    * treeAggregate job, eager by design: the sketch is a literal of the
+    * probe), and the probe of the fact key against it. */
+  private def bloomProbe(fact: DataFrame, factKey: String, dim: DataFrame,
+      dimKey: String, expectedKeys: Long, fpp: Double, op: String): Column = {
+    requireIntegralKey(fact, factKey, op)
+    requireIntegralKey(dim, dimKey, op)
+    val bf = dim.stat.bloomFilter(col(dimKey).cast("long"), expectedKeys, fpp)
+    graft.expressions.BloomFunctions.bloom_might_contain(col(factKey).cast("long"), bf)
+  }
+
   /** Bloom-pre-filtered SEMI join: keep the fact rows whose key appears in
     * the (typically filtered) dimension side, pruning the fact side with a
     * Bloom probe BEFORE the join's exchange.
@@ -395,18 +420,6 @@ object Joins {
     * rewrite, which this makes explicit, composable, and guaranteed).
     *
     * Result == `fact SEMI JOIN dim ON factKey = dimKey`, exactly. */
-  // The Bloom pair only supports integral keys (the sketch hashes longs).
-  // REQUIRE instead of cast: a silent cast("long") on a string key would
-  // produce NULLs (or ANSI cast errors) and break the documented
-  // "Result == exact join" contract; requiring makes the widening to long
-  // provably lossless.
-  private def requireIntegralKey(df: DataFrame, key: String, op: String): Unit = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val dt = df.schema(key).dataType
-    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(dt),
-      s"$op: key '$key' must be integral (byte/short/int/long), got ${dt.sql}")
-  }
-
   def bloomSemiJoin(
       fact: DataFrame,
       factKey: String,
@@ -414,12 +427,7 @@ object Joins {
       dimKey: String,
       expectedKeys: Long = 1000000L,
       fpp: Double = 0.01): DataFrame = {
-    requireIntegralKey(fact, factKey, "bloomSemiJoin")
-    requireIntegralKey(dim, dimKey, "bloomSemiJoin")
-    val bf = dim.stat.bloomFilter(col(dimKey).cast("long"), expectedKeys, fpp)
-    fact
-      .where(graft.expressions.BloomFunctions.bloom_might_contain(
-        col(factKey).cast("long"), bf))
+    fact.where(bloomProbe(fact, factKey, dim, dimKey, expectedKeys, fpp, "bloomSemiJoin"))
       .join(dim.select(col(dimKey).as(factKey)), Seq(factKey), "left_semi")
   }
 
@@ -450,11 +458,7 @@ object Joins {
       dimKey: String,
       expectedKeys: Long = 1000000L,
       fpp: Double = 0.01): DataFrame = {
-    requireIntegralKey(fact, factKey, "bloomAntiJoin")
-    requireIntegralKey(dim, dimKey, "bloomAntiJoin")
-    val bf = dim.stat.bloomFilter(col(dimKey).cast("long"), expectedKeys, fpp)
-    val probe = graft.expressions.BloomFunctions.bloom_might_contain(
-      col(factKey).cast("long"), bf)
+    val probe = bloomProbe(fact, factKey, dim, dimKey, expectedKeys, fpp, "bloomAntiJoin")
     // coalesce keeps NULL-key rows on the direct path (probe is NULL there)
     val definiteMiss = fact.where(!coalesce(probe, lit(false)))
     val candidates = fact.where(coalesce(probe, lit(false)))

@@ -788,6 +788,52 @@ class CorpusSpec extends AnyFunSuite {
     assert(jobs === 1, "build-time jobs of trainLogistic")
   }
 
+  test("tokenizer builds stay eager: each runs its pinned build-time jobs") {
+    import SparkTestSession.jobsDuring
+    // Every site below collects or counts while the tokenizer is built:
+    // the trainers run on the driver over the word histogram, the encoders
+    // inline the merges or pieces into the plan, the saves write files and
+    // the vocab offsets merged ids by the base count. The pins are their
+    // build-time jobs on the documents table; a new eager action, or one a
+    // build no longer needs, moves them.
+    val dir = java.nio.file.Files.createTempDirectory("graft-tokenizer").toString
+    try {
+      def jobs(body: => Any): Int = jobsDuring(body)._2
+      val trained = Corpus.bpeTrain(docs, "text", numMerges = 20)
+      val base = docs.select(explode(split(col("text"), " ")).as("w"))
+        .where(length(col("w")) > 0)
+        .select(explode(split(col("w"), "")).as("sym"))
+        .where(length(col("sym")) > 0).distinct()
+      val got = Seq(
+        "bpeTrain" -> jobs(Corpus.bpeTrain(docs, "text", numMerges = 20)),
+        "bpeSaveMerges" -> jobs(Corpus.bpeSaveMerges(trained, s"$dir/merges.txt")),
+        "bpeVocabFromMerges" -> jobs(Corpus.bpeVocabFromMerges(base, trained)),
+        "bpeSaveVocab" -> jobs(Corpus.bpeSaveVocab(
+          Corpus.bpeVocabFromMerges(base, trained), s"$dir/vocab.json")),
+        "bpeEncode" -> {
+          val loaded = Corpus.bpeLoadMerges(spark, s"$dir/merges.txt")
+          jobs(Corpus.bpeEncode(docs, "doc_id", "text", loaded))
+        },
+        "wordpieceEncode" -> {
+          val vocab = Corpus.wordpieceVocab(docs, "text")
+          jobs(Corpus.wordpieceEncode(docs, "doc_id", "text", vocab))
+        },
+        "unigramPieceTable" -> jobs(Corpus.unigramPieceTable(docs, "text")),
+        "unigramTrainEm" -> jobs(Corpus.unigramTrainEm(docs, "text")))
+      assert(got.toMap === Map(
+        "bpeTrain" -> 2,
+        "bpeSaveMerges" -> 3,
+        "bpeVocabFromMerges" -> 6,
+        "bpeSaveVocab" -> 8,
+        "bpeEncode" -> 3,
+        "wordpieceEncode" -> 5,
+        "unigramPieceTable" -> 5,
+        "unigramTrainEm" -> 2))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("corpus_mlm_mask: raw-position hashing survives messy spacing (oracle order)") {
     import SparkTestSession.spark
     import spark.implicits._

@@ -295,6 +295,35 @@ class DedupSpec extends AnyFunSuite {
       s"clearCache left ${afterClear - before} unmanaged RDD(s) pinned")
   }
 
+  test("persisted intermediates: clearCache releases every near-dup operator's stages") {
+    // each operator persists a stage its plan reads more than once; the
+    // persists are CacheManager-managed, so the caller's clearCache must
+    // release them all (connectedComponents and the IVF index have their
+    // own tests)
+    val evalPred = col("doc_id") % 10 === 0
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "minHashLshPairs" -> (() => Dedup.minHashLshPairs(docs, "doc_id", "text")),
+      "simhashPairs" -> (() => Dedup.simhashPairs(docs, "doc_id", "text")),
+      "ngramJaccardLowerBound" -> (() =>
+        Dedup.ngramJaccardLowerBound(docs, "doc_id", "text", maxDocFreq = Some(8))),
+      "containmentPairs" -> (() => Dedup.containmentPairs(docs, "doc_id", "text")),
+      "containmentPairsBrute" -> (() => Dedup.containmentPairsBrute(docs, "doc_id", "text")),
+      "jaccardPrefixPairs" -> (() => Dedup.jaccardPrefixPairs(docs, "doc_id", "text")),
+      "contamination" -> (() => Dedup.contamination(docs, "doc_id", "text", evalPred)),
+      "contaminationBloom" -> (() =>
+        Dedup.contaminationBloom(docs, "doc_id", "text", evalPred)))
+    ops.foreach { case (name, op) =>
+      spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.size
+      op().count()
+      val held = spark.sparkContext.getPersistentRDDs.size
+      assert(held > before, s"$name ran without persisting a stage")
+      spark.catalog.clearCache()
+      val after = spark.sparkContext.getPersistentRDDs.size
+      assert(after === before, s"$name: ${after - before} RDD(s) still pinned after clearCache")
+    }
+  }
+
   test("shared-substring pairs catch partial overlap jaccard misses; df cap drops boilerplate") {
     import spark.implicits._
     // four long docs with unique bodies; 1 and 2 share a syndicated
